@@ -234,10 +234,9 @@ def q_roundtrip_pruned_range(spark, sf_dir):
 
 
 def q_roundtrip_direct(spark, sf_dir):
-    """Round-trip through the SHUFFLE-FREE direct encode path
-    (engine.encode_files exchange='direct': per-(part, salt) tasks over
-    contiguous row-group slices, zero row exchange — the 100 TB path,
-    ~1.5x faster end-to-end than the range exchange at local[4])."""
+    """Round-trip of a documents column subset through the
+    SHUFFLE-FREE encode path (engine.encode_files: per-(part, salt)
+    tasks over contiguous row-group slices, zero row exchange)."""
     from libgiddy_spark.engine import roundtrip_df
 
     return roundtrip_df(
@@ -245,7 +244,6 @@ def q_roundtrip_direct(spark, sf_dir):
         f"{sf_dir}/documents.parquet",
         key_col="doc_id",
         columns=["doc_id", "text", "lang", "source", "n_chars"],
-        exchange="direct",
     )
 
 
@@ -447,7 +445,7 @@ def q_compression_metrics(spark, sf_dir):
     # the returned DataFrame reads these blocks lazily — reclaim at exit
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     encode_snapshot(spark, f"{sf_dir}/documents.parquet", out,
-                    key_col="doc_id", num_parts=8)
+                    key_col="doc_id")
     return (
         blocks_df(spark, out)
         .groupBy("column")

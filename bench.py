@@ -126,7 +126,7 @@ def ensure_webtext(spark, rows: int) -> str:
         # fan-out has boundaries to slice at (production web-corpus
         # parquet has many row groups per file — one 128 MB row group
         # per file was an artifact of Spark's writer default, and it
-        # capped the direct path's skew fan-out at 12 tasks)
+        # capped the encode's skew fan-out at 12 tasks)
         (webtext_df(spark, rows, slices=12).write.mode("overwrite")
          .option("parquet.block.size", 8 * 1024 * 1024)
          .parquet(path))
@@ -144,13 +144,8 @@ def bench_table(spark, src: str, key_col: str, num_parts: int,
     out = f"/tmp/lgs_bench_{abs(hash((src, num_parts)))}"
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    # bench measures the engine's recommended scale configuration: the
-    # shuffle-free direct path (row-group-sliced per-file tasks). The
-    # library default stays "range" (the north-rule shape); A/B at
-    # local[4], 1M-row webtext: direct 11.7 s vs range 17.4 s.
     encode_snapshot(spark, src, out, key_col=key_col,
-                    chunk_parts=max(num_parts, 64), min_slices=min_slices,
-                    exchange=os.environ.get("SPARK_GRAFT_EXCHANGE", "direct"))
+                    chunk_parts=max(num_parts, 64), min_slices=min_slices)
     t_enc = time.time() - t0
     first = list_parquet_files(src)[0][0]
     schema = pq.read_schema(src if os.path.isfile(src) else os.path.join(src, first))
@@ -438,9 +433,9 @@ def run_scaling() -> None:
         "executor brings its own memory bus and disks — the regime the "
         "rule's target describes. Engine-side evidence that the job "
         "scales by partition: 64+ independent (part_id, salt) tasks, "
-        "no cross-task state, zero driver-side row processing, and — "
-        "on the direct encode path bench measures — ZERO row exchange "
-        "on either side (encode tasks read their own row-group slices; "
+        "no cross-task state, zero driver-side row processing, and "
+        "ZERO row exchange on either side (encode tasks read their own "
+        "row-group slices; "
         "decode tasks read their own block files).",
         "",
         "## Host capacity probe (hypervisor steal)",

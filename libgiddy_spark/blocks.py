@@ -1,14 +1,15 @@
 """Encoded-blocks dataset: schema + the Arrow group encode/decode kernels.
 
 One row per (partition, salt, column, block): SURVEY.md §1.2. The encode
-kernel runs under ``GroupedData.applyInArrow`` — the whole (part_id,
-salt) group arrives as one ``pyarrow.Table`` with zero pandas
-conversion, the per-column codecs run as numpy kernels, and block rows
-stream back as Arrow. No per-row Python anywhere (BASELINE.json:15).
+kernel runs inside ``mapInArrow`` tasks (make_direct_encoder) — each
+task reads its (part_id, salt) row-group slice as one ``pyarrow.Table``
+with zero pandas conversion, the per-column codecs run as numpy
+kernels, and the task writes its block rows itself
+(make_task_writer). No per-row Python anywhere (BASELINE.json:15).
 
-Scale note: the group is the encode unit by design — upstream
-partitioning (plus skew salting, skew.py) bounds it to one task's
-memory, exactly how libgiddy sizes a device buffer per kernel launch.
+Scale note: the group is the encode unit by design — footer-driven
+salt fan-out (skew.py) bounds it to one task's memory, exactly how
+libgiddy sizes a device buffer per kernel launch.
 """
 
 from __future__ import annotations
@@ -263,71 +264,6 @@ def encode_group(
     return pa.table(out, schema=BLOCKS_SCHEMA)
 
 
-def make_encode_stream(
-    columns: list[str],
-    sort_key: str | None = None,
-    forced_codecs: dict[str, str] | None = None,
-    block_rows: int = BLOCK_ROWS,
-    zone_key: str | None = None,
-):
-    """Streaming per-task encoder for ``mapInArrow`` over data that was
-    range-repartitioned and sorted by (part_id, salt, sort_key).
-
-    The range partitioner sends every row of a (part_id, salt) group to
-    one task and the JVM sort makes groups contiguous, so ONE shuffle
-    feeds the encoder (the groupBy/applyInArrow formulation would add a
-    second hash exchange on top of the range repartition). Groups are
-    detected by key change across the record-batch stream.
-    """
-
-    def encode_stream(batches):
-        buf: list[pa.RecordBatch] = []
-        cur: tuple[int, int] | None = None
-        # per-PART codec choice + FSST table reuse across salt slices;
-        # groups arrive part-ordered (the range exchange + JVM sort), so
-        # the cache is cleared when the part advances and stays tiny
-        part_cache: dict = {}
-
-        def flush():
-            if not buf:
-                return
-            tbl = pa.Table.from_batches(buf)
-            out = encode_group(
-                tbl.drop_columns([c for c in ("part_id", "salt") if c in tbl.column_names]),
-                cur[0],
-                cur[1],
-                columns=columns,
-                sort_key=None,  # already sorted JVM-side
-                forced_codecs=forced_codecs,
-                block_rows=block_rows,
-                selector_cache=part_cache,
-                zone_key=zone_key,  # rows arrive sorted by it (JVM sort)
-            )
-            yield from out.to_batches()
-
-        for batch in batches:
-            pids = batch.column("part_id").to_numpy(zero_copy_only=False)
-            salts = batch.column("salt").to_numpy(zero_copy_only=False)
-            keys = pids.astype(np.int64) * (1 << 20) + salts.astype(np.int64)
-            bounds = np.concatenate(
-                [[0], np.flatnonzero(keys[1:] != keys[:-1]) + 1, [len(keys)]]
-            )
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                if s == e:
-                    continue
-                key = (int(pids[s]), int(salts[s]))
-                if key != cur:
-                    yield from flush()
-                    buf.clear()
-                    if cur is None or key[0] != cur[0]:
-                        part_cache.clear()
-                    cur = key
-                buf.append(batch.slice(s, e - s))
-        yield from flush()
-
-    return encode_stream
-
-
 PLAN_DDL = "part_id int, column string, codec string, params string, fsst binary"
 
 _PLAN_SCHEMA = pa.schema(
@@ -346,11 +282,10 @@ def make_plan_sampler(
     forced_codecs: dict[str, str] | None = None,
     sample_rows: int = 16384,
 ):
-    """Per-PART codec-plan kernel for the direct path: one tiny task per
+    """Per-PART codec-plan kernel for the encode job: one tiny task per
     part reads a bounded sample (head of the first row group), runs the
     codec selector per column, and trains the FSST symbol table ONCE —
-    the plan is then reused by every salt slice of the part, exactly
-    what the range path's per-part selector cache achieves. Without
+    the plan is then reused by every salt slice of the part. Without
     this, 64 slices of a part would re-train the same tables 64x
     (measured ~0.3 s per training on webtext text)."""
 
@@ -430,11 +365,14 @@ def make_direct_encoder(
     plan: dict | None = None,
 ):
     """Shuffle-free encode kernel for ``mapInArrow`` over a TASK LIST
-    (part_id, salt, rg_lo, rg_hi, path): each task reads its contiguous
-    parquet row-group slice with pyarrow, sorts it in Arrow, and
-    encodes the whole slice as one (part_id, salt) group — the decode
-    side's one-task-per-file pattern mirrored onto encode, so no row
-    ever crosses an exchange (engine.encode_files exchange='direct')."""
+    (part_id, salt, rg_lo, rg_hi[, row_lo, row_hi], path): each task
+    reads its contiguous parquet row-group slice with pyarrow (or the
+    [row_lo, row_hi) row range of the covering row groups, when
+    row_lo >= 0), sorts it in Arrow, and encodes the whole slice as one
+    (part_id, salt) group — the decode side's one-task-per-file pattern
+    mirrored onto encode, so no row ever crosses an exchange
+    (engine.encode_files). A row range that the covering row groups
+    do not reach raises ValueError naming the task."""
 
     def encode_tasks(batches):
         import pyarrow.parquet as pq
@@ -472,8 +410,16 @@ def make_direct_encoder(
                         kept.append(b)
                         if seen >= row_hi:
                             break
-                    # task build guarantees row_lo < row_hi within the
-                    # span, so at least one batch is always kept
+                    if not kept or seen < row_hi:
+                        # task build keeps [row_lo, row_hi) inside the
+                        # span; a hand-built or stale task must not
+                        # encode fewer rows than it names
+                        raise ValueError(
+                            f"encode task {row['path']!r} part "
+                            f"{row['part_id']} salt {row['salt']}: row "
+                            f"range [{row_lo}, {row_hi}) exceeds the "
+                            f"{seen} rows of row groups "
+                            f"[{row['rg_lo']}, {row['rg_hi']})")
                     tbl = pa.Table.from_batches(kept).slice(
                         row_lo - start, row_hi - row_lo
                     )
@@ -509,8 +455,8 @@ def make_direct_encoder(
 
 
 # one row per (written file, part, column): the encode task's own
-# aggregate of its blocks' metadata — what _chunk_metrics_rows used to
-# re-read from the written footers, now returned through the job itself
+# aggregate of its blocks' metadata (merge_part_meta), returned through
+# the encode job so the driver never re-reads a written footer
 TASK_META_DDL = (
     "file string, part_id int, column string, codec string, "
     "codec_params string, n_values long, raw_bytes long, enc_bytes long, "
@@ -539,6 +485,56 @@ _TASK_META_SCHEMA = pa.schema(
 )
 
 
+# the block-row fields a block's metadata row carries (never the payload)
+_META_FIELDS = [
+    "part_id", "column", "codec", "codec_params", "n_values", "raw_bytes",
+    "enc_bytes", "key_lo", "key_hi", "key_lo_s", "key_hi_s",
+]
+
+
+def _block_meta_rows(batch: pa.RecordBatch) -> list[dict]:
+    """Block rows (BLOCKS_SCHEMA) as one-block metadata rows in the
+    _TASK_META_SCHEMA shape: a block is unzoned when its bound is null."""
+    t = pa.Table.from_batches([batch]).select(_META_FIELDS)
+    for name, col in (("n_blocks", pa.array(np.ones(t.num_rows, np.int64))),
+                      ("n_unzoned", pc.is_null(t["key_lo"])),
+                      ("n_unzoned_s", pc.is_null(t["key_lo_s"]))):
+        t = t.append_column(name, col.cast(pa.int64()))
+    return t.to_pylist()
+
+
+def merge_part_meta(rows, agg: dict | None = None) -> dict:
+    """Fold metadata rows (_TASK_META_SCHEMA fields, by name) into one
+    aggregate per (part_id, column), keyed by that pair, in place into
+    ``agg`` when given. The task writer folds its blocks' rows with it
+    and the driver folds the tasks' returned rows, so both levels share
+    one rule set: counts and sizes sum, zone bounds take min/max over
+    the zoned rows, and the real codec_params is the first non-empty
+    one (only each slice's block_seq-0 row carries it)."""
+    agg = {} if agg is None else agg
+    for r in rows:
+        key = (int(r["part_id"]), r["column"])
+        a = agg.get(key)
+        if a is None:
+            agg[key] = a = {
+                "part_id": key[0], "column": key[1], "codec": r["codec"],
+                "codec_params": "{}", "n_values": 0, "raw_bytes": 0,
+                "enc_bytes": 0, "n_blocks": 0, "key_lo": None,
+                "key_hi": None, "key_lo_s": None, "key_hi_s": None,
+                "n_unzoned": 0, "n_unzoned_s": 0,
+            }
+        if a["codec_params"] == "{}" and r["codec_params"] not in ("", "{}"):
+            a["codec_params"] = r["codec_params"]
+        for k in ("n_values", "raw_bytes", "enc_bytes", "n_blocks",
+                  "n_unzoned", "n_unzoned_s"):
+            a[k] += r[k]
+        for lo, hi in (("key_lo", "key_hi"), ("key_lo_s", "key_hi_s")):
+            if r[lo] is not None:
+                a[lo] = r[lo] if a[lo] is None else min(a[lo], r[lo])
+                a[hi] = r[hi] if a[hi] is None else max(a[hi], r[hi])
+    return agg
+
+
 def make_task_writer(encode_fn, out_dir: str,
                      row_group_bytes: int = 32 << 20):
     """Wrap a block-producing mapInArrow kernel so each TASK writes its
@@ -557,8 +553,8 @@ def make_task_writer(encode_fn, out_dir: str,
     marker and removes stray files before renaming the chunk dir), so
     a failed/retried attempt's leftovers are never read back. Row
     groups are flushed every ~row_group_bytes of payload so the
-    streaming decoder's peak stays one row group (same 32 MB policy as
-    the old JVM writer)."""
+    streaming decoder's peak stays one row group, inside the warm
+    allocator arena."""
 
     def write_tasks(batches):
         import os as _os
@@ -574,52 +570,14 @@ def make_task_writer(encode_fn, out_dir: str,
         # running per-(part, column) aggregate across this task's blocks
         agg: dict[tuple[int, str], dict] = {}
 
-        def note(batch: pa.RecordBatch) -> None:
-            cols = batch.column(3).to_pylist()      # column
-            codecs = batch.column(4).to_pylist()    # codec
-            params = batch.column(5).to_pylist()    # codec_params
-            nv = batch.column(6).to_pylist()
-            rb = batch.column(7).to_pylist()
-            eb = batch.column(8).to_pylist()
-            klo = batch.column(11).to_pylist()
-            khi = batch.column(12).to_pylist()
-            klos = batch.column(13).to_pylist()
-            khis = batch.column(14).to_pylist()
-            pids = batch.column(0).to_pylist()
-            for i in range(batch.num_rows):
-                a = agg.setdefault((int(pids[i]), cols[i]), {
-                    "codec": codecs[i], "codec_params": "{}",
-                    "n_values": 0, "raw_bytes": 0, "enc_bytes": 0,
-                    "n_blocks": 0, "key_lo": None, "key_hi": None,
-                    "key_lo_s": None, "key_hi_s": None,
-                    "n_unzoned": 0, "n_unzoned_s": 0,
-                })
-                if a["codec_params"] == "{}" and params[i] not in ("", "{}"):
-                    a["codec_params"] = params[i]
-                a["n_values"] += int(nv[i])
-                a["raw_bytes"] += int(rb[i])
-                a["enc_bytes"] += int(eb[i])
-                a["n_blocks"] += 1
-                if klo[i] is None:
-                    a["n_unzoned"] += 1
-                else:
-                    a["key_lo"] = (klo[i] if a["key_lo"] is None
-                                   else min(a["key_lo"], klo[i]))
-                    a["key_hi"] = (khi[i] if a["key_hi"] is None
-                                   else max(a["key_hi"], khi[i]))
-                if klos[i] is None:
-                    a["n_unzoned_s"] += 1
-                else:
-                    a["key_lo_s"] = (klos[i] if a["key_lo_s"] is None
-                                     else min(a["key_lo_s"], klos[i]))
-                    a["key_hi_s"] = (khis[i] if a["key_hi_s"] is None
-                                     else max(a["key_hi_s"], khis[i]))
-
         def flush_rg():
             nonlocal pend, pend_bytes, writer
             if not pend:
                 return
             if writer is None:
+                # payloads are already codec-compressed, so parquet
+                # compression only costs CPU; dictionary pages over
+                # MB-sized unique blobs cost ~13x the write time
                 writer = _pq.ParquetWriter(
                     path, BLOCKS_SCHEMA, compression="none",
                     use_dictionary=False,
@@ -628,7 +586,7 @@ def make_task_writer(encode_fn, out_dir: str,
             pend, pend_bytes = [], 0
 
         for batch in encode_fn(batches):
-            note(batch)
+            merge_part_meta(_block_meta_rows(batch), agg)
             pend.append(batch)
             pend_bytes += batch.nbytes
             if pend_bytes >= row_group_bytes:
@@ -637,16 +595,9 @@ def make_task_writer(encode_fn, out_dir: str,
         if writer is None:
             return  # empty task: no file, no metadata
         writer.close()
-        out = {k: [] for k in _TASK_META_SCHEMA.names}
-        for (pid, col), a in sorted(agg.items()):
-            out["file"].append(name)
-            out["part_id"].append(pid)
-            out["column"].append(col)
-            for k in ("codec", "codec_params", "n_values", "raw_bytes",
-                      "enc_bytes", "n_blocks", "key_lo", "key_hi",
-                      "key_lo_s", "key_hi_s", "n_unzoned", "n_unzoned_s"):
-                out[k].append(a[k])
-        yield pa.RecordBatch.from_pydict(out, schema=_TASK_META_SCHEMA)
+        yield pa.RecordBatch.from_pylist(
+            [{**a, "file": name} for _k, a in sorted(agg.items())],
+            schema=_TASK_META_SCHEMA)
 
     return write_tasks
 

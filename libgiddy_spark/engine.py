@@ -4,13 +4,12 @@ Encode lifecycle::
 
     register files -> resume filter (manifest)           [driver, metadata]
     -> per-chunk: footer byte stats -> salt fan-out      [driver, footers]
-    -> repartitionByRange(part_id, salt)                 [the ONE shuffle]
-    -> sortWithinPartitions(part_id, salt, sort_key)     [JVM sort]
-    -> mapInArrow(streaming group encoder)               [numpy/C kernels]
-    -> blocks parquet (temp dir + atomic rename)         [executors write]
+    -> (part_id, salt) tasks over row-group slices       [driver, footers]
+    -> mapInArrow(read slice, Arrow sort, encode, write) [executors, no shuffle]
+    -> task metadata -> _FILES list + atomic rename      [driver commit]
     -> manifest lines per partition                      [driver commit point]
 
-Decode is shuffle-free: one task per block file streams whole
+Decode is shuffle-free too: one task per block file streams whole
 (part_id, salt) groups through the kernels (see decode_blocks).
 Everything driver-side touches only metadata (file registry, byte
 stats, manifest lines) — no row data is ever collected.
@@ -18,6 +17,7 @@ stats, manifest lines) — no row data is ever collected.
 
 from __future__ import annotations
 
+import bisect
 import os
 import shutil
 import sys
@@ -27,21 +27,28 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocks import BLOCKS_DDL, decode_group, make_encode_stream
+from .blocks import (
+    BLOCKS_DDL,
+    PLAN_DDL,
+    TASK_META_DDL,
+    decode_group,
+    make_direct_encoder,
+    make_plan_sampler,
+    make_task_writer,
+    merge_part_meta,
+    plan_one_file,
+)
 from .manifest import Manifest
-from .skew import apply_salting, footer_byte_stats, salt_factors
-from .table_io import list_parquet_files, load_part_files, snapshot_id_of
+from .skew import footer_byte_stats, salt_factors
+from .table_io import abs_file_of, list_parquet_files, snapshot_id_of
 
 
-# Direct-path task-slicing knobs (see encode_files). Env-overridable so
-# a deployment can tune them without code changes; the defaults are
-# sized by measured per-task overhead vs kernel throughput — they are
-# NOT cluster-size dependent (a slice worth <30 ms of encode is pure
-# overhead on any cluster, and row-range re-decode amplification costs
-# the same bytes everywhere).
-_SLICE_FLOOR = int(os.environ.get(
-    "LIBGIDDY_SPARK_SLICE_FLOOR_BYTES", str(4 << 20)))
-_RG_AMP_CAP = int(os.environ.get("LIBGIDDY_SPARK_RG_AMP_CAP", "8"))
+# Encode task-slicing constants (see encode_files), sized by measured
+# per-task overhead vs kernel throughput — NOT cluster-size dependent
+# (a slice worth <30 ms of encode is pure overhead on any cluster, and
+# row-range re-decode amplification costs the same bytes everywhere).
+_SLICE_FLOOR = 4 << 20
+_RG_AMP_CAP = 8
 
 
 def _source_files(path: str) -> list[dict]:
@@ -69,6 +76,44 @@ def _balanced_bounds(sizes: list[int], k: int) -> list[tuple[int, int]]:
             start, acc = i + 1, 0
     bounds.append((start, n))
     return bounds
+
+
+def _codec_plan(spark: SparkSession, tasks: list[tuple], data_cols: list[str],
+                forced_codecs: dict[str, str] | None,
+                total_b: int) -> dict[int, dict]:
+    """Per-part codec plan: one sample of each part's file head selects
+    codecs and trains FSST ONCE; the plan (codec names + <=2 KiB symbol
+    tables — codec METADATA, not row data) seeds every slice's selector
+    cache so salt fan-out never re-trains."""
+    sample_tasks = sorted({(t[0], t[-1]) for t in tasks})
+    plan: dict[int, dict] = {}
+    if len(sample_tasks) <= 2 or total_b < (32 << 20):
+        # small chunk: plan DRIVER-side — a one-task Spark job costs
+        # ~1 s of scheduling for a KB-sized table
+        for pid, path in sample_tasks:
+            for col, codec, params, ft in plan_one_file(
+                path, data_cols, forced_codecs=forced_codecs
+            ):
+                plan.setdefault(int(pid), {})[col] = (codec, params, ft)
+        return plan
+    # pack parts into ~1 task per core slot (plan work is near-uniform
+    # per part) and slice the list driver-side: parallelize()
+    # partitions in place, where createDataFrame().repartition(n) added
+    # a round-robin EXCHANGE just to shuffle a <1 KiB list
+    nplan = max(1, min(len(sample_tasks),
+                       spark.sparkContext.defaultParallelism))
+    sdf = spark.createDataFrame(
+        spark.sparkContext.parallelize(sample_tasks, nplan),
+        "part_id int, path string",
+    )
+    for r in sdf.mapInArrow(
+        make_plan_sampler(data_cols, forced_codecs=forced_codecs),
+        schema=PLAN_DDL,
+    ).collect():
+        plan.setdefault(int(r["part_id"]), {})[r["column"]] = (
+            r["codec"], r["params"], r["fsst"]
+        )
+    return plan
 
 
 def encode_snapshot(
@@ -99,10 +144,8 @@ def encode_files(
     block_rows: int = 65536,
     columns: list[str] | None = None,
     min_slices: int | None = None,
-    exchange: str = "range",
     commit_status: str = "done",
     wap_staged: bool = False,
-    **_compat,
 ) -> dict:
     """Resumable chunked encode of the given (relpath, bytes) data
     files; partition = source data file, with STABLE part ids from the
@@ -112,30 +155,24 @@ def encode_files(
 
     Returns a summary dict. ``min_slices`` guarantees a minimum salt
     fan-out per chunk so even a single giant file parallelizes across
-    the cluster (skew.py does the splitting).
+    the cluster (skew.py sizes the fan-out).
 
     One out_dir = one (table, column subset): done-ness is per FILE,
     so resuming the same out_dir with a different ``columns`` selection
     would skip files encoded under the old selection — use a fresh
     out_dir per selection.
 
-    ``exchange`` picks how rows reach the encoder:
-
-    - ``"range"`` (default): the north-rule shape — salt skewed
-      partitions, ONE ``repartitionByRange`` on (part_id, salt), JVM
-      sort, streaming Arrow encoder. Rows move once through the
-      shuffle; works for any source Spark can scan.
-    - ``"direct"``: ZERO row shuffle. One task per (part, salt) where a
-      salt slice is a contiguous run of parquet ROW GROUPS (sliced
-      driver-side from footers — same zero-scan metadata the salting
-      already reads); each task reads its row groups with pyarrow,
-      sorts in Arrow, and encodes. The only exchange in the plan is a
-      round-robin of the tiny task list — the decode pattern mirrored
-      onto encode. At 100 TB this skips rewriting the whole table
-      through shuffle storage; skew handling is identical (footer-driven
-      fan-out), but a file's split granularity is its row-group count,
-      so single-row-group monster files can't fan out (writers should
-      emit many row groups — Iceberg defaults do).
+    No source row is shuffled. One task per (part, salt), where a salt
+    slice is a contiguous run of parquet ROW GROUPS sliced driver-side
+    from footers (the same zero-scan metadata that sizes the fan-out);
+    each task reads its row groups with pyarrow, sorts in Arrow,
+    encodes, writes its own block file and returns only metadata. Spark
+    distributes just the tiny task list — the decode pattern mirrored
+    onto encode, so at 100 TB the table is never rewritten through
+    shuffle storage. A file's split granularity is its row-group
+    count; a file with fewer row groups than its fan-out falls back to
+    row-range slices of the covering row groups (bounded read
+    amplification, see _RG_AMP_CAP).
     """
     t_start = time.time()
     snapshot_id = snapshot_id_of(source_path)
@@ -184,17 +221,13 @@ def encode_files(
     # header, so this snapshot reads under the schema it was written
     # with; a grown source's new columns register as add-column
     # evolution. Skipped columns (projection encode) stay unregistered.
-    import pyarrow.parquet as _pq
+    import pyarrow.parquet as pq
 
     from .schema_evo import ensure_schema_baseline
-    from .table_io import abs_file_of as _abs_of
 
-    _src_schema = _pq.read_schema(_abs_of(source_path, files[0][0]))
-    if columns is not None:
-        _src_schema = pa.schema(
-            [_src_schema.field(c) for c in _src_schema.names
-             if c in set(columns)])
-    ensure_schema_baseline(out_dir, _src_schema)
+    schema = pq.read_schema(abs_file_of(source_path, files[0][0]))
+    ensure_schema_baseline(out_dir, schema if columns is None else pa.schema(
+        [schema.field(c) for c in schema.names if c in set(columns)]))
     manifest.write_snapshot_header(
         snapshot_id, source_path, _source_files(source_path), num_parts,
         staged=wap_staged,
@@ -234,30 +267,18 @@ def encode_files(
             if any(p not in done for p in parts_in_dir):
                 shutil.rmtree(full, ignore_errors=True)
     pending = sorted(p for p in rel_of if p not in done)
-    import pyarrow.parquet as pq
-
-    from .table_io import abs_file_of
-
-    schema = pq.read_schema(abs_file_of(source_path, files[0][0]))
-    data_cols = [c for c in (columns or schema.names)]
+    data_cols = list(columns or schema.names)
     sort_key = sort_key or key_col
     min_slices = min_slices or spark.sparkContext.defaultParallelism
     encoded_parts = 0
 
-    if exchange == "direct":
-        # the range path fails loudly when the sort key isn't among the
-        # encoded columns (sortWithinPartitions references it); match
-        # that instead of silently encoding unsorted, zone-less blocks
-        if sort_key not in data_cols:
-            raise ValueError(
-                f"direct encode: sort key {sort_key!r} must be in the "
-                f"encoded columns {data_cols!r} (zone maps, blooms and "
-                "block ordering derive from it)"
-            )
-    else:
-        encode_fn = make_encode_stream(
-            data_cols, forced_codecs=forced_codecs, block_rows=block_rows,
-            zone_key=sort_key,
+    # zone maps, blooms and block ordering all derive from the sort
+    # key: fail loudly rather than encode unsorted, zone-less blocks
+    if sort_key not in data_cols:
+        raise ValueError(
+            f"encode: sort key {sort_key!r} must be in the encoded "
+            f"columns {data_cols!r} (zone maps, blooms and block "
+            "ordering derive from it)"
         )
 
     prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
@@ -273,10 +294,9 @@ def encode_files(
     for lo in range(0, len(pending), chunk_parts):
         chunk = pending[lo : lo + chunk_parts]
         _mark("chunk_setup")
-        # read ONLY this chunk's files (no table re-scan per chunk)
-        chunk_files = [(p, rel_of[p]) for p in chunk]
         # salt fan-out from parquet footers: zero scans, zero Spark jobs
-        stats = footer_byte_stats(source_path, chunk_files, list(fat_columns))
+        stats = footer_byte_stats(
+            source_path, [(p, rel_of[p]) for p in chunk], list(fat_columns))
         total_b = max(sum(stats.values()), 1)
         # slice floor: a tiny table must not be confettied into
         # min_slices near-empty tasks — per-task overhead (worker
@@ -290,233 +310,128 @@ def encode_files(
             target_salt_bytes, max(total_b // min_slices, _SLICE_FLOOR)
         )
         factors = salt_factors(stats, target_bytes=eff_target)
-        nslices = max(sum(factors.values()), 1)
         fanout: dict[int, int] = {}  # actual per-part task count
         _mark("footer_stats")
-        if exchange == "direct":
-            # ZERO-row-shuffle path: a salt slice = a contiguous run of
-            # row groups, balanced by footer byte sizes (driver-side
-            # metadata only); one task reads+sorts+encodes its slice.
-            # The only exchange is a round-robin of this tiny task list.
-            # Files with FEWER row groups than their wanted fan-out
-            # (e.g. one giant row group) fall back to ROW-RANGE slices:
-            # each task reads the row groups covering its row span and
-            # slices locally — bounded read amplification instead of a
-            # skew-bound single task.
-            tasks: list[tuple[int, int, int, int, int, int, str]] = []
-            for p in chunk:
-                path = abs_file_of(source_path, rel_of[p])
-                md = pq.ParquetFile(path).metadata
-                nrg = md.num_row_groups
-                if nrg == 0:
+        # a salt slice = a contiguous run of row groups, balanced by
+        # footer byte sizes (driver-side metadata only); one task
+        # reads+sorts+encodes its slice. Files with FEWER row groups
+        # than their wanted fan-out (e.g. one giant row group) fall
+        # back to ROW-RANGE slices: each task reads the row groups
+        # covering its row span and slices locally — bounded read
+        # amplification instead of a skew-bound single task.
+        tasks: list[tuple[int, int, int, int, int, int, str]] = []
+        for p in chunk:
+            path = abs_file_of(source_path, rel_of[p])
+            md = pq.ParquetFile(path).metadata
+            nrg = md.num_row_groups
+            if nrg == 0:
+                continue
+            want = max(1, int(factors.get(int(p), 1)))
+            if nrg < want <= 2 * nrg:
+                # snap to whole row groups: a row-range slice must
+                # DECODE every covering row group and keep only its
+                # span, so fanning a 2-row-group file into 3 slices
+                # reads ~1.5x the bytes for no extra parallelism worth
+                # the amplification — at <=2x the rg count, one task
+                # per row group is strictly cheaper
+                want = nrg
+            if nrg >= want:
+                sizes = [md.row_group(i).total_byte_size for i in range(nrg)]
+                for s, (alo, ahi) in enumerate(_balanced_bounds(sizes, want)):
+                    tasks.append((int(p), s, alo, ahi, -1, -1, path))
+                continue
+            # row-range fallback: every slice re-decodes its covering
+            # row group, so fan-out here multiplies the READ work by
+            # ~want/nrg. Cap the amplification — beyond it the
+            # redundant decode outweighs the extra encode parallelism
+            # (measured encode/read cost ratio is ~2-4x on the bench
+            # tables). A truly monstrous single-row-group file still
+            # gets _RG_AMP_CAP-way parallelism; writers should emit
+            # many row groups (Iceberg defaults do). A size-growing
+            # cap (16 slices on a 470 MB single-rg file) was measured:
+            # it doubles DECODE throughput (more block files = more
+            # decode tasks) but halves encode throughput (amp), net
+            # worse end-to-end — rejected.
+            want = min(want, max(_RG_AMP_CAP, 2 * nrg))
+            offs = [0]
+            for i in range(nrg):
+                offs.append(offs[-1] + md.row_group(i).num_rows)
+            total_rows = offs[-1]
+            want = min(want, max(total_rows, 1))
+            for s in range(want):
+                rlo = s * total_rows // want
+                rhi = (s + 1) * total_rows // want
+                if rlo >= rhi:
                     continue
-                want = max(1, int(factors.get(int(p), 1)))
-                if nrg < want <= 2 * nrg:
-                    # snap to whole row groups: a row-range slice must
-                    # DECODE every covering row group and keep only its
-                    # span, so fanning a 2-row-group file into 3 slices
-                    # reads ~1.5x the bytes for no extra parallelism
-                    # worth the amplification — at <=2x the rg count,
-                    # one task per row group is strictly cheaper
-                    want = nrg
-                if nrg >= want:
-                    sizes = [
-                        md.row_group(i).total_byte_size for i in range(nrg)
-                    ]
-                    for s, (alo, ahi) in enumerate(
-                        _balanced_bounds(sizes, want)
-                    ):
-                        tasks.append((int(p), s, alo, ahi, -1, -1, path))
-                else:
-                    # row-range fallback (file has fewer row groups than
-                    # its wanted fan-out): every slice re-decodes its
-                    # covering row group, so fan-out here multiplies the
-                    # READ work by ~want/nrg. Cap the amplification —
-                    # beyond it the redundant decode outweighs the extra
-                    # encode parallelism (measured encode/read cost
-                    # ratio is ~2-4x on the bench tables). A truly
-                    # monstrous single-row-group file still gets
-                    # _RG_AMP_CAP-way parallelism; writers should emit
-                    # many row groups (Iceberg defaults do). A
-                    # size-growing cap (16 slices on a 470 MB
-                    # single-rg file) was measured: it doubles DECODE
-                    # throughput (more block files = more decode
-                    # tasks) but halves encode throughput (amp), net
-                    # worse end-to-end — rejected.
-                    want = min(want, max(_RG_AMP_CAP, 2 * nrg))
-                    rg_rows = [md.row_group(i).num_rows for i in range(nrg)]
-                    offs = [0]
-                    for r in rg_rows:
-                        offs.append(offs[-1] + r)
-                    total_rows = offs[-1]
-                    want = min(want, max(total_rows, 1))
-                    import bisect
-
-                    for s in range(want):
-                        rlo = s * total_rows // want
-                        rhi = (s + 1) * total_rows // want
-                        if rlo >= rhi:
-                            continue
-                        glo = bisect.bisect_right(offs, rlo) - 1
-                        ghi = bisect.bisect_left(offs, rhi)
-                        if offs[ghi] < rhi:
-                            ghi += 1
-                        tasks.append(
-                            (int(p), s, glo, ghi,
-                             rlo - offs[glo], rhi - offs[glo], path)
-                        )
-            for t in tasks:
-                fanout[t[0]] = fanout.get(t[0], 0) + 1
-            if tasks:
-                from .blocks import PLAN_DDL, make_direct_encoder, make_plan_sampler
-
-                # per-part codec-plan job: one tiny task per part samples
-                # the file head, selects codecs, trains FSST ONCE; the
-                # collected plan (codec names + <=2 KiB symbol tables —
-                # codec METADATA, not row data) seeds every slice's
-                # selector cache so salt fan-out never re-trains
-                sample_tasks = sorted({(p, path) for p, _s, *_r, path in tasks})
-                plan: dict[int, dict] = {}
-                if len(sample_tasks) <= 2 or total_b < (32 << 20):
-                    # small chunk: plan DRIVER-side — a one-task Spark
-                    # job costs ~1 s of scheduling for a KB-sized table
-                    from .blocks import plan_one_file
-
-                    for pid, path in sample_tasks:
-                        for col, codec, params, ft in plan_one_file(
-                            path, data_cols, forced_codecs=forced_codecs
-                        ):
-                            plan.setdefault(int(pid), {})[col] = (
-                                codec, params, ft
-                            )
-                else:
-                    # pack parts into ~1 task per core slot (plan work
-                    # is near-uniform per part) and slice the list
-                    # driver-side: parallelize() partitions in place,
-                    # where createDataFrame().repartition(n) added a
-                    # round-robin EXCHANGE just to shuffle a <1 KiB list
-                    nplan = max(1, min(
-                        len(sample_tasks),
-                        spark.sparkContext.defaultParallelism,
-                    ))
-                    sdf = spark.createDataFrame(
-                        spark.sparkContext.parallelize(sample_tasks, nplan),
-                        "part_id int, path string",
-                    )
-                    for r in sdf.mapInArrow(
-                        make_plan_sampler(data_cols, forced_codecs=forced_codecs),
-                        schema=PLAN_DDL,
-                    ).collect():
-                        plan.setdefault(int(r["part_id"]), {})[r["column"]] = (
-                            r["codec"], r["params"], r["fsst"]
-                        )
-                _mark("plan_job")
-                direct_fn = make_direct_encoder(
-                    data_cols, sort_key=sort_key,
-                    forced_codecs=forced_codecs, block_rows=block_rows,
-                    plan=plan,
-                )
-                # logical slicing (salt groups) is independent of the
-                # physical task count: pack ~2 tasks per core and let
-                # each task stream several groups through one Python
-                # worker — per-task overhead (worker roundtrip, Arrow
-                # init, output file commit) costs ~0.15 s each, which
-                # at 64 single-group tasks on local[1] added ~40% wall
-                ntasks = max(1, min(
-                    len(tasks), spark.sparkContext.defaultParallelism * 2
-                ))
-                # slices are byte-balanced by construction, so a plain
-                # contiguous parallelize() split stays balanced — and
-                # skips the round-robin EXCHANGE stage that
-                # .repartition(ntasks) added just to shuffle a tiny
-                # task list (~0.3 s fixed cost per job)
-                tdf = spark.createDataFrame(
-                    spark.sparkContext.parallelize(tasks, ntasks),
-                    "part_id int, salt int, rg_lo int, rg_hi int, "
-                    "row_lo long, row_hi long, path string",
-                )
-            # every file empty -> tasks == [], handled at the write step
-        else:
-            sub = load_part_files(spark, source_path, chunk_files)
-            if columns:
-                sub = sub.select(*columns, "part_id")
-            # the ONE wide op: range exchange on (part_id, salt); the JVM
-            # sort makes groups contiguous so mapInArrow streams them with
-            # no second shuffle (SURVEY.md §3.2)
-            salted = apply_salting(sub, factors, key_col, shuffle_parts=nslices)
-            blocks = salted.sortWithinPartitions(
-                "part_id", "salt", sort_key
-            ).mapInArrow(encode_fn, schema=BLOCKS_DDL)
-        _mark("task_build")
+                glo = bisect.bisect_right(offs, rlo) - 1
+                ghi = bisect.bisect_left(offs, rhi)
+                if offs[ghi] < rhi:
+                    ghi += 1
+                tasks.append((int(p), s, glo, ghi,
+                              rlo - offs[glo], rhi - offs[glo], path))
+        for t in tasks:
+            fanout[t[0]] = fanout.get(t[0], 0) + 1
         tmp = os.path.join(blocks_root, f"_tmp_{chunk[0]}_{chunk[-1]}")
         final = os.path.join(blocks_root, f"chunk-{chunk[0]:05d}-{chunk[-1]:05d}")
         if os.path.exists(final):  # crashed between rename and manifest append
             shutil.rmtree(final)
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp, exist_ok=True)
         t0 = time.time()
-        mdf = None
-        if exchange == "direct":
+        meta_rows: list[dict] = []
+        if tasks:  # every file empty -> no tasks, only empty parts
+            plan = _codec_plan(spark, tasks, data_cols, forced_codecs,
+                               total_b)
+            _mark("plan_job")
+            direct_fn = make_direct_encoder(
+                data_cols, sort_key=sort_key,
+                forced_codecs=forced_codecs, block_rows=block_rows,
+                plan=plan,
+            )
+            # logical slicing (salt groups) is independent of the
+            # physical task count: pack ~2 tasks per core and let each
+            # task stream several groups through one Python worker —
+            # per-task overhead (worker roundtrip, Arrow init, output
+            # file commit) costs ~0.15 s each, which at 64 single-group
+            # tasks on local[1] added ~40% wall. Slices are
+            # byte-balanced by construction, so a plain contiguous
+            # parallelize() split stays balanced — and skips the
+            # round-robin EXCHANGE stage that .repartition(ntasks)
+            # added just to shuffle a tiny task list (~0.3 s per job)
+            ntasks = max(1, min(
+                len(tasks), spark.sparkContext.defaultParallelism * 2
+            ))
+            tdf = spark.createDataFrame(
+                spark.sparkContext.parallelize(tasks, ntasks),
+                "part_id int, salt int, rg_lo int, rg_hi int, "
+                "row_lo long, row_hi long, path string",
+            )
+            _mark("task_build")
             # each TASK writes its own block parquet file with pyarrow
             # and returns only per-(part, column) metadata rows: the
             # encoded payloads never cross the Arrow->JVM boundary and
-            # the JVM parquet writer is skipped entirely (measured
-            # ~0.3 s of a 0.9 s webtext encode job; guide §4.1 — pass
-            # only the bytes the other side needs). Commit protocol:
-            # attempt-unique file names, the driver keeps exactly the
-            # returned file set (stray failed-attempt files are removed
-            # here), records it in a _FILES marker that decode trusts,
-            # then atomically renames the chunk dir — the same
-            # write-unique/commit-by-list pattern as Spark's own output
-            # protocol, with the manifest line as the commit point.
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp, exist_ok=True)
-            meta_rows: list[dict] = []
-            if tasks:
-                from .blocks import TASK_META_DDL, make_task_writer
-
-                meta_rows = [r.asDict() for r in tdf.mapInArrow(
-                    make_task_writer(direct_fn, tmp), schema=TASK_META_DDL
-                ).collect()]
-            committed = {r["file"] for r in meta_rows}
-            for f in os.listdir(tmp):
-                if f.endswith(".parquet") and f not in committed:
-                    os.remove(os.path.join(tmp, f))
-            with open(os.path.join(tmp, "_FILES"), "w") as f:
-                f.write("\n".join(sorted(committed)))
-            mdf = _merge_task_meta(meta_rows)
-        else:
-            # payloads are already codec-compressed; parquet-level
-            # snappy on top costs CPU both directions for ~no size win
-            # — and parquet's dictionary encoding must be OFF: building
-            # dictionary pages over MB-sized unique payload blobs costs
-            # ~13x the write time for zero size win (measured 12.7 s ->
-            # 0.9 s on 790 MB of blocks)
-            (blocks.write.mode("overwrite")
-             .option("compression", "none")
-             .option("parquet.enable.dictionary", "false")
-             # 32 MB row groups: the streaming decoder's peak memory is
-             # one row group + one logical group, so finer row groups
-             # keep decode tasks inside the warm allocator arena
-             # (default 128 MB quadruples that for zero read-side
-             # benefit — payloads are opaque blobs, no intra-row-group
-             # stats matter)
-             .option("parquet.block.size", str(32 * 1024 * 1024))
-             .parquet(tmp))
+            # no JVM parquet writer runs (guide §4.1 — pass only the
+            # bytes the other side needs).
+            meta_rows = [r.asDict() for r in tdf.mapInArrow(
+                make_task_writer(direct_fn, tmp), schema=TASK_META_DDL
+            ).collect()]
+        # Commit protocol: attempt-unique file names, the driver keeps
+        # exactly the returned file set (stray failed-attempt files are
+        # removed here), records it in a _FILES marker that decode
+        # trusts, then atomically renames the chunk dir — the same
+        # write-unique/commit-by-list pattern as Spark's own output
+        # protocol, with the manifest line as the commit point.
+        committed = {r["file"] for r in meta_rows}
+        for f in os.listdir(tmp):
+            if f.endswith(".parquet") and f not in committed:
+                os.remove(os.path.join(tmp, f))
+        with open(os.path.join(tmp, "_FILES"), "w") as f:
+            f.write("\n".join(sorted(committed)))
         with open(os.path.join(tmp, "_PARTS"), "w") as f:
             f.write(" ".join(str(int(p)) for p in chunk))
         os.rename(tmp, final)  # atomic commit of the chunk's data
         _mark("write_job")
-        if mdf is None:
-            # per-part metrics from the written files' METADATA columns
-            # (payload never read). Driver-side threaded pyarrow read —
-            # a chunk holds O(cores) task files, so this replaces a
-            # whole second Spark job (scan + shuffle + collect,
-            # ~0.5-1 s fixed cost per chunk; VERDICT r3 #8) with
-            # milliseconds of footer work. (The direct path returns the
-            # same rows through the encode job itself — zero extra
-            # reads.) Chunks beyond the file-count guard fall back to
-            # the distributed aggregation.
-            mdf = _chunk_metrics_rows(spark, final)
-        _mark("metrics")
+        mdf = merge_part_meta(meta_rows)
         per_part: dict[int, dict] = {
             int(p): {
                 "part_id": int(p),
@@ -529,32 +444,28 @@ def encode_files(
             }
             for p in chunk
         }
-        for r in mdf:
-            e = per_part[int(r["part_id"])]
+        for (pid, _col), r in sorted(mdf.items()):
+            e = per_part[pid]
             # part-level zone map in the manifest: lets a key-range
             # decode prune whole PARTS/chunk dirs driver-side, before
             # any file listing or footer read (the Iceberg-manifest
             # data-skipping pattern). Set only when every block of the
             # part is zoned; one unzoned block poisons the whole part
             # (over-inclusion, never silent loss).
-            if int(r["n_unzoned"] or 0) > 0:
+            if r["n_unzoned"] > 0:
                 e["key_lo"] = e["key_hi"] = None
                 e["_zone_poisoned"] = True
             elif r["key_lo"] is not None and not e.get("_zone_poisoned"):
-                e["key_lo"], e["key_hi"] = int(r["key_lo"]), int(r["key_hi"])
+                e["key_lo"], e["key_hi"] = r["key_lo"], r["key_hi"]
             # string part bounds: same poisoning rule, separate flag
-            if int(r["n_unzoned_s"] or 0) > 0:
+            if r["n_unzoned_s"] > 0:
                 e["key_lo_s"] = e["key_hi_s"] = None
                 e["_zone_poisoned_s"] = True
             elif r["key_lo_s"] is not None and not e.get("_zone_poisoned_s"):
                 e["key_lo_s"], e["key_hi_s"] = r["key_lo_s"], r["key_hi_s"]
             e["columns"][r["column"]] = {
-                "codec": r["codec"],
-                "n_values": int(r["n_values"]) ,
-                "raw_bytes": int(r["raw_bytes"]),
-                "enc_bytes": int(r["enc_bytes"]),
-                "n_blocks": int(r["n_blocks"]),
-                "codec_params": r["codec_params"],
+                k: r[k] for k in ("codec", "n_values", "raw_bytes",
+                                  "enc_bytes", "n_blocks", "codec_params")
             }
         for e in per_part.values():
             e.pop("_zone_poisoned", None)
@@ -1183,134 +1094,6 @@ def _committed_block_files(
     return sorted(files)
 
 
-_METRIC_COLS = [
-    "part_id", "column", "codec", "n_values", "raw_bytes", "enc_bytes",
-    "codec_params", "key_lo", "key_hi", "key_lo_s", "key_hi_s",
-]
-
-
-def _merge_task_meta(meta_rows: list[dict]) -> list[dict]:
-    """Merge the encode tasks' per-(file, part, column) metadata rows
-    (blocks.TASK_META_DDL) into one row per (part, column) — the same
-    shape _chunk_metrics_rows derives from written footers, computed
-    from the job's own return value instead of a re-read."""
-    agg: dict[tuple[int, str], dict] = {}
-    for r in meta_rows:
-        key = (int(r["part_id"]), r["column"])
-        a = agg.get(key)
-        if a is None:
-            agg[key] = a = {
-                "part_id": int(r["part_id"]), "column": r["column"],
-                "codec": r["codec"], "codec_params": "{}",
-                "n_values": 0, "raw_bytes": 0, "enc_bytes": 0,
-                "n_blocks": 0, "key_lo": None, "key_hi": None,
-                "key_lo_s": None, "key_hi_s": None,
-                "n_unzoned": 0, "n_unzoned_s": 0,
-            }
-        if a["codec_params"] == "{}" and r["codec_params"] not in ("", "{}"):
-            a["codec_params"] = r["codec_params"]
-        a["n_values"] += int(r["n_values"])
-        a["raw_bytes"] += int(r["raw_bytes"])
-        a["enc_bytes"] += int(r["enc_bytes"])
-        a["n_blocks"] += int(r["n_blocks"])
-        a["n_unzoned"] += int(r["n_unzoned"])
-        a["n_unzoned_s"] += int(r["n_unzoned_s"])
-        if r["key_lo"] is not None:
-            a["key_lo"] = (int(r["key_lo"]) if a["key_lo"] is None
-                           else min(a["key_lo"], int(r["key_lo"])))
-            a["key_hi"] = (int(r["key_hi"]) if a["key_hi"] is None
-                           else max(a["key_hi"], int(r["key_hi"])))
-        if r["key_lo_s"] is not None:
-            a["key_lo_s"] = (r["key_lo_s"] if a["key_lo_s"] is None
-                             else min(a["key_lo_s"], r["key_lo_s"]))
-            a["key_hi_s"] = (r["key_hi_s"] if a["key_hi_s"] is None
-                             else max(a["key_hi_s"], r["key_hi_s"]))
-    return [agg[k] for k in sorted(agg)]
-
-
-def _chunk_metrics_rows(spark: SparkSession, final: str) -> list[dict]:
-    """Per-(part, column) metric rows for one committed chunk dir,
-    aggregated from the block files' metadata columns (payload bytes
-    never touched). Threaded pyarrow in the driver for the normal
-    O(cores)-files case; a chunk with very many files (huge clusters)
-    falls back to the distributed groupBy so driver work stays
-    bounded."""
-    import concurrent.futures as cf
-
-    import pyarrow.parquet as pq
-
-    files = sorted(
-        os.path.join(final, f)
-        for f in os.listdir(final)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    if len(files) > 512:
-        rows = (
-            spark.read.parquet(final)
-            .groupBy("part_id", "column")
-            .agg(
-                F.first("codec").alias("codec"),
-                F.sum("n_values").alias("n_values"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.count("*").alias("n_blocks"),
-                F.first("codec_params").alias("codec_params"),
-                F.min("key_lo").alias("key_lo"),
-                F.max("key_hi").alias("key_hi"),
-                F.min("key_lo_s").alias("key_lo_s"),
-                F.max("key_hi_s").alias("key_hi_s"),
-                F.sum(F.when(F.col("key_lo").isNull(), 1).otherwise(0))
-                .alias("n_unzoned"),
-                F.sum(F.when(F.col("key_lo_s").isNull(), 1).otherwise(0))
-                .alias("n_unzoned_s"),
-            )
-        ).collect()
-        return [r.asDict() for r in rows]
-
-    def rd(p: str) -> pa.Table:
-        f = pq.ParquetFile(p)
-        have = set(f.schema_arrow.names)
-        return f.read(columns=[c for c in _METRIC_COLS if c in have])
-
-    if not files:
-        return []
-    with cf.ThreadPoolExecutor(min(16, len(files))) as ex:
-        tables = [t for t in ex.map(rd, files) if t.num_rows]
-    if not tables:
-        return []
-    df = pa.concat_tables(tables, promote_options="default").to_pandas()
-    out: list[dict] = []
-    for (pid, col), sub in df.groupby(["part_id", "column"], sort=False):
-        # codec is constant per (part, column); the real codec_params
-        # live on each salt slice's block_seq-0 row, the rest are "{}"
-        params = next(
-            (p for p in sub["codec_params"] if p and p != "{}"), "{}"
-        )
-        klo = sub["key_lo"].dropna()
-        khi = sub["key_hi"].dropna()
-        klo_s = sub["key_lo_s"].dropna()
-        khi_s = sub["key_hi_s"].dropna()
-        out.append(
-            {
-                "part_id": int(pid),
-                "column": col,
-                "codec": sub["codec"].iloc[0],
-                "n_values": int(sub["n_values"].sum()),
-                "raw_bytes": int(sub["raw_bytes"].sum()),
-                "enc_bytes": int(sub["enc_bytes"].sum()),
-                "n_blocks": int(len(sub)),
-                "codec_params": params,
-                "key_lo": int(klo.min()) if len(klo) else None,
-                "key_hi": int(khi.max()) if len(khi) else None,
-                "key_lo_s": klo_s.min() if len(klo_s) else None,
-                "key_hi_s": khi_s.max() if len(khi_s) else None,
-                "n_unzoned": int(sub["key_lo"].isna().sum()),
-                "n_unzoned_s": int(sub["key_lo_s"].isna().sum()),
-            }
-        )
-    return out
-
-
 def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     """EQUALITY DELETE (Iceberg merge-on-read): write a delete file of
     key values and commit a manifest ``delete`` entry — no data file is
@@ -1525,9 +1308,9 @@ def _staged_full_rewrite(
     chunk_parts: int = 64,
 ) -> tuple[dict, list[str]]:
     """Shared full-table rewrite: decode the LIVE rows (tombstones
-    applied by decode), re-encode them as a fresh snapshot via the
-    RANGE path (repartitionByRange on ``key_col`` → clustered, sorted
-    parts), RETIRE every previous chunk dir, and clear any pending
+    applied by decode), optionally range-cluster them on ``key_col``
+    (repartitionByRange → disjoint, sorted parts), re-encode them as a
+    fresh snapshot, RETIRE every previous chunk dir, and clear any pending
     delete files — all in one manifest txn.
 
     STAGED encode: part lines commit with status=staged — invisible
@@ -1563,15 +1346,11 @@ def _staged_full_rewrite(
      .parquet(src))
     # the staged files already hold the final row placement (the
     # clustering repartitionByRange above, or the original part rows
-    # for an unclustered purge), so the re-encode needs no row
-    # exchange: the DIRECT path slices the staged files' row groups
-    # per task and Arrow-sorts within the slice — one shuffle fewer
-    # than re-running the range exchange over data that is already
-    # ranged (guide §2.4)
+    # for an unclustered purge), so the re-encode only slices the
+    # staged files' row groups per task and Arrow-sorts within them
     summary = encode_files(
         spark, src, list_parquet_files(src), out_dir, key_col,
         chunk_parts=chunk_parts,
-        exchange="direct",
         commit_status="staged",
     )
     staged = [
@@ -1637,8 +1416,8 @@ def rewrite_sorted(
     after a sorted rewrite each part owns a tight disjoint key range —
     manifest-level pruning drops whole chunks again and runs/deltas
     re-tighten for RLE/delta/FoR. Implemented as a full staged rewrite
-    through the RANGE encode path (repartitionByRange + per-part Arrow
-    sort); any pending equality deletes are materialized on the way
+    (repartitionByRange on the key, then the encode tasks' per-slice
+    Arrow sort); any pending equality deletes are materialized on the way
     (the rewrite decodes live rows, so keeping the tombstone files
     would double-apply history). Old dirs stay for time travel until
     :func:`vacuum_blocks`."""
@@ -2193,10 +1972,11 @@ def decode_blocks(
     matches physical names and decode_group emits logical ones.
 
     Every encode task writes exactly one parquet file holding whole,
-    contiguous (part_id, salt) groups (range exchange + JVM sort at
-    encode time), so decode never needs the hash exchange of encoded
-    payloads that a groupBy/applyInArrow formulation would add: one
-    task per block FILE streams its groups through the numpy decoder.
+    contiguous (part_id, salt) groups (the task sorts and encodes its
+    own row-group slices), so decode never needs the hash exchange of
+    encoded payloads that a groupBy/applyInArrow formulation would
+    add: one task per block FILE streams its groups through the numpy
+    decoder.
     The only exchange in the plan is a round-robin of the tiny file-
     path list (metadata, not payload bytes). File reads go through
     pyarrow, which handles local, HDFS and S3 URIs alike in
@@ -2469,9 +2249,7 @@ def roundtrip_df(
     key_col: str,
     columns: list[str] | None = None,
     forced_codecs: dict[str, str] | None = None,
-    num_parts: int = 8,
     out_dir: str | None = None,
-    exchange: str = "range",
 ) -> DataFrame:
     """Encode source -> blocks -> decode; returns the decoded DataFrame.
 
@@ -2500,10 +2278,8 @@ def roundtrip_df(
         source_path,
         out,
         key_col=key_col,
-        num_parts=num_parts,
         forced_codecs=forced_codecs,
         columns=columns,
-        exchange=exchange,
     )
     dec = decode_blocks(spark, out, schema)
     keep = columns or [f.name for f in schema]

@@ -1,8 +1,8 @@
 """Non-parquet SOURCE ingestion: CSV / JSON-lines -> canonical parquet
 staging -> the (parquet-native) encode engine.
 
-The encode paths are parquet-native by design — the direct path slices
-ROW GROUPS from footers and the manifest registers file identities, so
+The encode path is parquet-native by design — it slices ROW GROUPS
+from footers and the manifest registers file identities, so
 formats without row-group structure stage through one distributed
 conversion pass first (exactly what an Iceberg `add_files`/CTAS does
 for text sources). The staging write is the ONLY extra pass: Spark

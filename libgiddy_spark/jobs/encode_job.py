@@ -4,7 +4,7 @@
     zip -r engine.zip libgiddy_spark
     spark-submit --py-files engine.zip libgiddy_spark/jobs/encode_job.py \
         --source /path/to/snapshot --out /path/to/encoded \
-        --key-col url [--num-parts 4096] [--chunk-parts 64] \
+        --key-col url [--chunk-parts 64] \
         [--target-salt-bytes 134217728] [--columns url,text,lang]
 
 Resumable: re-running with the same --out skips partitions whose
@@ -47,11 +47,6 @@ def main() -> None:
     ap.add_argument("--block-rows", type=int, default=65536)
     ap.add_argument("--columns", default=None, help="comma-separated subset")
     ap.add_argument("--fat-columns", default="html,text")
-    ap.add_argument("--exchange", default="range",
-                    choices=["range", "direct"],
-                    help="range = salted range shuffle (north-rule "
-                         "shape); direct = zero-row-shuffle per-file "
-                         "tasks over row-group slices (scale path)")
     ap.add_argument("--format", default="parquet",
                     choices=("parquet", "csv", "jsonl"),
                     help="source format; csv/jsonl stage through ONE "
@@ -101,7 +96,6 @@ def main() -> None:
         target_salt_bytes=args.target_salt_bytes,
         block_rows=args.block_rows,
         columns=args.columns.split(",") if args.columns else None,
-        exchange=args.exchange,
         wap_staged=args.wap_staged,
     )
     print(json.dumps(summary))

@@ -1,17 +1,19 @@
-"""Skew handling: salt heavy partitions before the encode shuffle
-(BASELINE.json:6,14 — "skewed html/text partitions are salted and
-range-repartitioned before the encode shuffle").
+"""Skew handling: fan heavy partitions out into salt slices
+(BASELINE.json:6,14 — skewed html/text partitions are salted before
+encode; README records why the slices are row-group runs rather than
+a range repartition).
 
 Per-partition byte totals come from the parquet FOOTERS (per-column
 uncompressed sizes + row counts, a driver-side metadata read — the
 same statistics an Iceberg manifest carries in production), so sizing
 the salt fan-out costs zero table scans and zero Spark jobs per chunk.
 Partitions whose bytes exceed ``target_bytes`` get a salt fan-out
-factor; the DataFrame is then range-repartitioned on (part_id, salt) so
-each salted slice is its own encode task. At 1000-executor scale this
-is what keeps one 100x crawl-host partition from stalling a stage.
-``partition_byte_stats`` (one Catalyst aggregate) remains as the
-fallback for sources without parquet footers.
+factor; engine.encode_files cuts each such file into that many
+contiguous row-group (or row-range) slices, each its own encode task.
+At 1000-executor scale this is what keeps one 100x crawl-host
+partition from stalling a stage. ``partition_byte_stats`` (one
+Catalyst aggregate) computes the same estimate with a scan, for
+sources without parquet footers.
 """
 
 from __future__ import annotations
@@ -74,29 +76,3 @@ def salt_factors(
     return {
         p: max(1, min(max_salt, -(-b // target_bytes))) for p, b in byte_stats.items()
     }
-
-
-def apply_salting(
-    df: DataFrame,
-    factors: dict[int, int],
-    key_col: str,
-    shuffle_parts: int | None = None,
-) -> DataFrame:
-    """Add a salt column and range-repartition on (part_id, salt).
-
-    Salt is content-derived (hash of the key column mod the partition's
-    factor) so it is deterministic across runs — required for resume.
-    """
-    if all(v <= 1 for v in factors.values()):
-        salted = df.withColumn("salt", F.lit(0).cast("int"))
-    else:
-        fmap = F.create_map(
-            *[F.lit(x) for kv in factors.items() if kv[1] > 1 for x in kv]
-        )
-        factor = F.coalesce(fmap[F.col("part_id")], F.lit(1))
-        salted = df.withColumn(
-            "salt",
-            F.pmod(F.xxhash64(F.col(key_col), F.lit("salt")), factor).cast("int"),
-        )
-    n = shuffle_parts or max(len(factors), 1)
-    return salted.repartitionByRange(n, F.col("part_id"), F.col("salt"))

@@ -4,7 +4,7 @@
 source and encodes each micro-batch of newly-arrived data files
 through the SAME chunked batch engine (``engine.encode_files``) —
 file-granular, so every engine invariant holds unchanged (footer-based
-salting, one range exchange, streaming Arrow encoder, atomic chunk
+salt fan-out, shuffle-free row-group-slice encode tasks, atomic chunk
 rename, manifest commit point).
 
 Exactly-once comes from the MANIFEST, not the stream: part ids are
@@ -25,7 +25,19 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .engine import encode_files
-from .table_io import _norm_uri
+
+
+def _norm_uri(p: str) -> str:
+    """Scheme-independent URI normal form: drop the scheme (file:,
+    hdfs:, s3a:, ...) and collapse leading slashes to one — so
+    ``file:/x``, ``file:///x`` and ``/x`` all normalize identically,
+    and input_file_name() URIs match driver-side source paths."""
+    import re
+
+    p = re.sub(r"^[A-Za-z][A-Za-z0-9+.\-]*:", "", p)
+    if p.startswith("/"):
+        p = "/" + p.lstrip("/")
+    return p
 
 
 @contextmanager

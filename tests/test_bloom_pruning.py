@@ -186,7 +186,7 @@ def test_point_lookup_multi_part_block_files(spark, tmp_path):
     docs.repartition(12).write.parquet(src_dir)
     out = str(tmp_path / "enc")
     encode_snapshot(spark, src_dir, out, key_col="doc_id",
-                    sort_key="text", exchange="direct")
+                    sort_key="text")
     texts = [r[0] for r in docs.select("text").distinct().limit(40).collect()]
     src_df = spark.read.parquet(src_dir)
     schema = pq.read_schema(f"{SF}/documents.parquet")

@@ -34,7 +34,7 @@ def test_encode_then_decode_then_maintain_cli(spark, tmp_path, monkeypatch,
     out = str(tmp_path / "enc")
     _run(monkeypatch, encode_job,
          ["--source", src, "--out", out, "--key-col", "doc_id",
-          "--chunk-parts", "1", "--exchange", "direct"])
+          "--chunk-parts", "1"])
     rep = _last_json(capsys)
     assert rep["encoded_parts"] == 4
     _run(monkeypatch, decode_job,

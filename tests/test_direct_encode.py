@@ -1,6 +1,6 @@
-"""Shuffle-free direct encode path (engine.encode_files
-exchange='direct'): correctness vs the range path, skew fan-out via
-row-group slicing, plan shape, resume."""
+"""Shuffle-free encode path (engine.encode_files): bit-identical
+round trips, zone maps and blooms, skew fan-out via row-group and
+row-range slicing, malformed tasks and keywords, plan shape, resume."""
 
 from __future__ import annotations
 
@@ -36,30 +36,32 @@ def test_balanced_bounds():
 def test_direct_roundtrip_bit_identical(spark, tmp_path, table, key):
     src = f"{SF}/{table}.parquet"
     out = str(tmp_path / f"d_{table}")
-    encode_snapshot(spark, src, out, key_col=key, exchange="direct")
+    encode_snapshot(spark, src, out, key_col=key)
     dec = decode_blocks(spark, out, pq.read_schema(src))
     rep = verify_roundtrip(spark.read.parquet(src), dec, key)
     assert rep["ok"], rep
 
 
-def test_direct_matches_range_blocks_semantics(spark, tmp_path):
-    """Both paths produce decodable, bit-identical tables with zone
-    maps and blooms; compressed size is equivalent (same codecs)."""
+def test_direct_blocks_semantics(spark, tmp_path):
+    """The encoded table carries zone maps and blooms and decodes
+    bit-identically."""
     src = f"{SF}/documents.parquet"
-    sizes = {}
-    for mode in ("range", "direct"):
-        out = str(tmp_path / mode)
-        encode_snapshot(spark, src, out, key_col="doc_id", exchange=mode)
-        b = blocks_df(spark, out)
-        assert b.filter(F.col("key_lo").isNotNull()).count() > 0
-        assert b.filter(F.col("key_bloom").isNotNull()).count() > 0
-        sizes[mode] = int(b.agg(F.sum("enc_bytes")).collect()[0][0])
-        dec = decode_blocks(spark, out, pq.read_schema(src))
-        assert verify_roundtrip(spark.read.parquet(src), dec, "doc_id")["ok"]
-    # direct's salt slices are CONTIGUOUS row-group runs, range's are
-    # hash-interleaved — so direct preserves run structure and should
-    # never compress materially worse (measured: 20%+ smaller here)
-    assert sizes["direct"] <= sizes["range"] * 1.02, sizes
+    out = str(tmp_path / "docs")
+    encode_snapshot(spark, src, out, key_col="doc_id")
+    b = blocks_df(spark, out)
+    assert b.filter(F.col("key_lo").isNotNull()).count() > 0
+    assert b.filter(F.col("key_bloom").isNotNull()).count() > 0
+    dec = decode_blocks(spark, out, pq.read_schema(src))
+    assert verify_roundtrip(spark.read.parquet(src), dec, "doc_id")["ok"]
+
+
+@pytest.mark.parametrize("kw", [{"num_parts": 8}, {"exchange": "range"}])
+def test_unknown_encode_keyword_raises(spark, tmp_path, kw):
+    """A misspelled or retired keyword fails loudly instead of being
+    swallowed (and the encode silently running some other way)."""
+    with pytest.raises(TypeError):
+        encode_snapshot(spark, f"{SF}/documents.parquet",
+                        str(tmp_path / "kw"), key_col="doc_id", **kw)
 
 
 def test_direct_skew_fans_out_row_groups(spark, tmp_path):
@@ -72,7 +74,7 @@ def test_direct_skew_fans_out_row_groups(spark, tmp_path):
      .parquet(src_dir))
     out = str(tmp_path / "rg_out")
     encode_snapshot(spark, src_dir, out, key_col="doc_id",
-                    exchange="direct", target_salt_bytes=16 * 1024)
+                    target_salt_bytes=16 * 1024)
     b = blocks_df(spark, out)
     n_salts = b.select("salt").distinct().count()
     assert n_salts > 1  # actually fanned out
@@ -89,7 +91,7 @@ def test_direct_row_slice_fallback_single_row_group(spark, tmp_path):
     assert md.num_row_groups == 1  # precondition for the fallback path
     out = str(tmp_path / "rows")
     encode_snapshot(spark, src, out, key_col="doc_id",
-                    exchange="direct", target_salt_bytes=16 * 1024)
+                    target_salt_bytes=16 * 1024)
     b = blocks_df(spark, out)
     assert b.select("salt").distinct().count() > 1
     dec = decode_blocks(spark, out, pq.read_schema(src))
@@ -104,6 +106,7 @@ def test_row_range_stream_slice_exact(tmp_path):
     row-group boundaries — the offset math slices the first kept
     batch, not the file head."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from libgiddy_spark.blocks import make_direct_encoder, plan_one_file
 
@@ -123,17 +126,38 @@ def test_row_range_stream_slice_exact(tmp_path):
             "part_id": [0], "salt": [0], "rg_lo": [rg_lo],
             "rg_hi": [rg_hi], "row_lo": [rlo], "row_hi": [rhi],
             "path": [src]})
-        outs = list(enc(iter([task])))
-        nv = sum(v for b in outs
-                 for c, v in zip(b.column(3).to_pylist(),
-                                 b.column(6).to_pylist()) if c == "k")
+        out = pa.Table.from_batches(list(enc(iter([task]))))
+        k_rows = out.filter(pc.equal(out.column("column"), "k"))
+        nv = pc.sum(k_rows.column("n_values")).as_py()
         assert nv == rhi - rlo, (rg_lo, rg_hi, rlo, rhi, nv)
         # zone map pins the exact rows, not just the count
-        klo = min(v for b in outs for v in b.column(11).to_pylist()
-                  if v is not None)
-        khi = max(v for b in outs for v in b.column(12).to_pylist()
-                  if v is not None)
+        klo = pc.min(out.column("key_lo")).as_py()
+        khi = pc.max(out.column("key_hi")).as_py()
         assert (klo, khi) == (base + rlo, base + rhi - 1)
+
+
+def test_row_range_past_span_raises(tmp_path):
+    """A row-range task whose rows lie past its covering row groups
+    raises an error naming the file, part, salt and row range instead
+    of encoding nothing (or an opaque Arrow error)."""
+    import pyarrow as pa
+
+    from libgiddy_spark.blocks import make_direct_encoder
+
+    src = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(1000), pa.int64())}),
+                   src, row_group_size=300)
+    enc = make_direct_encoder(["k"], sort_key="k")
+    for rg_lo, rg_hi, rlo, rhi in [(3, 4, 100, 150), (0, 1, 250, 400)]:
+        task = pa.RecordBatch.from_pydict({
+            "part_id": [7], "salt": [2], "rg_lo": [rg_lo],
+            "rg_hi": [rg_hi], "row_lo": [rlo], "row_hi": [rhi],
+            "path": [src]})
+        with pytest.raises(ValueError) as ei:
+            list(enc(iter([task])))
+        msg = str(ei.value)
+        assert src in msg and "part 7" in msg and "salt 2" in msg, msg
+        assert f"[{rlo}, {rhi})" in msg, msg
 
 
 def test_direct_plan_moves_no_source_rows(spark):
@@ -162,11 +186,9 @@ def test_direct_resume_skips_done_parts(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs.repartition(4).write.parquet(src_dir)
     out = str(tmp_path / "resume")
-    s1 = encode_snapshot(spark, src_dir, out, key_col="doc_id",
-                         exchange="direct")
+    s1 = encode_snapshot(spark, src_dir, out, key_col="doc_id")
     assert s1["encoded_parts"] == 4
-    s2 = encode_snapshot(spark, src_dir, out, key_col="doc_id",
-                         exchange="direct")
+    s2 = encode_snapshot(spark, src_dir, out, key_col="doc_id")
     assert s2["encoded_parts"] == 0 and s2["skipped_done"] == 4
     dec = decode_blocks(spark, out, pq.read_schema(f"{SF}/documents.parquet"))
     assert dec.count() == docs.count()
@@ -180,7 +202,7 @@ def test_direct_commit_by_list(spark, tmp_path):
     rows."""
     src = f"{SF}/documents.parquet"
     out = str(tmp_path / "cbl")
-    encode_snapshot(spark, src, out, key_col="doc_id", exchange="direct")
+    encode_snapshot(spark, src, out, key_col="doc_id")
     schema = pq.read_schema(src)
     n = decode_blocks(spark, out, schema).count()
     blocks = os.path.join(out, "blocks")

@@ -238,8 +238,10 @@ def test_footer_stats_track_scan_stats(spark, tmp_path):
     """The footer-based salt-sizing estimate must track the Catalyst
     scan estimate (same formula; footers add page/level overhead to the
     fat-column bytes, so allow a modest tolerance)."""
+    from functools import reduce
+
     from libgiddy_spark.skew import footer_byte_stats, partition_byte_stats
-    from libgiddy_spark.table_io import list_parquet_files, load_part_files
+    from libgiddy_spark.table_io import abs_file_of, list_parquet_files
     from libgiddy_spark.webtext import write_webtext
 
     src = str(tmp_path / "wt")
@@ -247,9 +249,10 @@ def test_footer_stats_track_scan_stats(spark, tmp_path):
     files = list_parquet_files(src)
     part_files = [(i, rel) for i, (rel, _s) in enumerate(files)]
     foot = footer_byte_stats(src, part_files, ["html", "text"])
-    scan = partition_byte_stats(
-        load_part_files(spark, src, part_files), ["html", "text"]
-    )
+    tagged = reduce(lambda a, b: a.unionByName(b), [
+        spark.read.parquet(abs_file_of(src, rel))
+        .withColumn("part_id", F.lit(pid)) for pid, rel in part_files])
+    scan = partition_byte_stats(tagged, ["html", "text"])
     assert set(foot) == set(scan)
     for pid in foot:
         assert 0.85 <= foot[pid] / scan[pid] <= 1.3, (pid, foot[pid], scan[pid])
@@ -294,33 +297,11 @@ def test_decode_part_filter_lists_only_needed_chunks(spark, tmp_path):
     assert dec.select("part_id").distinct().collect()[0][0] == 2
 
 
-def test_encode_plan_single_exchange(spark):
-    """The encode path's ONE wide op is the range exchange on
-    (part_id, salt); anything more is a regression (e.g. a per-row
-    expression forcing a second shuffle)."""
-    from libgiddy_spark.blocks import BLOCKS_DDL, make_encode_stream
-    from libgiddy_spark.skew import apply_salting, footer_byte_stats, salt_factors
-    from libgiddy_spark.table_io import list_parquet_files, load_part_files
-
-    src = f"{SF}/documents.parquet"
-    files = [(0, rel) for rel, _ in list_parquet_files(src)]
-    sub = load_part_files(spark, src, files)
-    stats = footer_byte_stats(src, files, ["text"])
-    factors = salt_factors(stats, target_bytes=1 << 20)
-    salted = apply_salting(sub, factors, "doc_id", shuffle_parts=4)
-    enc = salted.sortWithinPartitions("part_id", "salt", "doc_id").mapInArrow(
-        make_encode_stream(["doc_id", "text"]), schema=BLOCKS_DDL
-    )
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-
-
 def test_encode_source_file_with_special_chars(spark, tmp_path):
-    """Filenames with spaces / sub-delims / non-ASCII must map to part
-    ids (Java URI rendering percent-encodes spaces but keeps '=' ','
-    '(' raw — the literal part map carries both spellings). ':' is
-    excluded: Hadoop's Path cannot represent it at all ("Relative path
-    in absolute URI"), independent of our mapping."""
+    """Filenames with spaces / sub-delims / non-ASCII encode and decode
+    bit-identically: the encode tasks open the source file by its
+    driver-side path with pyarrow, never through a Spark/Hadoop URI
+    rendering."""
     import shutil
 
     src_dir = tmp_path / "specials"
