@@ -602,6 +602,13 @@ def make_task_writer(encode_fn, out_dir: str,
     return write_tasks
 
 
+def output_type(t: pa.DataType) -> pa.DataType:
+    """The Arrow type decode emits for a schema field of type ``t``:
+    Spark's Arrow exchange wants tz-aware micros for timestamps (engine
+    convention is session timeZone=UTC, so values pass through)."""
+    return pa.timestamp("us", tz="UTC") if pa.types.is_timestamp(t) else t
+
+
 def decode_group(table: pa.Table, schema: pa.Schema,
                  column_map: dict[str, str] | None = None) -> pa.Table:
     """Decode one (part_id, salt) group of block rows back to source rows.
@@ -612,45 +619,55 @@ def decode_group(table: pa.Table, schema: pa.Schema,
     block's PHYSICAL column name to its current logical name (schema
     RENAME evolution: renames never rewrite data, so blocks written
     before one keep the old name).
+
+    Every decoded column must have as many rows as its blocks'
+    ``n_values`` sum to, and all columns the same count: a missing,
+    extra or truncated block raises a ``ValueError`` naming the part,
+    salt and column instead of yielding misaligned or fewer rows.
     """
     table = table.sort_by([("column", "ascending"), ("block_seq", "ascending")])
     cols_present = table.column("column").to_pylist()
     payloads = table.column("payload").to_pylist()
+    n_values = (table.column("n_values").to_pylist()
+                if "n_values" in table.column_names else None)
     wanted = {f.name for f in schema}
     by_col: dict[str, list[pa.Array]] = {}
-    for name, payload in zip(cols_present, payloads):
+    stored: dict[str, int] = {}
+    for i, (name, payload) in enumerate(zip(cols_present, payloads)):
         if column_map is not None:
             name = column_map.get(name, name)
         if name not in wanted:  # projection: don't decode dropped columns
             continue
         by_col.setdefault(name, []).append(decode_array(payload))
+        if n_values is not None:
+            stored[name] = stored.get(name, 0) + n_values[i]
     decoded: dict[str, pa.Array] = {}
-    n = 0
     for field in schema:
         if field.name not in by_col:
             continue
         chunks = by_col[field.name]
         arr = chunks[0] if len(chunks) == 1 else pa.concat_arrays(chunks)
-        typ = field.type
-        if pa.types.is_timestamp(typ):
-            # Spark's Arrow exchange wants tz-aware micros; engine
-            # convention is session timeZone=UTC so values pass through
-            typ = pa.timestamp("us", tz="UTC")
-        decoded[field.name] = arr.cast(typ)
-        n = len(arr)
-    if not decoded and table.num_rows and "n_values" in table.column_names:
+        decoded[field.name] = arr.cast(output_type(field.type))
+    pid = table.column("part_id")[0].as_py() if table.num_rows else -1
+    n = max([len(a) for a in decoded.values()] + list(stored.values()),
+            default=0)
+    for name, arr in decoded.items():
+        if len(arr) != n or stored.get(name, n) != n:
+            salt = table.column("salt")[0].as_py()
+            raise ValueError(
+                f"part {pid} salt {salt} column {name!r}: decoded "
+                f"{len(arr)} rows, its blocks' n_values sum to "
+                f"{stored.get(name, len(arr))}, the group has {n} — "
+                "a block is missing, extra or corrupt")
+    if not decoded and table.num_rows and n_values is not None:
         # SCHEMA EVOLUTION, all-post-evolution projection: none of the
         # requested columns exist in this part's blocks, but the part
         # still has rows — derive the row count from any stored
         # column's n_values metadata so the null rows are emitted
         # (silently skipping the part would be row loss).
         first_col = cols_present[0]
-        n = sum(
-            nv
-            for name, nv in zip(cols_present,
-                                table.column("n_values").to_pylist())
-            if name == first_col
-        )
+        n = sum(nv for name, nv in zip(cols_present, n_values)
+                if name == first_col)
     arrays, names = [], []
     for field in schema:
         if field.name in decoded:
@@ -659,14 +676,10 @@ def decode_group(table: pa.Table, schema: pa.Schema,
             # SCHEMA EVOLUTION: a column added to the table after this
             # part was encoded doesn't exist in its blocks — decode it
             # as nulls (Iceberg add-column read semantics).
-            typ = field.type
-            if pa.types.is_timestamp(typ):
-                typ = pa.timestamp("us", tz="UTC")
-            arrays.append(pa.nulls(n, type=typ))
+            arrays.append(pa.nulls(n, type=output_type(field.type)))
         else:
             continue
         names.append(field.name)
-    pid = table.column("part_id")[0].as_py() if table.num_rows else -1
     arrays.append(pa.array(np.full(n, pid, dtype=np.int32)))
     names.append("part_id")
     return pa.table(arrays, names=names)

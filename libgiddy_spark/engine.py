@@ -36,6 +36,7 @@ from .blocks import (
     make_plan_sampler,
     make_task_writer,
     merge_part_meta,
+    output_type,
     plan_one_file,
 )
 from .manifest import Manifest
@@ -1097,17 +1098,17 @@ def _committed_block_files(
 def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     """EQUALITY DELETE (Iceberg merge-on-read): write a delete file of
     key values and commit a manifest ``delete`` entry — no data file is
-    touched. Every subsequent :func:`decode_blocks` anti-joins the
-    tombstoned keys out at read time; time travel to snapshots BEFORE
-    the delete still sees the rows. Semantics are Iceberg
-    SEQUENCE-SCOPED (round 5): the delete applies only to rows whose
-    part committed strictly before it, so a key re-ingested afterwards
-    (an upsert) survives; delete again after re-ingest for the
-    GDPR-purge shape.
+    touched. Every subsequent :func:`decode_blocks` drops the
+    tombstoned keys at read time, inside its decode tasks; time travel
+    to snapshots BEFORE the delete still sees the rows. Semantics are
+    Iceberg SEQUENCE-SCOPED (round 5): the delete applies only to rows
+    whose part committed strictly before it, so a key re-ingested
+    afterwards (an upsert) survives; delete again after re-ingest for
+    the GDPR-purge shape.
 
     Driver-side by design: delete batches are key lists (bounded
     metadata), not row data. At 100 TB the delete FILES stay small
-    while the anti-join distributes with the decode."""
+    while applying them distributes with the decode."""
     import pyarrow.parquet as pq
 
     import hashlib
@@ -1146,11 +1147,18 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
             "snapshot_id": snap_id}
 
 
-# Largest tombstone list applied as a broadcast anti-join at decode;
-# above this the anti-join shuffles instead (see
-# _apply_evolution_and_deletes). ~8 MB of int64 keys — well under any
-# sane spark.sql.autoBroadcastJoinThreshold, far below executor heap.
+# Largest tombstone list a decode task applies itself: every task reads
+# the delete file with pyarrow and masks matching rows out of each
+# decoded group, so the plan gains no join. Above this the tombstones
+# are applied by a shuffled hash anti-join instead (see
+# _apply_evolution_and_deletes). ~8 MB of int64 keys per task, far
+# below worker memory. LGS_DELETE_BROADCAST_MAX_KEYS overrides it.
 DELETE_BROADCAST_MAX_KEYS = 1_000_000
+
+
+def _delete_max_keys() -> int:
+    return int(os.environ.get(
+        "LGS_DELETE_BROADCAST_MAX_KEYS", DELETE_BROADCAST_MAX_KEYS))
 
 
 def upsert_rows(
@@ -1170,9 +1178,10 @@ def upsert_rows(
     Scale: df's rows flow through the normal distributed encode; the
     tombstone key file is also written DISTRIBUTED (a parquet
     directory), so upsert batches are not driver-bounded, and past
-    ``DELETE_BROADCAST_MAX_KEYS`` decode's anti-join shuffles instead
-    of broadcasting — same guard as plain deletes. ``df`` must carry
-    the full table schema (column subsets would null-fill on decode)."""
+    ``DELETE_BROADCAST_MAX_KEYS`` decode applies it by a shuffled
+    anti-join instead of inside its tasks — same guard as plain
+    deletes. ``df`` must carry the full table schema (column subsets
+    would null-fill on decode)."""
     m = Manifest(out_dir)
     pre_entries = m.read()  # one parse: guard + delete seq (the staged
     # encode below appends no delete entries, so the seq stays valid)
@@ -1719,8 +1728,7 @@ def read_changes(
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn("_commit_seq",
                             F.lit(seq_of[s]).cast("int")))
-    bcast_max = int(os.environ.get(
-        "LGS_DELETE_BROADCAST_MAX_KEYS", DELETE_BROADCAST_MAX_KEYS))
+    bcast_max = _delete_max_keys()
     for e in entries:
         if e.get("kind") != "delete" or e.get("snapshot_id") not in seq_of:
             continue
@@ -1855,6 +1863,111 @@ def _evolution_null_parts(
     return out
 
 
+def _resolved_deletes(
+    out_dir: str, schema: pa.Schema, as_of: str | None,
+    column_map: dict[str, str] | None,
+) -> list[tuple[str, str, str, int, int]]:
+    """(abs delete file, file key column, output key column, commit
+    seq, n_keys) for every delete visible at ``as_of``, after the two
+    loud checks: the file must still exist and the projection must
+    include its key."""
+    names = {f.name for f in schema}
+    out = []
+    for dfile, dkey, n_keys, dseq in _accepted_deletes(out_dir, as_of):
+        # a delete written before a RENAME tombstones under the old
+        # name: its file column stays dkey, the decoded frame carries
+        # the logical name
+        res_key = (column_map or {}).get(dkey, dkey)
+        if not os.path.exists(dfile):
+            # time travel between a delete and its purge after vacuum
+            # removed the cleared delete file: fail with the same loud
+            # error the missing-chunk-dir case raises, not a raw
+            # path-not-found
+            raise ValueError(
+                f"time travel to {as_of!r} needs delete file "
+                f"{os.path.basename(dfile)!r}, which was removed "
+                "(vacuumed/expired)"
+            )
+        if res_key not in names:
+            raise ValueError(
+                f"equality-delete file {dfile!r} tombstones on column "
+                f"{res_key!r}, which the projection excludes — include "
+                "it so merge-on-read can apply (or purge deletes first)"
+            )
+        out.append((dfile, dkey, res_key, dseq, n_keys))
+    return out
+
+
+def _key_kind(t: pa.DataType) -> str:
+    if pa.types.is_integer(t) or pa.types.is_floating(t):
+        return "number"
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return "string"
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return "binary"
+    return "timestamp" if pa.types.is_timestamp(t) else str(t)
+
+
+def _tombstone_type(dfile: str, dkey: str, field: pa.Field) -> pa.DataType:
+    """The Arrow type decode emits for the key column ``field``, after
+    checking from the delete file's footer that its keys can be
+    compared with it (numbers with numbers, strings with strings...)."""
+    import pyarrow.dataset as ds
+
+    ttype = ds.dataset(dfile, format="parquet").schema.field(dkey).type
+    if (not pa.types.is_null(ttype)
+            and _key_kind(ttype) != _key_kind(field.type)):
+        raise ValueError(
+            f"equality-delete file {dfile!r} holds {ttype} keys, which "
+            f"cannot be compared with column {field.name!r} of type "
+            f"{field.type}")
+    return output_type(field.type)
+
+
+def _tombstone_values(dfile: str, dkey: str, to_type: pa.DataType) -> pa.Array:
+    """The distinct keys of one delete file as ``to_type``. A key with
+    no exact value of that type (an int64 key outside an int32
+    column's range, a fractional key on an integer column) can equal
+    no row, so it is dropped — the SQL anti-join compared in the wider
+    type and matched nothing either."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keys = pc.unique(pq.read_table(dfile, columns=[dkey]).column(dkey))
+    if keys.type == to_type:
+        return keys
+    if pa.types.is_null(keys.type):
+        return pa.array([], to_type)
+    if pa.types.is_integer(keys.type) and pa.types.is_integer(to_type):
+        a, b = (np.iinfo(t.to_pandas_dtype()) for t in (keys.type, to_type))
+        lo = pa.scalar(max(int(a.min), int(b.min)), keys.type)
+        hi = pa.scalar(min(int(a.max), int(b.max)), keys.type)
+        keys = keys.filter(pc.and_(pc.greater_equal(keys, lo),
+                                   pc.less_equal(keys, hi)))
+        return keys.cast(to_type)
+    conv = keys.cast(to_type, safe=False)
+    return conv.filter(pc.equal(conv.cast(keys.type, safe=False), keys))
+
+
+def _drop_tombstoned(out: pa.Table, tombs: list,
+                     part_seq: dict[int, int]) -> pa.Table:
+    """Drop the rows of one decoded group that a delete applies to.
+    ``tombs`` holds (key column, delete seq, key values); a delete
+    applies to a part committed strictly before it (Iceberg sequence
+    scoping), and part_id is constant within a group. Null keys never
+    match, as in the SQL anti-join."""
+    import pyarrow.compute as pc
+
+    pseq = part_seq.get(out.column("part_id")[0].as_py(), -1)
+    hit = None
+    for key, dseq, vals in tombs:
+        if pseq < dseq:
+            m = pc.is_in(out.column(key), value_set=vals, skip_nulls=True)
+            hit = m if hit is None else pc.or_(hit, m)
+    return out if hit is None else out.filter(pc.invert(hit))
+
+
 def _apply_evolution_and_deletes(
     spark: SparkSession,
     result: DataFrame,
@@ -1863,12 +1976,15 @@ def _apply_evolution_and_deletes(
     wanted_cols: set[str],
     part_ids,
     as_of,
-    may_have_rows: bool,
+    deletes: list[tuple[str, str, str, int, int]] | None,
     column_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """Shared decode tail: union schema-evolution null rows, then apply
-    equality-delete anti-joins. One definition for both the normal and
-    the fully-pruned-listing paths, so their semantics cannot drift."""
+    the equality deletes the decode tasks leave out — those past
+    ``_delete_max_keys()``. ``deletes`` is :func:`_resolved_deletes`'
+    list, or None for a fully-pruned listing. One definition for both
+    the normal and the fully-pruned-listing paths, so their semantics
+    cannot drift."""
     evo = _evolution_null_parts(out_dir, wanted_cols, part_ids, as_of)
     for pid, n in evo:
         nulls = spark.range(n).select(
@@ -1879,75 +1995,51 @@ def _apply_evolution_and_deletes(
             F.lit(pid).cast("int").alias("part_id"),
         )
         result = result.unionByName(nulls)
-    if not (may_have_rows or evo):
-        # provably zero rows: tombstones cannot apply, and raising on a
-        # projection-excluded delete key here would fail calls whose
-        # result is the empty frame either way
-        return result
-    # EQUALITY DELETES (merge-on-read): anti-join tombstoned keys out.
-    # Bounded key lists -> broadcast anti-join, no shuffle of decoded
-    # rows. A GDPR-scale purge wave (10^8+ keys) would OOM a broadcast,
-    # so past the threshold the anti-join runs as a SHUFFLE_HASH join
-    # instead (the key count is in the manifest entry — decided without
+    if deletes is None:
+        if not evo:
+            # provably zero rows: tombstones cannot apply, and raising
+            # on a projection-excluded delete key here would fail calls
+            # whose result is the empty frame either way
+            return result
+        # the only rows are evolution nulls, whose null keys match no
+        # tombstone: validate, and join only past the task limit
+        deletes = _resolved_deletes(out_dir, schema, as_of, column_map)
+    # Tombstone lists up to _delete_max_keys() were applied inside the
+    # decode tasks. A GDPR-scale purge wave (10^8+ keys) would not fit
+    # a task, so past the limit the anti-join runs as a SHUFFLE_HASH
+    # join (the key count is in the manifest entry — decided without
     # scanning the delete file); purge_deletes remains the way to stop
-    # paying it entirely. Time travel to a snapshot before the delete
-    # never sees its entry (_accepted_deletes filters by as_of).
-    bcast_max = int(os.environ.get(
-        "LGS_DELETE_BROADCAST_MAX_KEYS", DELETE_BROADCAST_MAX_KEYS))
-    deletes = _accepted_deletes(out_dir, as_of)
+    # paying it entirely.
+    max_keys = _delete_max_keys()
+    deletes = [d for d in deletes if d[4] > max_keys]
     if not deletes:
         return result
     # SEQUENCE SCOPING (Iceberg delete ordering): a delete applies only
     # to rows whose part committed STRICTLY BEFORE the delete's
-    # snapshot, so keys re-ingested after it survive — the semantics
-    # upsert_rows needs. The common case (no append after any pending
-    # delete) is detected from manifest metadata alone and keeps the
-    # historical key-only anti-join: zero extra plan nodes.
+    # snapshot, so keys re-ingested after it survive. When no part
+    # postdates a pending delete (manifest metadata alone tells), the
+    # key-only anti-join needs no (part_id, seq) join.
     part_seq = _part_seq_map(out_dir, as_of)
     min_dseq = min(d[3] for d in deletes)
     scoped = any(s >= min_dseq for s in part_seq.values())
     orig_cols = result.columns
     if scoped:
-        # bounded metadata: one small (part_id, seq) broadcast join
-        # tags every row with its part's sequence number
         pseq_df = spark.createDataFrame(
             sorted(part_seq.items()), "part_id int, _part_seq int")
         result = result.join(F.broadcast(pseq_df), "part_id", "left")
-    for dfile, dkey, n_keys, dseq in deletes:
-        # a delete written before a RENAME tombstones under the old
-        # name: its file column stays dkey, the decoded frame carries
-        # the logical name
-        res_key = (column_map or {}).get(dkey, dkey)
-        if not os.path.exists(dfile):
-            # time travel between a delete and its purge after vacuum
-            # removed the cleared delete file: fail with the same loud
-            # error the missing-chunk-dir case raises, not a raw Spark
-            # path-not-found
-            raise ValueError(
-                f"time travel to {as_of!r} needs delete file "
-                f"{os.path.basename(dfile)!r}, which was removed "
-                "(vacuumed/expired)"
-            )
-        if res_key not in orig_cols:
-            raise ValueError(
-                f"equality-delete file {dfile!r} tombstones on column "
-                f"{res_key!r}, which the projection excludes — include "
-                "it so merge-on-read can apply (or purge deletes first)"
-            )
+    for dfile, dkey, res_key, dseq, _n in deletes:
         if scoped:
             tomb = spark.read.parquet(dfile).select(
                 F.col(dkey).alias("_tomb_key")).distinct()
-            tomb = (tomb.hint("shuffle_hash") if n_keys > bcast_max
-                    else F.broadcast(tomb))
             cond = ((F.col(res_key) == F.col("_tomb_key"))
                     & (F.col("_part_seq") < F.lit(int(dseq))))
-            result = result.join(tomb, cond, "left_anti")
+            result = result.join(tomb.hint("shuffle_hash"), cond,
+                                 "left_anti")
         else:
             tomb = spark.read.parquet(dfile).select(
                 F.col(dkey).alias(res_key)).distinct()
-            tomb = (tomb.hint("shuffle_hash") if n_keys > bcast_max
-                    else F.broadcast(tomb))
-            result = result.join(tomb, res_key, "left_anti")
+            result = result.join(tomb.hint("shuffle_hash"), res_key,
+                                 "left_anti")
     if scoped:
         result = result.select(*orig_cols)
     return result
@@ -1976,11 +2068,16 @@ def decode_blocks(
     own row-group slices), so decode never needs the hash exchange of
     encoded payloads that a groupBy/applyInArrow formulation would
     add: one task per block FILE streams its groups through the numpy
-    decoder.
-    The only exchange in the plan is a round-robin of the tiny file-
-    path list (metadata, not payload bytes). File reads go through
-    pyarrow, which handles local, HDFS and S3 URIs alike in
-    production.
+    decoder. The file list reaches the tasks by ``parallelize``, so
+    the plan has zero exchanges. File reads go through pyarrow, which
+    handles local, HDFS and S3 URIs alike in production.
+
+    Equality deletes are applied inside the same tasks: each task reads
+    every pending delete file of up to ``DELETE_BROADCAST_MAX_KEYS``
+    keys once and drops the matching rows from each decoded group, so
+    a decode through such tombstones still has no join and no
+    exchange. Only larger tombstone lists add a shuffled anti-join
+    (:func:`_apply_evolution_and_deletes`).
 
     Block files are listed from the MANIFEST's committed chunk-dir
     entries, not a filesystem walk: uncommitted ``_tmp_*`` dirs and
@@ -2040,9 +2137,23 @@ def decode_blocks(
         # deletes — the same shared tail as the main path
         return _apply_evolution_and_deletes(
             spark, spark.createDataFrame([], ddl), out_dir, schema,
-            wanted_cols_set, part_ids, as_of, may_have_rows=False,
-            column_map=column_map,
+            wanted_cols_set, part_ids, as_of, None, column_map,
         )
+    # EQUALITY DELETES (merge-on-read) up to _delete_max_keys() keys are
+    # applied inside the decode tasks, so the plan gains no join: the
+    # driver resolves each delete's file, key and sequence number, and
+    # every task reads the delete files once and masks each decoded
+    # group. Time travel to a snapshot before a delete never sees it
+    # (_accepted_deletes filters by as_of).
+    deletes = _resolved_deletes(out_dir, schema, as_of, column_map)
+    max_keys = _delete_max_keys()
+    tombs = [
+        (dfile, dkey, res_key, dseq,
+         _tombstone_type(dfile, dkey, schema.field(res_key)))
+        for dfile, dkey, res_key, dseq, n_keys in deletes
+        if n_keys <= max_keys
+    ]
+    part_seq = _part_seq_map(out_dir, as_of) if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
     krange = (int(key_range[0]), int(key_range[1])) if key_range is not None else None
     krange_s = (str(key_range_s[0]), str(key_range_s[1])) if key_range_s is not None else None
@@ -2055,6 +2166,18 @@ def decode_blocks(
         import pyarrow.parquet as pq
 
         from . import bloom as bloom_mod
+
+        tomb_sets = [(res_key, dseq, _tombstone_values(dfile, dkey, ttype))
+                     for dfile, dkey, res_key, dseq, ttype in tombs]
+
+        def _emit(path: str, grp: pa.Table):
+            try:
+                out = decode_group(grp, schema, column_map)
+            except ValueError as e:
+                raise ValueError(f"block file {path!r}: {e}") from e
+            if tomb_sets and out.num_rows:
+                out = _drop_tombstoned(out, tomb_sets, part_seq)
+            yield from out.to_batches()
 
         for batch in batches:
             for path in batch.column(0).to_pylist():
@@ -2150,12 +2273,14 @@ def decode_blocks(
                 # BLOCK) metadata columns of each row group.
                 need_cols = ["part_id", "salt", "block_seq", "column",
                              "payload"]
+                if "n_values" in file_cols:
+                    need_cols.append("n_values")
                 if krange is not None and "key_lo" in file_cols:
                     need_cols += ["key_lo", "key_hi"]
                 if krange_s is not None and "key_lo_s" in file_cols:
                     need_cols += ["key_lo_s", "key_hi_s"]
-                out_cols = ["part_id", "salt", "block_seq", "column",
-                            "payload"]
+                out_cols = [c for c in need_cols
+                            if not c.startswith("key_")]
                 pf = pq.ParquetFile(path)
 
                 def _split(buf: pa.Table):
@@ -2193,13 +2318,10 @@ def decode_blocks(
                     # decode every COMPLETE group; the trailing group may
                     # continue into the next row group, so hold it back
                     for s, e in zip(bounds[:-2], bounds[1:-1]):
-                        out = decode_group(buf.slice(s, e - s), schema,
-                                           column_map)
-                        yield from out.to_batches()
+                        yield from _emit(path, buf.slice(s, e - s))
                     pend = buf.slice(bounds[-2]).combine_chunks()
                 if pend is not None and pend.num_rows:
-                    out = decode_group(pend, schema, column_map)
-                    yield from out.to_batches()
+                    yield from _emit(path, pend)
 
     # one TASK may stream several block files (the loop above): cap the
     # physical task count at ~2 per core so per-task overhead doesn't
@@ -2216,7 +2338,7 @@ def decode_blocks(
     result = pdf.mapInArrow(decode_stream, schema=ddl)
     return _apply_evolution_and_deletes(
         spark, result, out_dir, schema, set(wanted_cols), part_ids,
-        as_of, may_have_rows=True, column_map=column_map,
+        as_of, deletes, column_map,
     )
 
 

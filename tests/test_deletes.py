@@ -75,11 +75,13 @@ def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path):
         assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
         srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
         assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
-        # below the threshold the broadcast path is kept
+        # below the threshold the decode tasks apply the tombstones
+        # themselves: no join and no exchange at all
         os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "1000000"
         plan_small = decode_blocks(spark, out, schema)._jdf \
             .queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in plan_small, plan_small
+        assert "Exchange" not in plan_small, plan_small
+        assert "Join" not in plan_small, plan_small
     finally:
         del os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"]
 
@@ -190,6 +192,8 @@ def test_delete_then_append_sequence_scoped(spark, tmp_path):
         "append").parquet(src)
     encode_snapshot(spark, src, out, key_col="doc_id")
     dec = decode_blocks(spark, out, schema)
+    # the decode tasks scope the tombstone themselves: no join
+    assert "Join" not in dec._jdf.queryExecution().executedPlan().toString()
     assert dec.filter(F.col("doc_id") == 7).count() == 1
     assert dec.count() == 500
     # other pre-delete keys stay deleted by the same tombstone
@@ -232,3 +236,130 @@ def test_purge_crash_before_txn_is_invisible(spark, tmp_path, monkeypatch):
     srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
     rep = verify_roundtrip(srcdf, dec2, "doc_id")
     assert rep["ok"], rep
+
+
+def _encode_keyed(spark, tmp_path, keys, key_type):
+    """A small table with key column ``k`` of ``key_type`` (nulls
+    allowed) and a value column, encoded with ``k`` as sort key."""
+    import pyarrow as pa
+
+    src = str(tmp_path / "ksrc")
+    os.makedirs(src)
+    tbl = pa.table({
+        "k": pa.array(keys, key_type),
+        "v": pa.array([f"row-{i}" for i in range(len(keys))]),
+    })
+    pq.write_table(tbl, os.path.join(src, "part-0.parquet"))
+    out = str(tmp_path / "kenc")
+    encode_snapshot(spark, src, out, key_col="k")
+    return out, tbl.schema
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.select("k", "v").collect()),
+                  key=lambda r: r[1])
+
+
+def _via_join(spark, out, schema):
+    """The same decode with every tombstone list past the in-task limit,
+    so the shuffled anti-join applies them all."""
+    os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "0"
+    try:
+        return _rows(decode_blocks(spark, out, schema))
+    finally:
+        del os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"]
+
+
+def test_mixed_threshold_deletes_exact_rows(spark, tmp_path):
+    """One delete above LGS_DELETE_BROADCAST_MAX_KEYS (shuffled
+    anti-join) and one below it (applied in the decode task) together
+    remove exactly their keys."""
+    src, out, schema = _encode_docs(spark, tmp_path)
+    big, small = [3, 77, 200, 404], [5, 17]
+    delete_rows(out, "doc_id", big)
+    delete_rows(out, "doc_id", small)
+    os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "3"
+    try:
+        dec = decode_blocks(spark, out, schema)
+        plan = dec._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Join") == 1, plan  # the big delete only
+        gone = big + small
+        assert dec.count() == 500 - len(gone)
+        assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
+        srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
+        assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
+    finally:
+        del os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"]
+
+
+def test_null_tombstone_keeps_null_key_rows(spark, tmp_path):
+    """A tombstone list holding None deletes its other keys but no
+    null-key row — null never equals anything, as in the anti-join."""
+    import pyarrow as pa
+
+    keys = [1, 2, None, 4, None, 6]
+    out, schema = _encode_keyed(spark, tmp_path, keys, pa.int64())
+    delete_rows(out, "k", [2, None])
+    got = _rows(decode_blocks(spark, out, schema))
+    assert got == sorted(
+        [(k, f"row-{i}") for i, k in enumerate(keys) if k != 2],
+        key=lambda r: r[1])
+    assert got == _via_join(spark, out, schema)
+    # an all-null tombstone list (a null-typed key column) deletes nothing
+    delete_rows(out, "k", [None])
+    assert _rows(decode_blocks(spark, out, schema)) == got
+
+
+def test_int64_tombstones_on_int32_key(spark, tmp_path):
+    """int64 tombstone keys on an int32 key column match exactly the
+    rows the anti-join matched: an out-of-range key matches nothing
+    (it must not wrap onto a small key), an in-range one its row."""
+    import pyarrow as pa
+
+    keys = list(range(10))
+    out, schema = _encode_keyed(spark, tmp_path, keys, pa.int32())
+    delete_rows(out, "k", [2, (1 << 32) + 3, -(1 << 40), 7])
+    got = _rows(decode_blocks(spark, out, schema))
+    assert sorted(k for k, _ in got) == [0, 1, 3, 4, 5, 6, 8, 9]
+    assert got == _via_join(spark, out, schema)
+
+
+def test_incomparable_tombstone_type_raises(spark, tmp_path):
+    """String tombstones on an integer key column cannot be compared:
+    decode raises a ValueError naming the delete file and the column."""
+    import pyarrow as pa
+
+    out, schema = _encode_keyed(spark, tmp_path, list(range(10)), pa.int32())
+    d = delete_rows(out, "k", ["2", "x"])
+    with pytest.raises(ValueError) as ei:
+        decode_blocks(spark, out, schema).count()
+    msg = str(ei.value)
+    assert os.path.basename(d["file"]) in msg and "'k'" in msg, msg
+
+
+def test_dropped_block_row_raises(spark, tmp_path):
+    """Fault injection: a block file missing one block row of a
+    multi-block column fails the decode with an error naming the block
+    file, part, salt and column — never fewer or misaligned rows."""
+    import pyarrow as pa
+
+    from libgiddy_spark.blocks import BLOCK_ROWS
+    from libgiddy_spark.engine import _committed_block_files
+
+    n = BLOCK_ROWS + 1000  # two blocks per column
+    out, schema = _encode_keyed(spark, tmp_path, list(range(n)), pa.int64())
+    assert decode_blocks(spark, out, schema).count() == n
+    (path,) = _committed_block_files(out)
+    blocks = pq.read_table(path)
+    blk = zip(blocks.column("column").to_pylist(),
+              blocks.column("block_seq").to_pylist())
+    keep = [i for i, cq in enumerate(blk) if cq != ("v", 0)]
+    assert len(keep) == blocks.num_rows - 1
+    pid = blocks.column("part_id")[0].as_py()
+    salt = blocks.column("salt")[0].as_py()
+    pq.write_table(blocks.take(keep), path)
+    with pytest.raises(Exception) as ei:
+        decode_blocks(spark, out, schema).count()
+    msg = str(ei.value)
+    assert path in msg and f"part {pid} salt {salt}" in msg, msg
+    assert "column 'v'" in msg, msg

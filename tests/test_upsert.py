@@ -56,6 +56,9 @@ def test_upsert_replaces_and_inserts(spark, tmp_path):
     res = upsert_rows(spark, out, "doc_id", _upsert_df(spark, src))
     assert res["upserted_keys"] == 8  # 5 updated (0..400 % 100) + 3 new
     dec = decode_blocks(spark, out, schema)
+    # the upserted rows share the tombstone's sequence number and the
+    # decode tasks exempt them without any (part_id, seq) join
+    assert "Join" not in dec._jdf.queryExecution().executedPlan().toString()
     assert dec.count() == 503
     upd = dec.filter(F.col("doc_id") % 100 == 0).filter(
         F.col("doc_id") < 500)
