@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -59,14 +60,14 @@ def test_delete_on_unprojected_key_raises(spark, tmp_path):
 
 
 def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path):
-    """Past LGS_DELETE_BROADCAST_MAX_KEYS the tombstone anti-join must
+    """Past LGS_SMALL_DELETE_MAX_KEYS the tombstone anti-join must
     NOT broadcast (a GDPR-scale purge wave would OOM the driver and
     every executor) — the plan shifts to a shuffled hash anti-join,
     rows stay exact (VERDICT r4 #3)."""
     src, out, schema = _encode_docs(spark, tmp_path)
     gone = [3, 77, 200, 404]
     delete_rows(out, "doc_id", gone)
-    os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "2"
+    os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "2"
     try:
         dec = decode_blocks(spark, out, schema)
         plan = dec._jdf.queryExecution().executedPlan().toString()
@@ -77,13 +78,13 @@ def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path):
         assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
         # below the threshold the decode tasks apply the tombstones
         # themselves: no join and no exchange at all
-        os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "1000000"
+        os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "1000000"
         plan_small = decode_blocks(spark, out, schema)._jdf \
             .queryExecution().executedPlan().toString()
         assert "Exchange" not in plan_small, plan_small
         assert "Join" not in plan_small, plan_small
     finally:
-        del os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"]
+        del os.environ["LGS_SMALL_DELETE_MAX_KEYS"]
 
 
 def test_purge_materializes_and_vacuum_expires(spark, tmp_path):
@@ -263,22 +264,22 @@ def _rows(df):
 def _via_join(spark, out, schema):
     """The same decode with every tombstone list past the in-task limit,
     so the shuffled anti-join applies them all."""
-    os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "0"
+    os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "0"
     try:
         return _rows(decode_blocks(spark, out, schema))
     finally:
-        del os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"]
+        del os.environ["LGS_SMALL_DELETE_MAX_KEYS"]
 
 
 def test_mixed_threshold_deletes_exact_rows(spark, tmp_path):
-    """One delete above LGS_DELETE_BROADCAST_MAX_KEYS (shuffled
+    """One delete above LGS_SMALL_DELETE_MAX_KEYS (shuffled
     anti-join) and one below it (applied in the decode task) together
     remove exactly their keys."""
     src, out, schema = _encode_docs(spark, tmp_path)
     big, small = [3, 77, 200, 404], [5, 17]
     delete_rows(out, "doc_id", big)
     delete_rows(out, "doc_id", small)
-    os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"] = "3"
+    os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "3"
     try:
         dec = decode_blocks(spark, out, schema)
         plan = dec._jdf.queryExecution().executedPlan().toString()
@@ -289,7 +290,7 @@ def test_mixed_threshold_deletes_exact_rows(spark, tmp_path):
         srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
         assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
     finally:
-        del os.environ["LGS_DELETE_BROADCAST_MAX_KEYS"]
+        del os.environ["LGS_SMALL_DELETE_MAX_KEYS"]
 
 
 def test_null_tombstone_keeps_null_key_rows(spark, tmp_path):
@@ -308,6 +309,12 @@ def test_null_tombstone_keeps_null_key_rows(spark, tmp_path):
     # an all-null tombstone list (a null-typed key column) deletes nothing
     delete_rows(out, "k", [None])
     assert _rows(decode_blocks(spark, out, schema)) == got
+    # a tombstone list over twice the group's row count is matched
+    # through the task's key index, which must skip null keys too
+    delete_rows(out, "k", [0, 4, None] + list(range(100, 130)))
+    got = _rows(decode_blocks(spark, out, schema))
+    assert [k for k, _ in got] == [1, None, None, 6]
+    assert got == _via_join(spark, out, schema)
 
 
 def test_int64_tombstones_on_int32_key(spark, tmp_path):
@@ -322,6 +329,62 @@ def test_int64_tombstones_on_int32_key(spark, tmp_path):
     got = _rows(decode_blocks(spark, out, schema))
     assert sorted(k for k, _ in got) == [0, 1, 3, 4, 5, 6, 8, 9]
     assert got == _via_join(spark, out, schema)
+
+
+def test_decimal_and_date_tombstones(spark, tmp_path):
+    """Decimal tombstones on an integer key column and date tombstones
+    on a timestamp column match exactly the rows the anti-join
+    matched: a key with no exact value of the column type (3.5 on an
+    integer column) matches nothing, a date matches its midnight."""
+    import datetime as dt
+    from decimal import Decimal as D
+
+    out, schema = _encode_keyed(spark, tmp_path, list(range(8)), pa.int64())
+    delete_rows(out, "k", [D("2"), D("3.5"), D("5.0")])  # decimal128(2, 1)
+    got = _rows(decode_blocks(spark, out, schema))
+    assert [k for k, _ in got] == [0, 1, 3, 4, 6, 7]
+    assert got == _via_join(spark, out, schema)
+
+    day = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+    stamps = [day, day + dt.timedelta(hours=5), day + dt.timedelta(days=1)]
+    ts_path = tmp_path / "ts"
+    ts_path.mkdir()
+    out, schema = _encode_keyed(spark, ts_path, stamps,
+                                pa.timestamp("us", tz="UTC"))
+    delete_rows(out, "k", [dt.date(2020, 1, 1), dt.date(2020, 1, 2)])
+    got = _rows(decode_blocks(spark, out, schema))
+    assert [k for k, _ in got] == [stamps[1].replace(tzinfo=None)]
+    assert got == _via_join(spark, out, schema)
+
+
+@pytest.mark.parametrize("typ, keys, probe", [
+    (pa.int32(), [3, -7, 1 << 30], [3, None, 4, -7, 1 << 30]),
+    (pa.uint64(), [0, 1 << 63, 9], [1 << 63, None, 1, 0]),
+    (pa.float64(), [1.5, float("nan"), -2.0], [1.5, None, float("nan"), 2.0]),
+    (pa.string(), ["a", "", "ünï"], ["", None, "b", "ünï", "a"]),
+    (pa.binary(), [b"\x00", b"xy", b""], [b"xy", None, b"\x00\x00"]),
+    (pa.timestamp("us", tz="UTC"), [0, 10**15, -5], [10**15, None, 1]),
+])
+def test_tombstone_set_lookup_paths_agree(typ, keys, probe):
+    """Both ways a decode task matches a group against a tombstone list
+    — Arrow's is_in for a group at least half the key count, the
+    task-built pandas index for a smaller one — mark exactly the
+    non-null rows whose key is in the list."""
+    from libgiddy_spark.engine import _TombstoneSet
+
+    if pa.types.is_timestamp(typ):
+        vals = pa.array(keys, pa.int64()).cast(typ)
+        col = pa.array(probe, pa.int64()).cast(typ)
+    else:
+        vals, col = pa.array(keys, typ), pa.array(probe, typ)
+    # NaN equals NaN in a join key, as in Spark
+    want = [p is not None and (p in keys or p != p) for p in probe]
+    ts = _TombstoneSet(vals)
+    long_col = pa.concat_arrays([col] * len(keys))
+    assert ts.hits(long_col).tolist() == want * len(keys)  # is_in
+    ts = _TombstoneSet(vals)  # one-row groups: the index, built once
+    assert [ts.hits(col.slice(i, 1))[0] for i in range(len(col))] == want
+    assert ts._index is not None
 
 
 def test_incomparable_tombstone_type_raises(spark, tmp_path):
