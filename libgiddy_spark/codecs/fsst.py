@@ -379,7 +379,7 @@ def train(sample: np.ndarray, generations: int = 5) -> SymbolTable:
     across the whole input, 32 KiB total (the FSST paper's sampling
     shape). Versus the old 256 KiB head cap this is ~7x cheaper per
     training — the dominant fixed cost of encoding small columns and
-    of the per-part plan job — and measured within +-1% compression
+    of the per-part codec plan — and measured within +-1% compression
     ratio on webtext url/text/html (url improves: the head
     oversampled early rows). Chunk seams add <1 fake adjacency per
     512 real ones, noise at counting granularity.

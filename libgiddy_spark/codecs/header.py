@@ -97,14 +97,27 @@ def pack_block(
 
 
 def unpack_block(payload: bytes) -> tuple[int, int, int, int, list[memoryview]]:
-    """-> (codec, dt, flags, n_values, sections). Sections are zero-copy views."""
+    """-> (codec, dt, flags, n_values, sections). Sections are zero-copy
+    views. Raises ValueError unless the header, the section-length table
+    and the sections exactly fill the payload: a truncated payload or a
+    corrupt length must never decode from short views."""
     mv = memoryview(payload)
+    if len(mv) < _HEAD.size:
+        raise ValueError(
+            f"truncated block: {len(mv)} bytes, header needs {_HEAD.size}")
     magic, ver, codec, dt, flags, n_values, nsect = _HEAD.unpack_from(mv, 0)
     if magic != MAGIC or ver != VERSION:
         raise ValueError(f"bad block header: magic={magic!r} version={ver}")
-    off = _HEAD.size
-    lens = struct.unpack_from(f"<{nsect}Q", mv, off)
-    off += 8 * nsect
+    off = _HEAD.size + 8 * nsect
+    if off > len(mv):
+        raise ValueError(
+            f"truncated block: {nsect} section lengths need {off} bytes, "
+            f"payload has {len(mv)}")
+    lens = struct.unpack_from(f"<{nsect}Q", mv, _HEAD.size)
+    if off + sum(lens) != len(mv):
+        raise ValueError(
+            f"corrupt block: sections {list(lens)} end at byte "
+            f"{off + sum(lens)} of a {len(mv)}-byte payload")
     sections = []
     for ln in lens:
         sections.append(mv[off : off + ln])

@@ -5,12 +5,16 @@ Encode lifecycle::
     register files -> resume filter (manifest)           [driver, metadata]
     -> per-chunk: footer byte stats -> salt fan-out      [driver, footers]
     -> (part_id, salt) tasks over row-group slices       [driver, footers]
-    -> mapInArrow(read slice, Arrow sort, encode, write) [executors, no shuffle]
+    -> mapInArrow(plan codecs per part, read slice,      [executors, no shuffle]
+                  Arrow sort, encode, write)
     -> task metadata -> _FILES list + atomic rename      [driver commit]
     -> manifest lines per partition                      [driver commit point]
 
-Decode is shuffle-free too: one task per block file streams whole
-(part_id, salt) groups through the kernels (see decode_blocks).
+Decode is shuffle-free too: each task streams a run of block files,
+whole (part_id, salt) groups at a time, through the kernels (see
+decode_blocks). Encode and decode jobs each run one wave of at most
+``defaultParallelism`` tasks (_one_wave_df).
+
 Everything driver-side touches only metadata (file registry, byte
 stats, manifest lines) — no row data is ever collected.
 """
@@ -29,15 +33,12 @@ from pyspark.sql import functions as F
 
 from .blocks import (
     BLOCKS_DDL,
-    PLAN_DDL,
     TASK_META_DDL,
     decode_group,
     make_direct_encoder,
-    make_plan_sampler,
     make_task_writer,
     merge_part_meta,
     output_type,
-    plan_one_file,
 )
 from .manifest import Manifest
 from .skew import footer_byte_stats, salt_factors
@@ -79,42 +80,23 @@ def _balanced_bounds(sizes: list[int], k: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def _codec_plan(spark: SparkSession, tasks: list[tuple], data_cols: list[str],
-                forced_codecs: dict[str, str] | None,
-                total_b: int) -> dict[int, dict]:
-    """Per-part codec plan: one sample of each part's file head selects
-    codecs and trains FSST ONCE; the plan (codec names + <=2 KiB symbol
-    tables — codec METADATA, not row data) seeds every slice's selector
-    cache so salt fan-out never re-trains."""
-    sample_tasks = sorted({(t[0], t[-1]) for t in tasks})
-    plan: dict[int, dict] = {}
-    if len(sample_tasks) <= 2 or total_b < (32 << 20):
-        # small chunk: plan DRIVER-side — a one-task Spark job costs
-        # ~1 s of scheduling for a KB-sized table
-        for pid, path in sample_tasks:
-            for col, codec, params, ft in plan_one_file(
-                path, data_cols, forced_codecs=forced_codecs
-            ):
-                plan.setdefault(int(pid), {})[col] = (codec, params, ft)
-        return plan
-    # pack parts into ~1 task per core slot (plan work is near-uniform
-    # per part) and slice the list driver-side: parallelize()
-    # partitions in place, where createDataFrame().repartition(n) added
-    # a round-robin EXCHANGE just to shuffle a <1 KiB list
-    nplan = max(1, min(len(sample_tasks),
-                       spark.sparkContext.defaultParallelism))
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(sample_tasks, nplan),
-        "part_id int, path string",
+def _one_wave_df(spark: SparkSession, rows: list[tuple], weights: list[int],
+                 ddl: str) -> DataFrame:
+    """``rows`` as a DataFrame of at most ``defaultParallelism``
+    partitions: contiguous runs of roughly equal total weight
+    (_balanced_bounds), each streamed by one task. A job over it is
+    one wave of tasks: every further wave cost about 0.27 s of task
+    launch (no-op ``mapInArrow`` jobs, ``local[2]`` on a 4-core host)
+    even with reused Python workers, more than a small table's encode
+    or decode. The runs are cut on
+    the driver and handed to ``parallelize`` one list per partition,
+    so the plan has no Exchange (``.repartition(n)`` would add one)."""
+    bounds = _balanced_bounds(weights, spark.sparkContext.defaultParallelism)
+    runs = [rows[lo:hi] for lo, hi in bounds]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(runs, len(runs)).flatMap(lambda r: r),
+        ddl,
     )
-    for r in sdf.mapInArrow(
-        make_plan_sampler(data_cols, forced_codecs=forced_codecs),
-        schema=PLAN_DDL,
-    ).collect():
-        plan.setdefault(int(r["part_id"]), {})[r["column"]] = (
-            r["codec"], r["params"], r["fsst"]
-        )
-    return plan
 
 
 def encode_snapshot(
@@ -163,17 +145,19 @@ def encode_files(
     would skip files encoded under the old selection — use a fresh
     out_dir per selection.
 
-    No source row is shuffled. One task per (part, salt), where a salt
-    slice is a contiguous run of parquet ROW GROUPS sliced driver-side
-    from footers (the same zero-scan metadata that sizes the fan-out);
-    each task reads its row groups with pyarrow, sorts in Arrow,
-    encodes, writes its own block file and returns only metadata. Spark
-    distributes just the tiny task list — the decode pattern mirrored
-    onto encode, so at 100 TB the table is never rewritten through
-    shuffle storage. A file's split granularity is its row-group
-    count; a file with fewer row groups than its fan-out falls back to
-    row-range slices of the covering row groups (bounded read
-    amplification, see _RG_AMP_CAP).
+    No source row is shuffled. The unit of work is a (part, salt)
+    slice: a contiguous run of parquet ROW GROUPS sliced driver-side
+    from footers (the same zero-scan metadata that sizes the fan-out).
+    One wave of at most ``defaultParallelism`` Spark tasks each takes a
+    byte-balanced run of slices, plans the codecs of each part it meets
+    (plan_one_file), reads every slice's row groups with pyarrow, sorts
+    in Arrow, encodes, writes its own block file and returns only
+    metadata. Spark distributes just the tiny task list — the decode
+    pattern mirrored onto encode, so at 100 TB the table is never
+    rewritten through shuffle storage. A file's split granularity is
+    its row-group count; a file with fewer row groups than its fan-out
+    falls back to row-range slices of the covering row groups (bounded
+    read amplification, see _RG_AMP_CAP).
     """
     t_start = time.time()
     snapshot_id = snapshot_id_of(source_path)
@@ -321,6 +305,7 @@ def encode_files(
         # covering its row span and slices locally — bounded read
         # amplification instead of a skew-bound single task.
         tasks: list[tuple[int, int, int, int, int, int, str]] = []
+        weights: list[int] = []  # each task's footer bytes
         for p in chunk:
             path = abs_file_of(source_path, rel_of[p])
             md = pq.ParquetFile(path).metadata
@@ -336,10 +321,11 @@ def encode_files(
                 # the amplification — at <=2x the rg count, one task
                 # per row group is strictly cheaper
                 want = nrg
+            sizes = [md.row_group(i).total_byte_size for i in range(nrg)]
             if nrg >= want:
-                sizes = [md.row_group(i).total_byte_size for i in range(nrg)]
                 for s, (alo, ahi) in enumerate(_balanced_bounds(sizes, want)):
                     tasks.append((int(p), s, alo, ahi, -1, -1, path))
+                    weights.append(sum(sizes[alo:ahi]))
                 continue
             # row-range fallback: every slice re-decodes its covering
             # row group, so fan-out here multiplies the READ work by
@@ -370,6 +356,7 @@ def encode_files(
                     ghi += 1
                 tasks.append((int(p), s, glo, ghi,
                               rlo - offs[glo], rhi - offs[glo], path))
+                weights.append(sum(sizes) * (rhi - rlo) // total_rows)
         for t in tasks:
             fanout[t[0]] = fanout.get(t[0], 0) + 1
         tmp = os.path.join(blocks_root, f"_tmp_{chunk[0]}_{chunk[-1]}")
@@ -378,32 +365,23 @@ def encode_files(
             shutil.rmtree(final)
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp, exist_ok=True)
-        t0 = time.time()
         meta_rows: list[dict] = []
         if tasks:  # every file empty -> no tasks, only empty parts
-            plan = _codec_plan(spark, tasks, data_cols, forced_codecs,
-                               total_b)
-            _mark("plan_job")
+            # each task plans the codecs of every part it encodes (see
+            # make_direct_encoder): no driver-side or separate plan job
             direct_fn = make_direct_encoder(
                 data_cols, sort_key=sort_key,
                 forced_codecs=forced_codecs, block_rows=block_rows,
-                plan=plan,
             )
             # logical slicing (salt groups) is independent of the
-            # physical task count: pack ~2 tasks per core and let each
-            # task stream several groups through one Python worker —
-            # per-task overhead (worker roundtrip, Arrow init, output
-            # file commit) costs ~0.15 s each, which at 64 single-group
-            # tasks on local[1] added ~40% wall. Slices are
-            # byte-balanced by construction, so a plain contiguous
-            # parallelize() split stays balanced — and skips the
-            # round-robin EXCHANGE stage that .repartition(ntasks)
-            # added just to shuffle a tiny task list (~0.3 s per job)
-            ntasks = max(1, min(
-                len(tasks), spark.sparkContext.defaultParallelism * 2
-            ))
-            tdf = spark.createDataFrame(
-                spark.sparkContext.parallelize(tasks, ntasks),
+            # physical task count: one wave of tasks, each streaming a
+            # contiguous, byte-balanced run of slices through one
+            # Python worker (per-task overhead — worker roundtrip,
+            # Arrow init, output file commit — would otherwise be paid
+            # per slice). Contiguous runs keep a part's slices together,
+            # so a part is planned by at most the tasks its run spans.
+            tdf = _one_wave_df(
+                spark, tasks, weights,
                 "part_id int, salt int, rg_lo int, rg_hi int, "
                 "row_lo long, row_hi long, path string",
             )
@@ -440,7 +418,6 @@ def encode_files(
                 "salts": int(fanout.get(int(p))
                              or factors.get(int(p), 1)),
                 "input_bytes_est": int(stats.get(int(p), 0)),
-                "encode_secs": round(time.time() - t0, 3),
                 "columns": {},
             }
             for p in chunk
@@ -524,9 +501,10 @@ def compact_blocks(
     file is preserved and files are concatenated whole, so the
     (part_id, salt) group-contiguity invariant the shuffle-free decoder
     relies on survives (two chunks never share a part id: parts are
-    committed by exactly one chunk). One Spark task per output bin
-    streams source files through a parquet writer — same uncompressed,
-    dictionary-off layout as the encode sink."""
+    committed by exactly one chunk). One wave of Spark tasks, each
+    streaming a byte-balanced run of output bins, copies the source
+    files through a parquet writer — same uncompressed, dictionary-off
+    layout as the encode sink."""
     blocks_root = os.path.join(out_dir, "blocks")
     m = Manifest(out_dir)
     entries = m.read()
@@ -620,10 +598,9 @@ def compact_blocks(
                                        pa.int64())}
                 )
 
-    tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(d, list(s)) for d, s in plan_rows], len(plan_rows)
-        ),
+    tdf = _one_wave_df(
+        spark, [(d, list(s)) for d, s in plan_rows],
+        [sum(sizes[d] for d in b) for b in bins],
         "dest string, srcs array<string>",
     )
     tdf.mapInArrow(copy_bin, "dest string, n_src long").collect()
@@ -2116,8 +2093,9 @@ def decode_blocks(
     contiguous (part_id, salt) groups (the task sorts and encodes its
     own row-group slices), so decode never needs the hash exchange of
     encoded payloads that a groupBy/applyInArrow formulation would
-    add: one task per block FILE streams its groups through the numpy
-    decoder. The file list reaches the tasks by ``parallelize``, so
+    add: each task streams a contiguous run of block FILES, group by
+    group, through the numpy decoder, one wave of tasks in all. The
+    file list reaches the tasks by ``parallelize`` (_one_wave_df), so
     the plan has zero exchanges. File reads go through pyarrow, which
     handles local, HDFS and S3 URIs alike in production.
 
@@ -2374,18 +2352,11 @@ def decode_blocks(
                 if pend is not None and pend.num_rows:
                     yield from _emit(path, pend)
 
-    # one TASK may stream several block files (the loop above): cap the
-    # physical task count at ~2 per core so per-task overhead doesn't
-    # dominate when there are many small block files. Round-robin the
-    # file list across tasks DRIVER-side (one list per partition via
-    # parallelize) — equivalent balance to .repartition(ntasks) without
-    # its exchange stage, so the decode plan has ZERO exchanges.
-    ntasks = max(1, min(len(files), spark.sparkContext.defaultParallelism * 2))
-    groups = [[(p,) for p in files[i::ntasks]] for i in range(ntasks)]
-    pdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(groups, len(groups)).flatMap(lambda g: g),
-        "path string",
-    )
+    # one TASK streams a run of block files (the loop above), one wave
+    # of tasks in all: per-task overhead must not dominate when there
+    # are many small block files
+    pdf = _one_wave_df(spark, [(p,) for p in files], [1] * len(files),
+                       "path string")
     result = pdf.mapInArrow(decode_stream, schema=ddl)
     return _apply_evolution_and_deletes(
         spark, result, out_dir, schema, set(wanted_cols), part_ids,

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from libgiddy_spark.engine import (
     _balanced_bounds,
+    _committed_block_files,
+    _one_wave_df,
     blocks_df,
     decode_blocks,
     encode_snapshot,
@@ -108,16 +110,14 @@ def test_row_range_stream_slice_exact(tmp_path):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from libgiddy_spark.blocks import make_direct_encoder, plan_one_file
+    from libgiddy_spark.blocks import make_direct_encoder
 
     n = 1000
     src = str(tmp_path / "t.parquet")
     tbl = pa.table({"k": pa.array(range(n), pa.int64())})
     pq.write_table(tbl, src, row_group_size=300)  # 4 row groups
     pf = pq.ParquetFile(src)
-    plan = {0: {c: (codec, params, ft)
-                for c, codec, params, ft in plan_one_file(src, ["k"])}}
-    enc = make_direct_encoder(["k"], sort_key="k", plan=plan)
+    enc = make_direct_encoder(["k"], sort_key="k")
     # spans chosen to start/end mid-row-group (rg bounds: 300/600/900)
     for rg_lo, rg_hi, rlo, rhi in [(0, 4, 123, 877), (1, 3, 50, 599),
                                    (0, 1, 0, 300), (3, 4, 1, 99)]:
@@ -225,3 +225,104 @@ def test_direct_commit_by_list(spark, tmp_path):
     os.remove(os.path.join(cdir, listed[0]))
     with pytest.raises(ValueError, match="missing on disk"):
         decode_blocks(spark, out, schema).count()
+
+
+def _text_file(path, n, rows_per_group, seed=0):
+    """A parquet file of n rows (int key + word-salad text) in row
+    groups of rows_per_group."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    vocab = [f"w{i:03d}{'xyz' * (i % 4)}" for i in range(300)]
+    text = [" ".join(vocab[j] for j in rng.integers(0, 300, 12))
+            for _ in range(n)]
+    pq.write_table(pa.table({"k": pa.array(range(n), pa.int64()),
+                             "text": pa.array(text)}),
+                   path, row_group_size=rows_per_group)
+
+
+def _in_group(spark, group, fn):
+    """Run fn() under a Spark job group; return its result and, per job
+    of the group, the total task count of its stages."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    tasks = [sum(st.getStageInfo(s).numTasks
+                 for s in st.getJobInfo(j).stageIds)
+             for j in st.getJobIdsForGroup(group)]
+    return res, tasks
+
+
+def test_part_slices_share_file_plan_across_tasks(spark, tmp_path):
+    """A part fanned out into several salt slices that land in
+    different Spark tasks: every slice still encodes with the codecs
+    and FSST symbol table of plan_one_file(path) — each task plans the
+    part from the file head, never from its own slice."""
+    import json
+
+    from libgiddy_spark.blocks import plan_one_file
+    from libgiddy_spark.codecs import header as H
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    src = os.path.join(src_dir, "part-0.parquet")
+    _text_file(src, 24000, 2000)
+    out = str(tmp_path / "enc")
+    encode_snapshot(spark, src_dir, out, key_col="k",
+                    target_salt_bytes=96 * 1024)
+    plan = {c: (codec, params, ft)
+            for c, codec, params, ft in plan_one_file(src, ["k", "text"])}
+    assert plan["text"][0] == "fsst"
+    files = _committed_block_files(out)
+    assert len(files) >= 2  # one block file per task: several tasks
+    salts = set()
+    for f in files:
+        b = pq.read_table(f, filters=[("block_seq", "=", 0)])
+        for salt, col, codec, cp, payload in zip(
+                *(b.column(c).to_pylist() for c in
+                  ("salt", "column", "codec", "codec_params", "payload"))):
+            salts.add(salt)
+            p_codec, p_params, p_ft = plan[col]
+            assert codec == p_codec, (f, salt, col)
+            assert json.loads(cp) == {"stats": json.loads(p_params)}
+            if codec == "fsst":
+                assert bytes(H.unpack_block(payload)[4][1]) == p_ft
+    assert len(salts) >= 3
+
+
+def test_encode_is_one_job_and_decode_one_wave(spark, tmp_path):
+    """encode_snapshot of a multi-file table runs exactly one Spark job
+    of at most defaultParallelism tasks (codecs are planned inside the
+    encode tasks), and a decode of more block files than that still
+    runs one wave of at most defaultParallelism tasks."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i in range(6):
+        _text_file(os.path.join(src, f"part-{i}.parquet"), 500, 500, i)
+    dp = spark.sparkContext.defaultParallelism
+    out = str(tmp_path / "one")
+    _, tasks = _in_group(spark, "lgs-encode-one-job", lambda: encode_snapshot(
+        spark, src, out, key_col="k"))
+    assert len(tasks) == 1 and tasks[0] <= dp, tasks
+    # the encode task list: one partition per task, no Exchange
+    tdf = _one_wave_df(spark, [(i,) for i in range(3 * dp)],
+                       [1] * (3 * dp), "i int")
+    assert tdf.rdd.getNumPartitions() == dp
+    assert "Exchange" not in tdf._jdf.queryExecution().executedPlan().toString()
+    # one chunk per file: more block files than task slots
+    many = str(tmp_path / "many")
+    encode_snapshot(spark, src, many, key_col="k", chunk_parts=1)
+    assert len(_committed_block_files(many)) > dp
+    schema = pq.read_schema(os.path.join(src, "part-0.parquet"))
+    dec = decode_blocks(spark, many, schema)
+    assert dec._jdf.queryExecution().executedPlan().toString().count(
+        "Exchange") == 0
+    rows, tasks = _in_group(spark, "lgs-decode-one-wave", dec.collect)
+    assert len(rows) == 3000
+    assert len(tasks) == 1 and tasks[0] <= dp, tasks

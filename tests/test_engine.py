@@ -147,7 +147,7 @@ def _first_schema(path):
 
 def test_decode_plan_is_shuffle_free(spark, tmp_path):
     """Decode must not exchange ANYTHING: the file-path list is
-    round-robined driver-side into a pre-partitioned RDD (round 4), so
+    cut driver-side into a pre-partitioned RDD (round 4), so
     the physical plan has ZERO Exchange nodes — blocks flow
     file->task->decoder directly."""
     import pyarrow.parquet as pq
