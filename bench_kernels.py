@@ -3,13 +3,17 @@
 
 Writes BENCH/KERNELS.md: encode GB/s, decode GB/s, compression ratio per
 scheme on representative inputs (SURVEY.md §6 target metric 1 at the
-kernel level; the end-to-end numbers live in BENCH/BASELINE.md).
+kernel level; the end-to-end numbers live in BENCH/BASELINE.md), and
+the FSST trainer's cost: ms per ``fsst.train`` on the selector's 64 KiB
+webtext trials and ms per ``blocks.plan_one_file`` on a 3,000-row
+webtext file.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 if __name__ == "__main__" and os.environ.get("MALLOC_MMAP_THRESHOLD_") != "1073741824":
@@ -47,6 +51,39 @@ def bench_one(arr: pa.Array, codec: str):
     }
 
 
+def bench_training(wt: pa.Table) -> list[str]:
+    """Markdown rows: best-of-REPS ms per FSST training and per plan."""
+    import pyarrow.parquet as pq
+
+    from libgiddy_spark.blocks import plan_one_file
+    from libgiddy_spark.codecs import strcol_of
+    from libgiddy_spark.codecs.fsst import train
+    from libgiddy_spark.selector import FSST_TRIAL_BYTES
+
+    def best_ms(fn) -> float:
+        fn()  # warm
+        ts = []
+        for _ in range(REPS):
+            t0 = time.perf_counter()
+            fn()
+            ts.append(time.perf_counter() - t0)
+        return min(ts) * 1e3
+
+    rows = []
+    for c in ("url", "text", "html"):
+        trial = strcol_of(wt.column(c).combine_chunks()).data[:FSST_TRIAL_BYTES]
+        ms = best_ms(lambda: train(trial, generations=3))
+        rows.append(f"| fsst.train, 64 KiB webtext {c} trial, 3 generations "
+                    f"| {ms:.1f} |")
+    with tempfile.TemporaryDirectory(prefix="lgs_bench_") as tmp:
+        path = os.path.join(tmp, "webtext.parquet")
+        pq.write_table(wt.slice(0, 3000), path)
+        cols = wt.column_names
+        ms = best_ms(lambda: plan_one_file(path, cols))
+    rows.append(f"| plan_one_file, 3,000-row webtext file | {ms:.1f} |")
+    return rows
+
+
 def main() -> None:
     from libgiddy_spark.webtext import generate_batch
 
@@ -77,7 +114,8 @@ def main() -> None:
     lines = [
         "# BENCH — per-codec kernel micro-benchmarks (single core, warm)",
         "",
-        f"numpy {np.__version__}, pyarrow {pa.__version__}; best of {REPS} reps.",
+        f"numpy {np.__version__}, pyarrow {pa.__version__}; best of {REPS} reps; "
+        f"host with {len(os.sched_getaffinity(0))} vCPUs.",
         "",
         "| input | codec | raw MB | enc GB/s | dec GB/s | ratio |",
         "|---|---|---|---|---|---|",
@@ -89,6 +127,10 @@ def main() -> None:
             f"| {r['dec_gbps']:.3f} | {r['ratio']:.4f} |"
         )
         print(lines[-1], flush=True)
+    lines += ["", "## FSST training", "", "| step | ms |", "|---|---|"]
+    for row in bench_training(wt):
+        lines.append(row)
+        print(row, flush=True)
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "KERNELS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")

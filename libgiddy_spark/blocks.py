@@ -266,20 +266,24 @@ def encode_group(
     return pa.table(out, schema=BLOCKS_SCHEMA)
 
 
+# head rows of a file that its codec plan samples (plan_one_file)
+PLAN_SAMPLE_ROWS = 16384
+
+
 def plan_one_file(
     path: str,
     columns: list[str],
     forced_codecs: dict[str, str] | None = None,
-    sample_rows: int = 16384,
+    sample_rows: int = PLAN_SAMPLE_ROWS,
 ) -> list[tuple[str, str, str, bytes | None]]:
     """Codec plan for one data file: (column, codec, params_json,
     serialized_fsst_table|None) per column, selected (and FSST
-    trained) ONCE on a bounded sample, the head of row group 0. It
-    depends only on the file, so every salt slice of a part gets the
-    same codecs and symbol tables whichever task encodes it; the
-    encode task plans each part it meets (make_direct_encoder).
-    Without the plan, 64 slices of a part would re-train the same
-    tables 64x (measured ~0.3 s per training on webtext text)."""
+    trained) ONCE on a bounded sample, the first
+    min(sample_rows, row-group-0 rows) rows of the file. It depends
+    only on the file, so every salt slice of a part gets the same
+    codecs and symbol tables whichever task encodes it. The encode
+    task plans each part it meets (make_direct_encoder); this reads
+    the head rows itself, for tasks whose slice does not hold them."""
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
@@ -294,9 +298,16 @@ def plan_one_file(
     )), None)
     if first is None:
         return []
-    tbl = pa.Table.from_batches([first])
-    if tbl.num_rows > sample_rows:
-        tbl = tbl.slice(0, sample_rows)
+    return _plan_head(pa.Table.from_batches([first]).slice(0, sample_rows),
+                      columns, forced_codecs)
+
+
+def _plan_head(
+    tbl: pa.Table,
+    columns: list[str],
+    forced_codecs: dict[str, str] | None,
+) -> list[tuple[str, str, str, bytes | None]]:
+    """plan_one_file's plan from a file's head rows already in hand."""
     out: list[tuple[str, str, str, bytes | None]] = []
     for col_name in columns:
         arr = _normalize(tbl.column(col_name))
@@ -333,11 +344,14 @@ def make_direct_encoder(
     (engine.encode_files). A row range that the covering row groups
     do not reach raises ValueError naming the task.
 
-    The task plans each part it encodes with :func:`plan_one_file`, once
-    per part (memoized for the task), and seeds every slice's selector
-    cache with that plan, so no slice re-selects or re-trains. Tasks
-    that split a part's slices plan it each, in parallel, to the same
-    result: the plan reads only the file head."""
+    The task plans each part it encodes once (memoized for the task)
+    and seeds every slice's selector cache with that plan, so no slice
+    re-selects or re-trains. The plan samples the file's first
+    min(PLAN_SAMPLE_ROWS, row-group-0 rows) rows. When the slice the
+    task has just read starts at row 0 of row group 0, those rows come
+    from that slice; otherwise :func:`plan_one_file` reopens the file
+    to read them. Tasks that split a part's slices plan it each, in
+    parallel, to the same result."""
 
     def encode_tasks(batches):
         import pyarrow.parquet as pq
@@ -386,22 +400,31 @@ def make_direct_encoder(
                             f"range [{row_lo}, {row_hi}) exceeds the "
                             f"{seen} rows of row groups "
                             f"[{row['rg_lo']}, {row['rg_hi']})")
-                    tbl = pa.Table.from_batches(kept).slice(
-                        row_lo - start, row_hi - row_lo
-                    )
+                    read = pa.Table.from_batches(kept)
+                    tbl = read.slice(row_lo - start, row_hi - row_lo)
+                    head = read if row_lo == 0 else None
                 else:
-                    tbl = pf.read_row_groups(
+                    tbl = head = pf.read_row_groups(
                         rgs, columns=columns, use_threads=False
                     )
                 pid = int(row["part_id"])
                 if pid not in plans:
+                    # a slice read from row 0 of row group 0 holds the
+                    # rows plan_one_file would read: plan from them
+                    need = min(PLAN_SAMPLE_ROWS,
+                               pf.metadata.row_group(0).num_rows)
+                    if rgs[0] == 0 and head is not None and (
+                            0 < need <= head.num_rows):
+                        plan = _plan_head(head.slice(0, need), columns,
+                                          forced_codecs)
+                    else:
+                        plan = plan_one_file(row["path"], columns,
+                                             forced_codecs=forced_codecs)
                     plans[pid] = {
                         col: (codec, json.loads(params),
                               SymbolTable.deserialize(ft)
                               if ft is not None else None)
-                        for col, codec, params, ft in plan_one_file(
-                            row["path"], columns,
-                            forced_codecs=forced_codecs)
+                        for col, codec, params, ft in plan
                     } or None
                 out = encode_group(
                     tbl,

@@ -1,4 +1,4 @@
-"""Optional C fast path for the FSST greedy tokenizer.
+"""Optional C fast path for the FSST greedy tokenizer and trainer.
 
 The vectorized numpy encoder (fsst.encode_tokens) is the portable
 baseline, but its lock-step formulation costs ~75 ns/byte in numpy
@@ -11,6 +11,12 @@ lines of C do at GB/s. This module compiles that loop with the host
 kernel. Token streams are bit-identical by construction (the C loop
 mirrors the numpy matcher exactly — same 2-byte-prefix candidate
 order, same masks, same escape rule) and tests assert it.
+
+The same matcher drives the trainer's counting pass
+(``fsst_count_cands``): per generation, fsst.train tokenizes its
+sample and hash-counts tokens and adjacent token pairs in one C loop.
+It has the same no-compiler fallback, the numpy encode + lexsort
+count, and both give identical counts, hence identical tables.
 
 The C source is embedded so the package stays a plain ``--py-files``
 zip: each executor host compiles once into a content-addressed file
@@ -34,6 +40,44 @@ _C_SRC = r"""
 #include <stdint.h>
 #include <string.h>
 
+static const uint64_t MASKS[9] = {
+    0ULL, 0xFFULL, 0xFFFFULL, 0xFFFFFFULL, 0xFFFFFFFFULL,
+    0xFFFFFFFFFFULL, 0xFFFFFFFFFFFFULL, 0xFFFFFFFFFFFFFFULL,
+    0xFFFFFFFFFFFFFFFFULL};
+
+/* The greedy matcher shared by the tokenizer and the trainer's
+   counting pass: the longest multi-byte symbol whose bytes start the
+   8-byte window w (rem bytes left in the lane). Returns its code and
+   sets *mlen to its length, or returns -1 with *mlen = 1.
+
+   The candidate table is a fixed 3-slot u16 matrix cand3[pref*3+k] =
+   len<<8 | code (384 KB, L2-resident — vs the old 65536 x k_max int64
+   table's ~1.5 MB of L3-latency loads), sorted longest-first per
+   2-byte prefix. Sentinel slots carry code 255 (never a real code:
+   symbols are 0..254) whose padded sym_vals entry 0x100 exceeds any
+   1-byte masked window, so sentinels can never match; the early-break
+   candidate loop therefore behaves exactly like the old -1-terminated
+   scan, longest-first. (A fully branch-free cmov variant and a 4-lane
+   interleaved variant were both measured SLOWER on this data — the
+   branches predict well and the extra always-evaluated loads
+   dominate.) */
+static inline long match_multi(
+    uint64_t w, long rem, const uint16_t* cand3, const uint64_t* sym_vals,
+    long* mlen)
+{
+    const uint16_t* s = cand3 + (w & 0xFFFFULL) * 3;
+    for (long k = 0; k < 3; k++) {
+        const long c = s[k] & 0xFF;
+        const long cl = s[k] >> 8;
+        if (rem >= cl && (w & MASKS[cl]) == sym_vals[c]) {
+            *mlen = cl;
+            return c;
+        }
+    }
+    *mlen = 1;
+    return -1;
+}
+
 /* Greedy longest-match FSST tokenizer over pre-split lanes.
    Mirrors fsst.encode_tokens exactly:
    - per position, try the candidates for the 2-byte prefix (sorted
@@ -41,28 +85,9 @@ _C_SRC = r"""
    - else the 1-byte symbol for the leading byte;
    - else ESCAPE(255) + literal byte.
 
-   Cache layout is the whole game here: the old 65536 x k_max int64
-   candidate table was ~1.5 MB, so every input byte paid an L3-latency
-   random load (measured ~0.1 GB/s). Now pidx is 65536 u32 entries
-   (256 KB, L2-resident: start<<8 | count into the <=255-entry
-   cand_codes/cand_lens u8 arrays, both L1), and sym_vals (2 KB) is
-   L1 — one L2 load + L1 traffic per position. Same candidate order,
-   masks and escape rule as before, so the token stream is unchanged.
-
    `data` MUST have >=8 readable slack bytes past data_len (caller
    pads): the unconditional 8-byte load reads garbage there, but the
    rem>=len guard keeps it out of every comparison.
-
-   The candidate table is a fixed 3-slot u16 matrix cand3[pref*3+k] =
-   len<<8 | code (384 KB, L2-resident — vs the old 65536 x k_max int64
-   table's ~1.5 MB of L3-latency loads). Sentinel slots carry code 255
-   (never a real code: symbols are 0..254) whose padded sym_vals entry
-   0x100 exceeds any 1-byte masked window, so sentinels can never
-   match; the early-break candidate loop therefore behaves exactly
-   like the old -1-terminated scan, longest-first. (A fully
-   branch-free cmov variant and a 4-lane interleaved variant were both
-   measured SLOWER on this data — the branches predict well and the
-   extra always-evaluated loads dominate.)
    Returns total output bytes; per-lane byte counts in lane_out_lens. */
 long fsst_encode_lanes(
     const uint8_t* data, long data_len,
@@ -72,10 +97,6 @@ long fsst_encode_lanes(
     const int64_t* t1,
     uint8_t* out, int64_t* lane_out_lens)
 {
-    static const uint64_t MASKS[9] = {
-        0ULL, 0xFFULL, 0xFFFFULL, 0xFFFFFFULL, 0xFFFFFFFFULL,
-        0xFFFFFFFFFFULL, 0xFFFFFFFFFFFFULL, 0xFFFFFFFFFFFFFFULL,
-        0xFFFFFFFFFFFFFFFFULL};
     (void)data_len;
     long o = 0;
     for (long L = 0; L < n_lanes; L++) {
@@ -85,17 +106,8 @@ long fsst_encode_lanes(
         while (pos < end) {
             uint64_t w;
             memcpy(&w, data + pos, 8);  /* padded: always safe */
-            const long rem = end - pos;
-            const uint16_t* s = cand3 + (w & 0xFFFFULL) * 3;
-            long code = -1;
-            long mlen = 1;
-            for (long k = 0; k < 3; k++) {
-                const long c = s[k] & 0xFF;
-                const long cl = s[k] >> 8;
-                if (rem >= cl && (w & MASKS[cl]) == sym_vals[c]) {
-                    code = c; mlen = cl; break;
-                }
-            }
+            long mlen;
+            const long code = match_multi(w, end - pos, cand3, sym_vals, &mlen);
             if (code >= 0) {
                 out[o++] = (uint8_t)code;
             } else {
@@ -112,6 +124,79 @@ long fsst_encode_lanes(
         lane_out_lens[L] = o - o0;
     }
     return o;
+}
+
+/* Add one occurrence of candidate (v, l) to the open-addressing count
+   table: slots[h] is -1 or the key's index into out_*. Returns the new
+   number of distinct keys. */
+static inline long count_key(
+    uint64_t v, long l, int32_t* slots, uint64_t mask,
+    uint64_t* out_val, int64_t* out_len, int64_t* out_cnt, long n)
+{
+    uint64_t h = (v ^ ((uint64_t)l << 59)) * 0x9E3779B97F4A7C15ULL;
+    h ^= h >> 29;
+    for (;;) {
+        const uint64_t i = h & mask;
+        const int32_t j = slots[i];
+        if (j < 0) {
+            slots[i] = (int32_t)n;
+            out_val[n] = v;
+            out_len[n] = l;
+            out_cnt[n] = 1;
+            return n + 1;
+        }
+        if (out_val[j] == v && out_len[j] == l) {
+            out_cnt[j]++;
+            return n;
+        }
+        h = i + 1;
+    }
+}
+
+/* One training generation's candidate counts (fsst.train): tokenize
+   the lanes with the current table (match_multi, as in
+   fsst_encode_lanes; a 1-byte symbol and an escaped literal are the
+   same (byte, 1) token), then hash-count every token (value, len) and
+   every adjacent token pair whose concatenation is <= 8 bytes. Pairs
+   run over the lane-ordered token stream, so they cross lane seams
+   exactly as the numpy path's tok_val[:-1] / tok_val[1:] do. Values
+   are little-endian, zero above their length, so b"a" and b"a\0" are
+   distinct (value, len) keys.
+
+   `data` needs 8 slack bytes (as above). `slots` has cap entries, all
+   -1, cap a power of two >= 2x the number of keys (tokens + pairs <=
+   2x the sample bytes); out_* get one entry per distinct key, in
+   first-seen order. Returns the number of distinct keys. */
+long fsst_count_cands(
+    const uint8_t* data,
+    const int64_t* lane_start, const int64_t* lane_end, long n_lanes,
+    const uint16_t* cand3, const uint64_t* sym_vals,
+    int32_t* slots, long cap,
+    uint64_t* out_val, int64_t* out_len, int64_t* out_cnt)
+{
+    const uint64_t mask = (uint64_t)cap - 1;
+    long n = 0;
+    uint64_t pv = 0;
+    long pl = 0;  /* previous token's length; 0 before the first */
+    for (long L = 0; L < n_lanes; L++) {
+        int64_t pos = lane_start[L];
+        const int64_t end = lane_end[L];
+        while (pos < end) {
+            uint64_t w;
+            memcpy(&w, data + pos, 8);
+            long l;
+            const long c = match_multi(w, end - pos, cand3, sym_vals, &l);
+            const uint64_t v = c >= 0 ? sym_vals[c] : (w & 0xFFULL);
+            n = count_key(v, l, slots, mask, out_val, out_len, out_cnt, n);
+            if (pl && pl + l <= 8)
+                n = count_key(pv | (v << (8 * pl)), pl + l, slots, mask,
+                              out_val, out_len, out_cnt, n);
+            pv = v;
+            pl = l;
+            pos += l;
+        }
+    }
+    return n;
 }
 
 /* FSST decode, pass 1: per-code output offsets (offs[i] = decoded
@@ -326,6 +411,7 @@ def native_lib():
     except OSError:
         return None
     i64p = np.ctypeslib.ndpointer(np.int64, flags="C_CONTIGUOUS")
+    i32p = np.ctypeslib.ndpointer(np.int32, flags="C_CONTIGUOUS")
     u64p = np.ctypeslib.ndpointer(np.uint64, flags="C_CONTIGUOUS")
     u16p = np.ctypeslib.ndpointer(np.uint16, flags="C_CONTIGUOUS")
     u8p = np.ctypeslib.ndpointer(np.uint8, flags="C_CONTIGUOUS")
@@ -337,6 +423,14 @@ def native_lib():
         u64p,                        # sym_vals (256, [255]=sentinel)
         i64p,                        # t1
         u8p, i64p,                   # out, lane_out_lens
+    ]
+    lib.fsst_count_cands.restype = ctypes.c_long
+    lib.fsst_count_cands.argtypes = [
+        u8p,                         # data (8B padded)
+        i64p, i64p, ctypes.c_long,   # lane_start, lane_end, n_lanes
+        u16p, u64p,                  # cand3, sym_vals
+        i32p, ctypes.c_long,         # slots (all -1), cap (power of 2)
+        u64p, i64p, i64p,            # out_val, out_len, out_cnt
     ]
     lib.fsst_decode_offsets.restype = ctypes.c_long
     lib.fsst_decode_offsets.argtypes = [

@@ -22,6 +22,8 @@ matrix.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import struct
 
 import numpy as np
@@ -44,66 +46,55 @@ class SymbolTable:
 
     def __init__(self, symbols: list[bytes]):
         assert len(symbols) <= MAX_SYMBOLS
+        n = len(symbols)
         self.symbols = symbols
         self.lens = np.array([len(s) for s in symbols], dtype=np.int64)
-        # (n_sym, 8) byte matrix for decode gather
-        self.matrix = np.zeros((max(len(symbols), 1), MAX_SYM_LEN), dtype=np.uint8)
-        for i, s in enumerate(symbols):
-            self.matrix[i, : len(s)] = np.frombuffer(s, dtype=np.uint8)
-        # masked u64 value per symbol + 2-byte-prefix candidate table
-        # (SURVEY.md §2.1 #13): P[prefix2] lists codes of len>=2 symbols
-        # starting with those two bytes, longest first; T1 maps a single
-        # byte to its 1-byte symbol code (or -1).
-        vals64 = np.zeros(max(len(symbols), 1), dtype=np.uint64)
-        for i, s in enumerate(symbols):
-            vals64[i] = int.from_bytes(s.ljust(8, b"\0"), "little") & int(_MASKS[len(s)])
-        self.vals64 = vals64
-        self.lens_safe = self.lens if len(symbols) else np.zeros(1, np.int64)
+        self.lens_safe = self.lens if n else np.zeros(1, np.int64)
+        # (n_sym, 8) zero-padded byte matrix for the decode gather; its
+        # rows read as little-endian u64 are the masked symbol values
+        self.matrix = np.frombuffer(
+            b"".join(s.ljust(MAX_SYM_LEN, b"\0") for s in symbols)
+            or bytes(MAX_SYM_LEN), dtype=np.uint8).reshape(-1, MAX_SYM_LEN)
+        self.vals64 = self.matrix.view("<u8").ravel()
+        # T1 maps a single byte to its 1-byte symbol code (or -1)
         self.t1 = np.full(256, -1, dtype=np.int64)
-        multi = []
-        for i, s in enumerate(symbols):
-            if len(s) == 1:
-                self.t1[s[0]] = i
-            else:
-                multi.append(i)
-        if multi:
-            multi_arr = np.array(multi, dtype=np.int64)
-            pref = (vals64[multi_arr] & _U64(0xFFFF)).astype(np.int64)
-            order = np.lexsort((-self.lens[multi_arr], pref))
-            multi_arr, pref = multi_arr[order], pref[order]
-            counts = np.bincount(pref, minlength=65536)
-            self.k_max = int(counts.max())
-            self.prefix = np.full((65536, self.k_max), -1, dtype=np.int64)
-            slot = np.zeros(65536, dtype=np.int64)
-            for sym, p in zip(multi_arr, pref):  # <=255 symbols: cheap
-                self.prefix[p, slot[p]] = sym
-                slot[p] += 1
-            self.prefix_flat = self.prefix.ravel()
-        else:
-            self.k_max = 0
-            self.prefix = np.full((65536, 0), -1, dtype=np.int64)
-            self.prefix_flat = self.prefix.ravel()
+        ones = np.flatnonzero(self.lens == 1)
+        self.t1[self.matrix[ones, 0]] = ones
+        # symbols of len>=2 grouped by 2-byte prefix (SURVEY.md §2.1
+        # #13), longest first, then by code; _rank = slot within group
+        multi = np.flatnonzero(self.lens >= 2)
+        pref = (self.vals64[multi] & _U64(0xFFFF)).astype(np.int64)
+        order = np.lexsort((-self.lens[multi], pref))
+        multi, pref = multi[order], pref[order]
+        self._multi, self._pref = multi, pref
+        self._rank = np.arange(len(pref)) - np.searchsorted(pref, pref)
+        self.k_max = int(self._rank.max()) + 1 if len(multi) else 0
         # Branch-free C fast-path tables (see _native.py): fixed 3-slot
         # u16 candidate matrix (len<<8 | code, 384 KB — vs the 65536 x
-        # k_max int64 table's ~1.5 MB of L3-latency loads) + padded
-        # sym_vals. Sentinel slots use code 255 (never a real code:
-        # symbols are 0..254) whose padded value 0x100 exceeds any
+        # k_max int64 prefix table's ~1.5 MB of L3-latency loads) +
+        # padded sym_vals. Sentinel slots use code 255 (never a real
+        # code: symbols are 0..254) whose padded value 0x100 exceeds any
         # 1-byte masked window, so sentinels can never match. Slot
-        # order per prefix = (longest-first) — same as prefix_flat, so
+        # order per prefix = (longest-first) — same as prefix, so
         # the token stream is identical. Tables with >3 candidates per
         # prefix (train caps at 3; only hand-built tables exceed it)
         # fall back to the numpy encoder.
-        _SENTINEL = (1 << 8) | 255
-        self.cand3 = np.full(65536 * 3, _SENTINEL, dtype=np.uint16)
-        if multi and self.k_max <= 3:
-            packed = ((self.lens[multi_arr] << 8) | multi_arr).astype(np.uint16)
-            slot3 = np.zeros(65536, dtype=np.int64)
-            for val, p in zip(packed, pref):  # <=255 symbols: cheap
-                self.cand3[p * 3 + slot3[p]] = val
-                slot3[p] += 1
+        self.cand3 = np.full(65536 * 3, (1 << 8) | 255, dtype=np.uint16)
+        if self.k_max <= 3:
+            self.cand3[pref * 3 + self._rank] = (self.lens[multi] << 8) | multi
         self.vals64_pad = np.zeros(256, dtype=np.uint64)
-        self.vals64_pad[: len(vals64)] = vals64
+        self.vals64_pad[:n] = self.vals64[:n]
         self.vals64_pad[255] = 0x100
+
+    @functools.cached_property
+    def prefix(self) -> np.ndarray:
+        """(65536, k_max) int64 table: P[prefix2] lists the codes of the
+        len>=2 symbols starting with those two bytes, longest first,
+        -1-padded. Only the numpy encoder reads it, so it is built on
+        first use."""
+        prefix = np.full((65536, self.k_max), -1, dtype=np.int64)
+        prefix[self._pref, self._rank] = self._multi
+        return prefix
 
     def serialize(self) -> bytes:
         lens = bytes(self.lens.astype(np.uint8).tobytes())
@@ -111,14 +102,10 @@ class SymbolTable:
 
     @classmethod
     def deserialize(cls, buf) -> "SymbolTable":
-        mv = memoryview(buf)
-        (n,) = struct.unpack_from("<B", mv, 0)
-        lens = np.frombuffer(mv[1 : 1 + n], dtype=np.uint8)
-        syms, off = [], 1 + n
-        for l in lens:
-            syms.append(bytes(mv[off : off + l]))
-            off += int(l)
-        return cls(syms)
+        buf = bytes(buf)
+        (n,) = struct.unpack_from("<B", buf, 0)
+        ends = list(itertools.accumulate(buf[1 : 1 + n], initial=1 + n))
+        return cls([buf[a:b] for a, b in zip(ends, ends[1:])])
 
 
 ENC_CHUNK = 1024  # codec spec: symbols never span 1 KiB chunk boundaries
@@ -228,6 +215,7 @@ def _encode_tokens_numpy(col: StrCol, table: SymbolTable):
     read8 = _window_fn(col.data)
     active = np.flatnonzero(cursor < end)
     have_syms = len(table.symbols) > 0
+    prefix_flat = table.prefix.ravel()
     iters_lane: list[np.ndarray] = []
     iters_tok: list[np.ndarray] = []  # uint16: code<<8 | literal (escapes)
     lane_ntok = np.zeros(n_lanes, dtype=np.int64)
@@ -242,7 +230,7 @@ def _encode_tokens_numpy(col: StrCol, table: SymbolTable):
             unmatched = np.ones(len(active), dtype=bool)
             key_base = (w & _U64(0xFFFF)).astype(np.int64) * table.k_max
             for k in range(table.k_max):
-                cand = table.prefix_flat[key_base + k]
+                cand = prefix_flat[key_base + k]
                 live = unmatched & (cand >= 0)
                 if not live.any():
                     break
@@ -373,8 +361,6 @@ def decode_stream(codes: np.ndarray, table: SymbolTable):
 def train(sample: np.ndarray, generations: int = 5) -> SymbolTable:
     """Train a symbol table on a byte sample (uint8 array), BPE-style.
 
-    Deterministic: ties broken by (gain desc, value asc, len asc).
-
     The trainer sees a SPREAD sample: 512-byte chunks strided evenly
     across the whole input, 32 KiB total (the FSST paper's sampling
     shape). Versus the old 256 KiB head cap this is ~7x cheaper per
@@ -383,7 +369,20 @@ def train(sample: np.ndarray, generations: int = 5) -> SymbolTable:
     ratio on webtext url/text/html (url improves: the head
     oversampled early rows). Chunk seams add <1 fake adjacency per
     512 real ones, noise at counting granularity.
+
+    Each generation has two steps. The counting step greedy-tokenizes
+    the sample (in 256-byte lanes) with the current table and counts
+    every token and every adjacent token pair of <= 8 bytes as a
+    (value, len) candidate. The C kernel ``fsst_count_cands`` does this
+    in one hashed pass (codecs/_native.py); without it the numpy path
+    encodes, rebuilds token spans (_token_values) and unique-counts
+    with a lexsort. Both yield the same counts, and one shared pick
+    (_pick_symbols) builds the next table from them, so tables are
+    byte-identical on both paths. Deterministic: ties broken by (gain
+    desc, value asc, len asc).
     """
+    from ._native import native_lib
+
     total, chunk_b = 1 << 15, 512
     if len(sample) > total:
         k = total // chunk_b
@@ -398,53 +397,84 @@ def train(sample: np.ndarray, generations: int = 5) -> SymbolTable:
     offs = np.arange(0, len(sample) + chunk, chunk, dtype=np.int64)
     offs[-1] = len(sample)
     col = StrCol(offs, sample)
+    lib = native_lib()
     table = SymbolTable([])
     for _ in range(generations):
-        codes, _ = encode_tokens(col, table)
-        # token spans over the sample: reconstruct (start, len) per token
-        tok_val, tok_len = _token_values(codes, table, sample)
-        if len(tok_val) == 0:
-            break
-        cand_val = [tok_val]
-        cand_len = [tok_len]
-        pair_len = tok_len[:-1] + tok_len[1:]
-        ok = pair_len <= MAX_SYM_LEN
-        if ok.any():
-            pv = tok_val[:-1][ok] | (tok_val[1:][ok] << (tok_len[:-1][ok] * 8).astype(np.uint64))
-            cand_val.append(pv)
-            cand_len.append(pair_len[ok])
-        v = np.concatenate(cand_val)
-        l = np.concatenate(cand_len).astype(np.uint64)
-        # unique (value, len) pairs + counts via lexsort (np.unique
-        # axis=0 is an order of magnitude slower here)
-        order = np.lexsort((l, v))
-        vs, ls = v[order], l[order]
-        bound = np.ones(len(vs), dtype=bool)
-        bound[1:] = (vs[1:] != vs[:-1]) | (ls[1:] != ls[:-1])
-        starts = np.flatnonzero(bound)
-        counts = np.diff(np.append(starts, len(vs)))
-        uv, ul = vs[starts], ls[starts]
-        gain = counts * ul  # count * length
-        order = np.lexsort((ul, uv, -gain.astype(np.int64)))
-        # cap symbols per 2-byte prefix at 3: bounds the encoder's probe
-        # passes (k_max<=3) for ~no ratio cost — freed slots refill with
-        # the next candidates. The cap lives in the TABLE, so the naive
-        # sequential encoder sees identical symbols (stream identity).
-        syms: list[bytes] = []
-        bucket: dict[bytes, int] = {}
-        for row in order:
-            val, ln = int(uv[row]), int(ul[row])
-            s = val.to_bytes(8, "little")[:ln]
-            if ln >= 2:
-                b = bucket.get(s[:2], 0)
-                if b >= 3:
-                    continue
-                bucket[s[:2]] = b + 1
-            syms.append(s)
-            if len(syms) >= MAX_SYMBOLS:
-                break
-        table = SymbolTable(syms)
+        if lib is not None:
+            vals, lens, counts = _count_native(col, table, lib)
+        else:
+            vals, lens, counts = _count_numpy(col, table)
+        table = SymbolTable(_pick_symbols(vals, lens, counts))
     return table
+
+
+def _count_native(col: StrCol, table: SymbolTable, lib):
+    """(value, len, count) per distinct candidate, in first-seen order."""
+    n = len(col.data)
+    data = np.zeros(n + 8, dtype=np.uint8)  # 8 slack bytes: see _native
+    data[:n] = col.data
+    lane_start, lane_end, _ = _lane_split(col)
+    # tokens + pairs <= 2n keys; a power-of-two table at most half full
+    cap = 1 << (4 * n - 1).bit_length()
+    vals = np.empty(2 * n, dtype=np.uint64)
+    lens = np.empty(2 * n, dtype=np.int64)
+    counts = np.empty(2 * n, dtype=np.int64)
+    k = lib.fsst_count_cands(
+        data, lane_start, lane_end, len(lane_start),
+        table.cand3, table.vals64_pad,
+        np.full(cap, -1, dtype=np.int32), cap,
+        vals, lens, counts,
+    )
+    return vals[:k], lens[:k], counts[:k]
+
+
+def _count_numpy(col: StrCol, table: SymbolTable):
+    """(value, len, count) per distinct candidate, sorted by (value, len)."""
+    codes, _ = encode_tokens(col, table)
+    # token spans over the sample: reconstruct (start, len) per token
+    tok_val, tok_len = _token_values(codes, table, col.data)
+    cand_val = [tok_val]
+    cand_len = [tok_len]
+    pair_len = tok_len[:-1] + tok_len[1:]
+    ok = pair_len <= MAX_SYM_LEN
+    if ok.any():
+        pv = tok_val[:-1][ok] | (tok_val[1:][ok] << (tok_len[:-1][ok] * 8).astype(np.uint64))
+        cand_val.append(pv)
+        cand_len.append(pair_len[ok])
+    v = np.concatenate(cand_val)
+    l = np.concatenate(cand_len)
+    # unique (value, len) pairs + counts via lexsort (np.unique
+    # axis=0 is an order of magnitude slower here)
+    order = np.lexsort((l, v))
+    vs, ls = v[order], l[order]
+    bound = np.ones(len(vs), dtype=bool)
+    bound[1:] = (vs[1:] != vs[:-1]) | (ls[1:] != ls[:-1])
+    starts = np.flatnonzero(bound)
+    counts = np.diff(np.append(starts, len(vs)))
+    return vs[starts], ls[starts], counts
+
+
+def _pick_symbols(vals: np.ndarray, lens: np.ndarray, counts: np.ndarray) -> list[bytes]:
+    """The next table's symbols from distinct (value, len) candidates:
+    order by (gain = count * len desc, value asc, len asc) — a total
+    order, so the candidates' input order does not matter — and take
+    the first MAX_SYMBOLS, skipping a len>=2 candidate once three
+    earlier ones share its 2-byte prefix. The cap bounds the encoder's
+    probe passes (k_max<=3) for ~no ratio cost; freed slots refill
+    with the next candidates. It lives in the TABLE, so the naive
+    sequential encoder sees identical symbols (stream identity)."""
+    order = np.lexsort((lens, vals, -(counts * lens)))
+    v, l = vals[order], lens[order]
+    multi = np.flatnonzero(l >= 2)
+    pref = (v[multi] & _U64(0xFFFF)).astype(np.int64)
+    by_pref = np.argsort(pref, kind="stable")  # rank order within prefix
+    ps = pref[by_pref]
+    rank = np.arange(len(ps)) - np.searchsorted(ps, ps)
+    keep = np.ones(len(v), dtype=bool)
+    keep[multi[by_pref[rank >= 3]]] = False
+    pick = np.flatnonzero(keep)[:MAX_SYMBOLS]
+    raw = v[pick].astype("<u8").tobytes()
+    return [raw[8 * i: 8 * i + ln] for i, ln in enumerate(l[pick].tolist())]
 
 
 def _token_values(codes: np.ndarray, table: SymbolTable, sample: np.ndarray):

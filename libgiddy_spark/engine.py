@@ -2208,149 +2208,157 @@ def decode_blocks(
                 out = _drop_tombstoned(out, tomb_sets, part_seq)
             yield from out.to_batches()
 
+        def decode_file(path: str):
+            # predicate + projection pushdown into the block scan:
+            # only the requested parts' and columns' payload bytes
+            # are read from the file (row-group pruning). Files
+            # written BEFORE the string-zone/bloom columns existed
+            # must over-include, never crash: gate each clause on
+            # the file actually having its columns (footer names).
+            pf = pq.ParquetFile(path)
+            file_cols = set(pf.schema_arrow.names)
+            zflt = None  # part/zone clauses, column-independent
+            if wanted is not None:
+                zflt = pc.field("part_id").isin(wanted)
+            if krange is not None and "key_lo" in file_cols:
+                # zone-map pruning: keep blocks whose sort-key range
+                # overlaps [lo, hi] — and ALWAYS keep null zone maps
+                # (non-integral sort keys, or a group containing a
+                # null key): over-inclusion is correct, silent
+                # pruning of unzoned blocks would lose rows
+                overlap = (pc.field("key_hi") >= krange[0]) & (
+                    pc.field("key_lo") <= krange[1]
+                )
+                clause = overlap | pc.field("key_lo").is_null()
+                zflt = clause if zflt is None else zflt & clause
+            if krange_s is not None and "key_lo_s" in file_cols:
+                # string zone maps: same overlap + null-keep rule
+                overlap_s = (pc.field("key_hi_s") >= krange_s[0]) & (
+                    pc.field("key_lo_s") <= krange_s[1]
+                )
+                clause = overlap_s | pc.field("key_lo_s").is_null()
+                zflt = clause if zflt is None else zflt & clause
+            flt = pc.field("column").isin(wanted_cols)
+            if zflt is not None:
+                flt = flt & zflt
+            if probe_hash is not None and "key_bloom" in file_cols:
+                # metadata-only first read (no payload column):
+                # test each candidate block's Bloom filter; blocks
+                # whose filter PROVES the probe absent skip their
+                # payload read + decode. Blocks without a bloom row
+                # (unkeyed encodes, non-key columns only) stay.
+                # Keyed by the FULL (part_id, salt, block_seq): a
+                # block file holds several parts' groups (tasks are
+                # packed), and salt/block_seq alone would let one
+                # part's bloom prune another part's blocks.
+                meta = pq.read_table(
+                    path,
+                    columns=["part_id", "salt", "block_seq", "key_bloom"],
+                    filters=zflt,
+                    use_threads=False,
+                )
+                trips: set[tuple[int, int, int]] = set()
+                blooms: dict[tuple[int, int, int], bytes] = {}
+                for p_, s_, q_, kb in zip(
+                    meta.column("part_id").to_pylist(),
+                    meta.column("salt").to_pylist(),
+                    meta.column("block_seq").to_pylist(),
+                    meta.column("key_bloom").to_pylist(),
+                ):
+                    trips.add((p_, s_, q_))
+                    if kb is not None:
+                        blooms[(p_, s_, q_)] = kb
+                survivors = sorted(
+                    t
+                    for t in trips
+                    if t not in blooms
+                    or bloom_mod.bloom_might_contain(
+                        blooms[t], probe_hash, probe_domain
+                    )
+                )
+                if not survivors:
+                    return
+                if len(survivors) < len(trips):
+                    by_group: dict[tuple[int, int], list[int]] = {}
+                    for p_, s_, q_ in survivors:
+                        by_group.setdefault((p_, s_), []).append(q_)
+                    sel = None
+                    for (p_, s_), qs in sorted(by_group.items()):
+                        clause = (
+                            (pc.field("part_id") == p_)
+                            & (pc.field("salt") == s_)
+                            & pc.field("block_seq").isin(qs)
+                        )
+                        sel = clause if sel is None else sel | clause
+                    flt = flt & sel
+            # STREAM row groups instead of materializing the whole
+            # block file: task peak memory = one parquet row group
+            # + one logical (part, salt) group, independent of file
+            # size — a decode task over a multi-GB block file stays
+            # inside the warm allocator arena (this host faults
+            # fresh pages at ~10 MB/s, and at 100 TB per-task
+            # memory must not scale with file size). The predicate
+            # runs as a vectorized mask over the (tiny, one row per
+            # BLOCK) metadata columns of each row group.
+            need_cols = ["part_id", "salt", "block_seq", "column",
+                         "payload"]
+            if "n_values" in file_cols:
+                need_cols.append("n_values")
+            if krange is not None and "key_lo" in file_cols:
+                need_cols += ["key_lo", "key_hi"]
+            if krange_s is not None and "key_lo_s" in file_cols:
+                need_cols += ["key_lo_s", "key_hi_s"]
+            out_cols = [c for c in need_cols
+                        if not c.startswith("key_")]
+
+            def _split(buf: pa.Table):
+                pids = buf.column("part_id").to_numpy()
+                salts = buf.column("salt").to_numpy()
+                keys = (pids.astype(np.int64) * (1 << 20)
+                        + salts.astype(np.int64))
+                return np.concatenate(
+                    [[0], np.flatnonzero(keys[1:] != keys[:-1]) + 1,
+                     [len(keys)]]
+                )
+
+            meta_cols = [c for c in need_cols if c != "payload"]
+            pend = None  # trailing, possibly-incomplete group
+            for rg in range(pf.metadata.num_row_groups):
+                # metadata-first: evaluate the whole predicate on
+                # the tiny non-payload columns (one row per BLOCK),
+                # and only read the rg's payload bytes if any block
+                # survives — a pruned or projected decode skips
+                # entire row groups' payload I/O, not just rows
+                meta = pf.read_row_group(rg, columns=meta_cols,
+                                         use_threads=False)
+                keep_idx = meta.append_column(
+                    "_i", pa.array(range(meta.num_rows), pa.int64())
+                ).filter(flt).column("_i").to_pylist()
+                if not keep_idx:
+                    continue
+                t = pf.read_row_group(rg, columns=need_cols,
+                                      use_threads=False)
+                if len(keep_idx) < meta.num_rows:
+                    t = t.take(pa.array(keep_idx, pa.int64()))
+                t = t.select(out_cols)
+                buf = t if pend is None else pa.concat_tables([pend, t])
+                bounds = _split(buf)
+                # decode every COMPLETE group; the trailing group may
+                # continue into the next row group, so hold it back
+                for s, e in zip(bounds[:-2], bounds[1:-1]):
+                    yield from _emit(path, buf.slice(s, e - s))
+                pend = buf.slice(bounds[-2]).combine_chunks()
+            if pend is not None and pend.num_rows:
+                yield from _emit(path, pend)
+
         for batch in batches:
             for path in batch.column(0).to_pylist():
-                # predicate + projection pushdown into the block scan:
-                # only the requested parts' and columns' payload bytes
-                # are read from the file (row-group pruning). Files
-                # written BEFORE the string-zone/bloom columns existed
-                # must over-include, never crash: gate each clause on
-                # the file actually having its columns (footer names).
-                file_cols = set(pq.ParquetFile(path).schema_arrow.names)
-                zflt = None  # part/zone clauses, column-independent
-                if wanted is not None:
-                    zflt = pc.field("part_id").isin(wanted)
-                if krange is not None and "key_lo" in file_cols:
-                    # zone-map pruning: keep blocks whose sort-key range
-                    # overlaps [lo, hi] — and ALWAYS keep null zone maps
-                    # (non-integral sort keys, or a group containing a
-                    # null key): over-inclusion is correct, silent
-                    # pruning of unzoned blocks would lose rows
-                    overlap = (pc.field("key_hi") >= krange[0]) & (
-                        pc.field("key_lo") <= krange[1]
-                    )
-                    clause = overlap | pc.field("key_lo").is_null()
-                    zflt = clause if zflt is None else zflt & clause
-                if krange_s is not None and "key_lo_s" in file_cols:
-                    # string zone maps: same overlap + null-keep rule
-                    overlap_s = (pc.field("key_hi_s") >= krange_s[0]) & (
-                        pc.field("key_lo_s") <= krange_s[1]
-                    )
-                    clause = overlap_s | pc.field("key_lo_s").is_null()
-                    zflt = clause if zflt is None else zflt & clause
-                flt = pc.field("column").isin(wanted_cols)
-                if zflt is not None:
-                    flt = flt & zflt
-                if probe_hash is not None and "key_bloom" in file_cols:
-                    # metadata-only first read (no payload column):
-                    # test each candidate block's Bloom filter; blocks
-                    # whose filter PROVES the probe absent skip their
-                    # payload read + decode. Blocks without a bloom row
-                    # (unkeyed encodes, non-key columns only) stay.
-                    # Keyed by the FULL (part_id, salt, block_seq): a
-                    # block file holds several parts' groups (tasks are
-                    # packed), and salt/block_seq alone would let one
-                    # part's bloom prune another part's blocks.
-                    meta = pq.read_table(
-                        path,
-                        columns=["part_id", "salt", "block_seq", "key_bloom"],
-                        filters=zflt,
-                        use_threads=False,
-                    )
-                    trips: set[tuple[int, int, int]] = set()
-                    blooms: dict[tuple[int, int, int], bytes] = {}
-                    for p_, s_, q_, kb in zip(
-                        meta.column("part_id").to_pylist(),
-                        meta.column("salt").to_pylist(),
-                        meta.column("block_seq").to_pylist(),
-                        meta.column("key_bloom").to_pylist(),
-                    ):
-                        trips.add((p_, s_, q_))
-                        if kb is not None:
-                            blooms[(p_, s_, q_)] = kb
-                    survivors = sorted(
-                        t
-                        for t in trips
-                        if t not in blooms
-                        or bloom_mod.bloom_might_contain(
-                            blooms[t], probe_hash, probe_domain
-                        )
-                    )
-                    if not survivors:
-                        continue
-                    if len(survivors) < len(trips):
-                        by_group: dict[tuple[int, int], list[int]] = {}
-                        for p_, s_, q_ in survivors:
-                            by_group.setdefault((p_, s_), []).append(q_)
-                        sel = None
-                        for (p_, s_), qs in sorted(by_group.items()):
-                            clause = (
-                                (pc.field("part_id") == p_)
-                                & (pc.field("salt") == s_)
-                                & pc.field("block_seq").isin(qs)
-                            )
-                            sel = clause if sel is None else sel | clause
-                        flt = flt & sel
-                # STREAM row groups instead of materializing the whole
-                # block file: task peak memory = one parquet row group
-                # + one logical (part, salt) group, independent of file
-                # size — a decode task over a multi-GB block file stays
-                # inside the warm allocator arena (this host faults
-                # fresh pages at ~10 MB/s, and at 100 TB per-task
-                # memory must not scale with file size). The predicate
-                # runs as a vectorized mask over the (tiny, one row per
-                # BLOCK) metadata columns of each row group.
-                need_cols = ["part_id", "salt", "block_seq", "column",
-                             "payload"]
-                if "n_values" in file_cols:
-                    need_cols.append("n_values")
-                if krange is not None and "key_lo" in file_cols:
-                    need_cols += ["key_lo", "key_hi"]
-                if krange_s is not None and "key_lo_s" in file_cols:
-                    need_cols += ["key_lo_s", "key_hi_s"]
-                out_cols = [c for c in need_cols
-                            if not c.startswith("key_")]
-                pf = pq.ParquetFile(path)
-
-                def _split(buf: pa.Table):
-                    pids = buf.column("part_id").to_numpy()
-                    salts = buf.column("salt").to_numpy()
-                    keys = (pids.astype(np.int64) * (1 << 20)
-                            + salts.astype(np.int64))
-                    return np.concatenate(
-                        [[0], np.flatnonzero(keys[1:] != keys[:-1]) + 1,
-                         [len(keys)]]
-                    )
-
-                meta_cols = [c for c in need_cols if c != "payload"]
-                pend = None  # trailing, possibly-incomplete group
-                for rg in range(pf.metadata.num_row_groups):
-                    # metadata-first: evaluate the whole predicate on
-                    # the tiny non-payload columns (one row per BLOCK),
-                    # and only read the rg's payload bytes if any block
-                    # survives — a pruned or projected decode skips
-                    # entire row groups' payload I/O, not just rows
-                    meta = pf.read_row_group(rg, columns=meta_cols,
-                                             use_threads=False)
-                    keep_idx = meta.append_column(
-                        "_i", pa.array(range(meta.num_rows), pa.int64())
-                    ).filter(flt).column("_i").to_pylist()
-                    if not keep_idx:
-                        continue
-                    t = pf.read_row_group(rg, columns=need_cols,
-                                          use_threads=False)
-                    if len(keep_idx) < meta.num_rows:
-                        t = t.take(pa.array(keep_idx, pa.int64()))
-                    t = t.select(out_cols)
-                    buf = t if pend is None else pa.concat_tables([pend, t])
-                    bounds = _split(buf)
-                    # decode every COMPLETE group; the trailing group may
-                    # continue into the next row group, so hold it back
-                    for s, e in zip(bounds[:-2], bounds[1:-1]):
-                        yield from _emit(path, buf.slice(s, e - s))
-                    pend = buf.slice(bounds[-2]).combine_chunks()
-                if pend is not None and pend.num_rows:
-                    yield from _emit(path, pend)
+                # a missing, truncated or unreadable block file names
+                # itself (pyarrow's own message names no path)
+                try:
+                    yield from decode_file(path)
+                except (OSError, pa.ArrowException) as e:
+                    raise ValueError(f"block file {path!r}: {e}") from e
 
     # one TASK streams a run of block files (the loop above), one wave
     # of tasks in all: per-task overhead must not dominate when there

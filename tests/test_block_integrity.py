@@ -1,7 +1,8 @@
-"""Fault injection on block payloads: a truncated payload or a
-corrupt section length raises an error naming the block file, part,
-salt, column and block_seq — never short or shifted section views,
-wrong rows or fewer rows."""
+"""Fault injection on block files and payloads: a truncated payload or
+a corrupt section length raises an error naming the block file, part,
+salt, column and block_seq, and a truncated block file an error naming
+the file — never short or shifted section views, wrong rows or fewer
+rows."""
 
 from __future__ import annotations
 
@@ -91,3 +92,18 @@ def test_corrupt_payload_raises_naming_block(spark, tmp_path, corrupt):
     msg = str(ei.value)
     assert path in msg, msg
     assert f"part {pid} salt {salt} column 'v' block_seq 1" in msg, msg
+
+
+def test_truncated_block_file_raises_naming_file(spark, tmp_path):
+    """A committed block file cut short (its parquet footer gone) fails
+    the decode with an error naming that file, not a bare Arrow error."""
+    out, schema = _encode(spark, tmp_path)
+    (path,) = _committed_block_files(out)
+    with open(path, "rb") as f:
+        data = f.read()
+    with open(path, "wb") as f:
+        f.write(data[: len(data) // 2])
+    with pytest.raises(Exception) as ei:
+        decode_blocks(spark, out, schema).count()
+    msg = str(ei.value)
+    assert f"block file {path!r}" in msg, msg

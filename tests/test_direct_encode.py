@@ -259,41 +259,81 @@ def _in_group(spark, group, fn):
     return res, tasks
 
 
-def test_part_slices_share_file_plan_across_tasks(spark, tmp_path):
-    """A part fanned out into several salt slices that land in
-    different Spark tasks: every slice still encodes with the codecs
-    and FSST symbol table of plan_one_file(path) — each task plans the
-    part from the file head, never from its own slice."""
+def _assert_blocks_match_plan(blocks, plan):
+    """Every block_seq-0 row of ``blocks`` carries the codec,
+    codec_params and FSST table of ``plan``; returns its salts."""
     import json
 
-    from libgiddy_spark.blocks import plan_one_file
     from libgiddy_spark.codecs import header as H
+
+    salts = set()
+    for salt, col, codec, cp, payload in zip(
+            *(blocks.column(c).to_pylist() for c in
+              ("salt", "column", "codec", "codec_params", "payload"))):
+        salts.add(salt)
+        p_codec, p_params, p_ft = plan[col]
+        assert codec == p_codec, (salt, col)
+        assert json.loads(cp) == {"stats": json.loads(p_params)}, (salt, col)
+        if codec == "fsst":
+            assert bytes(H.unpack_block(payload)[4][1]) == p_ft, (salt, col)
+    return salts
+
+
+@pytest.mark.parametrize("n,rows_per_group", [
+    (24000, 2000),    # row-group slices; row group 0 < the plan sample
+    (48000, 20000),   # row-group slices; row group 0 > the plan sample
+    (24000, 24000),   # one row group: row-range slices
+], ids=["small_row_groups", "big_row_groups", "one_row_group"])
+def test_part_slices_share_file_plan_across_tasks(spark, tmp_path, n,
+                                                  rows_per_group,
+                                                  monkeypatch):
+    """A part fanned out into several salt slices that land in
+    different Spark tasks: every slice still encodes with the codecs
+    and FSST symbol table of plan_one_file(path), whether its task
+    planned from the head rows of its own slice (a slice starting at
+    row 0 of row group 0) or read them with plan_one_file."""
+    import pyarrow as pa
+
+    from libgiddy_spark import blocks as B
 
     src_dir = str(tmp_path / "src")
     os.makedirs(src_dir)
     src = os.path.join(src_dir, "part-0.parquet")
-    _text_file(src, 24000, 2000)
+    _text_file(src, n, rows_per_group)
     out = str(tmp_path / "enc")
     encode_snapshot(spark, src_dir, out, key_col="k",
                     target_salt_bytes=96 * 1024)
     plan = {c: (codec, params, ft)
-            for c, codec, params, ft in plan_one_file(src, ["k", "text"])}
+            for c, codec, params, ft in B.plan_one_file(src, ["k", "text"])}
     assert plan["text"][0] == "fsst"
     files = _committed_block_files(out)
     assert len(files) >= 2  # one block file per task: several tasks
     salts = set()
     for f in files:
-        b = pq.read_table(f, filters=[("block_seq", "=", 0)])
-        for salt, col, codec, cp, payload in zip(
-                *(b.column(c).to_pylist() for c in
-                  ("salt", "column", "codec", "codec_params", "payload"))):
-            salts.add(salt)
-            p_codec, p_params, p_ft = plan[col]
-            assert codec == p_codec, (f, salt, col)
-            assert json.loads(cp) == {"stats": json.loads(p_params)}
-            if codec == "fsst":
-                assert bytes(H.unpack_block(payload)[4][1]) == p_ft
+        salts |= _assert_blocks_match_plan(
+            pq.read_table(f, filters=[("block_seq", "=", 0)]), plan)
     assert len(salts) >= 3
+    # in one process: a slice from row 0 of row group 0 plans from the
+    # rows it read; any other slice reads the file head again
+    calls = []
+    real = B.plan_one_file
+    monkeypatch.setattr(B, "plan_one_file",
+                        lambda *a, **k: calls.append(a) or real(*a, **k))
+    single = pq.ParquetFile(src).metadata.num_row_groups == 1
+    for rg_lo, row_lo, n_calls in ((0, 0, 0), (1, n // 2, 1)):
+        if single:
+            rg_lo, rg_hi, row_hi = 0, 1, row_lo + n // 8
+        else:
+            rg_hi, row_lo, row_hi = rg_lo + 1, -1, -1
+        task = pa.RecordBatch.from_pydict({
+            "part_id": [0], "salt": [0], "rg_lo": [rg_lo], "rg_hi": [rg_hi],
+            "row_lo": [row_lo], "row_hi": [row_hi], "path": [src]})
+        enc = B.make_direct_encoder(["k", "text"], sort_key="k")
+        blocks = pa.Table.from_batches(list(enc(iter([task]))))
+        _assert_blocks_match_plan(
+            blocks.filter(pa.compute.equal(blocks["block_seq"], 0)), plan)
+        assert len(calls) == n_calls, (rg_lo, row_lo)
+        calls.clear()
 
 
 def test_encode_is_one_job_and_decode_one_wave(spark, tmp_path):

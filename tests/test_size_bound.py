@@ -106,11 +106,107 @@ def test_fsst_bound_and_stream_identity():
         assert enc_bytes(items, "fsst", fsst_table=table) <= ref.naive_fsst_bytes(bitems, table) + A, name
 
 
+def _webtext_trials():
+    """(name, sample bytes, generations): the selector's 64 KiB trials
+    of seeded webtext url/text/html, at 3 and 5 generations."""
+    from libgiddy_spark.codecs import strcol_of
+    from libgiddy_spark.selector import FSST_TRIAL_BYTES
+    from libgiddy_spark.webtext import generate_batch
+
+    wt = generate_batch(np.arange(3000), seed=7)
+    return [(f"{c}-g{g}", strcol_of(wt.column(c)).data[:FSST_TRIAL_BYTES], g)
+            for c in ("url", "text", "html") for g in (3, 5)]
+
+
+def _trainer_inputs():
+    """The webtext trials plus edge inputs, at 5 generations."""
+    rng = np.random.default_rng(11)
+    edges = {
+        "empty": np.zeros(0, np.uint8),
+        "one_byte": np.frombuffer(b"a", np.uint8),
+        "seven_bytes": np.frombuffer(b"abcdefg", np.uint8),
+        "all_zero": np.zeros(5000, np.uint8),
+        # b"a" and b"a\0" must stay distinct candidates
+        "nul_heavy": np.array([0, 0, 0, 97, 98], np.uint8)[
+            rng.integers(0, 5, 20000)],
+        "uniform": rng.integers(0, 256, 40000).astype(np.uint8),
+        "three_letters": np.array([97, 98, 99], np.uint8)[
+            rng.integers(0, 3, 30000)],
+    }
+    return _webtext_trials() + [(k, v, 5) for k, v in edges.items()]
+
+
+def _train_numpy(sample, generations):
+    """train() with the native kernels switched off."""
+    import libgiddy_spark.codecs._native as N
+
+    saved = N._lib, N._tried
+    N._lib, N._tried = None, True
+    try:
+        return train(sample, generations)
+    finally:
+        N._lib, N._tried = saved
+
+
+def test_fsst_native_numpy_trainers_agree():
+    """The native counting kernel and the numpy counting path build
+    identical tables: symbols, encoder tables and the prefix table."""
+    from libgiddy_spark.codecs._native import native_lib
+
+    if native_lib() is None:
+        pytest.skip("no C compiler on host")
+    for name, sample, g in _trainer_inputs():
+        a, b = train(sample, g), _train_numpy(sample, g)
+        assert a.symbols == b.symbols, name
+        assert a.k_max == b.k_max, name
+        for attr in ("cand3", "t1", "vals64_pad", "prefix"):
+            assert np.array_equal(getattr(a, attr), getattr(b, attr)), \
+                (name, attr)
+
+
+# sha256 of the concatenated serialized tables of _trainer_inputs(),
+# recorded from the trainer that counted candidates with numpy lexsorts
+# (before the native counting kernel)
+TRAINED_TABLES_SHA256 = (
+    "d2641760251e7bcdcb2b1dbee9ff9fe390de445f922400f614ef04f01639842a")
+
+
+def test_fsst_trained_tables_golden():
+    """Table bytes do not drift: the trainer (whichever path runs)
+    reproduces tables recorded from the lexsort-counting trainer."""
+    import hashlib
+
+    blob = b"".join(train(sample, g).serialize()
+                    for _name, sample, g in _trainer_inputs())
+    assert hashlib.sha256(blob).hexdigest() == TRAINED_TABLES_SHA256
+
+
+def test_fsst_pick_order_and_prefix_cap():
+    """The shared pick orders candidates by (gain desc, value asc, len
+    asc) whatever their input order, keeps at most 3 symbols of len>=2
+    per 2-byte prefix, and stops at 255 symbols."""
+    from libgiddy_spark.codecs.fsst import MAX_SYMBOLS, _pick_symbols
+
+    cands = [  # (symbol, count): gain = count * len
+        (b"xya", 10), (b"xyb", 10), (b"xyc", 9), (b"xyd", 9),  # 4th capped
+        (b"a\0", 5), (b"a", 10), (b"b", 10),  # gain ties at 10
+        (b"xy", 1),
+    ] + [(bytes([c, c]), 1) for c in range(MAX_SYMBOLS)]  # gain 2
+    order = np.random.default_rng(3).permutation(len(cands))
+    syms = [cands[i][0] for i in order]
+    vals = np.array([int.from_bytes(s, "little") for s in syms], np.uint64)
+    lens = np.array([len(s) for s in syms], np.int64)
+    counts = np.array([cands[i][1] for i in order], np.int64)
+    picked = _pick_symbols(vals, lens, counts)
+    assert picked[:6] == [b"xya", b"xyb", b"xyc", b"a", b"a\0", b"b"]
+    # b"xyd" (gain 27) and b"xy" (gain 2) are past the prefix cap
+    assert b"xyd" not in picked and b"xy" not in picked
+    assert picked[6:] == [bytes([c, c]) for c in range(249)]
+
+
 def test_fsst_native_numpy_stream_identity():
     """The C fast path, the lock-step numpy path and the per-byte naive
     reference must all emit the SAME token stream."""
-    import numpy as np
-
     from libgiddy_spark.codecs._native import native_lib
     from libgiddy_spark.codecs.fsst import (
         _encode_tokens_native,
@@ -119,20 +215,24 @@ def test_fsst_native_numpy_stream_identity():
 
     lib = native_lib()
     if lib is None:
-        import pytest
-
         pytest.skip("no C compiler on host")
-    cases = list(STR_INPUTS.values()) + [
-        [],
-        [""] * 10,
-        ["\x00\xff bin\x00ary" * 100, "", "z"],
-        ["日本語のテキスト" * 300, "mixed ascii 日本語"],
-        ["x" * 5000],  # multi-lane single string
+    cases = [(items, None) for items in STR_INPUTS.values()] + [
+        ([], None),
+        ([""] * 10, None),
+        (["\x00\xff bin\x00ary" * 100, "", "z"], None),
+        (["日本語のテキスト" * 300, "mixed ascii 日本語"], None),
+        (["x" * 5000], None),  # multi-lane single string
     ]
-    for items in cases:
-        bitems = [s.encode() for s in items]
+    # every trainer input's table, on 100-byte strings of its first 8 KiB
+    for _name, sample, g in _trainer_inputs():
+        head = bytes(sample[:8192])
+        items = [head[i:i + 100] for i in range(0, len(head), 100)]
+        cases.append((items, train(sample, g)))
+    for items, table in cases:
+        bitems = [s if isinstance(s, bytes) else s.encode() for s in items]
         col = StrCol.from_pylist(bitems)
-        table = train(col.data)
+        if table is None:
+            table = train(col.data)
         c_np, l_np = _encode_tokens_numpy(col, table)
         c_c, l_c = _encode_tokens_native(col, table, lib)
         assert np.array_equal(c_np, c_c)
