@@ -31,7 +31,8 @@ import shutil
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from libgiddy_spark.engine import _manifest_entries, read_changes
+from libgiddy_spark.engine import read_changes
+from libgiddy_spark.manifest import Manifest, branch_replay
 
 _OFFSET = "offset.json"
 
@@ -72,9 +73,7 @@ class ChangelogConsumer:
         # the branch at its publish position — raw header order would
         # park the consumer at an older commit and silently never
         # deliver the published rows
-        from .engine import _branch_replay
-
-        vis = _branch_replay(_manifest_entries(self.out_dir)).visible()
+        vis = branch_replay(Manifest(self.out_dir).read_indexed()).visible()
         if not vis:
             raise ValueError(
                 f"no published snapshots in {self.out_dir}")

@@ -24,7 +24,6 @@ from __future__ import annotations
 import bisect
 import os
 import shutil
-import sys
 import time
 
 import pyarrow as pa
@@ -40,7 +39,15 @@ from .blocks import (
     merge_part_meta,
     output_type,
 )
-from .manifest import Manifest
+from .manifest import (
+    Manifest,
+    branch_replay as _branch_replay,
+    list_refs,
+    live_parts,
+    part_rows,
+    resolve_as_of,
+    snap_chain,
+)
 from .skew import footer_byte_stats, salt_factors
 from .table_io import abs_file_of, list_parquet_files, snapshot_id_of
 
@@ -191,7 +198,7 @@ def encode_files(
         # would resume its done parts under the hidden header — data
         # invisible at HEAD forever. Roll forward instead (one line,
         # no re-encode). Index+tail read: headers/rollbacks are indexed.
-        entries = _manifest_entries(out_dir)
+        entries = manifest.read_indexed()
         if any(e.get("kind") == "snapshot"
                and e.get("snapshot_id") == snapshot_id for e in entries):
             stv = _branch_replay(entries)
@@ -266,19 +273,8 @@ def encode_files(
             "ordering derive from it)"
         )
 
-    prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-    _pt = time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _pt
-        if prof:
-            now = time.time()
-            print(f"[lgs-prof] {label}: {now - _pt:.3f}s", file=sys.stderr)
-            _pt = now
-
     for lo in range(0, len(pending), chunk_parts):
         chunk = pending[lo : lo + chunk_parts]
-        _mark("chunk_setup")
         # salt fan-out from parquet footers: zero scans, zero Spark jobs
         stats = footer_byte_stats(
             source_path, [(p, rel_of[p]) for p in chunk], list(fat_columns))
@@ -296,7 +292,6 @@ def encode_files(
         )
         factors = salt_factors(stats, target_bytes=eff_target)
         fanout: dict[int, int] = {}  # actual per-part task count
-        _mark("footer_stats")
         # a salt slice = a contiguous run of row groups, balanced by
         # footer byte sizes (driver-side metadata only); one task
         # reads+sorts+encodes its slice. Files with FEWER row groups
@@ -385,7 +380,6 @@ def encode_files(
                 "part_id int, salt int, rg_lo int, rg_hi int, "
                 "row_lo long, row_hi long, path string",
             )
-            _mark("task_build")
             # each TASK writes its own block parquet file with pyarrow
             # and returns only per-(part, column) metadata rows: the
             # encoded payloads never cross the Arrow->JVM boundary and
@@ -409,7 +403,6 @@ def encode_files(
         with open(os.path.join(tmp, "_PARTS"), "w") as f:
             f.write(" ".join(str(int(p)) for p in chunk))
         os.rename(tmp, final)  # atomic commit of the chunk's data
-        _mark("write_job")
         mdf = merge_part_meta(meta_rows)
         per_part: dict[int, dict] = {
             int(p): {
@@ -458,7 +451,6 @@ def encode_files(
         ]
         manifest.mark_done(snapshot_id, entries + empty,
                            status=commit_status)
-        _mark("manifest")
         encoded_parts += len(chunk)
     return {
         "snapshot_id": snapshot_id,
@@ -678,7 +670,7 @@ def vacuum_blocks(
     pinned_deletes: set[str] = set()
     for sid in sorted(retained):
         try:
-            pinned_dirs |= _dirs_needed_at(all_entries, sid)
+            pinned_dirs |= set(live_parts(all_entries, sid))
             pinned_deletes |= {
                 os.path.relpath(f, out_dir)
                 for f, _k, _n, _s in _accepted_deletes(out_dir, sid)
@@ -834,126 +826,6 @@ def remove_orphan_files(out_dir: str, grace_s: float = 3600.0) -> dict:
     return {"removed": removed}
 
 
-def _snap_chain(
-    entries: list[dict], as_of: str | None = None,
-) -> tuple[list[str], set[str] | None]:
-    """Main-branch snapshot CHAIN (commit order) and the accepted set
-    for a read, WAP-aware (Iceberg write-audit-publish).
-
-    A normal snapshot joins the chain at its header; a WAP-STAGED
-    snapshot (header ``staged: true``) joins at its ``publish`` entry
-    — the Iceberg cherry-pick ordering — so time travel to snapshots
-    committed between stage and publish never sees the staged rows.
-    Aborted staged snapshots never join.
-
-    Returns ``(chain, accepted)``:
-
-    - ``chain``: ordered main-branch snapshot ids; a part/delete's
-      Iceberg sequence number is its snapshot's index here.
-    - ``accepted``: snapshot ids whose data entries a read at
-      ``as_of`` may see, or None = "everything in the manifest" (the
-      zero-overhead fast path, only when nothing is staged and no
-      ``as_of``). ``as_of`` may also name an UNPUBLISHED staged
-      snapshot — the AUDIT read: the main chain as of the stage point
-      plus the staged snapshot itself.
-    """
-    st = _branch_replay(entries)
-    if as_of is None:
-        dirty = st.staged_parent or st.aborted or st.has_rollback
-        accepted = set(st.visible()) if dirty else None
-        return st.chain, accepted
-    if as_of in st.staged_parent:  # audit read: unpublished staged snap
-        return st.chain, set(st.vis_at(st.staged_parent[as_of])) | {as_of}
-    if as_of in st.aborted:
-        raise ValueError(
-            f"snapshot {as_of!r} was a WAP-staged snapshot that was "
-            "aborted — its data never joined the table")
-    if as_of not in st.parent:
-        raise ValueError(f"unknown snapshot id for time travel: {as_of!r}")
-    return st.chain, set(st.vis_at(as_of))
-
-
-class _BranchState:
-    """Replayed manifest branch state (see :func:`_branch_replay`).
-
-    Visibility is stored as PARENT POINTERS: when a snapshot joins the
-    branch, its parent is whatever snapshot was current then, so the
-    visible set at any snapshot is its parent path — O(1) per commit
-    regardless of how many rollbacks the manifest holds."""
-
-    __slots__ = ("chain", "parent", "current", "staged_parent",
-                 "aborted", "has_rollback")
-
-    def __init__(self) -> None:
-        self.chain: list[str] = []        # full commit order (seq nums)
-        self.parent: dict[str, str | None] = {}
-        self.current: str | None = None   # last visible commit (HEAD)
-        self.staged_parent: dict[str, str | None] = {}  # unpublished WAP
-        self.aborted: set[str] = set()
-        self.has_rollback = False
-
-    def vis_at(self, sid: str | None) -> list[str]:
-        """Visible snapshot list right after ``sid`` joined (commit
-        order): sid's parent path. ``None`` = empty table."""
-        out: list[str] = []
-        while sid is not None:
-            out.append(sid)
-            sid = self.parent[sid]
-        out.reverse()
-        return out
-
-    def visible(self) -> list[str]:
-        """Commits a HEAD read sees, in commit order."""
-        return self.vis_at(self.current)
-
-
-def _branch_replay(entries: list[dict]) -> _BranchState:
-    """Replay snapshot/publish/rollback entries into branch state.
-
-    ``chain`` is the FULL main-branch commit order — a part/delete's
-    Iceberg sequence number stays its position here even after a
-    rollback hides it. A ``rollback`` entry to snapshot S makes S the
-    current snapshot (visible set = S's parent path — the state when S
-    joined), so rolling back and rolling FORWARD to a previously
-    rolled-back snapshot (Iceberg ``set_current_snapshot``) are the
-    same operation; later commits chain onto S."""
-    st = _BranchState()
-    seen: set[str] = set()
-
-    def _join(sid: str) -> None:
-        st.chain.append(sid)
-        st.parent[sid] = st.current
-        st.current = sid
-
-    for e in entries:
-        k = e.get("kind")
-        if k == "snapshot":
-            sid = e["snapshot_id"]
-            if sid in seen:
-                continue
-            seen.add(sid)
-            if e.get("staged"):
-                st.staged_parent[sid] = st.current
-            else:
-                _join(sid)
-        elif k == "publish":
-            sid = e.get("snapshot_id")
-            if sid not in st.staged_parent or sid in st.aborted:
-                continue  # unknown / double entry: writer-validated
-            if e.get("abort"):
-                st.aborted.add(sid)
-            else:
-                _join(sid)
-            st.staged_parent.pop(sid)
-        elif k == "rollback":
-            to = e.get("to")
-            if to in st.parent:
-                st.current = to
-                st.has_rollback = True
-            # else: writer-validated; a reader skips a bad entry
-    return st
-
-
 def _committed_block_files(
     out_dir: str,
     part_ids: list[int] | None = None,
@@ -975,26 +847,20 @@ def _committed_block_files(
     ``_PARTS`` markers) are excluded as defense-in-depth even inside
     committed dirs."""
     blocks_root = os.path.join(out_dir, "blocks")
-    m = Manifest(out_dir)
-    idx = m.read_index()
-    if idx is not None:
-        # chunk-granular index (Iceberg manifest-list analogue): the
-        # driver parses O(chunks) summary lines — part lists + chunk
-        # key ranges — plus only the manifest TAIL past the index's
-        # covered byte offset (chunks whose summary append was lost to
-        # a crash, in-flight registry lines). Chunk-level key pruning
-        # is coarser than per-part (a key gap inside a kept chunk
-        # over-includes), but the per-block zone maps inside each file
-        # still prune those reads — over-inclusive only, never loss.
-        index_entries, covered = idx
-        entries = index_entries + m.read_tail(covered)
-    else:  # pre-index manifest: full O(parts) read, identical result
-        entries = m.read()
-    _chain, accepted = _snap_chain(entries, as_of)
+    # chunk-granular index (Iceberg manifest-list analogue): the driver
+    # parses O(chunks) summary lines — part lists + chunk key ranges —
+    # plus only the manifest TAIL past the index's covered byte offset
+    # (chunks whose summary append was lost to a crash, in-flight
+    # registry lines). Chunk-level key pruning is coarser than per-part
+    # (a key gap inside a kept chunk over-includes), but the per-block
+    # zone maps inside each file still prune those reads —
+    # over-inclusive only, never loss.
+    view = live_parts(Manifest(out_dir).read_indexed(), as_of)
+    wanted = {int(p) for p in part_ids} if part_ids is not None else None
 
-    def _in_range(e: dict) -> bool:
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            return False  # committed after the as_of snapshot
+    def _kept(pid: int, e: dict) -> bool:
+        if wanted is not None and pid not in wanted:
+            return False
         if key_range is not None and e.get("key_lo") is not None:
             if e["key_hi"] < key_range[0] or e["key_lo"] > key_range[1]:
                 return False  # wholly out of range
@@ -1003,37 +869,9 @@ def _committed_block_files(
                 return False  # wholly out of string range
         return True
 
-    chunk_parts: dict[str, set[int]] = {}
-    rewrites: list[dict] = []
-    for e in entries:
-        kind = e.get("kind")
-        if kind == "chunk" and e.get("chunk_dir"):
-            if _in_range(e):
-                chunk_parts.setdefault(e["chunk_dir"], set()).update(
-                    int(p) for p in e.get("parts", ())
-                )
-        elif kind == "part" and e.get("status") == "done" and e.get("chunk_dir"):
-            if _in_range(e):
-                chunk_parts.setdefault(e["chunk_dir"], set()).add(int(e["part_id"]))
-        elif kind == "rewrite":
-            if accepted is None or e.get("snapshot_id") in accepted:
-                rewrites.append(e)
-    # COMPACTION rewrites, in commit order: the new chunk dir serves the
-    # union of its replaced dirs' parts. A rewrite whose replaced dirs
-    # were ALL pruned (key range / part filter) stays pruned — the new
-    # file holds exactly their rows.
-    for rw in rewrites:
-        moved: set[int] = set()
-        for d in rw.get("replaces", ()):
-            moved |= chunk_parts.pop(d, set())
-        if moved and rw.get("new_chunk"):
-            chunk_parts.setdefault(rw["new_chunk"], set()).update(moved)
-        # new_chunk=None: RETIRE — the purge's replacement chunks were
-        # committed with their own part entries, nothing to remap
-    wanted = {int(p) for p in part_ids} if part_ids is not None else None
     files: list[str] = []
-    for d, parts in sorted(chunk_parts.items()):
-        if wanted is not None and not (parts & wanted):
+    for d, parts in sorted(view.items()):
+        if not any(_kept(p, e) for p, e in parts.items()):
             continue
         full = os.path.join(blocks_root, d)
         if not os.path.isdir(full):
@@ -1193,13 +1031,7 @@ def upsert_rows(
     final = os.path.join(out_dir, rel)
     shutil.rmtree(final, ignore_errors=True)
     os.rename(tmp, final)
-    staged = [
-        e for e in m.read()
-        if e.get("kind") == "part" and e.get("status") == "staged"
-        and e.get("snapshot_id") == summary["snapshot_id"]
-    ]
-    promoted = [{**e, "status": "done"} for e in staged]
-    m.commit_txn(promoted + [{
+    m.commit_staged(summary["snapshot_id"], [{
         "kind": "delete",
         "snapshot_id": summary["snapshot_id"],
         "file": rel,
@@ -1222,13 +1054,8 @@ def _accepted_deletes(
     scan. commit_seq is the delete snapshot's 0-based position in the
     manifest's snapshot order — the Iceberg sequence number the delete
     is scoped by (it applies only to parts with a smaller seq)."""
-    m = Manifest(out_dir)
-    idx = m.read_index()
-    if idx is not None:
-        entries = idx[0] + m.read_tail(idx[1])
-    else:
-        entries = m.read()
-    chain, accepted = _snap_chain(entries, as_of)
+    entries = Manifest(out_dir).read_indexed()
+    chain, accepted = snap_chain(entries, as_of)
     seq_of = {s: i for i, s in enumerate(chain)}
     cleared: set[str] = set()
     for e in entries:
@@ -1262,8 +1089,8 @@ def _part_seq_map(out_dir: str, as_of: str | None = None) -> dict[int, int]:
     (``as_of`` = the unpublished staged id) they take the sequence
     they'd receive if published now — above every visible delete, so
     pre-stage tombstones never erase freshly staged rows."""
-    entries = _manifest_entries(out_dir)
-    chain, accepted = _snap_chain(entries, as_of)
+    entries = Manifest(out_dir).read_indexed()
+    chain, accepted = snap_chain(entries, as_of)
     seq_of = {s: i for i, s in enumerate(chain)}
     if (as_of is not None and as_of not in seq_of
             and accepted is not None):
@@ -1343,13 +1170,7 @@ def _staged_full_rewrite(
         chunk_parts=chunk_parts,
         commit_status="staged",
     )
-    staged = [
-        e for e in m.read()
-        if e.get("kind") == "part" and e.get("status") == "staged"
-        and e.get("snapshot_id") == summary["snapshot_id"]
-    ]
-    promoted = [{**e, "status": "done"} for e in staged]
-    txn = promoted + [{
+    txn = [{
         "kind": "rewrite",
         "snapshot_id": summary["snapshot_id"],
         "new_chunk": None,
@@ -1365,7 +1186,7 @@ def _staged_full_rewrite(
             ),
             "ts": time.time(),
         })
-    m.commit_txn(txn)
+    m.commit_staged(summary["snapshot_id"], txn)
     return summary, old_dirs
 
 
@@ -1424,35 +1245,13 @@ def rewrite_sorted(
     }
 
 
-def _manifest_entries(out_dir: str) -> list[dict]:
-    """Index + tail when available (O(chunks)), else full read."""
-    m = Manifest(out_dir)
-    idx = m.read_index()
-    if idx is not None:
-        return idx[0] + m.read_tail(idx[1])
-    return m.read()
-
-
-def list_refs(out_dir: str) -> dict[str, str]:
-    """Named refs (Iceberg branch/tag analogue): last entry per name
-    wins; dropped refs (snapshot_id None) disappear."""
-    refs: dict[str, str] = {}
-    for e in _manifest_entries(out_dir):
-        if e.get("kind") == "ref":
-            if e.get("snapshot_id") is None:
-                refs.pop(e["name"], None)
-            else:
-                refs[e["name"]] = e["snapshot_id"]
-    return refs
-
-
 def create_ref(out_dir: str, name: str,
                snapshot_id: str | None = None) -> dict:
     """Create/update a named ref to ``snapshot_id`` (None = current
     HEAD snapshot). Refs resolve anywhere ``as_of`` is accepted
     (decode, changelog, CLI) and PIN their snapshot's files against
     vacuum — the Iceberg branch-retention behaviour."""
-    entries = _manifest_entries(out_dir)
+    entries = Manifest(out_dir).read_indexed()
     snaps = [e["snapshot_id"] for e in entries
              if e.get("kind") == "snapshot"]
     if not snaps:
@@ -1483,8 +1282,8 @@ def drop_ref(out_dir: str, name: str) -> None:
 def _wap_state(out_dir: str, snapshot_or_ref: str) -> tuple[str, str]:
     """Resolve to a snapshot id and classify its WAP state:
     'unstaged' | 'staged' | 'published' | 'aborted'."""
-    sid = _resolve_as_of(out_dir, snapshot_or_ref)
-    entries = _manifest_entries(out_dir)
+    sid = resolve_as_of(out_dir, snapshot_or_ref)
+    entries = Manifest(out_dir).read_indexed()
     hdr = next((e for e in entries if e.get("kind") == "snapshot"
                 and e.get("snapshot_id") == sid), None)
     if hdr is None:
@@ -1549,8 +1348,8 @@ def rollback(out_dir: str, snapshot_or_ref: str) -> dict:
     checkpoint was itself undone gets a loud off-lineage error (the
     changelog cannot express un-inserts) and must reset to a snapshot
     at or before the rollback target."""
-    sid = _resolve_as_of(out_dir, snapshot_or_ref)
-    entries = _manifest_entries(out_dir)
+    sid = resolve_as_of(out_dir, snapshot_or_ref)
+    entries = Manifest(out_dir).read_indexed()
     st = _branch_replay(entries)
     if sid in st.staged_parent:
         raise ValueError(
@@ -1572,39 +1371,6 @@ def rollback(out_dir: str, snapshot_or_ref: str) -> dict:
         "hidden": [s for s in before if s not in set(after)],
         "restored": [s for s in after if s not in set(before)],
     }
-
-
-def _resolve_as_of(out_dir: str, as_of: str | None) -> str | None:
-    """Translate a ref name to its snapshot id; snapshot ids (and
-    None) pass through."""
-    if as_of is None:
-        return None
-    return list_refs(out_dir).get(as_of, as_of)
-
-
-def _dirs_needed_at(entries: list[dict], as_of: str) -> set[str]:
-    """Chunk dirs a read at snapshot ``as_of`` lists (rewrites applied)
-    — existence not required. Mirrors _committed_block_files' visibility
-    rules with all pruning filters off; used by vacuum to honour
-    ref-pinned snapshots."""
-    chain, accepted = _snap_chain(entries, as_of)
-    if accepted is None:  # defensive: as_of is always given here
-        accepted = set(chain)
-    dirs: set[str] = set()
-    for e in entries:
-        k = e.get("kind")
-        if (k in ("part", "chunk") and e.get("chunk_dir")
-                and e.get("status", "done") == "done"
-                and e.get("snapshot_id", as_of) in accepted):
-            dirs.add(e["chunk_dir"])
-    for e in entries:
-        if (e.get("kind") == "rewrite"
-                and e.get("snapshot_id") in accepted):
-            replaced = set(e.get("replaces", ())) & dirs
-            dirs -= replaced
-            if replaced and e.get("new_chunk"):
-                dirs.add(e["new_chunk"])
-    return dirs
 
 
 def read_changes(
@@ -1643,8 +1409,8 @@ def read_changes(
     entries (a strict changelog, not a net diff) — consumers fold by
     (key, max _commit_seq) when they want net state. Window bounds
     also accept NAMED REFS (:func:`create_ref`)."""
-    since_snapshot = _resolve_as_of(out_dir, since_snapshot)
-    to_snapshot = _resolve_as_of(out_dir, to_snapshot)
+    since_snapshot = resolve_as_of(out_dir, since_snapshot)
+    to_snapshot = resolve_as_of(out_dir, to_snapshot)
     m = Manifest(out_dir)
     entries = m.read()
     bstate = _branch_replay(entries)  # main branch only: a WAP-staged
@@ -1771,76 +1537,24 @@ def _evolution_null_parts(
     chunk lines predating the columns field) pay the full O(parts)
     read."""
     m = Manifest(out_dir)
-    idx = m.read_index()
-    entries: list[dict]
-    if idx is not None:
-        index_entries, covered = idx
-        chunk_lines = [e for e in index_entries if e.get("kind") == "chunk"]
-        if all("columns" in e for e in chunk_lines):
-            entries = index_entries + m.read_tail(covered)
-        else:  # pre-upgrade chunk lines: full read for correctness
-            entries = m.read()
-    else:
+    index_entries, covered = m.read_index()
+    if all("columns" in e for e in index_entries if e.get("kind") == "chunk"):
+        entries = index_entries + m.read_tail(covered)
+    else:  # pre-upgrade chunk lines: full read for correctness
         entries = m.read()
-    _chain, accepted = _snap_chain(entries, as_of)
     wanted_p = {int(p) for p in part_ids} if part_ids is not None else None
-    # parts whose chunk dir was RETIRED (purge rewrite, new_chunk=None)
-    # are dead — their rows live under the purge's own new parts, so
-    # emitting evolution nulls for them would duplicate rows. A normal
-    # compaction rewrite keeps its parts live (rows moved, not replaced).
-    retired: set[str] = set()
-    for e in entries:
-        if (
-            e.get("kind") == "rewrite"
-            and not e.get("new_chunk")
-            and (accepted is None or e.get("snapshot_id") in accepted)
-        ):
-            retired.update(e.get("replaces", ()))
+    # parts a purge RETIRED are gone from the view — their rows live
+    # under the purge's own new parts; compacted parts stay (rows moved)
     out: list[tuple[int, int]] = []
-    # chunk lines first, UNIONED per chunk_dir (a healed line and a
-    # regular line for the same dir must merge like the listing does,
-    # never first-wins-shadow), tail part lines after
-    by_cdir: dict[str, dict] = {}
-    for e in entries:
-        if e.get("kind") != "chunk" or not e.get("chunk_dir"):
-            continue
-        cdir = e["chunk_dir"]
-        if cdir in retired:
-            continue
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue
-        agg = by_cdir.setdefault(cdir, {"columns": set(), "part_rows": {}})
-        agg["columns"].update(e.get("columns") or ())
-        agg["part_rows"].update(e.get("part_rows") or {})
-    seen_chunks = set(by_cdir)
-    for agg in by_cdir.values():
-        if not agg["columns"] or agg["columns"] & wanted_cols:
-            continue  # normal decode path covers these parts
-        for pid_s, n in agg["part_rows"].items():
-            pid = int(pid_s)
+    for parts in live_parts(entries, as_of).values():
+        for pid, e in parts.items():
             if wanted_p is not None and pid not in wanted_p:
                 continue
-            if n:
-                out.append((pid, int(n)))
-    for e in entries:
-        kind = e.get("kind")
-        if kind != "part" or e.get("status") != "done":
-            continue
-        if e.get("chunk_dir") in retired or e.get("chunk_dir") in seen_chunks:
-            continue
-        pid = int(e["part_id"])
-        if wanted_p is not None and pid not in wanted_p:
-            continue
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue
-        cols = e.get("columns") or {}
-        if not cols or set(cols) & wanted_cols:
-            continue  # normal decode path covers this part
-        n = next(
-            (int(c["n_values"]) for c in cols.values() if "n_values" in c), 0
-        )
-        if n:
-            out.append((pid, n))
+            if not e.get("columns") or wanted_cols.intersection(e["columns"]):
+                continue  # normal decode path covers this part
+            n = part_rows(e, pid)
+            if n > 0:
+                out.append((pid, n))
     return out
 
 
@@ -2136,7 +1850,7 @@ def decode_blocks(
     over-inclusive only — callers apply the exact row predicate on the
     decoded frame. ``as_of`` also accepts a NAMED REF (branch/tag,
     :func:`create_ref`), resolved to its snapshot here."""
-    as_of = _resolve_as_of(out_dir, as_of)
+    as_of = resolve_as_of(out_dir, as_of)
     probe_hash = probe_domain = None
     if key_point is not None:
         from . import bloom as bloom_mod

@@ -1,13 +1,23 @@
 """Checkpointed JSON-lines manifest: per-partition lineage, codec-choice
-metrics, resumability (BASELINE.json:6,14).
+metrics, resumability (BASELINE.json:6,14), and the one reader of the
+table's live state.
 
 Commit protocol (SURVEY.md §7 M4): block files for a chunk of partitions
 are written to a temp directory and atomically renamed into place, THEN
-one manifest line per partition is appended (write-to-temp + append +
-fsync). A line with ``status: done`` is the commit point — on restart,
-partitions with committed lines are skipped without re-encoding
-(left-anti semantics); a chunk that died mid-write leaves only an
-uncommitted temp dir, which resume removes.
+one ``txn`` manifest line carrying the chunk's part lines is appended
+and fsync'd, then one summary line per chunk goes to the chunk index
+(``manifest.chunks.jsonl``). A part line with ``status: done`` is the
+commit point — on restart, partitions with committed lines are skipped
+without re-encoding (left-anti semantics); a chunk that died mid-write
+leaves only an uncommitted temp dir, which resume removes.
+
+Read side: :meth:`Manifest.read_indexed` returns the index entries plus
+the manifest tail the index does not cover; :func:`branch_replay` turns
+snapshot/publish/rollback entries into branch state; :func:`live_parts`
+replays chunk lines, tail part lines and rewrites into the
+``{chunk_dir: {part_id: line}}`` view a read at a snapshot sees.
+Listing, vacuum pins, the files metadata table and schema-evolution
+nulls are all built on that view.
 """
 
 from __future__ import annotations
@@ -15,6 +25,53 @@ from __future__ import annotations
 import json
 import os
 import time
+
+
+def _read_jsonl(path: str, offset: int = 0,
+                upto: int | None = None) -> tuple[list[dict], int]:
+    """Entries of the JSON lines in ``path``'s bytes [offset, upto),
+    ``txn`` lines expanded in place, plus the largest ``mend`` seen on
+    a line (0 if none). A missing file reads as ``([], 0)``. Torn
+    lines are skipped: a crash mid-append leaves a partial last line
+    whose chunk never renamed its temp dir, and a tail window may
+    start mid-line."""
+    entries: list[dict] = []
+    mend = 0
+    try:
+        with open(path, "rb") as f:
+            f.seek(offset)
+            data = f.read() if upto is None else f.read(max(upto - offset, 0))
+    except FileNotFoundError:
+        return entries, mend
+    # writers emit ASCII JSON, so only a torn line can fail to decode
+    for line in data.decode("utf-8", "replace").split("\n"):
+        if not line:
+            continue
+        try:
+            e = json.loads(line)
+        except json.JSONDecodeError:  # torn line
+            continue
+        # a txn line is an ATOMIC batch (chunk commit, purge promote +
+        # retire): expand in place, order preserved
+        if e.get("kind") == "txn":
+            entries.extend(e.get("entries", ()))
+        else:
+            entries.append(e)
+        mend = max(mend, e.get("mend", 0))
+    return entries, mend
+
+
+def _append_lines(path: str, lines: list[dict]) -> None:
+    if not lines:
+        return
+    payload = "".join(
+        json.dumps(e, separators=(",", ":"), sort_keys=True) + "\n"
+        for e in lines
+    )
+    with open(path, "a") as f:
+        f.write(payload)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 class Manifest:
@@ -34,36 +91,35 @@ class Manifest:
         os.makedirs(out_dir, exist_ok=True)
 
     def read(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        entries = []
-        with open(self.path) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    e = json.loads(line)
-                except json.JSONDecodeError:
-                    # torn tail line from a crash mid-append: ignore —
-                    # its chunk never renamed its temp dir, so no data
-                    # is orphaned by skipping it
-                    continue
-                # a txn line is an ATOMIC batch (purge promote+retire):
-                # expand in place, order preserved
-                if e.get("kind") == "txn":
-                    entries.extend(e.get("entries", ()))
-                else:
-                    entries.append(e)
-        return entries
+        return self.read_tail(0)
 
-    def done_parts(self, snapshot_id: str | None = None) -> set[int]:
+    def read_tail(self, offset: int, upto: int | None = None) -> list[dict]:
+        """Manifest entries whose lines start at/after byte ``offset``
+        (and before ``upto`` when given — both are line boundaries by
+        construction: every append is flushed whole)."""
+        return _read_jsonl(self.path, offset, upto)[0]
+
+    def read_index(self) -> tuple[list[dict], int]:
+        """(index entries, covered manifest bytes); ``([], 0)`` when the
+        index file doesn't exist (pre-upgrade manifests). ``covered``
+        is the LAST line's mend — readers must parse the manifest tail
+        beyond it (chunks committed after a crash between the two
+        appends, plus snapshot headers / registry lines, live there)."""
+        return _read_jsonl(self.index_path)
+
+    def read_indexed(self) -> list[dict]:
+        """Index entries + the manifest tail past them: O(chunks) when
+        the index covers the manifest, the full read when it is
+        absent."""
+        entries, covered = self.read_index()
+        return entries + self.read_tail(covered)
+
+    def done_parts(self) -> set[int]:
         """Committed part ids. part_id is a STABLE file identity (see
-        file_registry), so by default done-ness carries across snapshot
-        ids of the same growing table — an appended snapshot re-encodes
-        only its new files. Pass ``snapshot_id`` to scope to one
-        snapshot (legacy behavior). Parts whose only commit lives in an
-        ABORTED WAP snapshot are NOT done — their source files must be
+        file_registry), so done-ness carries across snapshot ids of the
+        same growing table — an appended snapshot re-encodes only its
+        new files. Parts whose only commit lives in an ABORTED WAP
+        snapshot are NOT done — their source files must be
         re-encodable after the failed audit, or the rows would be lost
         forever (skipped as done, yet invisible at HEAD)."""
         entries = self.read()
@@ -74,7 +130,6 @@ class Manifest:
             for e in entries
             if e.get("status") == "done"
             and e.get("snapshot_id") not in aborted
-            and (snapshot_id is None or e.get("snapshot_id") == snapshot_id)
         }
 
     def file_registry(self) -> dict[str, int]:
@@ -108,14 +163,24 @@ class Manifest:
         return None
 
     def append(self, entries: list[dict]) -> None:
-        payload = "".join(
-            json.dumps(e, separators=(",", ":"), sort_keys=True) + "\n"
-            for e in entries
-        )
-        with open(self.path, "a") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
+        _append_lines(self.path, entries)
+
+    def append_indexed(self, line: dict, index_lines: list[dict]) -> None:
+        """Append ``line`` to the manifest, then ``index_lines`` to the
+        chunk index, each stamped with the manifest size after the
+        append as its ``mend``. Index lines a crash lost between an
+        earlier pair of appends are healed first, so this line's larger
+        mend never covers them."""
+        pre = self._msize()
+        self.append([line])
+        post = self._msize()
+        self._heal_index(pre)
+        self._index_write(index_lines, post)
+
+    def _append_entry(self, kind: str, **fields) -> None:
+        """One indexed entry line, copied verbatim into the index."""
+        entry = {"kind": kind, **fields, "ts": time.time()}
+        self.append_indexed(entry, [entry])
 
     def write_snapshot_header(
         self, snapshot_id: str, source_path: str, files: list[dict],
@@ -136,21 +201,15 @@ class Manifest:
             "files": files,
             "ts": time.time(),
         }
-        if staged:
-            hdr["staged"] = True
-        pre = self._msize()
-        self.append([hdr])
-        post = self._msize()
-        self._heal_index(pre)
         # slim copy in the chunk index (no files list): time travel's
         # snapshot ORDER must be recoverable from the index alone, even
         # for snapshots that committed zero chunks. The staged flag MUST
         # ride along or index-path readers would see a staged snapshot
         # as published.
-        slim = {"kind": "snapshot", "snapshot_id": snapshot_id, "mend": post}
+        slim = {"kind": "snapshot", "snapshot_id": snapshot_id}
         if staged:
-            slim["staged"] = True
-        self._index_write([slim])
+            hdr["staged"] = slim["staged"] = True
+        self.append_indexed(hdr, [slim])
 
     def append_publish(self, snapshot_id: str, abort: bool = False) -> None:
         """PUBLISH a WAP-staged snapshot onto the main branch (or, with
@@ -159,18 +218,8 @@ class Manifest:
         Iceberg cherry-pick ordering — so time travel to snapshots
         committed between stage and publish never sees the staged rows.
         Indexed like refs so index-tail readers see branch state."""
-        entry = {
-            "kind": "publish",
-            "snapshot_id": snapshot_id,
-            "ts": time.time(),
-        }
-        if abort:
-            entry["abort"] = True
-        pre = self._msize()
-        self.append([entry])
-        post = self._msize()
-        self._heal_index(pre)
-        self._index_write([{**entry, "mend": post}])
+        fields = {"abort": True} if abort else {}
+        self._append_entry("publish", snapshot_id=snapshot_id, **fields)
 
     def append_rollback(self, to_snapshot: str) -> None:
         """Make ``to_snapshot`` the CURRENT snapshot (Iceberg
@@ -178,31 +227,13 @@ class Manifest:
         state when it committed; later snapshots stay in history for
         time travel until retention expires them. Indexed like publish
         so index-tail readers see branch state."""
-        entry = {
-            "kind": "rollback",
-            "to": to_snapshot,
-            "ts": time.time(),
-        }
-        pre = self._msize()
-        self.append([entry])
-        post = self._msize()
-        self._heal_index(pre)
-        self._index_write([{**entry, "mend": post}])
+        self._append_entry("rollback", to=to_snapshot)
 
     def _msize(self) -> int:
         return os.path.getsize(self.path) if os.path.exists(self.path) else 0
 
-    def _index_write(self, lines: list[dict]) -> None:
-        if not lines:
-            return
-        payload = "".join(
-            json.dumps(e, separators=(",", ":"), sort_keys=True) + "\n"
-            for e in lines
-        )
-        with open(self.index_path, "a") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
+    def _index_write(self, lines: list[dict], mend: int) -> None:
+        _append_lines(self.index_path, [{**e, "mend": mend} for e in lines])
 
     def _last_index_mend(self) -> int:
         """mend of the index's last complete line. Tail read with a
@@ -214,29 +245,16 @@ class Manifest:
             size = os.path.getsize(self.index_path)
         except OSError:
             return 0
-        if size == 0:
-            return 0
         back = 1 << 16
         while True:
             back = min(back, size)
-            with open(self.index_path, "rb") as f:
-                f.seek(size - back)
-                chunk = f.read(back)
-            best = 0
-            for line in chunk.splitlines():
-                try:
-                    e = json.loads(line)
-                except (json.JSONDecodeError, UnicodeDecodeError):
-                    continue
-                best = max(best, int(e.get("mend", 0)))
+            best = _read_jsonl(self.index_path, size - back)[1]
             if best or back == size:
                 return best
             back *= 16
 
     @staticmethod
-    def _chunk_summary_lines(
-        part_entries: list[dict], mend: int
-    ) -> list[dict]:
+    def _chunk_summary_lines(part_entries: list[dict]) -> list[dict]:
         """One chunk-summary line per chunk_dir: part-id list + key
         ranges aggregated over the chunk's parts (None if ANY part is
         unzoned — chunk pruning must over-include, exactly like the
@@ -281,7 +299,6 @@ class Manifest:
                     # a full O(parts) manifest read
                     "columns": sorted(cols),
                     "part_rows": part_rows,
-                    "mend": mend,
                 }
             )
         return lines
@@ -299,23 +316,17 @@ class Manifest:
         if last >= upto:
             return
         span = self.read_tail(last, upto)
-        rescued: list[dict] = []
-        parts = [
+        rescued = self._chunk_summary_lines([
             e for e in span
             if e.get("kind") == "part" and e.get("status") == "done"
-        ]
-        if parts:
-            rescued.extend(self._chunk_summary_lines(parts, upto))
+        ])
         for e in span:
-            if e.get("kind") in self._INDEXED_KINDS:
-                if e.get("kind") == "snapshot":
-                    slim = {k: v for k, v in e.items()
-                            if k not in ("files", "ts")}
-                else:
-                    slim = dict(e)
-                slim["mend"] = upto
-                rescued.append(slim)
-        self._index_write(rescued)
+            if e.get("kind") == "snapshot":
+                rescued.append({k: v for k, v in e.items()
+                                if k not in ("files", "ts")})
+            elif e.get("kind") in self._INDEXED_KINDS:
+                rescued.append(e)
+        self._index_write(rescued, upto)
 
     def mark_done(
         self, snapshot_id: str, part_entries: list[dict],
@@ -325,24 +336,22 @@ class Manifest:
         them live: invisible to listing/resume (done_parts), no chunk
         index summary, and the resume sweep deletes their dirs — the
         first half of an atomic two-phase commit whose second half is
-        one :meth:`commit_txn` line promoting them to done."""
+        :meth:`commit_staged`."""
         for e in part_entries:
             e.setdefault("kind", "part")
             e.setdefault("status", status)
             e["snapshot_id"] = snapshot_id
             e.setdefault("ts", time.time())
-        pre = self._msize()
         # ONE txn line for the whole chunk: a multi-line append can tear
         # to a PREFIX of part lines (buffered write, crash pre-fsync),
         # and the resume sweep would then delete the chunk dir while the
         # prefix parts stay "done" with no data — silent row loss. A
         # single line tears wholly or not at all.
-        self.append([{"kind": "txn", "entries": part_entries,
-                      "ts": time.time()}])
-        post = self._msize()
-        self._heal_index(pre)
-        if status == "done":
-            self._index_write(self._chunk_summary_lines(part_entries, post))
+        self.append_indexed(
+            {"kind": "txn", "entries": part_entries, "ts": time.time()},
+            self._chunk_summary_lines(part_entries)
+            if status == "done" else [],
+        )
 
     def commit_txn(self, entries: list[dict]) -> None:
         """ATOMIC multi-entry commit: all entries land in ONE manifest
@@ -350,18 +359,26 @@ class Manifest:
         prefix — and one index line. Used by purge to promote staged
         parts + retire old dirs + clear deletes as a single visible
         state change."""
-        pre = self._msize()
-        self.append([{"kind": "txn", "entries": entries, "ts": time.time()}])
-        post = self._msize()
-        self._heal_index(pre)
         parts = [e for e in entries
                  if e.get("kind") == "part" and e.get("status") == "done"]
-        idx_entries = self._chunk_summary_lines(parts, post) + [
+        idx_entries = self._chunk_summary_lines(parts) + [
             e for e in entries if e.get("kind") in self._INDEXED_KINDS
         ]
-        self._index_write(
-            [{"kind": "txn", "entries": idx_entries, "mend": post}]
+        self.append_indexed(
+            {"kind": "txn", "entries": entries, "ts": time.time()},
+            [{"kind": "txn", "entries": idx_entries}],
         )
+
+    def commit_staged(self, snapshot_id: str, extra: list[dict]) -> None:
+        """Second half of a staged commit: promote ``snapshot_id``'s
+        staged part lines to done and commit them with ``extra``
+        entries in one :meth:`commit_txn`."""
+        promoted = [
+            {**e, "status": "done"} for e in self.read()
+            if e.get("kind") == "part" and e.get("status") == "staged"
+            and e.get("snapshot_id") == snapshot_id
+        ]
+        self.commit_txn(promoted + extra)
 
     def append_rewrite(
         self, snapshot_id: str, new_chunk: str | None, replaces: list[str]
@@ -374,56 +391,27 @@ class Manifest:
         physically removes them — the Iceberg rewrite/expire split).
         ``new_chunk=None`` RETIRES the replaced dirs outright (used by
         purge, whose replacement chunks carry their own part entries)."""
-        entry = {
-            "kind": "rewrite",
-            "snapshot_id": snapshot_id,
-            "new_chunk": new_chunk,
-            "replaces": sorted(replaces),
-            "ts": time.time(),
-        }
-        pre = self._msize()
-        self.append([entry])
-        post = self._msize()
-        self._heal_index(pre)
-        self._index_write([{**entry, "mend": post}])
+        self._append_entry("rewrite", snapshot_id=snapshot_id,
+                           new_chunk=new_chunk, replaces=sorted(replaces))
 
     def append_delete(
         self, snapshot_id: str, rel_file: str, key_col: str, n: int
     ) -> None:
         """Record an EQUALITY-DELETE file (Iceberg merge-on-read):
-        ``rel_file`` (under out_dir) holds the deleted key values;
-        decode anti-joins them at read time. Appended to manifest AND
-        index so the O(chunks) listing path sees deletes too."""
-        entry = {
-            "kind": "delete",
-            "snapshot_id": snapshot_id,
-            "file": rel_file,
-            "key_col": key_col,
-            "n": int(n),
-            "ts": time.time(),
-        }
-        pre = self._msize()
-        self.append([entry])
-        post = self._msize()
-        self._heal_index(pre)
-        self._index_write([{**entry, "mend": post}])
+        ``rel_file`` (under out_dir) holds the deleted key values.
+        Decode tasks mask lists of up to ``SMALL_DELETE_MAX_KEYS`` keys
+        out of every decoded group; longer lists are applied by a
+        shuffled anti-join. Appended to manifest AND index so the
+        O(chunks) listing path sees deletes too."""
+        self._append_entry("delete", snapshot_id=snapshot_id,
+                           file=rel_file, key_col=key_col, n=int(n))
 
     def append_ref(self, name: str, snapshot_id: str | None) -> None:
         """Record a NAMED REF (Iceberg branch/tag analogue) pointing at
         ``snapshot_id`` (None = drop the ref). Append-only: the LAST
         entry per name wins. Indexed so index-tail readers resolve refs
         without a full manifest read."""
-        entry = {
-            "kind": "ref",
-            "name": name,
-            "snapshot_id": snapshot_id,
-            "ts": time.time(),
-        }
-        pre = self._msize()
-        self.append([entry])
-        post = self._msize()
-        self._heal_index(pre)
-        self._index_write([{**entry, "mend": post}])
+        self._append_entry("ref", name=name, snapshot_id=snapshot_id)
 
     def append_delete_clear(
         self, snapshot_id: str, files: list[str]
@@ -433,81 +421,199 @@ class Manifest:
         the data); time travel before it still applies them. Written to
         manifest AND index (index-only readers must see clears, or a
         vacuumed delete file would fail their reads)."""
-        entry = {
-            "kind": "delete_clear",
-            "snapshot_id": snapshot_id,
-            "files": sorted(files),
-            "ts": time.time(),
-        }
-        pre = self._msize()
-        self.append([entry])
-        post = self._msize()
-        self._heal_index(pre)
-        self._index_write([{**entry, "mend": post}])
+        self._append_entry("delete_clear", snapshot_id=snapshot_id,
+                           files=sorted(files))
 
-    def read_index(self) -> tuple[list[dict], int] | None:
-        """(index entries, covered manifest bytes) or None when the
-        index file doesn't exist (pre-upgrade manifests). ``covered``
-        is the LAST line's mend — readers must parse the manifest tail
-        beyond it (chunks committed after a crash between the two
-        appends, plus snapshot headers / registry lines, live there)."""
-        if not os.path.exists(self.index_path):
-            return None
-        entries: list[dict] = []
-        covered = 0
-        with open(self.index_path) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    e = json.loads(line)
-                except json.JSONDecodeError:
-                    continue  # torn tail: covered stays at prior line
-                if e.get("kind") == "txn":
-                    entries.extend(e.get("entries", ()))
-                else:
-                    entries.append(e)
-                covered = max(covered, int(e.get("mend", 0)))
-        return entries, covered
 
-    def read_tail(self, offset: int, upto: int | None = None) -> list[dict]:
-        """Manifest entries whose lines start at/after byte ``offset``
-        (and before ``upto`` when given — both are line boundaries by
-        construction: every append is flushed whole)."""
-        if not os.path.exists(self.path):
-            return []
-        entries = []
-        with open(self.path) as f:
-            f.seek(offset)
-            if upto is not None:
-                data = f.read(max(upto - offset, 0))
-                for line in data.splitlines():
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        e = json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-                    if e.get("kind") == "txn":
-                        entries.extend(e.get("entries", ()))
-                    else:
-                        entries.append(e)
-                return entries
-            # offset always lands on a line boundary (mend is the file
-            # size right after a flushed append); json.JSONDecodeError
-            # below skips any torn concurrent write
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    e = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if e.get("kind") == "txn":
-                    entries.extend(e.get("entries", ()))
-                else:
-                    entries.append(e)
-        return entries
+class BranchState:
+    """Replayed manifest branch state (see :func:`branch_replay`).
+
+    Visibility is stored as PARENT POINTERS: when a snapshot joins the
+    branch, its parent is whatever snapshot was current then, so the
+    visible set at any snapshot is its parent path — O(1) per commit
+    regardless of how many rollbacks the manifest holds."""
+
+    __slots__ = ("chain", "parent", "current", "staged_parent",
+                 "aborted", "has_rollback")
+
+    def __init__(self) -> None:
+        self.chain: list[str] = []        # full commit order (seq nums)
+        self.parent: dict[str, str | None] = {}
+        self.current: str | None = None   # last visible commit (HEAD)
+        self.staged_parent: dict[str, str | None] = {}  # unpublished WAP
+        self.aborted: set[str] = set()
+        self.has_rollback = False
+
+    def vis_at(self, sid: str | None) -> list[str]:
+        """Visible snapshot list right after ``sid`` joined (commit
+        order): sid's parent path. ``None`` = empty table."""
+        out: list[str] = []
+        while sid is not None:
+            out.append(sid)
+            sid = self.parent[sid]
+        out.reverse()
+        return out
+
+    def visible(self) -> list[str]:
+        """Commits a HEAD read sees, in commit order."""
+        return self.vis_at(self.current)
+
+
+def branch_replay(entries: list[dict]) -> BranchState:
+    """Replay snapshot/publish/rollback entries into branch state.
+
+    ``chain`` is the FULL main-branch commit order — a part/delete's
+    Iceberg sequence number stays its position here even after a
+    rollback hides it. A ``rollback`` entry to snapshot S makes S the
+    current snapshot (visible set = S's parent path — the state when S
+    joined), so rolling back and rolling FORWARD to a previously
+    rolled-back snapshot (Iceberg ``set_current_snapshot``) are the
+    same operation; later commits chain onto S."""
+    st = BranchState()
+    seen: set[str] = set()
+
+    def _join(sid: str) -> None:
+        st.chain.append(sid)
+        st.parent[sid] = st.current
+        st.current = sid
+
+    for e in entries:
+        k = e.get("kind")
+        if k == "snapshot":
+            sid = e["snapshot_id"]
+            if sid in seen:
+                continue
+            seen.add(sid)
+            if e.get("staged"):
+                st.staged_parent[sid] = st.current
+            else:
+                _join(sid)
+        elif k == "publish":
+            sid = e.get("snapshot_id")
+            if sid not in st.staged_parent or sid in st.aborted:
+                continue  # unknown / double entry: writer-validated
+            if e.get("abort"):
+                st.aborted.add(sid)
+            else:
+                _join(sid)
+            st.staged_parent.pop(sid)
+        elif k == "rollback":
+            to = e.get("to")
+            if to in st.parent:
+                st.current = to
+                st.has_rollback = True
+            # else: writer-validated; a reader skips a bad entry
+    return st
+
+
+def snap_chain(
+    entries: list[dict], as_of: str | None = None,
+) -> tuple[list[str], set[str] | None]:
+    """Main-branch snapshot CHAIN (commit order) and the accepted set
+    for a read, WAP-aware (Iceberg write-audit-publish).
+
+    A normal snapshot joins the chain at its header; a WAP-STAGED
+    snapshot (header ``staged: true``) joins at its ``publish`` entry
+    — the Iceberg cherry-pick ordering — so time travel to snapshots
+    committed between stage and publish never sees the staged rows.
+    Aborted staged snapshots never join.
+
+    Returns ``(chain, accepted)``:
+
+    - ``chain``: ordered main-branch snapshot ids; a part/delete's
+      Iceberg sequence number is its snapshot's index here.
+    - ``accepted``: snapshot ids whose data entries a read at
+      ``as_of`` may see, or None = "everything in the manifest" (the
+      zero-overhead fast path, only when nothing is staged and no
+      ``as_of``). ``as_of`` may also name an UNPUBLISHED staged
+      snapshot — the AUDIT read: the main chain as of the stage point
+      plus the staged snapshot itself.
+    """
+    st = branch_replay(entries)
+    if as_of is None:
+        dirty = st.staged_parent or st.aborted or st.has_rollback
+        accepted = set(st.visible()) if dirty else None
+        return st.chain, accepted
+    if as_of in st.staged_parent:  # audit read: unpublished staged snap
+        return st.chain, set(st.vis_at(st.staged_parent[as_of])) | {as_of}
+    if as_of in st.aborted:
+        raise ValueError(
+            f"snapshot {as_of!r} was a WAP-staged snapshot that was "
+            "aborted — its data never joined the table")
+    if as_of not in st.parent:
+        raise ValueError(f"unknown snapshot id for time travel: {as_of!r}")
+    return st.chain, set(st.vis_at(as_of))
+
+
+def live_parts(
+    entries: list[dict], as_of: str | None = None,
+) -> dict[str, dict[int, dict]]:
+    """``{chunk_dir: {part_id: line}}`` a read at snapshot ``as_of``
+    (None = HEAD) sees, from index or manifest ``entries``. ``line`` is
+    the chunk index line or manifest part line that committed the part:
+    it carries the snapshot id, the zone bounds (``key_lo`` …
+    ``key_hi_s``) and the columns — a chunk line's are aggregated over
+    its parts — and :func:`part_rows` reads the part's row count from it.
+
+    Chunk lines and done part lines of accepted snapshots come first
+    (the first line naming a (dir, part) wins — a healed and a regular
+    summary line may both name it), then accepted rewrites in commit
+    order: a compaction moves its replaced dirs' parts under
+    ``new_chunk``; a purge retire (``new_chunk=None``) drops them, since
+    the purge's own parts carry the rows. Dict order is first
+    appearance."""
+    _chain, accepted = snap_chain(entries, as_of)
+    view: dict[str, dict[int, dict]] = {}
+    rewrites: list[dict] = []
+    for e in entries:
+        if accepted is not None and e.get("snapshot_id") not in accepted:
+            continue
+        kind, cdir = e.get("kind"), e.get("chunk_dir")
+        if kind == "chunk" and cdir:
+            parts = view.setdefault(cdir, {})
+            for p in e.get("parts", ()):
+                parts.setdefault(int(p), e)
+        elif (kind == "part" and e.get("status") == "done" and cdir
+                and e.get("part_id") is not None):
+            view.setdefault(cdir, {}).setdefault(int(e["part_id"]), e)
+        elif kind == "rewrite":
+            rewrites.append(e)
+    for rw in rewrites:
+        moved: dict[int, dict] = {}
+        for d in rw.get("replaces", ()):
+            moved.update(view.pop(d, {}))
+        if moved and rw.get("new_chunk"):
+            view.setdefault(rw["new_chunk"], {}).update(moved)
+    return view
+
+
+def part_rows(line: dict, part_id: int) -> int:
+    """Row count of ``part_id`` from the :func:`live_parts` line that
+    committed it, or -1 when the line does not record it."""
+    if line.get("kind") == "chunk":
+        return int((line.get("part_rows") or {}).get(str(part_id), -1))
+    for c in (line.get("columns") or {}).values():
+        if isinstance(c, dict) and c.get("n_values") is not None:
+            return int(c["n_values"])
+    return -1
+
+
+def list_refs(out_dir: str) -> dict[str, str]:
+    """Named refs (Iceberg branch/tag analogue): last entry per name
+    wins; dropped refs (snapshot_id None) disappear."""
+    refs: dict[str, str] = {}
+    for e in Manifest(out_dir).read_indexed():
+        if e.get("kind") == "ref":
+            if e.get("snapshot_id") is None:
+                refs.pop(e["name"], None)
+            else:
+                refs[e["name"]] = e["snapshot_id"]
+    return refs
+
+
+def resolve_as_of(out_dir: str, as_of: str | None) -> str | None:
+    """Translate a ref name to its snapshot id; snapshot ids (and
+    None) pass through."""
+    if as_of is None:
+        return None
+    return list_refs(out_dir).get(as_of, as_of)

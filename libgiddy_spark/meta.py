@@ -4,18 +4,26 @@ lakehouse user expects for debugging, auditing and operational
 tooling.
 
 snapshots/history read the FULL manifest (the slim index headers drop
-timestamps and part counts); files reads the O(chunks) summary index.
-Metadata-scale driver parsing either way, exactly like Iceberg's own
-metadata tables walk manifest lists, never the data files — and every
-table returns an ordinary DataFrame so it composes with any query.
+timestamps and part counts); files flattens the manifest's live view
+(:func:`manifest.live_parts` over the O(chunks) summary index), the
+same view decode lists its block files from. Metadata-scale driver
+parsing either way, exactly like Iceberg's own metadata tables walk
+manifest lists, never the data files — and every table returns an
+ordinary DataFrame so it composes with any query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import _branch_replay, _manifest_entries, list_refs
-from .manifest import Manifest
+from .manifest import (
+    Manifest,
+    branch_replay,
+    list_refs,
+    live_parts,
+    part_rows,
+    resolve_as_of,
+)
 
 __all__ = [
     "file_rows", "files_df", "history_df", "history_rows",
@@ -37,7 +45,7 @@ def snapshot_rows(out_dir: str) -> list[tuple]:
     """Driver-side rows for :func:`snapshots_df` (no Spark needed —
     the CLI prints these directly)."""
     entries = Manifest(out_dir).read()
-    st = _branch_replay(entries)
+    st = branch_replay(entries)
     visible = set(st.visible())
     rows = []
     seen: set[str] = set()
@@ -78,7 +86,7 @@ def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def history_rows(out_dir: str) -> list[tuple]:
     entries = Manifest(out_dir).read()
-    st = _branch_replay(entries)
+    st = branch_replay(entries)
     visible = set(st.visible())
     rows = []
     cur: str | None = None
@@ -128,79 +136,15 @@ def refs_df(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def file_rows(out_dir: str, as_of: str | None = None) -> list[tuple]:
-    from .engine import _resolve_as_of, _snap_chain
-
-    entries = _manifest_entries(out_dir)
-    _chain, accepted = _snap_chain(
-        entries, _resolve_as_of(out_dir, as_of))
-    # mirror _committed_block_files' rewrite remap: a compaction moves
-    # its replaced dirs' rows under new_chunk; a purge/sorted rewrite
-    # (new_chunk=None) RETIRES them — their rows live under the
-    # rewrite's own chunk entries, so keeping both would double-count
-    by_dir: dict[str, list[list]] = {}
-    seen: set[tuple[str, int]] = set()
-    rewrites: list[dict] = []
-    for e in entries:
-        k = e.get("kind")
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue
-        if k == "chunk" and e.get("chunk_dir"):
-            part_rows = e.get("part_rows") or {}
-            for pid in e.get("parts", ()):
-                # healed + regular summary lines can both name the same
-                # (chunk_dir, part): first one wins, duplicates would
-                # double-count rows (same set semantics as
-                # _committed_block_files / _evolution_null_parts)
-                if (e["chunk_dir"], int(pid)) in seen:
-                    continue
-                seen.add((e["chunk_dir"], int(pid)))
-                by_dir.setdefault(e["chunk_dir"], []).append([
-                    e.get("snapshot_id"),
-                    e.get("chunk_dir"),
-                    int(pid),
-                    int(part_rows.get(str(pid), -1)),
-                    e.get("key_lo"),
-                    e.get("key_hi"),
-                    e.get("key_lo_s"),
-                    e.get("key_hi_s"),
-                ])
-        elif k == "rewrite":
-            rewrites.append(e)
-    # crash-orphaned chunks (part entries whose chunk summary append
-    # was lost): _committed_block_files still decodes them from the
-    # manifest tail, so the files table must list them too (row count
-    # unknown at chunk granularity -> -1, bounds from the part entry)
-    for e in entries:
-        if (e.get("kind") != "part" or e.get("status") != "done"
-                or not e.get("chunk_dir")
-                or e.get("part_id") is None):
-            continue
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue
-        dp = (e["chunk_dir"], int(e["part_id"]))
-        if dp in seen:
-            continue
-        seen.add(dp)
-        n = -1
-        for c in (e.get("columns") or {}).values():
-            if isinstance(c, dict) and c.get("n_values") is not None:
-                n = int(c["n_values"])
-                break
-        by_dir.setdefault(e["chunk_dir"], []).append([
-            e.get("snapshot_id"), e["chunk_dir"], int(e["part_id"]),
-            n,
-            e.get("key_lo"), e.get("key_hi"),
-            e.get("key_lo_s"), e.get("key_hi_s"),
-        ])
-    for rw in rewrites:
-        moved: list[list] = []
-        for d in rw.get("replaces", ()):
-            moved.extend(by_dir.pop(d, []))
-        if moved and rw.get("new_chunk"):
-            for r in moved:
-                r[1] = rw["new_chunk"]
-            by_dir.setdefault(rw["new_chunk"], []).extend(moved)
-    return [tuple(r) for rs in by_dir.values() for r in rs]
+    """Driver-side rows for :func:`files_df`: the manifest's live view
+    at ``as_of`` flattened to one tuple per (chunk, part)."""
+    view = live_parts(Manifest(out_dir).read_indexed(),
+                      resolve_as_of(out_dir, as_of))
+    return [
+        (e.get("snapshot_id"), d, pid, part_rows(e, pid), e.get("key_lo"),
+         e.get("key_hi"), e.get("key_lo_s"), e.get("key_hi_s"))
+        for d, parts in view.items() for pid, e in parts.items()
+    ]
 
 
 def files_df(spark: SparkSession, out_dir: str,

@@ -27,7 +27,7 @@ import time
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import Manifest
+from .manifest import Manifest, resolve_as_of
 
 __all__ = ["evolve_schema", "read_table", "table_schema"]
 
@@ -52,12 +52,7 @@ def _line(schema: pa.Schema, phys: dict[str, list[str]],
 
 
 def _append_schema_line(out_dir: str, entry: dict) -> None:
-    m = Manifest(out_dir)
-    pre = m._msize()
-    m.append([entry])
-    post = m._msize()
-    m._heal_index(pre)
-    m._index_write([{**entry, "mend": post}])
+    Manifest(out_dir).append_indexed(entry, [entry])
 
 
 def _resolve_line(out_dir: str, as_of: str | None) -> dict | None:
@@ -65,10 +60,8 @@ def _resolve_line(out_dir: str, as_of: str | None) -> dict | None:
     the last one written before the snapshot joined the branch (its
     header, or its publish entry for WAP snapshots; an unpublished
     staged snapshot audits under its stage header's schema)."""
-    from .engine import _manifest_entries, _resolve_as_of
-
-    as_of = _resolve_as_of(out_dir, as_of)
-    entries = _manifest_entries(out_dir)
+    as_of = resolve_as_of(out_dir, as_of)
+    entries = Manifest(out_dir).read_indexed()
     last: dict | None = None
     for e in entries:
         k = e.get("kind")

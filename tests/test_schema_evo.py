@@ -163,3 +163,26 @@ def test_read_table_pruning_passthrough(spark, table):
     ids = {r["doc_id"] for r in df.collect()}
     assert set(range(100, 121)) <= ids  # over-inclusive, never lossy
     assert read_table(spark, out).count() == 300
+
+
+def test_no_evolution_nulls_for_compacted_then_purged_parts(spark, table):
+    """A purge retires the compacted dir that holds the pre-evolution
+    part: a projection of only the added column must not resurrect
+    that part as null rows next to the purge's rewritten ones."""
+    from libgiddy_spark.engine import compact_blocks, purge_deletes
+
+    out, src = table
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    stage = src + "_stage"
+    (docs.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
+     .withColumn("extra_col", F.col("doc_id") * 2)
+     .coalesce(1).write.parquet(stage))
+    part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+    os.rename(os.path.join(stage, part), os.path.join(src, "b.parquet"))
+    encode_snapshot(spark, src, out, key_col="doc_id")
+    assert compact_blocks(spark, out)["bins"] == 1
+    delete_rows(out, "doc_id", [1])
+    purge_deletes(spark, out, table_schema(out)[0], "doc_id")
+    df = read_table(spark, out, columns=["extra_col"])
+    assert df.count() == 399
+    assert df.filter(F.col("extra_col").isNotNull()).count() == 100
