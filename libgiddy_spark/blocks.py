@@ -22,7 +22,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import bloom as bloom_mod
-from .codecs import SymbolTable, decode_array, encode_array
+from .codecs import SymbolTable, as_array, decode_array, encode_array
 from .codecs import fsst as fsst_mod
 from .codecs import header as H
 from .codecs import strcol_of
@@ -95,14 +95,7 @@ def _trunc_bound_hi(s: str) -> str | None:
 
 
 def _normalize(arr: pa.ChunkedArray | pa.Array) -> pa.Array:
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-        if isinstance(arr, pa.ChunkedArray):
-            arr = (
-                pa.concat_arrays(arr.chunks)
-                if arr.num_chunks != 1
-                else arr.chunk(0)
-            ) if arr.num_chunks else pa.array([], type=arr.type)
+    arr = as_array(arr)
     if pa.types.is_timestamp(arr.type) and (arr.type.unit != "us" or arr.type.tz):
         arr = arr.cast(pa.timestamp("us"))
     if pa.types.is_large_string(arr.type):

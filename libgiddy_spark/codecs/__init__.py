@@ -30,6 +30,7 @@ from .rle import (
 from .strcol import StrCol, pack_strcol, unpack_strcol
 
 __all__ = [
+    "as_array",
     "encode_array",
     "decode_array",
     "decode_payload_numpy",
@@ -115,21 +116,19 @@ def _int_values(arr: pa.Array, dt: int) -> np.ndarray:
 _FLOAT_VIEW = {H.DT_FLOAT32: np.float32, H.DT_FLOAT64: np.float64}
 
 
+def as_array(arr: pa.ChunkedArray | pa.Array) -> pa.Array:
+    """One contiguous Array: ``combine_chunks`` returns an Array for any
+    chunk count, zero included."""
+    return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+
+
 def encode_array(
     arr: pa.Array,
     codec: str,
     fsst_table: SymbolTable | None = None,
 ) -> tuple[bytes, dict]:
     """Encode one Arrow array into a self-describing block payload."""
-    if isinstance(arr, pa.ChunkedArray):
-        combined = arr.combine_chunks()
-        if isinstance(combined, pa.ChunkedArray):
-            combined = (
-                combined.chunk(0)
-                if combined.num_chunks == 1
-                else pa.concat_arrays(combined.chunks)
-            ) if combined.num_chunks else pa.array([], type=arr.type)
-        arr = combined
+    arr = as_array(arr)
     dt = _logical_dt(arr.type)
     n = len(arr)
     valid = None

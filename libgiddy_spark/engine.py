@@ -41,12 +41,10 @@ from .blocks import (
 )
 from .manifest import (
     Manifest,
+    ReadView,
     branch_replay as _branch_replay,
     list_refs,
-    live_parts,
-    part_rows,
-    resolve_as_of,
-    snap_chain,
+    refs_of,
 )
 from .skew import footer_byte_stats, salt_factors
 from .table_io import abs_file_of, list_parquet_files, snapshot_id_of
@@ -500,14 +498,15 @@ def compact_blocks(
     blocks_root = os.path.join(out_dir, "blocks")
     m = Manifest(out_dir)
     entries = m.read()
+    view = ReadView(out_dir, entries)
     # HEAD = last VISIBLE main-branch snapshot: the rewrite entry must
     # commit under a snapshot id HEAD readers accept — never an
     # unpublished WAP-staged header, nor a rolled-back commit
-    hvis = _branch_replay(entries).visible()
+    hvis = view.branch.visible()
     head_snapshot = hvis[-1] if hvis else None
     if head_snapshot is None:
         return {"bins": 0, "files_before": 0, "files_after": 0}
-    live = _committed_block_files(out_dir)
+    live = view.files()
     by_dir: dict[str, list[str]] = {}
     for f in live:
         rel = os.path.relpath(f, blocks_root)
@@ -634,20 +633,20 @@ def vacuum_blocks(
     blocks_root = os.path.join(out_dir, "blocks")
     if not os.path.isdir(blocks_root):
         return {"removed": [], "expired_staged": []}
-    live_dirs = set()
-    for f in _committed_block_files(out_dir):
-        live_dirs.add(os.path.relpath(f, blocks_root).split(os.sep)[0])
     removed = []
     m = Manifest(out_dir)
-    all_entries = m.read()
+    entries = m.read()
+    head = ReadView(out_dir, entries)
+    live_dirs = {os.path.relpath(f, blocks_root).split(os.sep)[0]
+                 for f in head.files()}
     # RETAINED snapshots pin their files exactly like named refs
     # (Iceberg branch retention): dirs and delete files a retained
     # snapshot still needs survive vacuum; age out of the retention
     # window (or drop the ref) to expire them on the next vacuum.
-    bstate = _branch_replay(all_entries)
+    bstate = head.branch
     chain = bstate.chain
     ts_of = {e["snapshot_id"]: e.get("ts", 0.0)
-             for e in all_entries if e.get("kind") == "snapshot"}
+             for e in entries if e.get("kind") == "snapshot"}
     # retention window counts MAIN-BRANCH snapshots (publish order);
     # unpublished WAP-staged snapshots are pinned unconditionally —
     # they are awaiting audit, not aging out. Aborted ones are swept.
@@ -660,25 +659,20 @@ def vacuum_blocks(
     if older_than is not None:
         retained |= {sid for sid in chain
                      if ts_of.get(sid, 0.0) >= older_than}
-    retained |= set(list_refs(out_dir).values())
-    staged_hdrs = {e["snapshot_id"] for e in all_entries
-                   if e.get("kind") == "snapshot" and e.get("staged")}
-    wap_aborted = {e["snapshot_id"] for e in all_entries
-                   if e.get("kind") == "publish" and e.get("abort")}
-    retained |= staged_hdrs - set(chain) - wap_aborted
+    retained |= set(head.refs.values())
+    retained |= set(bstate.staged_parent)  # open WAP snapshots
     pinned_dirs: set[str] = set()
     pinned_deletes: set[str] = set()
     for sid in sorted(retained):
         try:
-            pinned_dirs |= set(live_parts(all_entries, sid))
-            pinned_deletes |= {
-                os.path.relpath(f, out_dir)
-                for f, _k, _n, _s in _accepted_deletes(out_dir, sid)
-            }
+            pinned = head.at(sid)
+            pinned_dirs |= set(pinned.parts)
+            pinned_deletes |= {os.path.relpath(f, out_dir)
+                               for f, _k, _n, _s in pinned.deletes}
         except ValueError:
             continue  # e.g. a ref left pointing at an aborted WAP snap
     replaced: set[str] = set()
-    for e in all_entries:
+    for e in entries:
         if e.get("kind") == "rewrite":
             replaced.update(e.get("replaces", ()))
     for d in sorted(replaced):
@@ -691,7 +685,7 @@ def vacuum_blocks(
     # delete files already MATERIALIZED by a purge serve only time
     # travel — expire them with the dirs, same Iceberg-expire contract
     cleared: set[str] = set()
-    for e in all_entries:
+    for e in entries:
         if e.get("kind") == "delete_clear":
             cleared.update(e.get("files", ()))
     for rel in sorted(cleared - pinned_deletes):
@@ -712,9 +706,7 @@ def vacuum_blocks(
     # encode and its txn, then was retried under a new snapshot id):
     # sweep any leftover staged chunk dirs and mark the snapshot ids
     # expired in ONE line, so the dead staged lines are declared — not
-    # re-examined — by every later maintenance pass. (Reuses the one
-    # manifest parse from above — the manifest is O(parts) lines.)
-    entries = all_entries
+    # re-examined — by every later maintenance pass.
     promoted = {e.get("snapshot_id") for e in entries
                 if e.get("kind") == "part" and e.get("status") == "done"}
     expired: set[str] = set()
@@ -738,10 +730,10 @@ def vacuum_blocks(
     # ABORTED WAP snapshots: their data never joined the main branch
     # and never will — sweep their chunk dirs (idempotent: a second
     # vacuum finds them already gone)
-    if wap_aborted:
+    if bstate.aborted:
         for e in entries:
             if (e.get("kind") in ("part", "chunk")
-                    and e.get("snapshot_id") in wap_aborted
+                    and e.get("snapshot_id") in bstate.aborted
                     and e.get("chunk_dir")):
                 d = e["chunk_dir"]
                 full = os.path.join(blocks_root, d)
@@ -833,81 +825,10 @@ def _committed_block_files(
     key_range_s: tuple[str, str] | None = None,
     as_of: str | None = None,
 ) -> list[str]:
-    """Block parquet files belonging to COMMITTED chunks, from the
-    manifest. A part-id filter drops whole chunk dirs before listing
-    (each chunk dir's manifest lines name its parts); a key_range
-    (int sort keys) or key_range_s (string sort keys) drops parts whose
-    MANIFEST-level zone map doesn't overlap — the Iceberg-manifest
-    data-skipping layer above the per-block zone maps (parts without a
-    recorded zone map are always kept). ``as_of`` = a snapshot id for
-    TIME TRAVEL: only parts committed under snapshots up to and
-    including it (manifest header order) are visible — the Iceberg
-    snapshot-isolation read pattern over our append-only manifest.
-    Hidden paths (``_``/``.`` prefixes: Spark ``_temporary`` task dirs,
-    ``_PARTS`` markers) are excluded as defense-in-depth even inside
-    committed dirs."""
-    blocks_root = os.path.join(out_dir, "blocks")
-    # chunk-granular index (Iceberg manifest-list analogue): the driver
-    # parses O(chunks) summary lines — part lists + chunk key ranges —
-    # plus only the manifest TAIL past the index's covered byte offset
-    # (chunks whose summary append was lost to a crash, in-flight
-    # registry lines). Chunk-level key pruning is coarser than per-part
-    # (a key gap inside a kept chunk over-includes), but the per-block
-    # zone maps inside each file still prune those reads —
-    # over-inclusive only, never loss.
-    view = live_parts(Manifest(out_dir).read_indexed(), as_of)
-    wanted = {int(p) for p in part_ids} if part_ids is not None else None
-
-    def _kept(pid: int, e: dict) -> bool:
-        if wanted is not None and pid not in wanted:
-            return False
-        if key_range is not None and e.get("key_lo") is not None:
-            if e["key_hi"] < key_range[0] or e["key_lo"] > key_range[1]:
-                return False  # wholly out of range
-        if key_range_s is not None and e.get("key_lo_s") is not None:
-            if e["key_hi_s"] < key_range_s[0] or e["key_lo_s"] > key_range_s[1]:
-                return False  # wholly out of string range
-        return True
-
-    files: list[str] = []
-    for d, parts in sorted(view.items()):
-        if not any(_kept(p, e) for p, e in parts.items()):
-            continue
-        full = os.path.join(blocks_root, d)
-        if not os.path.isdir(full):
-            if as_of is not None:
-                # time travel must fail loudly when its snapshot's files
-                # were vacuumed — silence here would be silent row loss
-                raise ValueError(
-                    f"time travel to {as_of!r} needs chunk dir {d!r}, "
-                    "which was removed (vacuumed/expired)"
-                )
-            continue  # chunk pruned by a later resume sweep
-        marker = os.path.join(full, "_FILES")
-        if os.path.exists(marker):
-            # chunk committed by the task-side writer: the marker IS
-            # the committed file set (write-unique/commit-by-list), so
-            # a zombie task attempt's leftover file can never be read.
-            # A listed-but-missing file is corruption — fail loudly,
-            # silence would be silent row loss.
-            with open(marker) as fh:
-                names = [x.strip() for x in fh.read().splitlines()
-                         if x.strip()]
-            for f in names:
-                p = os.path.join(full, f)
-                if not os.path.isfile(p):
-                    raise ValueError(
-                        f"chunk dir {d!r} commit list names {f!r}, "
-                        "which is missing on disk (partial vacuum or "
-                        "external deletion?)")
-                files.append(p)
-            continue
-        for root, dirs, fs in os.walk(full):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            for f in fs:
-                if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                    files.append(os.path.join(root, f))
-    return sorted(files)
+    """Block parquet files of the chunks committed at ``as_of`` (None =
+    HEAD): :meth:`ReadView.files` over a fresh manifest read."""
+    return ReadView.read(out_dir, as_of).files(part_ids, key_range,
+                                               key_range_s)
 
 
 def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
@@ -971,13 +892,9 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
 # 10^5 keys the in-task mask is faster than the shuffled join; at 10^6
 # the two are within noise (int64 keys 2.4 vs 2.5 s, 13-byte strings
 # 3.7 vs 3.4 s), and each task's key index holds ~40 MB (int64) to
-# ~120 MB (strings). LGS_SMALL_DELETE_MAX_KEYS overrides it.
+# ~120 MB (strings). Read at call time, so a patched value reaches
+# decode_blocks and read_changes.
 SMALL_DELETE_MAX_KEYS = 1_000_000
-
-
-def _delete_max_keys() -> int:
-    return int(os.environ.get(
-        "LGS_SMALL_DELETE_MAX_KEYS", SMALL_DELETE_MAX_KEYS))
 
 
 def upsert_rows(
@@ -1045,81 +962,11 @@ def upsert_rows(
             "encoded_parts": summary["encoded_parts"]}
 
 
-def _accepted_deletes(
-    out_dir: str, as_of: str | None = None
-) -> list[tuple[str, str, int, int]]:
-    """(abs delete file, key_col, n_keys, commit_seq) for delete
-    entries visible at ``as_of`` (or HEAD), via the chunk index +
-    manifest tail. n_keys comes from the manifest entry — no file
-    scan. commit_seq is the delete snapshot's 0-based position in the
-    manifest's snapshot order — the Iceberg sequence number the delete
-    is scoped by (it applies only to parts with a smaller seq)."""
-    entries = Manifest(out_dir).read_indexed()
-    chain, accepted = snap_chain(entries, as_of)
-    seq_of = {s: i for i, s in enumerate(chain)}
-    cleared: set[str] = set()
-    for e in entries:
-        if e.get("kind") != "delete_clear":
-            continue
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue  # time travel before the purge: deletes still apply
-        cleared.update(e.get("files", ()))
-    out = []
-    for e in entries:
-        if e.get("kind") != "delete":
-            continue
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue
-        if e["file"] in cleared:
-            continue  # materialized by a purge rewrite
-        out.append((os.path.join(out_dir, e["file"]), e["key_col"],
-                    int(e.get("n", 0)),
-                    seq_of.get(e.get("snapshot_id"), 0)))
-    return out
-
-
-def _part_seq_map(out_dir: str, as_of: str | None = None) -> dict[int, int]:
-    """part_id -> 0-based commit-snapshot position (the part's Iceberg
-    sequence number), from the chunk index + tail. Compaction preserves
-    a part's ORIGINAL seq (rewrites add no part entries), so delete
-    applicability never changes across storage maintenance; purge
-    re-encodes under fresh part ids at the purge snapshot's seq.
-    A WAP-staged snapshot's parts take their sequence from the PUBLISH
-    position (cherry-pick ordering); during an AUDIT read
-    (``as_of`` = the unpublished staged id) they take the sequence
-    they'd receive if published now — above every visible delete, so
-    pre-stage tombstones never erase freshly staged rows."""
-    entries = Manifest(out_dir).read_indexed()
-    chain, accepted = snap_chain(entries, as_of)
-    seq_of = {s: i for i, s in enumerate(chain)}
-    if (as_of is not None and as_of not in seq_of
-            and accepted is not None):
-        # audit read of an unpublished staged snap: the sequence it
-        # would receive if published NOW — the end of the full chain,
-        # above every visible part and delete. (Not len(accepted)-1:
-        # after a rollback, visible commits can hold chain positions
-        # far beyond the visible COUNT, and a delete among them would
-        # out-sequence — i.e. erase — the freshly staged rows.)
-        seq_of[as_of] = len(chain)
-    out: dict[int, int] = {}
-    for e in entries:
-        k = e.get("kind")
-        if k == "chunk" and e.get("snapshot_id") in seq_of:
-            for p in e.get("parts", ()):
-                out.setdefault(int(p), seq_of[e["snapshot_id"]])
-        elif (k == "part" and e.get("status") == "done"
-                and e.get("snapshot_id") in seq_of
-                and e.get("part_id") is not None):
-            out.setdefault(int(e["part_id"]), seq_of[e["snapshot_id"]])
-    return out
-
-
 def _staged_full_rewrite(
     spark: SparkSession,
-    out_dir: str,
+    view: ReadView,
     schema: pa.Schema,
     key_col: str,
-    deletes: list[tuple[str, str, int, int]],
     cluster: bool = False,
     target_part_bytes: int = 128 << 20,
     chunk_parts: int = 64,
@@ -1128,7 +975,8 @@ def _staged_full_rewrite(
     applied by decode), optionally range-cluster them on ``key_col``
     (repartitionByRange → disjoint, sorted parts), re-encode them as a
     fresh snapshot, RETIRE every previous chunk dir, and clear any pending
-    delete files — all in one manifest txn.
+    delete files — all in one manifest txn. The decoded rows, the
+    retired dirs and the cleared deletes all come from ``view`` (HEAD).
 
     STAGED encode: part lines commit with status=staged — invisible
     to listing/resume, dirs swept if we crash here — then ONE txn
@@ -1137,23 +985,19 @@ def _staged_full_rewrite(
     together, and a crash at any point leaves a consistent table
     (before the txn: pre-rewrite state; after: rewritten state).
     Returns (encode summary, retired dirs)."""
-    m = Manifest(out_dir)
+    out_dir = view.out_dir
     blocks_root = os.path.join(out_dir, "blocks")
+    live = view.files()
     old_dirs = sorted(
-        {
-            os.path.relpath(f, blocks_root).split(os.sep)[0]
-            for f in _committed_block_files(out_dir)
-        }
-    )
-    dec = decode_blocks(spark, out_dir, schema).drop("part_id")
+        {os.path.relpath(f, blocks_root).split(os.sep)[0] for f in live})
+    dec = _decode_view(spark, view, schema).drop("part_id")
     if cluster:
         # parts = staging files, and each part's manifest zone map is
         # its file's key range — so global clustering must happen HERE:
         # range-partition on the key (disjoint ranges per file), sized
         # ~target_part_bytes of source bytes per part so part count
         # tracks table size on a cluster
-        live_bytes = sum(
-            os.path.getsize(f) for f in _committed_block_files(out_dir))
+        live_bytes = sum(os.path.getsize(f) for f in live)
         n_parts = max(1, -(-live_bytes // target_part_bytes))
         dec = dec.repartitionByRange(n_parts, key_col)
     src = os.path.join(out_dir, "_purge_src")
@@ -1177,16 +1021,16 @@ def _staged_full_rewrite(
         "replaces": sorted(old_dirs),
         "ts": time.time(),
     }]
-    if deletes:
+    if view.deletes:
         txn.append({
             "kind": "delete_clear",
             "snapshot_id": summary["snapshot_id"],
             "files": sorted(
-                os.path.relpath(f, out_dir) for f, _k, _n, _s in deletes
+                os.path.relpath(f, out_dir) for f, _k, _n, _s in view.deletes
             ),
             "ts": time.time(),
         })
-    m.commit_staged(summary["snapshot_id"], txn)
+    Manifest(out_dir).commit_staged(summary["snapshot_id"], txn)
     return summary, old_dirs
 
 
@@ -1201,13 +1045,12 @@ def purge_deletes(
     still sees the original rows + applies the original deletes (until
     :func:`vacuum_blocks` removes the retired dirs). ``schema`` must be
     the FULL table schema — a purge rewrites every column."""
-    deletes = _accepted_deletes(out_dir)
-    if not deletes:
+    view = ReadView.read(out_dir)
+    if not view.deletes:
         return {"purged_files": 0, "rewritten": False}
-    summary, old_dirs = _staged_full_rewrite(
-        spark, out_dir, schema, key_col, deletes)
+    summary, old_dirs = _staged_full_rewrite(spark, view, schema, key_col)
     return {
-        "purged_files": len(deletes),
+        "purged_files": len(view.deletes),
         "rewritten": True,
         "snapshot_id": summary["snapshot_id"],
         "retired_dirs": old_dirs,
@@ -1232,16 +1075,16 @@ def rewrite_sorted(
     (the rewrite decodes live rows, so keeping the tombstone files
     would double-apply history). Old dirs stay for time travel until
     :func:`vacuum_blocks`."""
-    deletes = _accepted_deletes(out_dir)
+    view = ReadView.read(out_dir)
     summary, old_dirs = _staged_full_rewrite(
-        spark, out_dir, schema, key_col, deletes, cluster=True,
+        spark, view, schema, key_col, cluster=True,
         target_part_bytes=target_part_bytes, chunk_parts=chunk_parts)
     return {
         "sorted_by": key_col,
         "snapshot_id": summary["snapshot_id"],
         "retired_dirs": old_dirs,
         "encoded_parts": summary["encoded_parts"],
-        "materialized_deletes": len(deletes),
+        "materialized_deletes": len(view.deletes),
     }
 
 
@@ -1282,8 +1125,8 @@ def drop_ref(out_dir: str, name: str) -> None:
 def _wap_state(out_dir: str, snapshot_or_ref: str) -> tuple[str, str]:
     """Resolve to a snapshot id and classify its WAP state:
     'unstaged' | 'staged' | 'published' | 'aborted'."""
-    sid = resolve_as_of(out_dir, snapshot_or_ref)
     entries = Manifest(out_dir).read_indexed()
+    sid = refs_of(entries).get(snapshot_or_ref, snapshot_or_ref)
     hdr = next((e for e in entries if e.get("kind") == "snapshot"
                 and e.get("snapshot_id") == sid), None)
     if hdr is None:
@@ -1348,8 +1191,8 @@ def rollback(out_dir: str, snapshot_or_ref: str) -> dict:
     checkpoint was itself undone gets a loud off-lineage error (the
     changelog cannot express un-inserts) and must reset to a snapshot
     at or before the rollback target."""
-    sid = resolve_as_of(out_dir, snapshot_or_ref)
     entries = Manifest(out_dir).read_indexed()
+    sid = refs_of(entries).get(snapshot_or_ref, snapshot_or_ref)
     st = _branch_replay(entries)
     if sid in st.staged_parent:
         raise ValueError(
@@ -1409,10 +1252,10 @@ def read_changes(
     entries (a strict changelog, not a net diff) — consumers fold by
     (key, max _commit_seq) when they want net state. Window bounds
     also accept NAMED REFS (:func:`create_ref`)."""
-    since_snapshot = resolve_as_of(out_dir, since_snapshot)
-    to_snapshot = resolve_as_of(out_dir, to_snapshot)
-    m = Manifest(out_dir)
-    entries = m.read()
+    entries = Manifest(out_dir).read()
+    refs = refs_of(entries)
+    since_snapshot = refs.get(since_snapshot, since_snapshot)
+    to_snapshot = refs.get(to_snapshot, to_snapshot)
     bstate = _branch_replay(entries)  # main branch only: a WAP-staged
     # snapshot enters the changelog at its PUBLISH position
     snaps = bstate.chain
@@ -1475,7 +1318,7 @@ def read_changes(
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn("_commit_seq",
                             F.lit(seq_of[s]).cast("int")))
-    bcast_max = _delete_max_keys()
+    bcast_max = SMALL_DELETE_MAX_KEYS
     for e in entries:
         if e.get("kind") != "delete" or e.get("snapshot_id") not in seq_of:
             continue
@@ -1517,58 +1360,16 @@ def read_changes(
     return out
 
 
-def _evolution_null_parts(
-    out_dir: str,
-    wanted_cols: set[str],
-    part_ids: list[int] | None = None,
-    as_of: str | None = None,
-) -> list[tuple[int, int]]:
-    """(part_id, n_rows) for committed parts that have NONE of the
-    projected columns — an all-post-evolution projection over parts
-    encoded before the add-column. Their block files contain no
-    matching ``column`` rows, so the scan-side projection filter would
-    silently drop them; the manifest's per-column ``n_values`` carries
-    the row count so decode can emit the all-null rows instead (Iceberg
-    add-column read semantics, no row loss).
-
-    Runs off the CHUNK INDEX when available — chunk lines carry the
-    column union + per-part row counts — so the per-decode driver cost
-    stays O(chunks) like the listing; only pre-index manifests (or
-    chunk lines predating the columns field) pay the full O(parts)
-    read."""
-    m = Manifest(out_dir)
-    index_entries, covered = m.read_index()
-    if all("columns" in e for e in index_entries if e.get("kind") == "chunk"):
-        entries = index_entries + m.read_tail(covered)
-    else:  # pre-upgrade chunk lines: full read for correctness
-        entries = m.read()
-    wanted_p = {int(p) for p in part_ids} if part_ids is not None else None
-    # parts a purge RETIRED are gone from the view — their rows live
-    # under the purge's own new parts; compacted parts stay (rows moved)
-    out: list[tuple[int, int]] = []
-    for parts in live_parts(entries, as_of).values():
-        for pid, e in parts.items():
-            if wanted_p is not None and pid not in wanted_p:
-                continue
-            if not e.get("columns") or wanted_cols.intersection(e["columns"]):
-                continue  # normal decode path covers this part
-            n = part_rows(e, pid)
-            if n > 0:
-                out.append((pid, n))
-    return out
-
-
 def _resolved_deletes(
-    out_dir: str, schema: pa.Schema, as_of: str | None,
-    column_map: dict[str, str] | None,
+    view: ReadView, schema: pa.Schema, column_map: dict[str, str] | None,
 ) -> list[tuple[str, str, str, int, int]]:
     """(abs delete file, file key column, output key column, commit
-    seq, n_keys) for every delete visible at ``as_of``, after the two
-    loud checks: the file must still exist and the projection must
-    include its key."""
+    seq, n_keys) for every delete ``view`` applies, after the two loud
+    checks: the file must still exist and the projection must include
+    its key."""
     names = {f.name for f in schema}
     out = []
-    for dfile, dkey, n_keys, dseq in _accepted_deletes(out_dir, as_of):
+    for dfile, dkey, n_keys, dseq in view.deletes:
         # a delete written before a RENAME tombstones under the old
         # name: its file column stays dkey, the decoded frame carries
         # the logical name
@@ -1579,7 +1380,7 @@ def _resolved_deletes(
             # error the missing-chunk-dir case raises, not a raw
             # path-not-found
             raise ValueError(
-                f"time travel to {as_of!r} needs delete file "
+                f"time travel to {view.as_of!r} needs delete file "
                 f"{os.path.basename(dfile)!r}, which was removed "
                 "(vacuumed/expired)"
             )
@@ -1711,21 +1512,20 @@ def _drop_tombstoned(out: pa.Table, tombs: list,
 def _apply_evolution_and_deletes(
     spark: SparkSession,
     result: DataFrame,
-    out_dir: str,
+    view: ReadView,
     schema: pa.Schema,
     wanted_cols: set[str],
     part_ids,
-    as_of,
     deletes: list[tuple[str, str, str, int, int]] | None,
     column_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """Shared decode tail: union schema-evolution null rows, then apply
     the equality deletes the decode tasks leave out — those past
-    ``_delete_max_keys()``. ``deletes`` is :func:`_resolved_deletes`'
+    ``SMALL_DELETE_MAX_KEYS``. ``deletes`` is :func:`_resolved_deletes`'
     list, or None for a fully-pruned listing. One definition for both
     the normal and the fully-pruned-listing paths, so their semantics
     cannot drift."""
-    evo = _evolution_null_parts(out_dir, wanted_cols, part_ids, as_of)
+    evo = view.evolution_nulls(wanted_cols, part_ids)
     for pid, n in evo:
         nulls = spark.range(n).select(
             *[
@@ -1743,15 +1543,14 @@ def _apply_evolution_and_deletes(
             return result
         # the only rows are evolution nulls, whose null keys match no
         # tombstone: validate, and join only past the task limit
-        deletes = _resolved_deletes(out_dir, schema, as_of, column_map)
-    # Tombstone lists up to _delete_max_keys() were applied inside the
+        deletes = _resolved_deletes(view, schema, column_map)
+    # Tombstone lists up to SMALL_DELETE_MAX_KEYS were applied inside the
     # decode tasks. A GDPR-scale purge wave (10^8+ keys) would not fit
     # a task, so past the limit the anti-join runs as a SHUFFLE_HASH
     # join (the key count is in the manifest entry — decided without
     # scanning the delete file); purge_deletes remains the way to stop
     # paying it entirely.
-    max_keys = _delete_max_keys()
-    deletes = [d for d in deletes if d[4] > max_keys]
+    deletes = [d for d in deletes if d[4] > SMALL_DELETE_MAX_KEYS]
     if not deletes:
         return result
     # SEQUENCE SCOPING (Iceberg delete ordering): a delete applies only
@@ -1759,7 +1558,7 @@ def _apply_evolution_and_deletes(
     # snapshot, so keys re-ingested after it survive. When no part
     # postdates a pending delete (manifest metadata alone tells), the
     # key-only anti-join needs no (part_id, seq) join.
-    part_seq = _part_seq_map(out_dir, as_of)
+    part_seq = view.part_seq
     min_dseq = min(d[3] for d in deletes)
     scoped = any(s >= min_dseq for s in part_seq.values())
     orig_cols = result.columns
@@ -1849,8 +1648,29 @@ def decode_blocks(
     :func:`_committed_block_files`). All pruning is block-granular and
     over-inclusive only — callers apply the exact row predicate on the
     decoded frame. ``as_of`` also accepts a NAMED REF (branch/tag,
-    :func:`create_ref`), resolved to its snapshot here."""
-    as_of = resolve_as_of(out_dir, as_of)
+    :func:`create_ref`), resolved to its snapshot here.
+
+    The whole plan — listing, deletes and their sequence scoping,
+    evolution null rows — comes from ONE manifest read
+    (:class:`~.manifest.ReadView`), so a commit landing mid-plan (a
+    purge clearing the deletes of the dirs just listed) can never mix
+    two manifest states into one read."""
+    return _decode_view(spark, ReadView.read(out_dir, as_of), schema,
+                        part_ids, key_range, key_range_s, key_point,
+                        column_map)
+
+
+def _decode_view(
+    spark: SparkSession,
+    view: ReadView,
+    schema: pa.Schema,
+    part_ids: list[int] | None = None,
+    key_range: tuple[int, int] | None = None,
+    key_range_s: tuple[str, str] | None = None,
+    key_point=None,
+    column_map: dict[str, str] | None = None,
+) -> DataFrame:
+    """:func:`decode_blocks` of the manifest state ``view`` holds."""
     probe_hash = probe_domain = None
     if key_point is not None:
         from . import bloom as bloom_mod
@@ -1866,7 +1686,7 @@ def decode_blocks(
     krange0 = (
         (int(key_range[0]), int(key_range[1])) if key_range is not None else None
     )
-    files = _committed_block_files(out_dir, part_ids, krange0, key_range_s, as_of)
+    files = view.files(part_ids, krange0, key_range_s)
     out_fields = ", ".join(
         f"`{f.name}` {_spark_type_of(f.type)}" for f in schema
     )
@@ -1877,24 +1697,23 @@ def decode_blocks(
         # a fully-pruned listing must still honor schema evolution and
         # deletes — the same shared tail as the main path
         return _apply_evolution_and_deletes(
-            spark, spark.createDataFrame([], ddl), out_dir, schema,
-            wanted_cols_set, part_ids, as_of, None, column_map,
+            spark, spark.createDataFrame([], ddl), view, schema,
+            wanted_cols_set, part_ids, None, column_map,
         )
-    # EQUALITY DELETES (merge-on-read) up to _delete_max_keys() keys are
+    # EQUALITY DELETES (merge-on-read) up to SMALL_DELETE_MAX_KEYS keys are
     # applied inside the decode tasks, so the plan gains no join: the
     # driver resolves each delete's file, key and sequence number, and
     # every task reads the delete files once and masks each decoded
     # group. Time travel to a snapshot before a delete never sees it
-    # (_accepted_deletes filters by as_of).
-    deletes = _resolved_deletes(out_dir, schema, as_of, column_map)
-    max_keys = _delete_max_keys()
+    # (ReadView.deletes filters by as_of).
+    deletes = _resolved_deletes(view, schema, column_map)
     tombs = [
         (dfile, dkey, res_key, dseq,
          _tombstone_type(dfile, dkey, schema.field(res_key)))
         for dfile, dkey, res_key, dseq, n_keys in deletes
-        if n_keys <= max_keys
+        if n_keys <= SMALL_DELETE_MAX_KEYS
     ]
-    part_seq = _part_seq_map(out_dir, as_of) if tombs else {}
+    part_seq = view.part_seq if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
     krange = (int(key_range[0]), int(key_range[1])) if key_range is not None else None
     krange_s = (str(key_range_s[0]), str(key_range_s[1])) if key_range_s is not None else None
@@ -2081,8 +1900,8 @@ def decode_blocks(
                        "path string")
     result = pdf.mapInArrow(decode_stream, schema=ddl)
     return _apply_evolution_and_deletes(
-        spark, result, out_dir, schema, set(wanted_cols), part_ids,
-        as_of, deletes, column_map,
+        spark, result, view, schema, set(wanted_cols), part_ids,
+        deletes, column_map,
     )
 
 

@@ -13,11 +13,14 @@ leaves only an uncommitted temp dir, which resume removes.
 
 Read side: :meth:`Manifest.read_indexed` returns the index entries plus
 the manifest tail the index does not cover; :func:`branch_replay` turns
-snapshot/publish/rollback entries into branch state; :func:`live_parts`
-replays chunk lines, tail part lines and rewrites into the
-``{chunk_dir: {part_id: line}}`` view a read at a snapshot sees.
-Listing, vacuum pins, the files metadata table and schema-evolution
-nulls are all built on that view.
+snapshot/publish/rollback entries into branch state. A read plan reads
+the manifest ONCE, into a :class:`ReadView`: the resolved ``as_of``,
+the chain and accepted set, the live ``{chunk_dir: {part_id: line}}``
+view (chunk lines, tail part lines and rewrites replayed), the visible
+equality deletes and each visible part's sequence number. Decode's
+listing, delete scoping and evolution nulls, vacuum's pins, purge and
+the files metadata table all take one view, so no plan mixes two
+manifest states.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import cached_property
 
 
 def _read_jsonl(path: str, offset: int = 0,
@@ -506,103 +510,11 @@ def branch_replay(entries: list[dict]) -> BranchState:
     return st
 
 
-def snap_chain(
-    entries: list[dict], as_of: str | None = None,
-) -> tuple[list[str], set[str] | None]:
-    """Main-branch snapshot CHAIN (commit order) and the accepted set
-    for a read, WAP-aware (Iceberg write-audit-publish).
-
-    A normal snapshot joins the chain at its header; a WAP-STAGED
-    snapshot (header ``staged: true``) joins at its ``publish`` entry
-    — the Iceberg cherry-pick ordering — so time travel to snapshots
-    committed between stage and publish never sees the staged rows.
-    Aborted staged snapshots never join.
-
-    Returns ``(chain, accepted)``:
-
-    - ``chain``: ordered main-branch snapshot ids; a part/delete's
-      Iceberg sequence number is its snapshot's index here.
-    - ``accepted``: snapshot ids whose data entries a read at
-      ``as_of`` may see, or None = "everything in the manifest" (the
-      zero-overhead fast path, only when nothing is staged and no
-      ``as_of``). ``as_of`` may also name an UNPUBLISHED staged
-      snapshot — the AUDIT read: the main chain as of the stage point
-      plus the staged snapshot itself.
-    """
-    st = branch_replay(entries)
-    if as_of is None:
-        dirty = st.staged_parent or st.aborted or st.has_rollback
-        accepted = set(st.visible()) if dirty else None
-        return st.chain, accepted
-    if as_of in st.staged_parent:  # audit read: unpublished staged snap
-        return st.chain, set(st.vis_at(st.staged_parent[as_of])) | {as_of}
-    if as_of in st.aborted:
-        raise ValueError(
-            f"snapshot {as_of!r} was a WAP-staged snapshot that was "
-            "aborted — its data never joined the table")
-    if as_of not in st.parent:
-        raise ValueError(f"unknown snapshot id for time travel: {as_of!r}")
-    return st.chain, set(st.vis_at(as_of))
-
-
-def live_parts(
-    entries: list[dict], as_of: str | None = None,
-) -> dict[str, dict[int, dict]]:
-    """``{chunk_dir: {part_id: line}}`` a read at snapshot ``as_of``
-    (None = HEAD) sees, from index or manifest ``entries``. ``line`` is
-    the chunk index line or manifest part line that committed the part:
-    it carries the snapshot id, the zone bounds (``key_lo`` …
-    ``key_hi_s``) and the columns — a chunk line's are aggregated over
-    its parts — and :func:`part_rows` reads the part's row count from it.
-
-    Chunk lines and done part lines of accepted snapshots come first
-    (the first line naming a (dir, part) wins — a healed and a regular
-    summary line may both name it), then accepted rewrites in commit
-    order: a compaction moves its replaced dirs' parts under
-    ``new_chunk``; a purge retire (``new_chunk=None``) drops them, since
-    the purge's own parts carry the rows. Dict order is first
-    appearance."""
-    _chain, accepted = snap_chain(entries, as_of)
-    view: dict[str, dict[int, dict]] = {}
-    rewrites: list[dict] = []
-    for e in entries:
-        if accepted is not None and e.get("snapshot_id") not in accepted:
-            continue
-        kind, cdir = e.get("kind"), e.get("chunk_dir")
-        if kind == "chunk" and cdir:
-            parts = view.setdefault(cdir, {})
-            for p in e.get("parts", ()):
-                parts.setdefault(int(p), e)
-        elif (kind == "part" and e.get("status") == "done" and cdir
-                and e.get("part_id") is not None):
-            view.setdefault(cdir, {}).setdefault(int(e["part_id"]), e)
-        elif kind == "rewrite":
-            rewrites.append(e)
-    for rw in rewrites:
-        moved: dict[int, dict] = {}
-        for d in rw.get("replaces", ()):
-            moved.update(view.pop(d, {}))
-        if moved and rw.get("new_chunk"):
-            view.setdefault(rw["new_chunk"], {}).update(moved)
-    return view
-
-
-def part_rows(line: dict, part_id: int) -> int:
-    """Row count of ``part_id`` from the :func:`live_parts` line that
-    committed it, or -1 when the line does not record it."""
-    if line.get("kind") == "chunk":
-        return int((line.get("part_rows") or {}).get(str(part_id), -1))
-    for c in (line.get("columns") or {}).values():
-        if isinstance(c, dict) and c.get("n_values") is not None:
-            return int(c["n_values"])
-    return -1
-
-
-def list_refs(out_dir: str) -> dict[str, str]:
-    """Named refs (Iceberg branch/tag analogue): last entry per name
-    wins; dropped refs (snapshot_id None) disappear."""
+def refs_of(entries: list[dict]) -> dict[str, str]:
+    """Named refs (Iceberg branch/tag analogue) in ``entries``: last
+    entry per name wins; dropped refs (snapshot_id None) disappear."""
     refs: dict[str, str] = {}
-    for e in Manifest(out_dir).read_indexed():
+    for e in entries:
         if e.get("kind") == "ref":
             if e.get("snapshot_id") is None:
                 refs.pop(e["name"], None)
@@ -611,9 +523,276 @@ def list_refs(out_dir: str) -> dict[str, str]:
     return refs
 
 
-def resolve_as_of(out_dir: str, as_of: str | None) -> str | None:
-    """Translate a ref name to its snapshot id; snapshot ids (and
-    None) pass through."""
-    if as_of is None:
-        return None
-    return list_refs(out_dir).get(as_of, as_of)
+def list_refs(out_dir: str) -> dict[str, str]:
+    return refs_of(Manifest(out_dir).read_indexed())
+
+
+class ReadView:
+    """One manifest state and everything a read at ``as_of`` needs
+    from it: the resolved snapshot, the branch chain and accepted set,
+    the live parts, the visible equality deletes and each visible
+    part's sequence number. A plan that takes all of them from one
+    view cannot list the block files of one state and apply the
+    deletes of another (a purge committed mid-plan would otherwise
+    bring deleted rows back).
+
+    :meth:`read` is the one place a read plan touches the manifest;
+    :meth:`at` views the same state at another snapshot. Everything
+    derived is computed on first use.
+
+    ``as_of`` is a snapshot id or a ref name (None = HEAD). A WAP-STAGED
+    snapshot joins the chain at its ``publish`` entry (Iceberg
+    cherry-pick ordering), so time travel to snapshots committed between
+    stage and publish never sees the staged rows; ``as_of`` may also
+    name an UNPUBLISHED staged snapshot — the AUDIT read: the main chain
+    as of the stage point plus the staged snapshot itself."""
+
+    def __init__(self, out_dir: str, entries: list[dict],
+                 as_of: str | None = None,
+                 branch: BranchState | None = None,
+                 refs: dict[str, str] | None = None) -> None:
+        self.out_dir = out_dir
+        self.entries = entries
+        self.branch = branch_replay(entries) if branch is None else branch
+        self.refs = refs_of(entries) if refs is None else refs
+        self.as_of = None if as_of is None else self.refs.get(as_of, as_of)
+
+    @classmethod
+    def read(cls, out_dir: str, as_of: str | None = None) -> ReadView:
+        """The view over the chunk index plus the manifest tail it does
+        not cover (O(chunks)), or over the full manifest when a chunk
+        line predates the ``columns`` field that evolution nulls need."""
+        m = Manifest(out_dir)
+        entries = m.read_indexed()
+        if any(e.get("kind") == "chunk" and "columns" not in e
+               for e in entries):
+            entries = m.read()
+        return cls(out_dir, entries, as_of)
+
+    def at(self, as_of: str | None) -> ReadView:
+        """The same manifest state, read at ``as_of``."""
+        return ReadView(self.out_dir, self.entries, as_of, self.branch,
+                        self.refs)
+
+    @property
+    def chain(self) -> list[str]:
+        """Full main-branch commit order: a part/delete's Iceberg
+        sequence number is its snapshot's index here."""
+        return self.branch.chain
+
+    @cached_property
+    def accepted(self) -> set[str] | None:
+        """Snapshot ids whose data entries this read sees, or None =
+        everything in the manifest (only at HEAD with nothing staged,
+        aborted or rolled back)."""
+        st, as_of = self.branch, self.as_of
+        if as_of is None:
+            dirty = st.staged_parent or st.aborted or st.has_rollback
+            return set(st.visible()) if dirty else None
+        if as_of in st.staged_parent:  # audit read
+            return set(st.vis_at(st.staged_parent[as_of])) | {as_of}
+        if as_of in st.aborted:
+            raise ValueError(
+                f"snapshot {as_of!r} was a WAP-staged snapshot that was "
+                "aborted — its data never joined the table")
+        if as_of not in st.parent:
+            raise ValueError(f"unknown snapshot id for time travel: {as_of!r}")
+        return set(st.vis_at(as_of))
+
+    @cached_property
+    def seq_of(self) -> dict[str, int]:
+        return {s: i for i, s in enumerate(self.chain)}
+
+    def _visible(self, e: dict) -> bool:
+        return self.accepted is None or e.get("snapshot_id") in self.accepted
+
+    @cached_property
+    def parts(self) -> dict[str, dict[int, dict]]:
+        """``{chunk_dir: {part_id: line}}`` this read sees. ``line`` is
+        the chunk index line or manifest part line that committed the
+        part: it carries the snapshot id, the zone bounds (``key_lo`` …
+        ``key_hi_s``) and the columns — a chunk line's are aggregated
+        over its parts — and :func:`part_rows` reads the part's row
+        count from it.
+
+        Chunk lines and done part lines of accepted snapshots come
+        first (the first line naming a (dir, part) wins — a healed and a
+        regular summary line may both name it), then accepted rewrites
+        in commit order: a compaction moves its replaced dirs' parts
+        under ``new_chunk``; a purge retire (``new_chunk=None``) drops
+        them, since the purge's own parts carry the rows. Dict order is
+        first appearance."""
+        view: dict[str, dict[int, dict]] = {}
+        rewrites: list[dict] = []
+        for e in self.entries:
+            if not self._visible(e):
+                continue
+            kind, cdir = e.get("kind"), e.get("chunk_dir")
+            if kind == "chunk" and cdir:
+                parts = view.setdefault(cdir, {})
+                for p in e.get("parts", ()):
+                    parts.setdefault(int(p), e)
+            elif (kind == "part" and e.get("status") == "done" and cdir
+                    and e.get("part_id") is not None):
+                view.setdefault(cdir, {}).setdefault(int(e["part_id"]), e)
+            elif kind == "rewrite":
+                rewrites.append(e)
+        for rw in rewrites:
+            moved: dict[int, dict] = {}
+            for d in rw.get("replaces", ()):
+                moved.update(view.pop(d, {}))
+            if moved and rw.get("new_chunk"):
+                view.setdefault(rw["new_chunk"], {}).update(moved)
+        return view
+
+    @cached_property
+    def deletes(self) -> list[tuple[str, str, int, int]]:
+        """(abs delete file, key_col, n_keys, commit_seq) of the
+        equality deletes this read applies: those of accepted snapshots
+        that no accepted ``delete_clear`` names (a purge materialized
+        them; time travel before the purge still applies them). n_keys
+        comes from the manifest entry — no file scan. commit_seq is the
+        Iceberg sequence number the delete is scoped by: it applies only
+        to parts with a smaller one."""
+        cleared: set[str] = set()
+        for e in self.entries:
+            if e.get("kind") == "delete_clear" and self._visible(e):
+                cleared.update(e.get("files", ()))
+        return [
+            (os.path.join(self.out_dir, e["file"]), e["key_col"],
+             int(e.get("n", 0)), self.seq_of.get(e.get("snapshot_id"), 0))
+            for e in self.entries
+            if e.get("kind") == "delete" and self._visible(e)
+            and e["file"] not in cleared
+        ]
+
+    @cached_property
+    def part_seq(self) -> dict[int, int]:
+        """Visible part_id -> its committing snapshot's Iceberg sequence
+        number. Compaction keeps a part's ORIGINAL seq (rewrites add no
+        part entries), so delete applicability never changes across
+        storage maintenance; purge re-encodes under fresh part ids at
+        the purge snapshot's seq. A WAP-staged snapshot's parts take the
+        PUBLISH position; during an AUDIT read they take the seq they
+        would receive if published now — the end of the full chain,
+        above every visible part and delete, so pre-stage tombstones
+        never erase freshly staged rows. (Not len(accepted)-1: after a
+        rollback, visible commits can hold chain positions far beyond
+        the visible COUNT.)"""
+        seq_of = self.seq_of
+        if self.as_of in self.branch.staged_parent:
+            seq_of = {**seq_of, self.as_of: len(self.chain)}
+        return {
+            pid: seq_of[e["snapshot_id"]]
+            for parts in self.parts.values() for pid, e in parts.items()
+            if e.get("snapshot_id") in seq_of
+        }
+
+    def evolution_nulls(
+        self, wanted_cols: set[str], part_ids: list[int] | None = None,
+    ) -> list[tuple[int, int]]:
+        """(part_id, n_rows) for visible parts that have NONE of the
+        projected columns — an all-post-evolution projection over parts
+        encoded before the add-column. Their block files contain no
+        matching ``column`` rows, so the scan-side projection filter
+        would silently drop them; the manifest's per-column
+        ``n_values`` carries the row count so decode can emit the
+        all-null rows instead (Iceberg add-column read semantics, no
+        row loss). Parts a purge retired are gone from the view — their
+        rows live under the purge's own new parts."""
+        wanted_p = {int(p) for p in part_ids} if part_ids is not None else None
+        out: list[tuple[int, int]] = []
+        for parts in self.parts.values():
+            for pid, e in parts.items():
+                if wanted_p is not None and pid not in wanted_p:
+                    continue
+                if not e.get("columns") or wanted_cols.intersection(e["columns"]):
+                    continue  # normal decode path covers this part
+                n = part_rows(e, pid)
+                if n > 0:
+                    out.append((pid, n))
+        return out
+
+    def files(
+        self,
+        part_ids: list[int] | None = None,
+        key_range: tuple[int, int] | None = None,
+        key_range_s: tuple[str, str] | None = None,
+    ) -> list[str]:
+        """Block parquet files of the visible chunk dirs. A part-id
+        filter drops whole chunk dirs before listing; a key_range (int
+        sort keys) or key_range_s (string sort keys) drops parts whose
+        MANIFEST-level zone map doesn't overlap — the Iceberg-manifest
+        data-skipping layer above the per-block zone maps (parts without
+        a recorded zone map are always kept). Off the chunk index, key
+        pruning is chunk-granular (a key gap inside a kept chunk
+        over-includes), but the per-block zone maps inside each file
+        still prune those reads — over-inclusive only, never loss.
+        Hidden paths (``_``/``.`` prefixes: Spark ``_temporary`` task
+        dirs, ``_PARTS`` markers) are excluded as defense-in-depth even
+        inside committed dirs."""
+        blocks_root = os.path.join(self.out_dir, "blocks")
+        wanted = {int(p) for p in part_ids} if part_ids is not None else None
+
+        def _kept(pid: int, e: dict) -> bool:
+            if wanted is not None and pid not in wanted:
+                return False
+            if key_range is not None and e.get("key_lo") is not None:
+                if e["key_hi"] < key_range[0] or e["key_lo"] > key_range[1]:
+                    return False  # wholly out of range
+            if key_range_s is not None and e.get("key_lo_s") is not None:
+                if (e["key_hi_s"] < key_range_s[0]
+                        or e["key_lo_s"] > key_range_s[1]):
+                    return False  # wholly out of string range
+            return True
+
+        files: list[str] = []
+        for d, parts in sorted(self.parts.items()):
+            if not any(_kept(p, e) for p, e in parts.items()):
+                continue
+            full = os.path.join(blocks_root, d)
+            if not os.path.isdir(full):
+                if self.as_of is not None:
+                    # time travel must fail loudly when its snapshot's
+                    # files were vacuumed — silence would be row loss
+                    raise ValueError(
+                        f"time travel to {self.as_of!r} needs chunk dir "
+                        f"{d!r}, which was removed (vacuumed/expired)"
+                    )
+                continue  # chunk pruned by a later resume sweep
+            marker = os.path.join(full, "_FILES")
+            if os.path.exists(marker):
+                # chunk committed by the task-side writer: the marker IS
+                # the committed file set (write-unique/commit-by-list),
+                # so a zombie task attempt's leftover file can never be
+                # read. A listed-but-missing file is corruption — fail
+                # loudly, silence would be silent row loss.
+                with open(marker) as fh:
+                    names = [x.strip() for x in fh.read().splitlines()
+                             if x.strip()]
+                for f in names:
+                    p = os.path.join(full, f)
+                    if not os.path.isfile(p):
+                        raise ValueError(
+                            f"chunk dir {d!r} commit list names {f!r}, "
+                            "which is missing on disk (partial vacuum or "
+                            "external deletion?)")
+                    files.append(p)
+                continue
+            for root, dirs, fs in os.walk(full):
+                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+                for f in fs:
+                    if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                        files.append(os.path.join(root, f))
+        return sorted(files)
+
+
+def part_rows(line: dict, part_id: int) -> int:
+    """Row count of ``part_id`` from the :attr:`ReadView.parts` line
+    that committed it, or -1 when the line does not record it."""
+    if line.get("kind") == "chunk":
+        return int((line.get("part_rows") or {}).get(str(part_id), -1))
+    for c in (line.get("columns") or {}).values():
+        if isinstance(c, dict) and c.get("n_values") is not None:
+            return int(c["n_values"])
+    return -1

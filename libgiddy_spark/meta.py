@@ -4,9 +4,9 @@ lakehouse user expects for debugging, auditing and operational
 tooling.
 
 snapshots/history read the FULL manifest (the slim index headers drop
-timestamps and part counts); files flattens the manifest's live view
-(:func:`manifest.live_parts` over the O(chunks) summary index), the
-same view decode lists its block files from. Metadata-scale driver
+timestamps and part counts); files flattens the live parts of a
+:class:`manifest.ReadView` over the O(chunks) summary index, the same
+view decode lists its block files from. Metadata-scale driver
 parsing either way, exactly like Iceberg's own metadata tables walk
 manifest lists, never the data files — and every table returns an
 ordinary DataFrame so it composes with any query.
@@ -16,14 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import (
-    Manifest,
-    branch_replay,
-    list_refs,
-    live_parts,
-    part_rows,
-    resolve_as_of,
-)
+from .manifest import Manifest, ReadView, branch_replay, list_refs, part_rows
 
 __all__ = [
     "file_rows", "files_df", "history_df", "history_rows",
@@ -138,8 +131,7 @@ def refs_df(spark: SparkSession, out_dir: str) -> DataFrame:
 def file_rows(out_dir: str, as_of: str | None = None) -> list[tuple]:
     """Driver-side rows for :func:`files_df`: the manifest's live view
     at ``as_of`` flattened to one tuple per (chunk, part)."""
-    view = live_parts(Manifest(out_dir).read_indexed(),
-                      resolve_as_of(out_dir, as_of))
+    view = ReadView.read(out_dir, as_of).parts
     return [
         (e.get("snapshot_id"), d, pid, part_rows(e, pid), e.get("key_lo"),
          e.get("key_hi"), e.get("key_lo_s"), e.get("key_hi_s"))

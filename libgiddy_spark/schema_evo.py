@@ -27,7 +27,7 @@ import time
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifest import Manifest, resolve_as_of
+from .manifest import Manifest, ReadView
 
 __all__ = ["evolve_schema", "read_table", "table_schema"]
 
@@ -60,10 +60,10 @@ def _resolve_line(out_dir: str, as_of: str | None) -> dict | None:
     the last one written before the snapshot joined the branch (its
     header, or its publish entry for WAP snapshots; an unpublished
     staged snapshot audits under its stage header's schema)."""
-    as_of = resolve_as_of(out_dir, as_of)
-    entries = Manifest(out_dir).read_indexed()
+    view = ReadView.read(out_dir, as_of)
+    as_of = view.as_of
     last: dict | None = None
-    for e in entries:
+    for e in view.entries:
         k = e.get("kind")
         if k == "schema":
             last = e

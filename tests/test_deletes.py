@@ -10,6 +10,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from libgiddy_spark import engine
 from libgiddy_spark.engine import (
     decode_blocks,
     delete_rows,
@@ -59,32 +60,30 @@ def test_delete_on_unprojected_key_raises(spark, tmp_path):
         decode_blocks(spark, out, proj).count()
 
 
-def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path):
-    """Past LGS_SMALL_DELETE_MAX_KEYS the tombstone anti-join must
+def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path,
+                                                  monkeypatch):
+    """Past SMALL_DELETE_MAX_KEYS the tombstone anti-join must
     NOT broadcast (a GDPR-scale purge wave would OOM the driver and
     every executor) — the plan shifts to a shuffled hash anti-join,
     rows stay exact (VERDICT r4 #3)."""
     src, out, schema = _encode_docs(spark, tmp_path)
     gone = [3, 77, 200, 404]
     delete_rows(out, "doc_id", gone)
-    os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "2"
-    try:
-        dec = decode_blocks(spark, out, schema)
-        plan = dec._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan, plan
-        assert dec.count() == 500 - len(gone)
-        assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
-        srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
-        assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
-        # below the threshold the decode tasks apply the tombstones
-        # themselves: no join and no exchange at all
-        os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "1000000"
-        plan_small = decode_blocks(spark, out, schema)._jdf \
-            .queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan_small, plan_small
-        assert "Join" not in plan_small, plan_small
-    finally:
-        del os.environ["LGS_SMALL_DELETE_MAX_KEYS"]
+    monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 2)
+    dec = decode_blocks(spark, out, schema)
+    plan = dec._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    assert dec.count() == 500 - len(gone)
+    assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
+    srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
+    assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
+    # below the threshold the decode tasks apply the tombstones
+    # themselves: no join and no exchange at all
+    monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 1000000)
+    plan_small = decode_blocks(spark, out, schema)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan_small, plan_small
+    assert "Join" not in plan_small, plan_small
 
 
 def test_purge_materializes_and_vacuum_expires(spark, tmp_path):
@@ -264,33 +263,28 @@ def _rows(df):
 def _via_join(spark, out, schema):
     """The same decode with every tombstone list past the in-task limit,
     so the shuffled anti-join applies them all."""
-    os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "0"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "SMALL_DELETE_MAX_KEYS", 0)
         return _rows(decode_blocks(spark, out, schema))
-    finally:
-        del os.environ["LGS_SMALL_DELETE_MAX_KEYS"]
 
 
-def test_mixed_threshold_deletes_exact_rows(spark, tmp_path):
-    """One delete above LGS_SMALL_DELETE_MAX_KEYS (shuffled
+def test_mixed_threshold_deletes_exact_rows(spark, tmp_path, monkeypatch):
+    """One delete above SMALL_DELETE_MAX_KEYS (shuffled
     anti-join) and one below it (applied in the decode task) together
     remove exactly their keys."""
     src, out, schema = _encode_docs(spark, tmp_path)
     big, small = [3, 77, 200, 404], [5, 17]
     delete_rows(out, "doc_id", big)
     delete_rows(out, "doc_id", small)
-    os.environ["LGS_SMALL_DELETE_MAX_KEYS"] = "3"
-    try:
-        dec = decode_blocks(spark, out, schema)
-        plan = dec._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Join") == 1, plan  # the big delete only
-        gone = big + small
-        assert dec.count() == 500 - len(gone)
-        assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
-        srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
-        assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
-    finally:
-        del os.environ["LGS_SMALL_DELETE_MAX_KEYS"]
+    monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 3)
+    dec = decode_blocks(spark, out, schema)
+    plan = dec._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Join") == 1, plan  # the big delete only
+    gone = big + small
+    assert dec.count() == 500 - len(gone)
+    assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
+    srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
+    assert verify_roundtrip(srcdf, dec, "doc_id")["ok"]
 
 
 def test_null_tombstone_keeps_null_key_rows(spark, tmp_path):

@@ -1,15 +1,22 @@
 """Model-based check that the manifest's read-side consumers agree on
 what a read at snapshot S sees, over random manifest histories:
 snapshots, chunk commits, crash-orphaned part lines (manifest append
-with no index line) healed by a later commit, compaction rewrites, a
-purge's retire txn, WAP stage/publish/abort and rollbacks.
+with no index line) healed by a later commit, compaction rewrites,
+equality deletes, a purge's retire txn with its delete clear, WAP
+stage/publish/abort and rollbacks.
 
 At HEAD and at every snapshot id:
 
 - the chunk dirs listed by ``_committed_block_files`` and by
   ``meta.file_rows`` are the same, and so are the part ids per dir;
-- ``_evolution_null_parts`` returns exactly the visible parts whose
+- ``ReadView.evolution_nulls`` returns exactly the visible parts whose
   column set misses the projection;
+- ``ReadView.deletes`` are the model's: a delete is visible iff its
+  snapshot is accepted and no accepted clear names its file, and its
+  seq is its snapshot's chain index;
+- ``ReadView.part_seq`` maps each visible part to its committing
+  snapshot's chain index, or to ``len(chain)`` for an unpublished
+  staged snapshot under audit;
 - every result, key-range pruning included, is the same after the
   chunk index (``manifest.chunks.jsonl``) is deleted.
 
@@ -29,12 +36,8 @@ import tempfile
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from libgiddy_spark.engine import (
-    _branch_replay,
-    _committed_block_files,
-    _evolution_null_parts,
-)
-from libgiddy_spark.manifest import Manifest
+from libgiddy_spark.engine import _branch_replay, _committed_block_files
+from libgiddy_spark.manifest import Manifest, ReadView
 from libgiddy_spark.meta import file_rows
 
 COLS = ("a", "b", "c")
@@ -44,7 +47,8 @@ KEY_PROBES = ((0, 5), (30, 45), (100, 160), (400, 10_000))
 
 class History:
     """Writes one manifest history op by op and remembers what the
-    checks need: header ids in write order and each part's columns."""
+    checks need: header ids in write order, each part's columns and
+    committing snapshot, and the delete and clear entries."""
 
     def __init__(self, out: str):
         self.out = out
@@ -53,6 +57,9 @@ class History:
         self.staged_open: list[str] = []
         self.aborted: set[str] = set()
         self.cols_of: dict[int, frozenset] = {}
+        self.snap_of: dict[int, str] = {}
+        self.deletes: list[tuple[str, str]] = []        # (file, snapshot)
+        self.clears: list[tuple[str, list[str]]] = []   # (snapshot, files)
         self.next_pid = 0
         self.next_dir = 0
         self.next_key = 0
@@ -66,12 +73,13 @@ class History:
             f.write(b"PAR1")
         return name
 
-    def _parts(self, cdir: str, rows: list[int], cols: frozenset,
+    def _parts(self, sid: str, cdir: str, rows: list[int], cols: frozenset,
                zoned: bool) -> list[dict]:
         out = []
         for n in rows:
             pid = self.next_pid
             self.next_pid += 1
+            self.snap_of[pid] = sid
             e = {"part_id": pid, "chunk_dir": cdir, "columns": {}}
             if n:
                 e["columns"] = {c: {"codec": "raw", "n_values": n}
@@ -95,6 +103,12 @@ class History:
                 .split(os.sep)[0] for f in _committed_block_files(self.out)}
         return vis[-1], sorted(dirs)
 
+    def _new_snap(self) -> str:
+        sid = f"s{len(self.snaps):02d}"
+        self.snaps.append(sid)
+        self.m.write_snapshot_header(sid, "src", [], 0)
+        return sid
+
     def apply(self, op: tuple) -> None:
         kind = op[0]
         if kind == "snap":
@@ -108,7 +122,7 @@ class History:
             if not self.snaps or self.snaps[-1] in self.aborted:
                 return
             sid = self.snaps[-1]
-            parts = self._parts(self._dir("chunk"), rows, cols, zoned)
+            parts = self._parts(sid, self._dir("chunk"), rows, cols, zoned)
             if crash:
                 # the manifest txn landed, its index line did not
                 self.m.append([{"kind": "txn", "ts": 0.0, "entries": [
@@ -123,19 +137,29 @@ class History:
             self.m.append_rewrite(head, self._dir("compact"),
                                   dirs[: op[1]])
         elif kind == "purge":
+            # retire every HEAD dir and clear every HEAD delete in one
+            # txn, as a purge's staged rewrite commits them
             _, rows, cols = op
             head, dirs = self._head()
             if head is None or not dirs:
                 return
-            sid = f"s{len(self.snaps):02d}"
-            self.snaps.append(sid)
-            self.m.write_snapshot_header(sid, "src", [], 0)
-            parts = self._parts(self._dir("chunk"), rows, cols, True)
+            cleared = self.visible_deletes(None)
+            sid = self._new_snap()
+            parts = self._parts(sid, self._dir("chunk"), rows, cols, True)
             self.m.mark_done(sid, parts, status="staged")
-            self.m.commit_txn(
-                [{**e, "status": "done"} for e in parts]
-                + [{"kind": "rewrite", "snapshot_id": sid,
-                    "new_chunk": None, "replaces": dirs, "ts": 0.0}])
+            txn = [{"kind": "rewrite", "snapshot_id": sid,
+                    "new_chunk": None, "replaces": dirs, "ts": 0.0}]
+            if cleared:
+                txn.append({"kind": "delete_clear", "snapshot_id": sid,
+                            "files": sorted(cleared), "ts": 0.0})
+                self.clears.append((sid, cleared))
+            self.m.commit_txn([{**e, "status": "done"} for e in parts] + txn)
+        elif kind == "delete":
+            # its own snapshot, as delete_rows commits it
+            rel = f"deletes/delete-{len(self.deletes):05d}.parquet"
+            sid = self._new_snap()
+            self.m.append_delete(sid, rel, "k", op[1])
+            self.deletes.append((rel, sid))
         elif kind == "publish":
             _, i, abort = op
             if not self.staged_open:
@@ -148,6 +172,24 @@ class History:
             chain = _branch_replay(self.m.read()).chain
             if chain:
                 self.m.append_rollback(chain[op[1] % len(chain)])
+
+    def accepted(self, as_of: str | None) -> set[str]:
+        """Snapshots a read at ``as_of`` sees: HEAD's visible list, an
+        unpublished staged snapshot's stage point plus itself, or the
+        snapshot's own visible list."""
+        bs = _branch_replay(self.m.read())
+        if as_of is None:
+            return set(bs.visible())
+        if as_of in bs.staged_parent:
+            return set(bs.vis_at(bs.staged_parent[as_of])) | {as_of}
+        return set(bs.vis_at(as_of))
+
+    def visible_deletes(self, as_of: str | None) -> list[str]:
+        acc = self.accepted(as_of)
+        cleared = {f for sid, files in self.clears if sid in acc
+                   for f in files}
+        return [f for f, sid in self.deletes
+                if sid in acc and f not in cleared]
 
 
 def build_history(out: str, ops: list[tuple]) -> History:
@@ -170,8 +212,8 @@ def read_views(h: History) -> dict:
             files = _committed_block_files(out, as_of=as_of)
         except ValueError:
             for fn in (lambda: file_rows(out, as_of),
-                       lambda: _evolution_null_parts(out, {"a"}, None,
-                                                     as_of)):
+                       lambda: ReadView.read(out, as_of).evolution_nulls(
+                           {"a"})):
                 try:
                     fn()
                 except ValueError:
@@ -180,6 +222,7 @@ def read_views(h: History) -> dict:
             views[as_of] = "raises"
             continue
         rows = file_rows(out, as_of)
+        view = ReadView.read(out, as_of)
         by_pid = {
             pid: sorted({_dir_of(out, f) for f in _committed_block_files(
                 out, part_ids=[pid], as_of=as_of)})
@@ -191,17 +234,37 @@ def read_views(h: History) -> dict:
             "rows": sorted(r[:3] for r in rows),
             "row_counts": sorted(r[:4] for r in rows),
             "evo": {
-                tuple(sorted(w)): sorted(
-                    _evolution_null_parts(out, w, None, as_of))
+                tuple(sorted(w)): sorted(view.evolution_nulls(w))
                 for w in PROJECTIONS
             },
-            "evo_even": sorted(_evolution_null_parts(
-                out, {"c"}, list(range(0, h.next_pid, 2)), as_of)),
+            "evo_even": sorted(view.evolution_nulls(
+                {"c"}, list(range(0, h.next_pid, 2)))),
             "key_range": [_committed_block_files(out, key_range=kr,
                                                  as_of=as_of)
                           for kr in KEY_PROBES],
+            "deletes": [(os.path.relpath(f, out), seq)
+                        for f, _k, _n, seq in view.deletes],
+            "part_seq": view.part_seq,
         }
     return views
+
+
+def check_model(h: History, views: dict) -> None:
+    """Deletes and part seqs against the model."""
+    chain = _branch_replay(h.m.read()).chain
+    seq_of = {s: i for i, s in enumerate(chain)}
+    for as_of, v in views.items():
+        if v == "raises":
+            continue
+        visible = set(h.visible_deletes(as_of))
+        assert v["deletes"] == [(f, seq_of[sid]) for f, sid in h.deletes
+                                if f in visible], as_of
+        audit = as_of is not None and as_of not in seq_of
+        assert v["part_seq"] == {
+            pid: (len(chain) if audit and h.snap_of[pid] == as_of
+                  else seq_of[h.snap_of[pid]])
+            for pid in {r[2] for r in v["rows"]}
+        }, as_of
 
 
 def _ops_strategy():
@@ -212,11 +275,12 @@ def _ops_strategy():
                        st.booleans())
     compact = st.tuples(st.just("compact"), st.integers(1, 3))
     purge = st.tuples(st.just("purge"), rows, cols)
+    delete = st.tuples(st.just("delete"), st.integers(1, 5))
     publish = st.tuples(st.just("publish"), st.integers(0, 5),
                         st.booleans())
     rollback = st.tuples(st.just("rollback"), st.integers(0, 7))
-    op = st.one_of(snap, commit, commit, commit, compact, purge, publish,
-                   rollback)
+    op = st.one_of(snap, commit, commit, commit, compact, purge, delete,
+                   publish, rollback)
     return st.lists(op, max_size=18)
 
 
@@ -224,6 +288,7 @@ def check_history(ops: list[tuple]) -> None:
     with tempfile.TemporaryDirectory() as out:
         h = build_history(out, ops)
         views = read_views(h)
+        check_model(h, views)
         for as_of, v in views.items():
             if v == "raises":
                 continue
@@ -248,6 +313,7 @@ def check_history(ops: list[tuple]) -> None:
         if os.path.exists(h.m.index_path):
             os.remove(h.m.index_path)
         full = read_views(h)
+        check_model(h, full)
         for as_of, v in views.items():
             f = full[as_of]
             if v == "raises" or f == "raises":
@@ -256,7 +322,7 @@ def check_history(ops: list[tuple]) -> None:
             # bounds and empty parts' row counts differ by granularity
             # (chunk aggregate vs part line); visibility may not
             for key in ("dirs", "by_pid", "rows", "evo", "evo_even",
-                        "key_range"):
+                        "key_range", "deletes", "part_seq"):
                 assert v[key] == f[key], (as_of, key)
 
 
@@ -286,4 +352,26 @@ def test_fixed_history_with_heal_compaction_purge_and_wap():
         ("purge", [5, 5], frozenset("abc")),
         ("rollback", 1),
         ("commit", [2], frozenset("a"), True, True),
+    ])
+
+
+def test_fixed_history_with_deletes_clears_and_audit():
+    """Deletes before and after a purge that clears them, a rollback
+    across the purge, and an audit read of a staged snapshot: part and
+    delete seqs at every snapshot."""
+    ab = frozenset("ab")
+    check_history([
+        ("snap", False),
+        ("commit", [3, 2], ab, True, False),
+        ("delete", 3),
+        ("snap", False),
+        ("commit", [4], frozenset("c"), True, True),
+        ("delete", 2),
+        ("compact", 2),
+        ("purge", [5, 5], frozenset("abc")),
+        ("delete", 1),
+        ("snap", True),
+        ("commit", [2], ab, True, False),
+        ("rollback", 2),
+        ("commit", [1], ab, True, False),
     ])

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from libgiddy_spark.engine import (
-    _accepted_deletes,
     _committed_block_files,
     decode_blocks,
     delete_rows,
@@ -20,7 +19,7 @@ from libgiddy_spark.engine import (
     vacuum_blocks,
     verify_roundtrip,
 )
-from libgiddy_spark.manifest import Manifest
+from libgiddy_spark.manifest import Manifest, ReadView
 
 SF = "/root/testdata/sf0.001"
 
@@ -70,7 +69,7 @@ def test_sorted_rewrite_materializes_deletes(spark, tmp_path):
     delete_rows(out, "doc_id", [1, 2, 3])
     res = rewrite_sorted(spark, out, schema, key_col="doc_id")
     assert res["materialized_deletes"] == 1  # one delete file
-    assert _accepted_deletes(out) == []
+    assert ReadView.read(out).deletes == []
     dec = decode_blocks(spark, out, schema)
     assert dec.count() == 497
     assert dec.filter(F.col("doc_id").isin([1, 2, 3])).count() == 0
