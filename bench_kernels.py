@@ -5,8 +5,9 @@ Writes BENCH/KERNELS.md: encode GB/s, decode GB/s, compression ratio per
 scheme on representative inputs (SURVEY.md §6 target metric 1 at the
 kernel level; the end-to-end numbers live in BENCH/BASELINE.md), and
 the FSST trainer's cost: ms per ``fsst.train`` on the selector's 64 KiB
-webtext trials and ms per ``blocks.plan_one_file`` on a 3,000-row
-webtext file.
+webtext trials (3 full-sample generations, and the default 5-generation
+schedule) and ms per ``blocks.plan_one_file`` on a 3,000-row webtext
+file.
 """
 
 from __future__ import annotations
@@ -75,6 +76,9 @@ def bench_training(wt: pa.Table) -> list[str]:
         ms = best_ms(lambda: train(trial, generations=3))
         rows.append(f"| fsst.train, 64 KiB webtext {c} trial, 3 generations "
                     f"| {ms:.1f} |")
+        ms = best_ms(lambda: train(trial))
+        rows.append(f"| fsst.train, 64 KiB webtext {c} trial, 5-generation "
+                    f"schedule (default) | {ms:.1f} |")
     with tempfile.TemporaryDirectory(prefix="lgs_bench_") as tmp:
         path = os.path.join(tmp, "webtext.parquet")
         pq.write_table(wt.slice(0, 3000), path)

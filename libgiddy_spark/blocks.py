@@ -23,10 +23,8 @@ import pyarrow.compute as pc
 
 from . import bloom as bloom_mod
 from .codecs import SymbolTable, as_array, decode_array, encode_array
-from .codecs import fsst as fsst_mod
 from .codecs import header as H
-from .codecs import strcol_of
-from .selector import select_codec
+from .selector import select_codec, train_fsst
 
 BLOCK_ROWS = 65536
 
@@ -182,17 +180,7 @@ def encode_group(
                 codec, stats, artifacts = select_codec(arr, col_name)
             fsst_table: SymbolTable | None = artifacts.get("fsst_table")
             if codec == "fsst" and fsst_table is None:
-                # train on a bounded HEAD sample, not the whole column:
-                # training is O(bytes) and the auto-select path already
-                # uses a trial-sample table (selector) / 16K-row sample
-                # (plan_one_file) — a forced-fsst encode of a fat
-                # column was the one path still paying a full-column
-                # training per group. FSST's escape byte keeps any
-                # input encodable under a sampled table.
-                dense = arr.drop_null() if arr.null_count else arr
-                if len(dense) > 16384:
-                    dense = dense.slice(0, 16384)
-                fsst_table = fsst_mod.train(strcol_of(dense).data)
+                fsst_table = train_fsst(arr)
             if selector_cache is not None:
                 # the manifest aggregates codec_params with first():
                 # mark that any slice's recorded stats were sampled on
@@ -311,8 +299,7 @@ def _plan_head(
             codec, stats, artifacts = select_codec(arr, col_name)
         ft = artifacts.get("fsst_table")
         if codec == "fsst" and ft is None:
-            dense = arr.drop_null() if arr.null_count else arr
-            ft = fsst_mod.train(strcol_of(dense).data)
+            ft = train_fsst(arr)
         out.append((
             col_name, codec,
             json.dumps({**stats, "stats_scope": "part-head-sample"}),

@@ -201,7 +201,8 @@ long fsst_count_cands(
 
 /* FSST decode, pass 1: per-code output offsets (offs[i] = decoded
    bytes before code position i; escape markers contribute 0 bytes,
-   their literal contributes 1). Returns the total decoded size.
+   their literal contributes 1). Returns the total decoded size, or -1
+   if a non-escape code is >= n_sym or the stream ends in an escape.
    Semantics identical to the numpy escape-run-parity classifier:
    inside a run of 255 bytes, alternating positions are escapes. */
 long fsst_decode_offsets(
@@ -214,21 +215,19 @@ long fsst_decode_offsets(
         offs[i] = o;
         if (lit) { o += 1; lit = 0; }
         else if (codes[i] == 255) { lit = 1; }
-        else {
-            const long c = codes[i] < n_sym ? codes[i] : n_sym - 1;
-            o += sym_lens[c];
-        }
+        else if (codes[i] < n_sym) { o += sym_lens[codes[i]]; }
+        else return -1;
     }
     offs[m] = o;
-    return o;
+    return lit ? -1 : o;
 }
 
-/* FSST decode, pass 2: byte fill. `out` needs >=8 bytes of slack
-   (symbol copies are fixed 8-byte memcpys advanced by true length). */
+/* FSST decode, pass 2: byte fill, only after pass 1 accepted the
+   codes. `out` needs >=8 bytes of slack (symbol copies are fixed
+   8-byte memcpys advanced by true length). */
 void fsst_decode_full(
     const uint8_t* codes, long m,
-    const uint8_t* sym_matrix, const int64_t* sym_lens, long n_sym,
-    uint8_t* out)
+    const uint8_t* sym_matrix, const int64_t* sym_lens, uint8_t* out)
 {
     long o = 0;
     int lit = 0;
@@ -236,9 +235,8 @@ void fsst_decode_full(
         if (lit) { out[o++] = codes[i]; lit = 0; }
         else if (codes[i] == 255) { lit = 1; }
         else {
-            const long c = codes[i] < n_sym ? codes[i] : n_sym - 1;
-            memcpy(out + o, sym_matrix + c * 8, 8);
-            o += sym_lens[c];
+            memcpy(out + o, sym_matrix + codes[i] * 8, 8);
+            o += sym_lens[codes[i]];
         }
     }
 }
@@ -440,8 +438,7 @@ def native_lib():
     lib.fsst_decode_full.restype = None
     lib.fsst_decode_full.argtypes = [
         u8p, ctypes.c_long,          # codes, m
-        u8p, i64p, ctypes.c_long,    # sym_matrix, sym_lens, n_sym
-        u8p,                         # out
+        u8p, i64p, u8p,              # sym_matrix, sym_lens, out
     ]
     lib.pack_bits64.restype = None
     lib.pack_bits64.argtypes = [u64p, ctypes.c_long, ctypes.c_long, u64p]

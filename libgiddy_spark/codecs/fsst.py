@@ -286,26 +286,29 @@ def decode_stream(codes: np.ndarray, table: SymbolTable):
 
     Returns (out_bytes: uint8 array, offs: int64[m+1] — decoded output
     offset before each code position; escapes contribute 0 bytes).
+    Raises ValueError on a non-escape code outside the table or a
+    dangling escape at the end of the stream.
     """
     m = len(codes)
     if m == 0:
         return np.zeros(0, np.uint8), np.zeros(1, np.int64)
     from ._native import native_lib
 
+    n_sym = len(table.symbols)
     lib = native_lib()
-    if lib is not None and len(table.symbols):
-        # C fast path: two sequential passes (offsets, then byte fill
-        # with fixed 8-byte symbol copies) — identical semantics to the
-        # vectorized classifier below, asserted by tests
+    if lib is not None:
+        # C fast path: two sequential passes (offsets and code check,
+        # then byte fill with fixed 8-byte symbol copies) — identical
+        # semantics to the vectorized classifier below, asserted by tests
         codes_c = np.ascontiguousarray(codes)
         lens_c = np.ascontiguousarray(table.lens)
         offs = np.empty(m + 1, dtype=np.int64)
-        total = lib.fsst_decode_offsets(codes_c, m, lens_c, len(table.symbols), offs)
+        total = lib.fsst_decode_offsets(codes_c, m, lens_c, n_sym, offs)
+        if total < 0:
+            raise ValueError(_BAD_CODES.format(n_sym))
         out = np.empty(total + 8, dtype=np.uint8)
         lib.fsst_decode_full(
-            codes_c, m, np.ascontiguousarray(table.matrix), lens_c,
-            len(table.symbols), out,
-        )
+            codes_c, m, np.ascontiguousarray(table.matrix), lens_c, out)
         return out[:total], offs
     is255 = codes == ESCAPE
     # runs of 255: even offsets inside a run are escapes
@@ -327,14 +330,16 @@ def decode_stream(codes: np.ndarray, table: SymbolTable):
         esc_pos = rep_starts + 2 * within
     else:
         esc_pos = np.zeros(0, dtype=np.int64)
-    lit_pos = esc_pos + 1  # always < m: encoder never emits dangling escape
+    lit_pos = esc_pos + 1
     kind = np.zeros(m, dtype=np.uint8)  # 0 = normal symbol code
     kind[esc_pos] = 1
-    kind[lit_pos] = 2
-    sym_lens = table.lens if len(table.symbols) else np.zeros(1, np.int64)
-    safe_codes = np.minimum(codes.astype(np.int64), max(len(table.symbols) - 1, 0))
-    out_len = np.where(kind == 0, sym_lens[safe_codes], np.int64(0))
-    out_len = np.where(kind == 2, np.int64(1), out_len)
+    kind[lit_pos[lit_pos < m]] = 2
+    sym = np.flatnonzero(kind == 0)
+    if (total_esc and lit_pos[-1] == m) or (codes[sym] >= n_sym).any():
+        raise ValueError(_BAD_CODES.format(n_sym))
+    tok_len = np.zeros(m, dtype=np.int64)
+    tok_len[sym] = table.lens[codes[sym]]
+    out_len = tok_len + (kind == 2)
     total = int(out_len.sum())
     offs = np.zeros(m + 1, dtype=np.int64)
     np.cumsum(out_len, out=offs[1:])
@@ -343,35 +348,45 @@ def decode_stream(codes: np.ndarray, table: SymbolTable):
     out = np.empty(total, dtype=np.uint8)
     lit_sel = np.flatnonzero(kind == 2)
     out[offs[lit_sel]] = codes[lit_sel]
-    tok_len = np.where(kind == 0, sym_lens[safe_codes], np.int64(0))
-    for L in np.unique(sym_lens):
+    for L in np.unique(table.lens):
         L = int(L)
-        if L == 0:
-            continue
         sel = np.flatnonzero(tok_len == L)
         if len(sel) == 0:
             continue
         base = offs[sel]
-        cds = safe_codes[sel]
+        cds = codes[sel]
         for k in range(L):
             out[base + k] = table.matrix[cds, k]
     return out, offs
 
 
-def train(sample: np.ndarray, generations: int = 5) -> SymbolTable:
+_BAD_CODES = ("FSST code stream does not fit its {} symbol table: a code "
+              "outside the table or a dangling escape")
+
+
+SCHEDULE = (8, 38, 68, 98, 128)  # per generation: chunks of every 128
+SAMPLE_CHUNK = 512
+
+
+def train(sample: np.ndarray, generations: int | None = None) -> SymbolTable:
     """Train a symbol table on a byte sample (uint8 array), BPE-style.
 
-    The trainer sees a SPREAD sample: 512-byte chunks strided evenly
-    across the whole input, 32 KiB total (the FSST paper's sampling
-    shape). Versus the old 256 KiB head cap this is ~7x cheaper per
-    training — the dominant fixed cost of encoding small columns and
-    of the per-part codec plan — and measured within +-1% compression
-    ratio on webtext url/text/html (url improves: the head
-    oversampled early rows). Chunk seams add <1 fake adjacency per
-    512 real ones, noise at counting granularity.
+    The trainer sees a SPREAD sample: SAMPLE_CHUNK (512-byte) chunks
+    strided evenly across the whole input, 32 KiB total (the FSST
+    paper's sampling shape). Chunk seams add <1 fake adjacency per 512
+    real ones, noise at counting granularity.
+
+    By default it runs the FSST paper's schedule (Boncz, Neumann &
+    Leis, VLDB 2020): 5 generations counting over 8, 38, 68, 98 and
+    then all 128 of every 128 chunks, evenly strided. On the selector's
+    64 KiB trials of webtext url, text and html, its tables code 7, 10
+    and 15 % smaller than 3 full-sample generations did, in the same
+    ~4 ms (BENCH/KERNELS.md). ``generations=g`` runs g full-sample
+    generations; it keeps the tables recorded before the schedule (the
+    golden test) reproducible byte for byte.
 
     Each generation has two steps. The counting step greedy-tokenizes
-    the sample (in 256-byte lanes) with the current table and counts
+    its chunks (in 256-byte lanes) with the current table and counts
     every token and every adjacent token pair of <= 8 bytes as a
     (value, len) candidate. The C kernel ``fsst_count_cands`` does this
     in one hashed pass (codecs/_native.py); without it the numpy path
@@ -383,29 +398,40 @@ def train(sample: np.ndarray, generations: int = 5) -> SymbolTable:
     """
     from ._native import native_lib
 
-    total, chunk_b = 1 << 15, 512
+    total = 1 << 15
     if len(sample) > total:
-        k = total // chunk_b
+        k = total // SAMPLE_CHUNK
         starts = (np.arange(k, dtype=np.int64)
-                  * (len(sample) - chunk_b)) // max(k - 1, 1)
-        sample = np.concatenate([sample[s:s + chunk_b] for s in starts])
+                  * (len(sample) - SAMPLE_CHUNK)) // max(k - 1, 1)
+        sample = np.concatenate([sample[s:s + SAMPLE_CHUNK] for s in starts])
     if len(sample) == 0:
         return SymbolTable([])
-    # split into many lanes so the lock-step encoder stays parallel; the
-    # few lost cross-chunk matches are irrelevant for frequency counting
-    chunk = 256
-    offs = np.arange(0, len(sample) + chunk, chunk, dtype=np.int64)
-    offs[-1] = len(sample)
-    col = StrCol(offs, sample)
     lib = native_lib()
     table = SymbolTable([])
-    for _ in range(generations):
+    for frac in SCHEDULE if generations is None else (128,) * generations:
+        col = _sample_lanes(sample, frac)
         if lib is not None:
             vals, lens, counts = _count_native(col, table, lib)
         else:
             vals, lens, counts = _count_numpy(col, table)
         table = SymbolTable(_pick_symbols(vals, lens, counts))
     return table
+
+
+def _sample_lanes(sample: np.ndarray, frac: int) -> StrCol:
+    """``frac`` of every 128 of the sample's SAMPLE_CHUNK chunks (at
+    least one, evenly strided, the first always in), split into
+    256-byte lanes so the lock-step encoder stays parallel; the few
+    lost cross-lane matches are irrelevant for frequency counting."""
+    k = -(-len(sample) // SAMPLE_CHUNK)
+    m = -(-k * frac // 128)
+    if m < k:
+        starts = np.arange(m, dtype=np.int64) * k // m * SAMPLE_CHUNK
+        sample = np.concatenate([sample[s:s + SAMPLE_CHUNK] for s in starts])
+    lane = 256
+    offs = np.arange(0, len(sample) + lane, lane, dtype=np.int64)
+    offs[-1] = len(sample)
+    return StrCol(offs, sample)
 
 
 def _count_native(col: StrCol, table: SymbolTable, lib):
@@ -454,6 +480,9 @@ def _count_numpy(col: StrCol, table: SymbolTable):
     return vs[starts], ls[starts], counts
 
 
+PICK_POOL = 1024  # _pick_symbols sorts the top PICK_POOL gains first
+
+
 def _pick_symbols(vals: np.ndarray, lens: np.ndarray, counts: np.ndarray) -> list[bytes]:
     """The next table's symbols from distinct (value, len) candidates:
     order by (gain = count * len desc, value asc, len asc) — a total
@@ -462,8 +491,26 @@ def _pick_symbols(vals: np.ndarray, lens: np.ndarray, counts: np.ndarray) -> lis
     earlier ones share its 2-byte prefix. The cap bounds the encoder's
     probe passes (k_max<=3) for ~no ratio cost; freed slots refill
     with the next candidates. It lives in the TABLE, so the naive
-    sequential encoder sees identical symbols (stream identity)."""
-    order = np.lexsort((lens, vals, -(counts * lens)))
+    sequential encoder sees identical symbols (stream identity).
+
+    It sorts the top PICK_POOL gains (ties included) first, and all
+    candidates only if those leave the table short after the cap. That
+    is exact: the top gains are a prefix of the order, so each meets
+    the same earlier candidates and prefix-cap decisions as in a full
+    sort."""
+    gain = counts * lens
+    if len(gain) > PICK_POOL:
+        cut = len(gain) - PICK_POOL
+        top = np.flatnonzero(gain >= np.partition(gain, cut)[cut])
+        picked = _pick_sorted(vals[top], lens[top], gain[top])
+        if len(picked) == MAX_SYMBOLS:
+            return picked
+    return _pick_sorted(vals, lens, gain)
+
+
+def _pick_sorted(vals: np.ndarray, lens: np.ndarray, gain: np.ndarray) -> list[bytes]:
+    """_pick_symbols over a full sort of the given candidates."""
+    order = np.lexsort((lens, vals, -gain))
     v, l = vals[order], lens[order]
     multi = np.flatnonzero(l >= 2)
     pref = (v[multi] & _U64(0xFFFF)).astype(np.int64)

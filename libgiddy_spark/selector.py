@@ -25,17 +25,19 @@ SAMPLE_VALUES = 8192
 FSST_TRIAL_BYTES = 1 << 16
 
 # Measured single-core kernel throughputs in GB/s of RAW bytes
-# (encode, decode) — BENCH/KERNELS.md; codecs without a measured row
-# get conservative numpy-path estimates. Size alone mispicks: encode
-# throughput spans 6.0 GB/s (rle) to 0.08 GB/s (fsst) and a near-tie
-# on size can cost 20x the CPU (VERDICT r2 "what's missing" #3).
+# (encode, decode), rounded from BENCH/KERNELS.md (4 vCPUs; fsst is
+# its webtext text row, raw its webtext text raw row); dzbv has no
+# measured row and keeps a conservative estimate. Size alone mispicks:
+# encode throughput spans 6.2 GB/s (rle) to 0.18 GB/s (fsst) and a
+# near-tie on size can cost 30x the CPU (VERDICT r2 "what's missing"
+# #3). tests/test_selector.py pins the picks these values give.
 SPEED_GBPS: dict[str, tuple[float, float]] = {
-    "for": (0.85, 2.5),
-    "delta": (0.58, 0.76),
-    "dict": (0.29, 0.27),
-    "rle": (6.0, 13.0),
-    "fsst": (0.08, 0.69),
-    "raw": (2.2, 3.2),
+    "for": (1.1, 2.8),
+    "delta": (1.3, 0.68),
+    "dict": (0.28, 0.71),
+    "rle": (6.2, 9.8),
+    "fsst": (0.18, 0.79),
+    "raw": (3.5, 4.8),
     "dzbv": (0.5, 0.8),
 }
 # Size-vs-speed weight: one nanosecond of per-value (encode + decode)
@@ -104,6 +106,16 @@ def select_codec(
     return codec, stats, {}
 
 
+def train_fsst(arr: pa.Array) -> fsst_mod.SymbolTable:
+    """The FSST table of a column the selector did not trial (a forced
+    ``fsst`` codec), trained on the same shape of sample as the trial:
+    the first FSST_TRIAL_BYTES of the column's non-null values. A
+    bounded sample keeps training cost flat in the column size; FSST's
+    escape byte keeps any input encodable under a sampled table."""
+    dense = arr.drop_null() if arr.null_count else arr
+    return fsst_mod.train(strcol_of(dense).data[:FSST_TRIAL_BYTES])
+
+
 def _runs_fraction(neq: np.ndarray, n: int) -> float:
     nruns = 1 + int(neq.sum())
     return nruns / max(n, 1)
@@ -163,13 +175,17 @@ def _select_string(s: pa.Array, n_total: int) -> tuple[str, dict, dict]:
     uniq_bytes_est = (card / n) * total_bytes + 2.0 * card  # uniques ~ avg len
     per_value["dict"] = iw / 8 + uniq_bytes_est / n
     per_value["rle"] = (nruns / n) * (avg_len + 6.0)
-    # fsst trial: train on a slice of the sample bytes, measure ratio;
-    # the trained table is returned for reuse by the actual encoder
+    # fsst trial: train on a slice of the sample bytes with the FSST
+    # paper's 5-generation growing-sample schedule (fsst.train's
+    # default: perfbench webtext ratio 0.50 -> 0.44 against the 3
+    # full-sample generations used before, for the same training
+    # time), measure ratio; the trained table is returned for reuse by
+    # the actual encoder
     fsst_ratio = None
     artifacts: dict = {}
     if avg_len >= 4 and card > max(n // 64, 16):
         trial = col.data[:FSST_TRIAL_BYTES]
-        table = fsst_mod.train(trial, generations=3)
+        table = fsst_mod.train(trial)
         chunk = 256
         offs = np.arange(0, len(trial) + chunk, chunk, dtype=np.int64)
         offs[-1] = len(trial)

@@ -213,3 +213,54 @@ def test_delta_for_fused_native_stream_identity(rng):
             from libgiddy_spark.codecs import decode_payload_numpy
             out = decode_payload_numpy(b_c)
             assert np.array_equal(out, x), (enc.__name__, len(x))
+
+
+@pytest.fixture(params=["native", "numpy"])
+def fsst_path(request):
+    """Runs a test on the native FSST kernels and on the numpy path."""
+    import libgiddy_spark.codecs._native as N
+
+    if request.param == "native" and N.native_lib() is None:
+        pytest.skip("no C compiler on host")
+    saved = N._lib, N._tried
+    if request.param == "numpy":
+        N._lib, N._tried = None, True
+    yield request.param
+    N._lib, N._tried = saved
+
+
+def test_fsst_decode_rejects_codes_outside_table(fsst_path):
+    """A non-escape code >= the table size, a trailing escape, or any
+    non-escape code under an empty table raises ValueError instead of
+    decoding to wrong bytes; payloads that fit still decode."""
+    from libgiddy_spark.codecs import decode_array, encode_array
+    from libgiddy_spark.codecs.fsst import SymbolTable, decode_stream
+
+    table = SymbolTable([b"ab", b"c", b"hello"])
+    codes = np.array([0, 1, 2, 255, ord("z"), 0], np.uint8)
+    out, _ = decode_stream(codes, table)
+    assert bytes(out) == b"abchelloz" + b"ab"
+    for bad in range(len(table.symbols), 255):
+        for pos in (0, 2, 5):
+            mutated = codes.copy()
+            mutated[pos] = bad
+            with pytest.raises(ValueError, match="symbol table"):
+                decode_stream(mutated, table)
+    for tail in ([255], [255, 255, 255]):
+        with pytest.raises(ValueError, match="symbol table"):
+            decode_stream(np.concatenate([codes, np.array(tail, np.uint8)]),
+                          table)
+    empty = SymbolTable([])
+    out, _ = decode_stream(np.array([255, 97, 255, 255], np.uint8), empty)
+    assert bytes(out) == b"a\xff"
+    for bad in ([0], [255, 97, 3], [254, 255, 97]):
+        with pytest.raises(ValueError, match="symbol table"):
+            decode_stream(np.array(bad, np.uint8), empty)
+    # through a whole payload: the last byte of the code section
+    arr = pa.array(["abab", "hello", "cab"])
+    payload, _ = encode_array(arr, "fsst", fsst_table=table)
+    assert decode_array(payload).equals(arr)
+    corrupt = bytearray(payload)
+    corrupt[-1] = 200
+    with pytest.raises(ValueError, match="symbol table"):
+        decode_array(bytes(corrupt))

@@ -7,6 +7,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from libgiddy_spark.codecs import encode_array
 from libgiddy_spark.codecs import reference as ref
@@ -253,3 +255,115 @@ def test_fsst_native_numpy_stream_identity():
         assert np.array_equal(out_c, out_np)
         assert np.array_equal(offs_c, offs_np)
         assert bytes(out_c) == b"".join(bitems)
+
+
+# sha256 of the concatenated serialized tables that train(sample), the
+# 5-generation schedule, builds on the _trainer_inputs() samples
+SCHEDULE_TABLES_SHA256 = (
+    "ebc80f283a90846d355a20796acd2f2137390067a7b3a4edede3433a03f0888b")
+
+
+def test_fsst_schedule_tables_golden():
+    """Default-schedule table bytes do not drift."""
+    import hashlib
+
+    blob = b"".join(train(sample).serialize()
+                    for _name, sample, _g in _trainer_inputs())
+    assert hashlib.sha256(blob).hexdigest() == SCHEDULE_TABLES_SHA256
+
+
+def test_fsst_schedule_native_numpy_trainers_agree():
+    """The native and numpy counting paths build identical tables
+    under the growing-sample schedule too."""
+    from libgiddy_spark.codecs._native import native_lib
+
+    if native_lib() is None:
+        pytest.skip("no C compiler on host")
+    for name, sample, _g in _trainer_inputs():
+        a, b = train(sample), _train_numpy(sample, None)
+        assert a.symbols == b.symbols, name
+        for attr in ("cand3", "t1", "vals64_pad", "prefix"):
+            assert np.array_equal(getattr(a, attr), getattr(b, attr)), \
+                (name, attr)
+
+
+def _pick_candidates(seed, n, n_pref, max_count):
+    """Up to n distinct (value, len, count) candidates: len>=2 ones
+    share n_pref 2-byte prefixes, counts are 1..max_count."""
+    rng = np.random.default_rng(seed)
+    lens = rng.integers(1, 9, n)
+    prefs = rng.integers(0, 1 << 16, n_pref).astype(np.uint64)
+    vals = rng.integers(0, 1 << 63, n, dtype=np.uint64)
+    multi = lens >= 2
+    vals[multi] = (vals[multi] & ~np.uint64(0xFFFF)) | prefs[
+        rng.integers(0, n_pref, int(multi.sum()))]
+    masks = np.array([(1 << (8 * k)) - 1 for k in range(8)] + [(1 << 64) - 1],
+                     np.uint64)
+    vals &= masks[lens]
+    _, first = np.unique(np.stack([vals, lens.astype(np.uint64)]),
+                         axis=1, return_index=True)
+    vals, lens = vals[first], lens[first]
+    return vals, lens, rng.integers(1, max_count + 1, len(vals))
+
+
+@settings(max_examples=60, deadline=None)
+@given(seed=st.integers(0, 2**32 - 1), n=st.integers(0, 3000),
+       n_pref=st.integers(1, 600), max_count=st.integers(1, 6))
+def test_fsst_prefiltered_pick_equals_full_sort(seed, n, n_pref, max_count):
+    """_pick_symbols, which sorts only the top PICK_POOL gains, picks
+    what a full lexsort of every candidate picks. Few count values make
+    many gain ties; shared 2-byte prefixes make the prefix cap bite."""
+    from libgiddy_spark.codecs.fsst import _pick_sorted, _pick_symbols
+
+    vals, lens, counts = _pick_candidates(seed, n, n_pref, max_count)
+    assert _pick_symbols(vals, lens, counts) == \
+        _pick_sorted(vals, lens, counts * lens)
+
+
+@pytest.mark.parametrize("n_pref,pool_fills", [(20, False), (600, True)])
+def test_fsst_prefiltered_pick_both_branches(n_pref, pool_fills):
+    """With few shared prefixes the top-PICK_POOL candidates leave
+    fewer than 255 symbols after the prefix cap and the full sort
+    runs; with many they fill the table. Both give the full-sort pick."""
+    from libgiddy_spark.codecs.fsst import (
+        MAX_SYMBOLS,
+        PICK_POOL,
+        _pick_sorted,
+        _pick_symbols,
+    )
+
+    vals, lens, counts = _pick_candidates(5, 3000, n_pref, 3)
+    gain = counts * lens
+    assert len(gain) > PICK_POOL
+    pool = gain >= np.sort(gain)[len(gain) - PICK_POOL]
+    assert pool.sum() >= PICK_POOL
+    pooled = _pick_sorted(vals[pool], lens[pool], gain[pool])
+    assert (len(pooled) == MAX_SYMBOLS) == pool_fills
+    picked = _pick_symbols(vals, lens, counts)
+    assert picked == _pick_sorted(vals, lens, gain)
+    assert len(picked) == MAX_SYMBOLS
+
+
+def test_fsst_prefiltered_pick_ties_at_cut():
+    """The pool's cut falls inside a run of equal gains that the pick
+    needs: 500 high-gain symbols on 10 prefixes give only 30 picks, so
+    225 come from 2,000 tied 2-byte symbols, lowest values first. All
+    ties must be in the pool, not an arbitrary 524 of them."""
+    from libgiddy_spark.codecs.fsst import MAX_SYMBOLS, _pick_sorted, _pick_symbols
+
+    rng = np.random.default_rng(9)
+    hi_pref = rng.choice(np.arange(256, 1 << 16), 10, replace=False)
+    tie_pref = np.setdiff1d(np.arange(256, 1 << 16), hi_pref)[:2000]
+    hi = (rng.choice(1 << 16, 500, replace=False).astype(np.uint64) << 16
+          | hi_pref[np.arange(500) % 10].astype(np.uint64))
+    low = rng.choice(1 << 24, 1000, replace=False).astype(np.uint64)
+    vals = np.concatenate([hi, tie_pref.astype(np.uint64), low])
+    lens = np.repeat([4, 2, 3], [500, 2000, 1000])
+    counts = np.repeat([10, 4, 1], [500, 2000, 1000])  # gains 40, 8, 3
+    order = rng.permutation(len(vals))
+    vals, lens, counts = vals[order], lens[order], counts[order]
+    picked = _pick_symbols(vals, lens, counts)
+    assert picked == _pick_sorted(vals, lens, counts * lens)
+    ties = [s for s in picked if len(s) == 2]
+    assert len(picked) == MAX_SYMBOLS and len(ties) == MAX_SYMBOLS - 30
+    assert ties == [int(v).to_bytes(2, "little") for v in tie_pref[:225]]
