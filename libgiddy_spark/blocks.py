@@ -592,19 +592,27 @@ def decode_group(table: pa.Table, schema: pa.Schema,
     ``n_values`` sum to, and all columns the same count: a missing,
     extra or truncated block raises a ``ValueError`` naming the part,
     salt and column instead of yielding misaligned or fewer rows. A
-    block the codecs cannot decode (a corrupt or truncated payload)
-    raises a ``ValueError`` naming the part, salt, column and
-    ``block_seq``.
+    block that appears twice, or that the codecs cannot decode (a
+    corrupt or truncated payload), raises a ``ValueError`` naming the
+    part, salt, column and ``block_seq``.
     """
     table = table.sort_by([("column", "ascending"), ("block_seq", "ascending")])
     cols_present = table.column("column").to_pylist()
+    seqs = table.column("block_seq").to_pylist()
     payloads = table.column("payload").to_pylist()
-    n_values = (table.column("n_values").to_pylist()
-                if "n_values" in table.column_names else None)
+    n_values = table.column("n_values").to_pylist()
     wanted = {f.name for f in schema}
     by_col: dict[str, list[pa.Array]] = {}
     stored: dict[str, int] = {}
+
+    def block(i: int, name: str) -> str:
+        return (f"part {table.column('part_id')[i].as_py()} salt "
+                f"{table.column('salt')[i].as_py()} column {name!r} "
+                f"block_seq {seqs[i]}")
+
     for i, (name, payload) in enumerate(zip(cols_present, payloads)):
+        if i and (name, seqs[i]) == (cols_present[i - 1], seqs[i - 1]):
+            raise ValueError(f"{block(i, name)}: duplicate block")
         if column_map is not None:
             name = column_map.get(name, name)
         if name not in wanted:  # projection: don't decode dropped columns
@@ -613,13 +621,9 @@ def decode_group(table: pa.Table, schema: pa.Schema,
             arr = decode_array(payload)
         except Exception as e:
             raise ValueError(
-                f"part {table.column('part_id')[i].as_py()} salt "
-                f"{table.column('salt')[i].as_py()} column {name!r} "
-                f"block_seq {table.column('block_seq')[i].as_py()}: "
-                f"cannot decode block: {e}") from e
+                f"{block(i, name)}: cannot decode block: {e}") from e
         by_col.setdefault(name, []).append(arr)
-        if n_values is not None:
-            stored[name] = stored.get(name, 0) + n_values[i]
+        stored[name] = stored.get(name, 0) + n_values[i]
     decoded: dict[str, pa.Array] = {}
     for field in schema:
         if field.name not in by_col:
@@ -631,14 +635,14 @@ def decode_group(table: pa.Table, schema: pa.Schema,
     n = max([len(a) for a in decoded.values()] + list(stored.values()),
             default=0)
     for name, arr in decoded.items():
-        if len(arr) != n or stored.get(name, n) != n:
+        if len(arr) != n or stored[name] != n:
             salt = table.column("salt")[0].as_py()
             raise ValueError(
                 f"part {pid} salt {salt} column {name!r}: decoded "
                 f"{len(arr)} rows, its blocks' n_values sum to "
-                f"{stored.get(name, len(arr))}, the group has {n} — "
+                f"{stored[name]}, the group has {n} — "
                 "a block is missing, extra or corrupt")
-    if not decoded and table.num_rows and n_values is not None:
+    if not decoded and table.num_rows:
         # SCHEMA EVOLUTION, all-post-evolution projection: none of the
         # requested columns exist in this part's blocks, but the part
         # still has rows — derive the row count from any stored

@@ -6,9 +6,10 @@ the remaining gap: equality probes — above all on STRING keys (a url
 lookup on a url-sorted webtext table), where min/max bounds still leave
 every in-range block a candidate. One filter per (part_id, salt,
 block_seq) row-slice, stored on the sort-key column's block rows and
-tested BEFORE any payload byte is read (engine.decode_blocks does a
-metadata-only first read). This is the Iceberg data-file bloom pattern
-(puffin sidecars) transposed to our blocks dataset.
+tested BEFORE any payload byte is read (engine.decode_blocks picks a
+block file's blocks from one read of its metadata columns). This is the
+Iceberg data-file bloom pattern (puffin sidecars) transposed to our
+blocks dataset.
 
 Determinism: everything derives from a fixed 64-bit mix (splitmix64
 finalizer) over either the raw int64 key or a polynomial byte hash of

@@ -1252,11 +1252,13 @@ def read_changes(
     entries (a strict changelog, not a net diff) — consumers fold by
     (key, max _commit_seq) when they want net state. Window bounds
     also accept NAMED REFS (:func:`create_ref`)."""
-    entries = Manifest(out_dir).read()
-    refs = refs_of(entries)
-    since_snapshot = refs.get(since_snapshot, since_snapshot)
-    to_snapshot = refs.get(to_snapshot, to_snapshot)
-    bstate = _branch_replay(entries)  # main branch only: a WAP-staged
+    # every window snapshot and delete parent decodes from this ONE
+    # manifest read, so a commit landing mid-plan cannot mix states
+    view = ReadView(out_dir, Manifest(out_dir).read())
+    entries = view.entries
+    since_snapshot = view.refs.get(since_snapshot, since_snapshot)
+    to_snapshot = view.refs.get(to_snapshot, to_snapshot)
+    bstate = view.branch  # main branch only: a WAP-staged
     # snapshot enters the changelog at its PUBLISH position
     snaps = bstate.chain
     if not snaps:
@@ -1311,8 +1313,8 @@ def read_changes(
     for s in window:
         pids = parts_by_snap.get(s)
         if pids:
-            ins = decode_blocks(
-                spark, out_dir, schema, part_ids=sorted(pids), as_of=s)
+            ins = _decode_view(
+                spark, view.at(s), schema, part_ids=sorted(pids))
             pieces.append(
                 ins.select(*tcols)
                 .withColumn("_change_type", F.lit("insert"))
@@ -1345,7 +1347,7 @@ def read_changes(
             keys = keys.hint("shuffle_hash")
         else:
             keys = F.broadcast(keys)
-        rows = decode_blocks(spark, out_dir, schema, as_of=parent)
+        rows = _decode_view(spark, view.at(parent), schema)
         pieces.append(
             rows.join(keys, e["key_col"], "left_semi")
             .select(*tcols)
@@ -1626,25 +1628,27 @@ def decode_blocks(
     dirs before any listing happens, and at 100 TB the driver never
     enumerates the full blocks tree to decode one part.
 
+    A task picks each block file's blocks from ONE read of its
+    metadata columns, then reads the payload column of each parquet
+    row group holding a kept block, once; other row groups read none.
+
     ``key_range=(lo, hi)`` (inclusive, sort-key values as int64) prunes
     via the per-block ZONE MAPS (key_lo/key_hi columns): overlapping
-    blocks only, skipped at parquet row-group level before any payload
-    byte is read. Blocks WITHOUT zone maps (non-integral sort key, or a
+    blocks only. Blocks WITHOUT zone maps (non-integral sort key, or a
     group whose key column contains nulls) always decode — pruning only
     ever over-includes, never silently drops rows. Block-granular —
     callers apply the exact row predicate on the decoded frame. The
     range prunes at TWO levels: manifest part zone maps (driver-side,
-    before any listing) and per-block zone maps (parquet row-group
-    stats inside each task).
+    before any listing) and per-block zone maps (inside each task).
 
     ``key_range_s=(lo, hi)`` is the same pruning for STRING sort keys
     via the ``key_lo_s/key_hi_s`` bounds (truncation-unsafe bounds were
     stored as null = never pruned). ``key_point`` = a single probe
     value (int or str): sets the matching range to ``(v, v)`` AND
     additionally tests each candidate block's Bloom filter (bloom.py)
-    in a metadata-only first read, so in-range blocks that provably
-    don't contain the probe skip their payload read and decode
-    entirely. ``as_of`` = snapshot id for time travel (see
+    in that same metadata read, so in-range blocks that provably don't
+    contain the probe skip their payload read and decode entirely.
+    ``as_of`` = snapshot id for time travel (see
     :func:`_committed_block_files`). All pruning is block-granular and
     over-inclusive only — callers apply the exact row predicate on the
     decoded frame. ``as_of`` also accepts a NAMED REF (branch/tag,
@@ -1683,22 +1687,20 @@ def _decode_view(
                 key_range = (int(key_point), int(key_point))
         probe_hash = bloom_mod.hash_value(key_point)
         probe_domain = bloom_mod.domain_of(key_point)
-    krange0 = (
-        (int(key_range[0]), int(key_range[1])) if key_range is not None else None
-    )
-    files = view.files(part_ids, krange0, key_range_s)
+    krange = (int(key_range[0]), int(key_range[1])) if key_range is not None else None
+    files = view.files(part_ids, krange, key_range_s)
     out_fields = ", ".join(
         f"`{f.name}` {_spark_type_of(f.type)}" for f in schema
     )
     ddl = out_fields + ", part_id int"
-    wanted_cols_set = (set(column_map) if column_map
-                       else {f.name for f in schema})
+    wanted_cols = (set(column_map) if column_map
+                   else {f.name for f in schema})
     if not files:
         # a fully-pruned listing must still honor schema evolution and
         # deletes — the same shared tail as the main path
         return _apply_evolution_and_deletes(
             spark, spark.createDataFrame([], ddl), view, schema,
-            wanted_cols_set, part_ids, None, column_map,
+            wanted_cols, part_ids, None, column_map,
         )
     # EQUALITY DELETES (merge-on-read) up to SMALL_DELETE_MAX_KEYS keys are
     # applied inside the decode tasks, so the plan gains no join: the
@@ -1715,10 +1717,7 @@ def _decode_view(
     ]
     part_seq = view.part_seq if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
-    krange = (int(key_range[0]), int(key_range[1])) if key_range is not None else None
     krange_s = (str(key_range_s[0]), str(key_range_s[1])) if key_range_s is not None else None
-
-    wanted_cols = sorted(wanted_cols_set)
 
     def decode_stream(batches):
         import numpy as np
@@ -1727,6 +1726,7 @@ def _decode_view(
 
         from . import bloom as bloom_mod
 
+        wanted_arr = pa.array(sorted(wanted_cols), pa.string())
         tomb_sets = [
             (res_key, dseq,
              _TombstoneSet(_tombstone_values(dfile, dkey, ttype)))
@@ -1742,107 +1742,54 @@ def _decode_view(
             yield from out.to_batches()
 
         def decode_file(path: str):
-            # predicate + projection pushdown into the block scan:
-            # only the requested parts' and columns' payload bytes
-            # are read from the file (row-group pruning). Files
-            # written BEFORE the string-zone/bloom columns existed
-            # must over-include, never crash: gate each clause on
-            # the file actually having its columns (footer names).
+            # ONE read of the per-BLOCK metadata columns picks the
+            # blocks (projection, parts, zone overlap, Bloom); then each
+            # row group holding a kept block reads only its payload
+            # column, once. Task memory stays one row group + one
+            # (part, salt) group, whatever the file size. Files written
+            # before the string-zone/bloom columns existed over-include:
+            # a clause whose columns the file lacks keeps every block.
             pf = pq.ParquetFile(path)
             file_cols = set(pf.schema_arrow.names)
-            zflt = None  # part/zone clauses, column-independent
-            if wanted is not None:
-                zflt = pc.field("part_id").isin(wanted)
-            if krange is not None and "key_lo" in file_cols:
-                # zone-map pruning: keep blocks whose sort-key range
-                # overlaps [lo, hi] — and ALWAYS keep null zone maps
-                # (non-integral sort keys, or a group containing a
-                # null key): over-inclusion is correct, silent
-                # pruning of unzoned blocks would lose rows
-                overlap = (pc.field("key_hi") >= krange[0]) & (
-                    pc.field("key_lo") <= krange[1]
-                )
-                clause = overlap | pc.field("key_lo").is_null()
-                zflt = clause if zflt is None else zflt & clause
-            if krange_s is not None and "key_lo_s" in file_cols:
-                # string zone maps: same overlap + null-keep rule
-                overlap_s = (pc.field("key_hi_s") >= krange_s[0]) & (
-                    pc.field("key_lo_s") <= krange_s[1]
-                )
-                clause = overlap_s | pc.field("key_lo_s").is_null()
-                zflt = clause if zflt is None else zflt & clause
-            flt = pc.field("column").isin(wanted_cols)
-            if zflt is not None:
-                flt = flt & zflt
-            if probe_hash is not None and "key_bloom" in file_cols:
-                # metadata-only first read (no payload column):
-                # test each candidate block's Bloom filter; blocks
-                # whose filter PROVES the probe absent skip their
-                # payload read + decode. Blocks without a bloom row
-                # (unkeyed encodes, non-key columns only) stay.
-                # Keyed by the FULL (part_id, salt, block_seq): a
-                # block file holds several parts' groups (tasks are
-                # packed), and salt/block_seq alone would let one
-                # part's bloom prune another part's blocks.
-                meta = pq.read_table(
-                    path,
-                    columns=["part_id", "salt", "block_seq", "key_bloom"],
-                    filters=zflt,
-                    use_threads=False,
-                )
-                trips: set[tuple[int, int, int]] = set()
-                blooms: dict[tuple[int, int, int], bytes] = {}
-                for p_, s_, q_, kb in zip(
-                    meta.column("part_id").to_pylist(),
-                    meta.column("salt").to_pylist(),
-                    meta.column("block_seq").to_pylist(),
-                    meta.column("key_bloom").to_pylist(),
-                ):
-                    trips.add((p_, s_, q_))
-                    if kb is not None:
-                        blooms[(p_, s_, q_)] = kb
-                survivors = sorted(
-                    t
-                    for t in trips
-                    if t not in blooms
-                    or bloom_mod.bloom_might_contain(
-                        blooms[t], probe_hash, probe_domain
-                    )
-                )
-                if not survivors:
-                    return
-                if len(survivors) < len(trips):
-                    by_group: dict[tuple[int, int], list[int]] = {}
-                    for p_, s_, q_ in survivors:
-                        by_group.setdefault((p_, s_), []).append(q_)
-                    sel = None
-                    for (p_, s_), qs in sorted(by_group.items()):
-                        clause = (
-                            (pc.field("part_id") == p_)
-                            & (pc.field("salt") == s_)
-                            & pc.field("block_seq").isin(qs)
-                        )
-                        sel = clause if sel is None else sel | clause
-                    flt = flt & sel
-            # STREAM row groups instead of materializing the whole
-            # block file: task peak memory = one parquet row group
-            # + one logical (part, salt) group, independent of file
-            # size — a decode task over a multi-GB block file stays
-            # inside the warm allocator arena (this host faults
-            # fresh pages at ~10 MB/s, and at 100 TB per-task
-            # memory must not scale with file size). The predicate
-            # runs as a vectorized mask over the (tiny, one row per
-            # BLOCK) metadata columns of each row group.
-            need_cols = ["part_id", "salt", "block_seq", "column",
-                         "payload"]
-            if "n_values" in file_cols:
-                need_cols.append("n_values")
-            if krange is not None and "key_lo" in file_cols:
-                need_cols += ["key_lo", "key_hi"]
-            if krange_s is not None and "key_lo_s" in file_cols:
-                need_cols += ["key_lo_s", "key_hi_s"]
-            out_cols = [c for c in need_cols
-                        if not c.startswith("key_")]
+            cols = ["part_id", "salt", "block_seq", "column", "n_values"]
+            lost = [c for c in cols + ["payload"] if c not in file_cols]
+            if lost:
+                raise ValueError(f"block file {path!r}: no column {lost}")
+            zones = [(lo, hi, rng) for lo, hi, rng in (
+                ("key_lo", "key_hi", krange),
+                ("key_lo_s", "key_hi_s", krange_s),
+            ) if rng is not None and lo in file_cols]
+            bloom = probe_hash is not None and "key_bloom" in file_cols
+            meta = pf.read(
+                columns=cols + [c for lo, hi, _ in zones for c in (lo, hi)]
+                + (["key_bloom"] if bloom else []), use_threads=False)
+            pids = meta.column("part_id").to_numpy()
+            base = (np.isin(pids, wanted) if wanted is not None
+                    else np.ones(len(pids), bool))
+            for lo, hi, (a, b) in zones:
+                # overlap with [a, b]; a null bound (unzoned block) is
+                # always kept: pruning may over-include, never lose rows
+                base &= np.asarray(pc.fill_null(pc.and_(
+                    pc.greater_equal(meta.column(hi), a),
+                    pc.less_equal(meta.column(lo), b)), True))
+            keep = base & np.asarray(
+                pc.is_in(meta.column("column"), value_set=wanted_arr))
+            if bloom:
+                # a Bloom (on the sort-key column's row, maybe in another
+                # row group) that proves the probe absent drops its whole
+                # block, keyed by the FULL (part_id, salt, block_seq): a
+                # file holds several parts' groups (tasks are packed)
+                trips = list(zip(pids.tolist(),
+                                 meta.column("salt").to_pylist(),
+                                 meta.column("block_seq").to_pylist()))
+                absent = {
+                    trips[i] for i, kb in
+                    enumerate(meta.column("key_bloom").to_pylist())
+                    if kb is not None and base[i]
+                    and not bloom_mod.bloom_might_contain(
+                        kb, probe_hash, probe_domain)}
+                keep &= np.array([t not in absent for t in trips], bool)
+            rows = meta.select(cols)
 
             def _split(buf: pa.Table):
                 pids = buf.column("part_id").to_numpy()
@@ -1854,26 +1801,18 @@ def _decode_view(
                      [len(keys)]]
                 )
 
-            meta_cols = [c for c in need_cols if c != "payload"]
             pend = None  # trailing, possibly-incomplete group
+            stop = 0
             for rg in range(pf.metadata.num_row_groups):
-                # metadata-first: evaluate the whole predicate on
-                # the tiny non-payload columns (one row per BLOCK),
-                # and only read the rg's payload bytes if any block
-                # survives — a pruned or projected decode skips
-                # entire row groups' payload I/O, not just rows
-                meta = pf.read_row_group(rg, columns=meta_cols,
-                                         use_threads=False)
-                keep_idx = meta.append_column(
-                    "_i", pa.array(range(meta.num_rows), pa.int64())
-                ).filter(flt).column("_i").to_pylist()
-                if not keep_idx:
+                start, stop = stop, stop + pf.metadata.row_group(rg).num_rows
+                idx = np.flatnonzero(keep[start:stop])
+                if not len(idx):
                     continue
-                t = pf.read_row_group(rg, columns=need_cols,
-                                      use_threads=False)
-                if len(keep_idx) < meta.num_rows:
-                    t = t.take(pa.array(keep_idx, pa.int64()))
-                t = t.select(out_cols)
+                t = rows.slice(start, stop - start).append_column(
+                    "payload", pf.read_row_group(
+                        rg, columns=["payload"], use_threads=False)[0])
+                if len(idx) < t.num_rows:
+                    t = t.take(idx)
                 buf = t if pend is None else pa.concat_tables([pend, t])
                 bounds = _split(buf)
                 # decode every COMPLETE group; the trailing group may
@@ -1900,7 +1839,7 @@ def _decode_view(
                        "path string")
     result = pdf.mapInArrow(decode_stream, schema=ddl)
     return _apply_evolution_and_deletes(
-        spark, result, view, schema, set(wanted_cols), part_ids,
+        spark, result, view, schema, wanted_cols, part_ids,
         deletes, column_map,
     )
 

@@ -1,8 +1,8 @@
-"""Fault injection on block files and payloads: a truncated payload or
-a corrupt section length raises an error naming the block file, part,
-salt, column and block_seq, and a truncated block file an error naming
-the file — never short or shifted section views, wrong rows or fewer
-rows."""
+"""Fault injection on block files and payloads: a truncated payload, a
+corrupt section length or a duplicated block raises an error naming
+the block file, part, salt, column and block_seq, and a truncated
+block file or one without ``n_values`` an error naming the file —
+never short or shifted section views, wrong, extra or fewer rows."""
 
 from __future__ import annotations
 
@@ -107,3 +107,35 @@ def test_truncated_block_file_raises_naming_file(spark, tmp_path):
         decode_blocks(spark, out, schema).count()
     msg = str(ei.value)
     assert f"block file {path!r}" in msg, msg
+
+
+def test_duplicate_block_raises_naming_block(spark, tmp_path):
+    """A block row stored twice fails even a one-column projection,
+    where every column still matches its own ``n_values`` sum."""
+    out, schema = _encode(spark, tmp_path)
+    (path,) = _committed_block_files(out)
+    blocks = pq.read_table(path)
+    cols = blocks.column("column").to_pylist()
+    seqs = blocks.column("block_seq").to_pylist()
+    (i,) = [j for j, cq in enumerate(zip(cols, seqs)) if cq == ("k", 1)]
+    pid = blocks.column("part_id")[i].as_py()
+    salt = blocks.column("salt")[i].as_py()
+    pq.write_table(pa.concat_tables([blocks.slice(0, i + 1),
+                                     blocks.slice(i)]), path)
+    with pytest.raises(Exception) as ei:
+        decode_blocks(spark, out, pa.schema([schema.field("k")])).count()
+    msg = str(ei.value)
+    assert "ValueError" in msg and f"block file {path!r}" in msg, msg
+    assert (f"part {pid} salt {salt} column 'k' block_seq 1: "
+            "duplicate block") in msg, msg
+
+
+def test_block_file_without_n_values_raises_naming_file(spark, tmp_path):
+    out, schema = _encode(spark, tmp_path)
+    (path,) = _committed_block_files(out)
+    pq.write_table(pq.read_table(path).drop_columns(["n_values"]), path)
+    with pytest.raises(Exception) as ei:
+        decode_blocks(spark, out, schema).count()
+    msg = str(ei.value)
+    assert "ValueError" in msg and f"block file {path!r}" in msg, msg
+    assert "n_values" in msg, msg

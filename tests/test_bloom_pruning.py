@@ -225,6 +225,33 @@ def test_pruned_decode_over_includes_on_pre_bloom_files(spark, tmp_path):
     assert rng.count() == total
 
 
+def test_point_lookup_across_row_groups(spark, tmp_path):
+    """A block's Bloom filter sits on its sort-key column's row, which
+    can land in another parquet row group than the projected columns'
+    rows of the same (part_id, salt, block_seq): a doc_id-only probe
+    decode over 7-row row groups must still keep every matching block
+    and prune the others."""
+    from libgiddy_spark.engine import _committed_block_files
+
+    src, out, schema = _encode_docs(spark, tmp_path, "rg")
+    for path in _committed_block_files(out):
+        t = pq.read_table(path)
+        pq.write_table(t, path, row_group_size=7)
+        assert pq.ParquetFile(path).metadata.num_row_groups > 1
+    src_df = spark.read.parquet(src)
+    probe = src_df.agg(F.min("text")).collect()[0][0]
+    ids = pa.schema([schema.field("doc_id")])
+    got = [r[0] for r in decode_blocks(spark, out, ids, key_point=probe)
+           .select("doc_id").collect()]
+    exp = {r[0] for r in src_df.filter(F.col("text") == probe)
+           .select("doc_id").collect()}
+    assert exp and exp <= set(got)
+    assert len(got) < src_df.count()
+    # same zone range as the real min -> only the blooms can prune it
+    assert decode_blocks(spark, out, ids,
+                         key_point=probe + "\0@absent").count() == 0
+
+
 # --- snapshot time travel --------------------------------------------------
 
 

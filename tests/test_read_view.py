@@ -18,6 +18,7 @@ from libgiddy_spark.engine import (
     delete_rows,
     encode_snapshot,
     purge_deletes,
+    read_changes,
     vacuum_blocks,
 )
 from libgiddy_spark.manifest import Manifest
@@ -85,6 +86,20 @@ def test_one_manifest_read_per_plan(spark, tmp_path, monkeypatch):
     assert spy(lambda: file_rows(out, as_of="v1"))[0] == 1
     assert spy(lambda: read_table(spark, out))[0] <= 2
     assert spy(lambda: vacuum_blocks(out, retain_last=3))[0] == 1
+
+
+def test_one_manifest_read_per_changelog(spark, tmp_path, monkeypatch):
+    """A changelog window of two inserts and a delete decodes every
+    window snapshot and the delete's parent from one manifest read."""
+    out, _first = _two_snapshots(spark, tmp_path)
+    spy = _Spy(monkeypatch)
+    changes = []
+    assert spy(lambda: changes.append(
+        read_changes(spark, out, SCHEMA, None))) == (1, 1)
+    (ch,) = changes
+    assert ch.filter(F.col("_change_type") == "insert").count() == 2000
+    assert sorted(r[0] for r in ch.filter(F.col("_change_type") == "delete")
+                  .select("k").collect()) == GONE
 
 
 def test_read_does_not_mix_manifest_states(spark, tmp_path, monkeypatch):
