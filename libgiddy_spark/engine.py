@@ -985,6 +985,13 @@ def _staged_full_rewrite(
     together, and a crash at any point leaves a consistent table
     (before the txn: pre-rewrite state; after: rewritten state).
     Returns (encode summary, retired dirs)."""
+    from .schema_evo import table_schema
+
+    # the rewrite replaces every column: one left out would come back null
+    missing = [c for c in table_schema(view)[0].names if c not in schema.names]
+    if missing:
+        raise ValueError(f"a full rewrite needs the whole table schema "
+                         f"(schema_evo.table_schema); {missing} missing")
     out_dir = view.out_dir
     blocks_root = os.path.join(out_dir, "blocks")
     live = view.files()
@@ -1044,7 +1051,8 @@ def purge_deletes(
     Afterwards reads pay no anti-join; time travel before the purge
     still sees the original rows + applies the original deletes (until
     :func:`vacuum_blocks` removes the retired dirs). ``schema`` must be
-    the FULL table schema — a purge rewrites every column."""
+    the FULL table schema — a purge rewrites every column, so one
+    missing from it raises a ``ValueError``."""
     view = ReadView.read(out_dir)
     if not view.deletes:
         return {"purged_files": 0, "rewritten": False}
@@ -1074,7 +1082,8 @@ def rewrite_sorted(
     Arrow sort); any pending equality deletes are materialized on the way
     (the rewrite decodes live rows, so keeping the tombstone files
     would double-apply history). Old dirs stay for time travel until
-    :func:`vacuum_blocks`."""
+    :func:`vacuum_blocks`. ``schema`` must be the full table schema,
+    as for :func:`purge_deletes`."""
     view = ReadView.read(out_dir)
     summary, old_dirs = _staged_full_rewrite(
         spark, view, schema, key_col, cluster=True,
@@ -1341,15 +1350,17 @@ def read_changes(
             # before it, so it deletes nothing — as_of=None here would
             # wrongly decode HEAD
             continue
+        # a delete from before a key RENAME names the key's old name
+        key = view.column_map(tcols).get(e["key_col"], e["key_col"])
         keys = spark.read.parquet(dfile).select(
-            F.col(e["key_col"])).distinct()
+            F.col(e["key_col"]).alias(key)).distinct()
         if int(e.get("n", 0)) > bcast_max:
             keys = keys.hint("shuffle_hash")
         else:
             keys = F.broadcast(keys)
         rows = _decode_view(spark, view.at(parent), schema)
         pieces.append(
-            rows.join(keys, e["key_col"], "left_semi")
+            rows.join(keys, key, "left_semi")
             .select(*tcols)
             .withColumn("_change_type", F.lit("delete"))
             .withColumn("_commit_seq",
@@ -1363,19 +1374,20 @@ def read_changes(
 
 
 def _resolved_deletes(
-    view: ReadView, schema: pa.Schema, column_map: dict[str, str] | None,
+    view: ReadView, schema: pa.Schema,
 ) -> list[tuple[str, str, str, int, int]]:
     """(abs delete file, file key column, output key column, commit
     seq, n_keys) for every delete ``view`` applies, after the two loud
     checks: the file must still exist and the projection must include
     its key."""
     names = {f.name for f in schema}
+    cmap = view.column_map(names)
     out = []
     for dfile, dkey, n_keys, dseq in view.deletes:
         # a delete written before a RENAME tombstones under the old
         # name: its file column stays dkey, the decoded frame carries
         # the logical name
-        res_key = (column_map or {}).get(dkey, dkey)
+        res_key = cmap.get(dkey, dkey)
         if not os.path.exists(dfile):
             # time travel between a delete and its purge after vacuum
             # removed the cleared delete file: fail with the same loud
@@ -1519,7 +1531,6 @@ def _apply_evolution_and_deletes(
     wanted_cols: set[str],
     part_ids,
     deletes: list[tuple[str, str, str, int, int]] | None,
-    column_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """Shared decode tail: union schema-evolution null rows, then apply
     the equality deletes the decode tasks leave out — those past
@@ -1545,7 +1556,7 @@ def _apply_evolution_and_deletes(
             return result
         # the only rows are evolution nulls, whose null keys match no
         # tombstone: validate, and join only past the task limit
-        deletes = _resolved_deletes(view, schema, column_map)
+        deletes = _resolved_deletes(view, schema)
     # Tombstone lists up to SMALL_DELETE_MAX_KEYS were applied inside the
     # decode tasks. A GDPR-scale purge wave (10^8+ keys) would not fit
     # a task, so past the limit the anti-join runs as a SHUFFLE_HASH
@@ -1595,14 +1606,8 @@ def decode_blocks(
     key_range_s: tuple[str, str] | None = None,
     key_point=None,
     as_of: str | None = None,
-    column_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """Blocks -> original rows (+ part_id), SHUFFLE-FREE.
-
-    ``column_map`` (physical block-column name -> logical output name)
-    serves schema RENAME evolution (schema_evo.read_table builds it):
-    blocks keep the name they were encoded under; the block filter
-    matches physical names and decode_group emits logical ones.
 
     Every encode task writes exactly one parquet file holding whole,
     contiguous (part_id, salt) groups (the task sorts and encodes its
@@ -1660,8 +1665,7 @@ def decode_blocks(
     purge clearing the deletes of the dirs just listed) can never mix
     two manifest states into one read."""
     return _decode_view(spark, ReadView.read(out_dir, as_of), schema,
-                        part_ids, key_range, key_range_s, key_point,
-                        column_map)
+                        part_ids, key_range, key_range_s, key_point)
 
 
 def _decode_view(
@@ -1672,7 +1676,6 @@ def _decode_view(
     key_range: tuple[int, int] | None = None,
     key_range_s: tuple[str, str] | None = None,
     key_point=None,
-    column_map: dict[str, str] | None = None,
 ) -> DataFrame:
     """:func:`decode_blocks` of the manifest state ``view`` holds."""
     probe_hash = probe_domain = None
@@ -1693,14 +1696,14 @@ def _decode_view(
         f"`{f.name}` {_spark_type_of(f.type)}" for f in schema
     )
     ddl = out_fields + ", part_id int"
-    wanted_cols = (set(column_map) if column_map
-                   else {f.name for f in schema})
+    column_map = view.column_map(schema.names)
+    wanted_cols = set(column_map)
     if not files:
         # a fully-pruned listing must still honor schema evolution and
         # deletes — the same shared tail as the main path
         return _apply_evolution_and_deletes(
             spark, spark.createDataFrame([], ddl), view, schema,
-            wanted_cols, part_ids, None, column_map,
+            wanted_cols, part_ids, None,
         )
     # EQUALITY DELETES (merge-on-read) up to SMALL_DELETE_MAX_KEYS keys are
     # applied inside the decode tasks, so the plan gains no join: the
@@ -1708,7 +1711,7 @@ def _decode_view(
     # every task reads the delete files once and masks each decoded
     # group. Time travel to a snapshot before a delete never sees it
     # (ReadView.deletes filters by as_of).
-    deletes = _resolved_deletes(view, schema, column_map)
+    deletes = _resolved_deletes(view, schema)
     tombs = [
         (dfile, dkey, res_key, dseq,
          _tombstone_type(dfile, dkey, schema.field(res_key)))
@@ -1839,8 +1842,7 @@ def _decode_view(
                        "path string")
     result = pdf.mapInArrow(decode_stream, schema=ddl)
     return _apply_evolution_and_deletes(
-        spark, result, view, schema, wanted_cols, part_ids,
-        deletes, column_map,
+        spark, result, view, schema, wanted_cols, part_ids, deletes,
     )
 
 

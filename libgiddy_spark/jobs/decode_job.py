@@ -86,13 +86,10 @@ def main() -> None:
     from libgiddy_spark.table_io import list_parquet_files
 
     spark = build_spark("libgiddy-spark-decode")
-    column_map = None
     if args.table_schema:
         from libgiddy_spark.schema_evo import table_schema
 
-        schema, phys, _retired = table_schema(args.encoded, args.as_of)
-        column_map = {pn: logical for logical in schema.names
-                      for pn in phys.get(logical, [logical])}
+        schema = table_schema(args.encoded, args.as_of)[0]
     else:
         first_rel = list_parquet_files(args.source)[0][0]
         schema_path = (
@@ -115,10 +112,6 @@ def main() -> None:
         import pyarrow as pa_mod
 
         schema = pa_mod.schema([schema.field(c) for c in proj])
-        if column_map is not None:
-            keep = set(proj)
-            column_map = {pn: lg for pn, lg in column_map.items()
-                          if lg in keep}
     import pyarrow as pa
 
     from pyspark.sql import functions as F
@@ -184,7 +177,7 @@ def main() -> None:
         kpoint, kpoint_lit = _typed(args.key_point)
     dec = decode_blocks(spark, args.encoded, schema, key_range=krange,
                         key_range_s=krange_s, key_point=kpoint,
-                        as_of=args.as_of, column_map=column_map)
+                        as_of=args.as_of)
 
     def _exact(df):
         # pruning is block-granular: apply the exact predicate so --out

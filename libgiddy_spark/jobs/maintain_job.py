@@ -18,6 +18,13 @@ import argparse
 import json
 
 
+def _table_schema(encoded: str):
+    """The table's recorded HEAD schema (after renames and drops)."""
+    from libgiddy_spark.schema_evo import table_schema
+
+    return table_schema(encoded)[0]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--encoded", required=True)
@@ -35,14 +42,12 @@ def main() -> None:
                          "--retain-last, like Iceberg)")
     ap.add_argument("--delete-keys", default=None, metavar="K1,K2,...",
                     help="equality delete (merge-on-read): tombstone "
-                         "these key values; requires --key-col AND "
-                         "--source (values are typed from the key "
-                         "column's schema)")
+                         "these key values; requires --key-col (values "
+                         "are typed from the key column's table schema)")
     ap.add_argument("--key-col", default=None)
     ap.add_argument("--purge", action="store_true",
                     help="materialize pending deletes: full rewrite "
-                         "minus tombstones; requires --source for the "
-                         "table schema and --key-col")
+                         "minus tombstones; requires --key-col")
     ap.add_argument("--upsert-source", default=None, metavar="DIR",
                     help="row-level upsert (MERGE): atomically replace "
                          "rows whose --key-col appears in this parquet "
@@ -52,10 +57,7 @@ def main() -> None:
     ap.add_argument("--rewrite-sorted", action="store_true",
                     help="sort-order compaction: re-cluster the whole "
                          "table by --key-col (disjoint per-part zone "
-                         "maps; materializes pending deletes); "
-                         "requires --source for the table schema")
-    ap.add_argument("--source", default=None,
-                    help="source snapshot (schema for --purge)")
+                         "maps; materializes pending deletes)")
     ap.add_argument("--create-ref", default=None, metavar="NAME[@SNAP]",
                     help="named ref (Iceberg branch/tag analogue): pin "
                          "NAME to SNAP (default HEAD); refs resolve "
@@ -151,25 +153,17 @@ def main() -> None:
 
         out["refs"] = list_refs(args.encoded)
     if args.delete_keys:
-        import os as _os
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from libgiddy_spark.engine import delete_rows
-        from libgiddy_spark.table_io import list_parquet_files
 
-        if not (args.key_col and args.source):
-            # the tombstone VALUES must be typed from the key column's
-            # schema, never guessed from how the text parses ('0123'
-            # against a string key must stay the literal string; an
-            # int would over-delete '123' through join coercion)
-            ap.error("--delete-keys requires --key-col and --source "
-                     "(key typing follows the column's schema)")
-        first = list_parquet_files(args.source)[0][0]
-        p = (args.source if _os.path.isfile(args.source)
-             else _os.path.join(args.source, first))
-        ktype = pq.read_schema(p).field(args.key_col).type
+        if not args.key_col:
+            ap.error("--delete-keys requires --key-col")
+        # the tombstone VALUES are typed from the key column's schema,
+        # never guessed from how the text parses ('0123' against a
+        # string key must stay the literal string; an int would
+        # over-delete '123' through join coercion)
+        ktype = _table_schema(args.encoded).field(args.key_col).type
         raw = args.delete_keys.split(",")
         if pa.types.is_timestamp(ktype):
             # int64 micros on the CLI, written as typed timestamps so
@@ -187,22 +181,15 @@ def main() -> None:
             keys = raw
         out["delete"] = delete_rows(args.encoded, args.key_col, keys)
     if args.purge:
-        import pyarrow.parquet as pq
-
         from libgiddy_spark.engine import purge_deletes
         from libgiddy_spark.jobs.encode_job import build_spark
-        from libgiddy_spark.table_io import list_parquet_files
 
-        if not (args.source and args.key_col):
-            ap.error("--purge requires --source and --key-col")
-        import os as _os
-
-        first = list_parquet_files(args.source)[0][0]
-        p = (args.source if _os.path.isfile(args.source)
-             else _os.path.join(args.source, first))
+        if not args.key_col:
+            ap.error("--purge requires --key-col")
         spark = build_spark("libgiddy-spark-maintain")
         out["purge"] = purge_deletes(
-            spark, args.encoded, pq.read_schema(p), key_col=args.key_col)
+            spark, args.encoded, _table_schema(args.encoded),
+            key_col=args.key_col)
     if args.upsert_source:
         from libgiddy_spark.engine import upsert_rows
         from libgiddy_spark.jobs.encode_job import build_spark
@@ -214,22 +201,15 @@ def main() -> None:
             spark, args.encoded, args.key_col,
             spark.read.parquet(args.upsert_source))
     if args.rewrite_sorted:
-        import pyarrow.parquet as pq
-
         from libgiddy_spark.engine import rewrite_sorted
         from libgiddy_spark.jobs.encode_job import build_spark
-        from libgiddy_spark.table_io import list_parquet_files
 
-        if not (args.source and args.key_col):
-            ap.error("--rewrite-sorted requires --source and --key-col")
-        import os as _os
-
-        first = list_parquet_files(args.source)[0][0]
-        p = (args.source if _os.path.isfile(args.source)
-             else _os.path.join(args.source, first))
+        if not args.key_col:
+            ap.error("--rewrite-sorted requires --key-col")
         spark = build_spark("libgiddy-spark-maintain")
         out["rewrite_sorted"] = rewrite_sorted(
-            spark, args.encoded, pq.read_schema(p), key_col=args.key_col)
+            spark, args.encoded, _table_schema(args.encoded),
+            key_col=args.key_col)
     if args.compact:
         from libgiddy_spark.engine import compact_blocks
         from libgiddy_spark.jobs.encode_job import build_spark

@@ -17,10 +17,10 @@ snapshot/publish/rollback entries into branch state. A read plan reads
 the manifest ONCE, into a :class:`ReadView`: the resolved ``as_of``,
 the chain and accepted set, the live ``{chunk_dir: {part_id: line}}``
 view (chunk lines, tail part lines and rewrites replayed), the visible
-equality deletes and each visible part's sequence number. Decode's
-listing, delete scoping and evolution nulls, vacuum's pins, purge and
-the files metadata table all take one view, so no plan mixes two
-manifest states.
+equality deletes, each visible part's sequence number and the column
+renames. Decode's listing, delete scoping, evolution nulls and column
+names, vacuum's pins, purge and the files metadata table all take one
+view, so no plan mixes two manifest states.
 """
 
 from __future__ import annotations
@@ -530,11 +530,11 @@ def list_refs(out_dir: str) -> dict[str, str]:
 class ReadView:
     """One manifest state and everything a read at ``as_of`` needs
     from it: the resolved snapshot, the branch chain and accepted set,
-    the live parts, the visible equality deletes and each visible
-    part's sequence number. A plan that takes all of them from one
-    view cannot list the block files of one state and apply the
-    deletes of another (a purge committed mid-plan would otherwise
-    bring deleted rows back).
+    the live parts, the visible equality deletes, each visible part's
+    sequence number and each block column's logical name. A plan that
+    takes all of them from one view cannot list the block files of one
+    state and apply the deletes of another (a purge committed mid-plan
+    would otherwise bring deleted rows back).
 
     :meth:`read` is the one place a read plan touches the manifest;
     :meth:`at` views the same state at another snapshot. Everything
@@ -687,6 +687,25 @@ class ReadView:
             for parts in self.parts.values() for pid, e in parts.items()
             if e.get("snapshot_id") in seq_of
         }
+
+    @cached_property
+    def _stored_as(self) -> dict[str, set[str]]:
+        """Logical column -> every physical name its blocks were written
+        under, over EVERY schema line: a read can need another line's
+        chain (a changelog window crossing a rename, a column renamed
+        and later dropped). evolve_schema never reuses a name."""
+        out: dict[str, set[str]] = {}
+        for e in self.entries:
+            if e.get("kind") == "schema":
+                for logical, names in e.get("phys", {}).items():
+                    out.setdefault(logical, set()).update(names)
+        return out
+
+    def column_map(self, names) -> dict[str, str]:
+        """Physical block-column name -> logical name, for the logical
+        ``names`` a read outputs (each also maps to itself)."""
+        return {p: n for n in names
+                for p in (*self._stored_as.get(n, ()), n)}
 
     def evolution_nulls(
         self, wanted_cols: set[str], part_ids: list[int] | None = None,

@@ -5,13 +5,16 @@ Iceberg evolves schemas as metadata-only commits keyed by field-ids;
 this engine's analogue is an indexed ``kind=schema`` manifest line
 holding the CURRENT logical schema (arrow IPC), each logical column's
 PHYSICAL name history (renames never rewrite data — old blocks keep
-their old column name and decode maps it back), and the set of retired
-names. Resolution is manifest-positional: a read ``as_of`` snapshot X
-uses the last schema line written before X joined the branch (the
-encode path writes its baseline line immediately before the snapshot
-header, so a snapshot always sees the schema it was written under);
-HEAD uses the newest line — rollback does NOT revert schema, matching
-Iceberg.
+their old column name), and the set of retired names. Every read
+resolves renames — decode, and so purge, sorted rewrite and the
+changelog too — by mapping each block's physical name to its logical
+one from the manifest's schema lines (``ReadView.column_map``); no
+caller passes a mapping. Resolution is manifest-positional: a read
+``as_of`` snapshot X uses the last schema line written before X
+joined the branch (the encode path writes its baseline line
+immediately before the snapshot header, so a snapshot always sees the
+schema it was written under); HEAD uses the newest line — rollback
+does NOT revert schema, matching Iceberg.
 
 Without field-ids, one Iceberg behaviour is deliberately refused
 rather than approximated: re-adding a column name that old blocks (or
@@ -55,12 +58,12 @@ def _append_schema_line(out_dir: str, entry: dict) -> None:
     Manifest(out_dir).append_indexed(entry, [entry])
 
 
-def _resolve_line(out_dir: str, as_of: str | None) -> dict | None:
-    """The schema line governing a read at ``as_of`` (None = HEAD):
-    the last one written before the snapshot joined the branch (its
-    header, or its publish entry for WAP snapshots; an unpublished
-    staged snapshot audits under its stage header's schema)."""
-    view = ReadView.read(out_dir, as_of)
+def _resolve_line(view: ReadView) -> dict | None:
+    """The schema line governing a read of ``view`` at its ``as_of``
+    (None = HEAD): the last one written before the snapshot joined the
+    branch (its header, or its publish entry for WAP snapshots; an
+    unpublished staged snapshot audits under its stage header's
+    schema)."""
     as_of = view.as_of
     last: dict | None = None
     for e in view.entries:
@@ -77,14 +80,17 @@ def _resolve_line(out_dir: str, as_of: str | None) -> dict | None:
 
 
 def table_schema(
-    out_dir: str, as_of: str | None = None
+    out_dir: str | ReadView, as_of: str | None = None
 ) -> tuple[pa.Schema, dict[str, list[str]], set[str]]:
     """(logical schema, physical-name history per logical column,
-    retired names) at ``as_of`` (default HEAD)."""
-    line = _resolve_line(out_dir, as_of)
+    retired names) at ``as_of`` (default HEAD). ``out_dir`` may be a
+    :class:`ReadView` already read, which brings its own ``as_of``."""
+    view = (out_dir if isinstance(out_dir, ReadView)
+            else ReadView.read(out_dir, as_of))
+    line = _resolve_line(view)
     if line is None:
         raise ValueError(
-            f"no schema recorded in {out_dir!r} (encode something "
+            f"no schema recorded in {view.out_dir!r} (encode something "
             "first, or evolve_schema on an empty table is meaningless)")
     schema = _from_ipc_hex(line["ipc"])
     phys = {k: list(v) for k, v in line.get("phys", {}).items()}
@@ -206,21 +212,17 @@ def read_table(
     decode's pruning (zone maps, blooms, part filter, time travel)
     passes through; time travel reads under the schema that snapshot
     was written with."""
-    from .engine import decode_blocks
+    from .engine import _decode_view
 
-    schema, phys, _retired = table_schema(out_dir, as_of)
+    # one manifest read plans the whole read: schema, renames, listing
+    view = ReadView.read(out_dir, as_of)
+    schema = table_schema(view)[0]
     if columns is not None:
         missing = [c for c in columns if c not in set(schema.names)]
         if missing:
             raise ValueError(f"unknown columns {missing}; table has "
                              f"{list(schema.names)}")
         schema = pa.schema([schema.field(c) for c in columns])
-    cmap = {p: logical for logical in schema.names
-            for p in phys.get(logical, [logical])}
-    out = decode_blocks(
-        spark, out_dir, schema,
-        part_ids=part_ids, key_range=key_range,
-        key_range_s=key_range_s, key_point=key_point, as_of=as_of,
-        column_map=cmap,
-    )
+    out = _decode_view(spark, view, schema, part_ids, key_range,
+                       key_range_s, key_point)
     return out.drop("part_id")

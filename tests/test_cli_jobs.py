@@ -112,7 +112,7 @@ def test_delete_purge_cli(spark, tmp_path, monkeypatch, capsys):
     capsys.readouterr()
     _run(monkeypatch, maintain_job,
          ["--encoded", out, "--delete-keys", "3,9,27", "--key-col",
-          "doc_id", "--source", src])
+          "doc_id"])
     rep = _last_json(capsys)
     assert rep["delete"]["n"] == 3
     _run(monkeypatch, decode_job,
@@ -120,7 +120,7 @@ def test_delete_purge_cli(spark, tmp_path, monkeypatch, capsys):
     assert _last_json(capsys)["rows_decoded"] == 497
     _run(monkeypatch, maintain_job,
          ["--encoded", out, "--purge", "--key-col", "doc_id",
-          "--source", src, "--vacuum"])
+          "--vacuum"])
     rep = _last_json(capsys)
     assert rep["purge"]["rewritten"] and rep["vacuum"]["removed"]
     _run(monkeypatch, decode_job,
@@ -178,8 +178,7 @@ def test_consume_and_sorted_rewrite_cli(spark, tmp_path, monkeypatch,
     assert not _last_json(capsys)["consumed"]
     # sort-order compaction through the CLI, then an exact verify
     _run(monkeypatch, maintain_job,
-         ["--encoded", out, "--rewrite-sorted", "--source", src,
-          "--key-col", "doc_id"])
+         ["--encoded", out, "--rewrite-sorted", "--key-col", "doc_id"])
     rep = _last_json(capsys)
     assert rep["rewrite_sorted"]["sorted_by"] == "doc_id"
     _run(monkeypatch, decode_job,

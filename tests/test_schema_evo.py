@@ -186,3 +186,102 @@ def test_no_evolution_nulls_for_compacted_then_purged_parts(spark, table):
     df = read_table(spark, out, columns=["extra_col"])
     assert df.count() == 399
     assert df.filter(F.col("extra_col").isNotNull()).count() == 100
+
+
+def _src_text(spark, lo=0, hi=300):
+    return {r["doc_id"]: r["text"] for r in
+            spark.read.parquet(f"{SF}/documents.parquet")
+            .filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            .collect()}
+
+
+def _append_docs(spark, src, lo, hi):
+    """Add the documents ``lo <= doc_id < hi`` to the source dir as one
+    new file (its column is still called ``text``)."""
+    stage = src + f"_stage{lo}"
+    (spark.read.parquet(f"{SF}/documents.parquet")
+     .filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+     .coalesce(1).write.parquet(stage))
+    part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+    os.rename(os.path.join(stage, part), os.path.join(src, f"{lo}.parquet"))
+
+
+@pytest.mark.parametrize("rewrite", ["purge_deletes", "rewrite_sorted"])
+def test_full_rewrite_keeps_renamed_values(spark, table, rewrite):
+    from libgiddy_spark import engine
+
+    out, _src = table
+    evolve_schema(out, rename={"text": "body"})
+    delete_rows(out, "doc_id", [1, 2, 3])
+    getattr(engine, rewrite)(spark, out, table_schema(out)[0], "doc_id")
+    got = {r["doc_id"]: r["body"] for r in
+           read_table(spark, out, columns=["doc_id", "body"]).collect()}
+    want = _src_text(spark)
+    for k in (1, 2, 3):
+        del want[k]
+    assert got == want
+
+
+@pytest.mark.parametrize("rewrite", ["purge_deletes", "rewrite_sorted"])
+def test_full_rewrite_rejects_partial_schema(spark, table, rewrite):
+    from libgiddy_spark import engine
+
+    out, _src = table
+    delete_rows(out, "doc_id", [1])
+    partial = pa.schema([table_schema(out)[0].field(c)
+                         for c in ("doc_id", "lang")])
+    with pytest.raises(ValueError, match="text.*source.*n_chars"):
+        getattr(engine, rewrite)(spark, out, partial, "doc_id")
+    assert read_table(spark, out).count() == 299  # nothing rewritten
+
+
+def test_changelog_carries_renamed_values(spark, table):
+    from libgiddy_spark.engine import read_changes
+
+    out, _src = table
+    evolve_schema(out, rename={"text": "body"})
+    delete_rows(out, "doc_id", [1, 2, 3])
+    ch = read_changes(spark, out, table_schema(out)[0], None)
+    want = _src_text(spark)
+    ins = {r["doc_id"]: r["body"] for r in
+           ch.filter(F.col("_change_type") == "insert").collect()}
+    dels = {r["doc_id"]: r["body"] for r in
+            ch.filter(F.col("_change_type") == "delete").collect()}
+    assert ins == want
+    assert dels == {k: want[k] for k in (1, 2, 3)}
+
+
+def test_changelog_delete_after_key_rename(spark, table):
+    from libgiddy_spark.engine import read_changes
+
+    out, _src = table
+    delete_rows(out, "doc_id", [1, 2])
+    evolve_schema(out, rename={"doc_id": "document_id"})
+    ch = read_changes(spark, out, table_schema(out)[0], None)
+    dels = {r["document_id"]: r["text"] for r in
+            ch.filter(F.col("_change_type") == "delete").collect()}
+    want = _src_text(spark)
+    assert dels == {1: want[1], 2: want[2]}
+
+
+def test_time_travel_after_rename_then_drop(spark, table):
+    """A body-era snapshot holds blocks named ``text`` (the append) and
+    ``body`` (the purge). After ``body`` is renamed to ``content`` and
+    dropped, the newest schema line records neither chain; a read at
+    that snapshot still maps both."""
+    from libgiddy_spark.engine import purge_deletes
+
+    out, src = table
+    evolve_schema(out, rename={"text": "body"})
+    delete_rows(out, "doc_id", [1, 2])
+    purge_deletes(spark, out, table_schema(out)[0], "doc_id")
+    _append_docs(spark, src, 300, 400)
+    snap = encode_snapshot(spark, src, out, key_col="doc_id")["snapshot_id"]
+    evolve_schema(out, rename={"body": "content"})
+    evolve_schema(out, drop=["content"])
+    assert "content" not in read_table(spark, out).columns
+    got = {r["doc_id"]: r["body"] for r in read_table(
+        spark, out, columns=["doc_id", "body"], as_of=snap).collect()}
+    want = _src_text(spark, 0, 400)
+    del want[1], want[2]
+    assert got == want
