@@ -242,9 +242,13 @@ def encode_files(
     blocks_root = os.path.join(out_dir, "blocks")
     os.makedirs(blocks_root, exist_ok=True)
     done = manifest.done_parts()
+    pending = sorted(p for p in rel_of if p not in done)
     # resume sweep: drop uncommitted temp dirs AND any renamed chunk dir
-    # whose parts never reached the manifest (crash between rename and
-    # append) — each chunk dir carries a _PARTS marker listing its parts
+    # (its _PARTS marker lists its parts) holding a part this call
+    # encodes: a crashed earlier attempt. Other dirs may be staged by a
+    # txn in flight (a copy-on-write upsert stages two encodes); vacuum
+    # expires crashed staged dirs, remove_orphan_files the rest.
+    redo = set(pending)
     for d in os.listdir(blocks_root):
         full = os.path.join(blocks_root, d)
         if d.startswith("_tmp_"):
@@ -254,9 +258,8 @@ def encode_files(
         if os.path.isdir(full) and os.path.exists(marker):
             with open(marker) as f:
                 parts_in_dir = [int(x) for x in f.read().split() if x]
-            if any(p not in done for p in parts_in_dir):
+            if redo.intersection(parts_in_dir):
                 shutil.rmtree(full, ignore_errors=True)
-    pending = sorted(p for p in rel_of if p not in done)
     data_cols = list(columns or schema.names)
     sort_key = sort_key or key_col
     min_slices = min_slices or spark.sparkContext.defaultParallelism
@@ -842,59 +845,89 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     afterwards (an upsert) survives; delete again after re-ingest for
     the GDPR-purge shape.
 
-    Driver-side by design: delete batches are key lists (bounded
-    metadata), not row data. At 100 TB the delete FILES stay small
-    while applying them distributes with the decode."""
-    import pyarrow.parquet as pq
+    A list of more than ``SMALL_DELETE_MAX_KEYS`` keys commits
+    COPY-ON-WRITE instead (Iceberg ``write.delete.mode=copy-on-write``):
+    the same file, snapshot and entry commit in one txn with a full
+    rewrite of the table minus those keys (:func:`_staged_full_rewrite`
+    on the active SparkSession — without one it raises a
+    ``ValueError``), so the delete is paid for once, not by every read.
 
+    Driver-side by design: delete batches are key lists (bounded
+    metadata), not row data."""
     import hashlib
 
+    import pyarrow.parquet as pq
+
     m = Manifest(out_dir)
-    entries = m.read()
-    if not any(e.get("kind") == "snapshot" for e in entries):
+    view = ReadView(out_dir, m.read())  # HEAD before the delete
+    if not any(e.get("kind") == "snapshot" for e in view.entries):
         raise ValueError(f"no snapshots in {out_dir}: nothing to delete from")
-    ddir = os.path.join(out_dir, "deletes")
-    os.makedirs(ddir, exist_ok=True)
-    seq = sum(1 for e in entries if e.get("kind") == "delete")
-    rel = os.path.join("deletes", f"delete-{seq:05d}.parquet")
-    tmp = os.path.join(out_dir, rel + ".tmp")
-    tbl = pa.table({key_col: pa.array(keys)})
-    pq.write_table(tbl, tmp)
+    cow = len(keys) > SMALL_DELETE_MAX_KEYS
+    spark = SparkSession.getActiveSession() if cow else None
+    if cow and spark is None:
+        raise ValueError(
+            f"a delete of more than SMALL_DELETE_MAX_KEYS "
+            f"({SMALL_DELETE_MAX_KEYS}) keys commits copy-on-write, "
+            "which needs an active SparkSession")
+    rel = _next_delete_file(out_dir, view.entries)
     target = os.path.join(out_dir, rel)
-    if os.path.exists(target):
-        # debris of a crashed writer (e.g. an upsert that renamed its
-        # tombstone DIR but died before its manifest txn): the manifest
-        # entry is the commit point, so an existing unreferenced target
-        # is always safe to replace — without this, every later delete
-        # wedges on IsADirectoryError forever
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        else:
-            os.remove(target)
+    tmp = target + ".tmp"
+    pq.write_table(pa.table({key_col: pa.array(keys)}), tmp)
+    if cow:
+        schema, key = _cow_key(view, tmp, key_col)
     os.rename(tmp, target)
     # a delete is its OWN snapshot (Iceberg: every delete commit makes a
     # new snapshot): time travel to any earlier snapshot must not see it
-    with open(os.path.join(out_dir, rel), "rb") as f:
+    with open(target, "rb") as f:
         digest = hashlib.sha256(f.read()).hexdigest()[:12]
-    snap_id = f"snap-delete-{seq:05d}-{digest}"
+    snap_id = f"snap-{os.path.basename(rel).removesuffix('.parquet')}-{digest}"
     m.write_snapshot_header(snap_id, out_dir, [], 0)
-    m.append_delete(snap_id, rel, key_col, len(keys))
+    if cow:
+        _staged_full_rewrite(spark, view, schema, key, delete={
+            "kind": "delete", "snapshot_id": snap_id, "file": rel,
+            "key_col": key_col, "n": len(keys), "ts": time.time()})
+    else:
+        m.append_delete(snap_id, rel, key_col, len(keys))
     return {"file": rel, "key_col": key_col, "n": len(keys),
             "snapshot_id": snap_id}
 
 
-# A tombstone list of at most this many keys is SMALL: every decode
-# task reads its delete file with pyarrow and masks matching rows out
-# of each decoded group, so the plan gains no join (the changelog
-# broadcasts it). Larger lists are applied by a shuffled hash
-# anti-join instead (see _apply_evolution_and_deletes). Measured on a
-# 200-part, 400k-row table decoded by 8 tasks on a 4-core host: up to
-# 10^5 keys the in-task mask is faster than the shuffled join; at 10^6
-# the two are within noise (int64 keys 2.4 vs 2.5 s, 13-byte strings
-# 3.7 vs 3.4 s), and each task's key index holds ~40 MB (int64) to
-# ~120 MB (strings). Read at call time, so a patched value reaches
-# decode_blocks and read_changes.
+# delete_rows and upsert_rows commit a tombstone list of at most this
+# many keys as a pending delete, which every decode task masks out of
+# its groups (a task's key index holds ~40 MB of int64 to ~120 MB of
+# 13-byte string keys at 10^6), and a longer one copy-on-write. Read at
+# call time, so a patched value reaches the writers and read_changes.
 SMALL_DELETE_MAX_KEYS = 1_000_000
+
+
+def _next_delete_file(out_dir: str, entries: list[dict]) -> str:
+    """Path, relative to ``out_dir``, of the next delete file, numbered
+    by the delete entries in ``entries``. Anything already there, file
+    or directory, is debris of a writer that crashed before its
+    manifest entry (the commit point), so it is removed: left in place
+    it would wedge every later delete or upsert."""
+    n = sum(1 for e in entries if e.get("kind") == "delete")
+    rel = os.path.join("deletes", f"delete-{n:05d}.parquet")
+    target = os.path.join(out_dir, rel)
+    os.makedirs(os.path.dirname(target), exist_ok=True)
+    if os.path.isdir(target):
+        shutil.rmtree(target)
+    elif os.path.lexists(target):
+        os.remove(target)
+    return rel
+
+
+def _cow_key(view: ReadView, dfile: str,
+             key_col: str) -> tuple[pa.Schema, str]:
+    """(HEAD table schema, logical key column) for a copy-on-write
+    delete of ``dfile``'s ``key_col`` values, after the key-type check
+    a decode would make (:func:`_tombstone_type`)."""
+    from .schema_evo import table_schema
+
+    schema = table_schema(view)[0]
+    key = view.column_map(schema.names).get(key_col, key_col)
+    _tombstone_type(dfile, key_col, schema.field(key))
+    return schema, key
 
 
 def upsert_rows(
@@ -913,15 +946,14 @@ def upsert_rows(
 
     Scale: df's rows flow through the normal distributed encode; the
     tombstone key file is also written DISTRIBUTED (a parquet
-    directory), so upsert batches are not driver-bounded, and past
-    ``SMALL_DELETE_MAX_KEYS`` decode applies it by a shuffled
-    anti-join instead of inside its tasks — same guard as plain
-    deletes. ``df`` must carry the full table schema (column subsets
-    would null-fill on decode)."""
+    directory), so upsert batches are not driver-bounded. Past
+    ``SMALL_DELETE_MAX_KEYS`` keys the tombstone commits copy-on-write,
+    as for :func:`delete_rows`: the same txn also rewrites the old
+    rows minus those keys. ``df`` must carry the full table schema
+    (column subsets would null-fill on decode)."""
     m = Manifest(out_dir)
-    pre_entries = m.read()  # one parse: guard + delete seq (the staged
-    # encode below appends no delete entries, so the seq stays valid)
-    if not any(e.get("kind") == "snapshot" for e in pre_entries):
+    view = ReadView(out_dir, m.read())  # HEAD before the upsert
+    if not any(e.get("kind") == "snapshot" for e in view.entries):
         raise ValueError(f"no snapshots in {out_dir}: encode first")
     if key_col not in df.columns:
         raise ValueError(f"upsert df lacks key column {key_col!r}")
@@ -932,30 +964,29 @@ def upsert_rows(
     (df.write.mode("overwrite")
      .option("parquet.block.size", 8 * 1024 * 1024)
      .parquet(src))
-    summary = encode_files(
-        spark, src, list_parquet_files(src), out_dir, key_col,
-        commit_status="staged",
-    )
     # distributed tombstone of the upserted keys, staged + atomic rename
-    dnum = sum(1 for e in pre_entries if e.get("kind") == "delete")
-    rel = os.path.join("deletes", f"delete-{dnum:05d}.parquet")
-    os.makedirs(os.path.join(out_dir, "deletes"), exist_ok=True)
-    tmp = os.path.join(out_dir, "deletes", f"_tmp-delete-{dnum:05d}")
+    rel = _next_delete_file(out_dir, view.entries)
+    tmp = os.path.join(out_dir, "deletes", "_tmp-" + os.path.basename(rel))
     shutil.rmtree(tmp, ignore_errors=True)
     keys = spark.read.parquet(src).select(key_col).distinct()
     keys.write.mode("overwrite").parquet(tmp)
     n_keys = spark.read.parquet(tmp).count()
-    final = os.path.join(out_dir, rel)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(tmp, final)
-    m.commit_staged(summary["snapshot_id"], [{
-        "kind": "delete",
-        "snapshot_id": summary["snapshot_id"],
-        "file": rel,
-        "key_col": key_col,
-        "n": int(n_keys),
-        "ts": time.time(),
-    }])
+    cow = n_keys > SMALL_DELETE_MAX_KEYS
+    if cow:
+        schema, key = _cow_key(view, tmp, key_col)
+    summary = encode_files(
+        spark, src, list_parquet_files(src), out_dir, key_col,
+        commit_status="staged",
+    )
+    os.rename(tmp, os.path.join(out_dir, rel))
+    entry = {"kind": "delete", "snapshot_id": summary["snapshot_id"],
+             "file": rel, "key_col": key_col, "n": int(n_keys),
+             "ts": time.time()}
+    if cow:
+        _staged_full_rewrite(spark, view, schema, key, delete=entry,
+                             promote=(summary["snapshot_id"],))
+    else:
+        m.commit_staged([summary["snapshot_id"]], [entry])
     shutil.rmtree(src, ignore_errors=True)
     return {"snapshot_id": summary["snapshot_id"],
             "upserted_keys": int(n_keys),
@@ -970,6 +1001,8 @@ def _staged_full_rewrite(
     cluster: bool = False,
     target_part_bytes: int = 128 << 20,
     chunk_parts: int = 64,
+    delete: dict | None = None,
+    promote: tuple[str, ...] = (),
 ) -> tuple[dict, list[str]]:
     """Shared full-table rewrite: decode the LIVE rows (tombstones
     applied by decode), optionally range-cluster them on ``key_col``
@@ -978,10 +1011,15 @@ def _staged_full_rewrite(
     delete files — all in one manifest txn. The decoded rows, the
     retired dirs and the cleared deletes all come from ``view`` (HEAD).
 
+    ``delete`` = a delete entry to commit COPY-ON-WRITE: a left anti-join
+    on ``key_col`` drops its keys (unscoped: every part of ``view``
+    predates it), and the txn commits and clears it. ``promote`` =
+    further staged snapshots (an upsert's rows) the txn promotes.
+
     STAGED encode: part lines commit with status=staged — invisible
-    to listing/resume, dirs swept if we crash here — then ONE txn
-    line flips everything at once (promote to done + retire old dirs
-    + clear deletes). No reader can ever see old and new rows
+    to listing/resume, dirs expired by vacuum if we crash here — then
+    ONE txn line flips everything at once (promote to done + retire
+    old dirs + clear deletes). No reader can ever see old and new rows
     together, and a crash at any point leaves a consistent table
     (before the txn: pre-rewrite state; after: rewritten state).
     Returns (encode summary, retired dirs)."""
@@ -998,6 +1036,14 @@ def _staged_full_rewrite(
     old_dirs = sorted(
         {os.path.relpath(f, blocks_root).split(os.sep)[0] for f in live})
     dec = _decode_view(spark, view, schema).drop("part_id")
+    cleared = [os.path.relpath(f, out_dir) for f, _k, _n, _s in view.deletes]
+    txn = []
+    if delete is not None:
+        keys = spark.read.parquet(os.path.join(out_dir, delete["file"]))
+        dec = dec.join(keys.select(F.col(delete["key_col"]).alias(key_col)),
+                       key_col, "left_anti")
+        cleared.append(delete["file"])
+        txn.append(delete)
     if cluster:
         # parts = staging files, and each part's manifest zone map is
         # its file's key range — so global clustering must happen HERE:
@@ -1013,31 +1059,29 @@ def _staged_full_rewrite(
      .option("parquet.block.size", 8 * 1024 * 1024)
      .parquet(src))
     # the staged files already hold the final row placement (the
-    # clustering repartitionByRange above, or the original part rows
-    # for an unclustered purge), so the re-encode only slices the
+    # clustering repartitionByRange above, else the decode's or the
+    # anti-join's partitions), so the re-encode only slices the
     # staged files' row groups per task and Arrow-sorts within them
     summary = encode_files(
         spark, src, list_parquet_files(src), out_dir, key_col,
         chunk_parts=chunk_parts,
         commit_status="staged",
     )
-    txn = [{
+    txn.append({
         "kind": "rewrite",
         "snapshot_id": summary["snapshot_id"],
         "new_chunk": None,
         "replaces": sorted(old_dirs),
         "ts": time.time(),
-    }]
-    if view.deletes:
+    })
+    if cleared:
         txn.append({
             "kind": "delete_clear",
             "snapshot_id": summary["snapshot_id"],
-            "files": sorted(
-                os.path.relpath(f, out_dir) for f, _k, _n, _s in view.deletes
-            ),
+            "files": sorted(cleared),
             "ts": time.time(),
         })
-    Manifest(out_dir).commit_staged(summary["snapshot_id"], txn)
+    Manifest(out_dir).commit_staged([*promote, summary["snapshot_id"]], txn)
     return summary, old_dirs
 
 
@@ -1048,7 +1092,7 @@ def purge_deletes(
     rewrite-with-delete-compaction step): decode the live table minus
     tombstones, re-encode it as a fresh snapshot, RETIRE every previous
     chunk dir via a rewrite entry, and mark the delete files cleared.
-    Afterwards reads pay no anti-join; time travel before the purge
+    Afterwards decode tasks mask nothing; time travel before the purge
     still sees the original rows + applies the original deletes (until
     :func:`vacuum_blocks` removes the retired dirs). ``schema`` must be
     the FULL table schema — a purge rewrites every column, so one
@@ -1248,8 +1292,7 @@ def read_changes(
     - DELETES: equality-delete entries in the window, emitted as FULL
       rows — the live rows at the delete's parent snapshot matching
       the tombstoned keys (the Iceberg changelog-view shape). Key
-      lists past SMALL_DELETE_MAX_KEYS join shuffled, same guard
-      as decode.
+      lists past SMALL_DELETE_MAX_KEYS join shuffled, not broadcast.
     - Storage maintenance is invisible by construction: compaction
       rewrites add no part entries, purge rewrites promote re-encoded
       parts under a retire-style rewrite snapshot (``new_chunk=None``)
@@ -1329,7 +1372,6 @@ def read_changes(
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn("_commit_seq",
                             F.lit(seq_of[s]).cast("int")))
-    bcast_max = SMALL_DELETE_MAX_KEYS
     for e in entries:
         if e.get("kind") != "delete" or e.get("snapshot_id") not in seq_of:
             continue
@@ -1354,7 +1396,7 @@ def read_changes(
         key = view.column_map(tcols).get(e["key_col"], e["key_col"])
         keys = spark.read.parquet(dfile).select(
             F.col(e["key_col"]).alias(key)).distinct()
-        if int(e.get("n", 0)) > bcast_max:
+        if int(e.get("n", 0)) > SMALL_DELETE_MAX_KEYS:
             keys = keys.hint("shuffle_hash")
         else:
             keys = F.broadcast(keys)
@@ -1375,15 +1417,15 @@ def read_changes(
 
 def _resolved_deletes(
     view: ReadView, schema: pa.Schema,
-) -> list[tuple[str, str, str, int, int]]:
+) -> list[tuple[str, str, str, int]]:
     """(abs delete file, file key column, output key column, commit
-    seq, n_keys) for every delete ``view`` applies, after the two loud
-    checks: the file must still exist and the projection must include
-    its key."""
+    seq) for every delete ``view`` applies, after the two loud checks:
+    the file must still exist and the projection must include its
+    key."""
     names = {f.name for f in schema}
     cmap = view.column_map(names)
     out = []
-    for dfile, dkey, n_keys, dseq in view.deletes:
+    for dfile, dkey, _n, dseq in view.deletes:
         # a delete written before a RENAME tombstones under the old
         # name: its file column stays dkey, the decoded frame carries
         # the logical name
@@ -1404,7 +1446,7 @@ def _resolved_deletes(
                 f"{res_key!r}, which the projection excludes — include "
                 "it so merge-on-read can apply (or purge deletes first)"
             )
-        out.append((dfile, dkey, res_key, dseq, n_keys))
+        out.append((dfile, dkey, res_key, dseq))
     return out
 
 
@@ -1442,9 +1484,10 @@ def _tombstone_values(dfile: str, dkey: str, to_type: pa.DataType) -> pa.Array:
     key with no exact value of that type (an int64 key outside an
     int32 column's range, a fractional key on an integer column, a
     decimal key with more scale than the column) can equal no row, so
-    it is dropped — the SQL anti-join compared in a wider type and
-    matched nothing either. Exactness is a round trip: cast, cast
-    back, keep the keys that come back equal."""
+    it is dropped — a Spark SQL anti-join (the copy-on-write
+    rewrite's) compares in a wider type and matches nothing either.
+    Exactness is a round trip: cast, cast back, keep the keys that
+    come back equal."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1484,7 +1527,7 @@ class _TombstoneSet:
     tombstone list once per group — hundreds of times in a task over
     many small parts. Such groups probe a pandas index of the keys
     instead, built once per task at first use. Null keys never match,
-    as in the SQL anti-join."""
+    as in a SQL anti-join."""
 
     def __init__(self, vals: pa.Array):
         self.vals = vals
@@ -1523,22 +1566,22 @@ def _drop_tombstoned(out: pa.Table, tombs: list,
     return out if hit is None else out.filter(pa.array(~hit))
 
 
-def _apply_evolution_and_deletes(
+def _with_evolution_nulls(
     spark: SparkSession,
     result: DataFrame,
     view: ReadView,
     schema: pa.Schema,
     wanted_cols: set[str],
     part_ids,
-    deletes: list[tuple[str, str, str, int, int]] | None,
+    listed: bool,
 ) -> DataFrame:
-    """Shared decode tail: union schema-evolution null rows, then apply
-    the equality deletes the decode tasks leave out — those past
-    ``SMALL_DELETE_MAX_KEYS``. ``deletes`` is :func:`_resolved_deletes`'
-    list, or None for a fully-pruned listing. One definition for both
-    the normal and the fully-pruned-listing paths, so their semantics
-    cannot drift."""
+    """Shared decode tail: union the schema-evolution null rows. When
+    they are a fully-pruned listing's (``listed`` False) only rows, the
+    deletes get the same loud checks, though null keys match no
+    tombstone: one tail for both paths, so they cannot drift."""
     evo = view.evolution_nulls(wanted_cols, part_ids)
+    if evo and not listed:
+        _resolved_deletes(view, schema)
     for pid, n in evo:
         nulls = spark.range(n).select(
             *[
@@ -1548,52 +1591,6 @@ def _apply_evolution_and_deletes(
             F.lit(pid).cast("int").alias("part_id"),
         )
         result = result.unionByName(nulls)
-    if deletes is None:
-        if not evo:
-            # provably zero rows: tombstones cannot apply, and raising
-            # on a projection-excluded delete key here would fail calls
-            # whose result is the empty frame either way
-            return result
-        # the only rows are evolution nulls, whose null keys match no
-        # tombstone: validate, and join only past the task limit
-        deletes = _resolved_deletes(view, schema)
-    # Tombstone lists up to SMALL_DELETE_MAX_KEYS were applied inside the
-    # decode tasks. A GDPR-scale purge wave (10^8+ keys) would not fit
-    # a task, so past the limit the anti-join runs as a SHUFFLE_HASH
-    # join (the key count is in the manifest entry — decided without
-    # scanning the delete file); purge_deletes remains the way to stop
-    # paying it entirely.
-    deletes = [d for d in deletes if d[4] > SMALL_DELETE_MAX_KEYS]
-    if not deletes:
-        return result
-    # SEQUENCE SCOPING (Iceberg delete ordering): a delete applies only
-    # to rows whose part committed STRICTLY BEFORE the delete's
-    # snapshot, so keys re-ingested after it survive. When no part
-    # postdates a pending delete (manifest metadata alone tells), the
-    # key-only anti-join needs no (part_id, seq) join.
-    part_seq = view.part_seq
-    min_dseq = min(d[3] for d in deletes)
-    scoped = any(s >= min_dseq for s in part_seq.values())
-    orig_cols = result.columns
-    if scoped:
-        pseq_df = spark.createDataFrame(
-            sorted(part_seq.items()), "part_id int, _part_seq int")
-        result = result.join(F.broadcast(pseq_df), "part_id", "left")
-    for dfile, dkey, res_key, dseq, _n in deletes:
-        if scoped:
-            tomb = spark.read.parquet(dfile).select(
-                F.col(dkey).alias("_tomb_key")).distinct()
-            cond = ((F.col(res_key) == F.col("_tomb_key"))
-                    & (F.col("_part_seq") < F.lit(int(dseq))))
-            result = result.join(tomb.hint("shuffle_hash"), cond,
-                                 "left_anti")
-        else:
-            tomb = spark.read.parquet(dfile).select(
-                F.col(dkey).alias(res_key)).distinct()
-            result = result.join(tomb.hint("shuffle_hash"), res_key,
-                                 "left_anti")
-    if scoped:
-        result = result.select(*orig_cols)
     return result
 
 
@@ -1620,11 +1617,10 @@ def decode_blocks(
     handles local, HDFS and S3 URIs alike in production.
 
     Equality deletes are applied inside the same tasks: each task reads
-    every pending delete file of up to ``SMALL_DELETE_MAX_KEYS``
-    keys once and drops the matching rows from each decoded group, so
-    a decode through such tombstones still has no join and no
-    exchange. Only larger tombstone lists add a shuffled anti-join
-    (:func:`_apply_evolution_and_deletes`).
+    every pending delete file once and drops the matching rows from
+    each decoded group, so a decode through tombstones of any size has
+    no join and no exchange (the writers commit lists past
+    ``SMALL_DELETE_MAX_KEYS`` copy-on-write, so few stay pending).
 
     Block files are listed from the MANIFEST's committed chunk-dir
     entries, not a filesystem walk: uncommitted ``_tmp_*`` dirs and
@@ -1701,22 +1697,20 @@ def _decode_view(
     if not files:
         # a fully-pruned listing must still honor schema evolution and
         # deletes — the same shared tail as the main path
-        return _apply_evolution_and_deletes(
+        return _with_evolution_nulls(
             spark, spark.createDataFrame([], ddl), view, schema,
-            wanted_cols, part_ids, None,
+            wanted_cols, part_ids, listed=False,
         )
-    # EQUALITY DELETES (merge-on-read) up to SMALL_DELETE_MAX_KEYS keys are
-    # applied inside the decode tasks, so the plan gains no join: the
-    # driver resolves each delete's file, key and sequence number, and
-    # every task reads the delete files once and masks each decoded
-    # group. Time travel to a snapshot before a delete never sees it
-    # (ReadView.deletes filters by as_of).
-    deletes = _resolved_deletes(view, schema)
+    # EQUALITY DELETES (merge-on-read) are applied inside the decode
+    # tasks, so the plan gains no join: the driver resolves each
+    # delete's file, key and sequence number, and every task reads the
+    # delete files once and masks each decoded group. Time travel to a
+    # snapshot before a delete never sees it (ReadView.deletes filters
+    # by as_of).
     tombs = [
         (dfile, dkey, res_key, dseq,
          _tombstone_type(dfile, dkey, schema.field(res_key)))
-        for dfile, dkey, res_key, dseq, n_keys in deletes
-        if n_keys <= SMALL_DELETE_MAX_KEYS
+        for dfile, dkey, res_key, dseq in _resolved_deletes(view, schema)
     ]
     part_seq = view.part_seq if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
@@ -1841,8 +1835,8 @@ def _decode_view(
     pdf = _one_wave_df(spark, [(p,) for p in files], [1] * len(files),
                        "path string")
     result = pdf.mapInArrow(decode_stream, schema=ddl)
-    return _apply_evolution_and_deletes(
-        spark, result, view, schema, wanted_cols, part_ids, deletes,
+    return _with_evolution_nulls(
+        spark, result, view, schema, wanted_cols, part_ids, listed=True,
     )
 
 

@@ -81,15 +81,18 @@ def main() -> None:
 
     import pyarrow.parquet as pq
 
-    from libgiddy_spark.engine import decode_blocks, verify_roundtrip
+    from libgiddy_spark.engine import _decode_view, verify_roundtrip
     from libgiddy_spark.jobs.encode_job import build_spark
+    from libgiddy_spark.manifest import ReadView
     from libgiddy_spark.table_io import list_parquet_files
 
     spark = build_spark("libgiddy-spark-decode")
+    view = None  # with --table-schema, one read plans schema and rows
     if args.table_schema:
         from libgiddy_spark.schema_evo import table_schema
 
-        schema = table_schema(args.encoded, args.as_of)[0]
+        view = ReadView.read(args.encoded, args.as_of)
+        schema = table_schema(view)[0]
     else:
         first_rel = list_parquet_files(args.source)[0][0]
         schema_path = (
@@ -175,9 +178,9 @@ def main() -> None:
     kpoint = kpoint_lit = None
     if args.key_point is not None:
         kpoint, kpoint_lit = _typed(args.key_point)
-    dec = decode_blocks(spark, args.encoded, schema, key_range=krange,
-                        key_range_s=krange_s, key_point=kpoint,
-                        as_of=args.as_of)
+    dec = _decode_view(spark, view or ReadView.read(args.encoded, args.as_of),
+                       schema, key_range=krange, key_range_s=krange_s,
+                       key_point=kpoint)
 
     def _exact(df):
         # pruning is block-granular: apply the exact predicate so --out

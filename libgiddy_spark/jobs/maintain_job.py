@@ -18,13 +18,6 @@ import argparse
 import json
 
 
-def _table_schema(encoded: str):
-    """The table's recorded HEAD schema (after renames and drops)."""
-    from libgiddy_spark.schema_evo import table_schema
-
-    return table_schema(encoded)[0]
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--encoded", required=True)
@@ -156,6 +149,7 @@ def main() -> None:
         import pyarrow as pa
 
         from libgiddy_spark.engine import delete_rows
+        from libgiddy_spark.schema_evo import table_schema
 
         if not args.key_col:
             ap.error("--delete-keys requires --key-col")
@@ -163,11 +157,11 @@ def main() -> None:
         # never guessed from how the text parses ('0123' against a
         # string key must stay the literal string; an int would
         # over-delete '123' through join coercion)
-        ktype = _table_schema(args.encoded).field(args.key_col).type
+        ktype = table_schema(args.encoded)[0].field(args.key_col).type
         raw = args.delete_keys.split(",")
         if pa.types.is_timestamp(ktype):
             # int64 micros on the CLI, written as typed timestamps so
-            # the decode-side anti-join compares timestamp-to-timestamp
+            # the decode tasks compare timestamp to timestamp
             import datetime as _dt
 
             keys = [
@@ -183,12 +177,13 @@ def main() -> None:
     if args.purge:
         from libgiddy_spark.engine import purge_deletes
         from libgiddy_spark.jobs.encode_job import build_spark
+        from libgiddy_spark.schema_evo import table_schema
 
         if not args.key_col:
             ap.error("--purge requires --key-col")
         spark = build_spark("libgiddy-spark-maintain")
         out["purge"] = purge_deletes(
-            spark, args.encoded, _table_schema(args.encoded),
+            spark, args.encoded, table_schema(args.encoded)[0],
             key_col=args.key_col)
     if args.upsert_source:
         from libgiddy_spark.engine import upsert_rows
@@ -203,12 +198,13 @@ def main() -> None:
     if args.rewrite_sorted:
         from libgiddy_spark.engine import rewrite_sorted
         from libgiddy_spark.jobs.encode_job import build_spark
+        from libgiddy_spark.schema_evo import table_schema
 
         if not args.key_col:
             ap.error("--rewrite-sorted requires --key-col")
         spark = build_spark("libgiddy-spark-maintain")
         out["rewrite_sorted"] = rewrite_sorted(
-            spark, args.encoded, _table_schema(args.encoded),
+            spark, args.encoded, table_schema(args.encoded)[0],
             key_col=args.key_col)
     if args.compact:
         from libgiddy_spark.engine import compact_blocks

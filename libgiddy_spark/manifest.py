@@ -338,8 +338,8 @@ class Manifest:
     ) -> None:
         """``status="staged"`` commits the part lines WITHOUT making
         them live: invisible to listing/resume (done_parts), no chunk
-        index summary, and the resume sweep deletes their dirs — the
-        first half of an atomic two-phase commit whose second half is
+        index summary, and vacuum expires their dirs if the txn never
+        comes — the first half of an atomic two-phase commit whose second half is
         :meth:`commit_staged`."""
         for e in part_entries:
             e.setdefault("kind", "part")
@@ -373,14 +373,15 @@ class Manifest:
             [{"kind": "txn", "entries": idx_entries}],
         )
 
-    def commit_staged(self, snapshot_id: str, extra: list[dict]) -> None:
-        """Second half of a staged commit: promote ``snapshot_id``'s
-        staged part lines to done and commit them with ``extra``
-        entries in one :meth:`commit_txn`."""
+    def commit_staged(self, snapshot_ids: list[str],
+                      extra: list[dict]) -> None:
+        """Second half of a staged commit: promote the staged part lines
+        of every snapshot in ``snapshot_ids`` to done and commit them
+        with ``extra`` entries in one :meth:`commit_txn`."""
         promoted = [
             {**e, "status": "done"} for e in self.read()
             if e.get("kind") == "part" and e.get("status") == "staged"
-            and e.get("snapshot_id") == snapshot_id
+            and e.get("snapshot_id") in snapshot_ids
         ]
         self.commit_txn(promoted + extra)
 
@@ -403,10 +404,10 @@ class Manifest:
     ) -> None:
         """Record an EQUALITY-DELETE file (Iceberg merge-on-read):
         ``rel_file`` (under out_dir) holds the deleted key values.
-        Decode tasks mask lists of up to ``SMALL_DELETE_MAX_KEYS`` keys
-        out of every decoded group; longer lists are applied by a
-        shuffled anti-join. Appended to manifest AND index so the
-        O(chunks) listing path sees deletes too."""
+        Decode tasks mask its keys out of every decoded group (a list
+        past ``engine.SMALL_DELETE_MAX_KEYS`` keys commits copy-on-write
+        instead). Appended to manifest AND index so the O(chunks)
+        listing path sees deletes too."""
         self._append_entry("delete", snapshot_id=snapshot_id,
                            file=rel_file, key_col=key_col, n=int(n))
 

@@ -109,3 +109,29 @@ def test_cli_changes_since(spark, tmp_path, monkeypatch, capsys):
                                "--key-col", "doc_id",
                                "--changes-since", s1,
                                "--key-point", "5"])
+
+
+def test_cli_table_schema_reads_manifest_once(spark, tmp_path, monkeypatch,
+                                              capsys):
+    """--table-schema plans the schema and the listing from ONE manifest
+    read, so a schema commit cannot land between them."""
+    from libgiddy_spark.manifest import Manifest
+
+    src = f"{SF}/documents.parquet"
+    out = str(tmp_path / "enc_ts_schema")
+    encode_snapshot(spark, src, out, key_col="doc_id")
+    reads = []
+
+    def counted(fn):
+        def wrapper(self):
+            reads.append(fn.__name__)
+            return fn(self)
+        return wrapper
+
+    for name in ("read_indexed", "read"):
+        monkeypatch.setattr(Manifest, name, counted(getattr(Manifest, name)))
+    _run_cli(monkeypatch, ["--encoded", out, "--table-schema",
+                           "--key-col", "doc_id"])
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["rows_decoded"] == 500
+    assert len(reads) == 1, reads

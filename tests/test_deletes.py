@@ -19,7 +19,7 @@ from libgiddy_spark.engine import (
     vacuum_blocks,
     verify_roundtrip,
 )
-from libgiddy_spark.manifest import Manifest
+from libgiddy_spark.manifest import Manifest, ReadView
 
 SF = "/root/testdata/sf0.001"
 
@@ -62,17 +62,19 @@ def test_delete_on_unprojected_key_raises(spark, tmp_path):
 
 def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path,
                                                   monkeypatch):
-    """Past SMALL_DELETE_MAX_KEYS the tombstone anti-join must
-    NOT broadcast (a GDPR-scale purge wave would OOM the driver and
-    every executor) — the plan shifts to a shuffled hash anti-join,
-    rows stay exact (VERDICT r4 #3)."""
+    """Past SMALL_DELETE_MAX_KEYS a delete commits copy-on-write, so no
+    read ever joins against it (a GDPR-scale list would otherwise
+    shuffle, or OOM every executor as a broadcast): the decode plan
+    has no Exchange and no Join, and the rows stay exact."""
     src, out, schema = _encode_docs(spark, tmp_path)
     gone = [3, 77, 200, 404]
-    delete_rows(out, "doc_id", gone)
     monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 2)
+    delete_rows(out, "doc_id", gone)
+    assert not ReadView.read(out).deletes  # materialized, none pending
     dec = decode_blocks(spark, out, schema)
     plan = dec._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
     assert dec.count() == 500 - len(gone)
     assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
     srcdf = spark.read.parquet(src).filter(~F.col("doc_id").isin(gone))
@@ -80,6 +82,7 @@ def test_large_delete_set_shuffles_not_broadcasts(spark, tmp_path,
     # below the threshold the decode tasks apply the tombstones
     # themselves: no join and no exchange at all
     monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 1000000)
+    delete_rows(out, "doc_id", [5])
     plan_small = decode_blocks(spark, out, schema)._jdf \
         .queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_small, plan_small
@@ -261,25 +264,35 @@ def _rows(df):
 
 
 def _via_join(spark, out, schema):
-    """The same decode with every tombstone list past the in-task limit,
-    so the shuffled anti-join applies them all."""
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(engine, "SMALL_DELETE_MAX_KEYS", 0)
-        return _rows(decode_blocks(spark, out, schema))
+    """Reference rows: a Spark SQL left anti-join of the rows decoded
+    at the table's first snapshot (before any delete) against every
+    delete file — the matching the decode tasks' mask must reproduce."""
+    entries = Manifest(out).read()
+    first = next(e["snapshot_id"] for e in entries
+                 if e.get("kind") == "snapshot")
+    rows = decode_blocks(spark, out, schema, as_of=first)
+    for e in entries:
+        if e.get("kind") == "delete":
+            keys = spark.read.parquet(os.path.join(out, e["file"]))
+            rows = rows.join(keys.select(F.col(e["key_col"]).alias("k")),
+                             "k", "left_anti")
+    return _rows(rows)
 
 
 def test_mixed_threshold_deletes_exact_rows(spark, tmp_path, monkeypatch):
-    """One delete above SMALL_DELETE_MAX_KEYS (shuffled
-    anti-join) and one below it (applied in the decode task) together
-    remove exactly their keys."""
+    """One delete above SMALL_DELETE_MAX_KEYS (committed copy-on-write)
+    and one below it (pending, applied in the decode tasks) together
+    remove exactly their keys, and the decode joins nothing."""
     src, out, schema = _encode_docs(spark, tmp_path)
     big, small = [3, 77, 200, 404], [5, 17]
+    monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 3)
     delete_rows(out, "doc_id", big)
     delete_rows(out, "doc_id", small)
-    monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 3)
+    assert [n for _f, _k, n, _s in ReadView.read(out).deletes] == [2]
     dec = decode_blocks(spark, out, schema)
     plan = dec._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Join") == 1, plan  # the big delete only
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
     gone = big + small
     assert dec.count() == 500 - len(gone)
     assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
