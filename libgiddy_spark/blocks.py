@@ -643,26 +643,18 @@ def decode_group(table: pa.Table, schema: pa.Schema,
                 f"{stored[name]}, the group has {n} — "
                 "a block is missing, extra or corrupt")
     if not decoded and table.num_rows:
-        # SCHEMA EVOLUTION, all-post-evolution projection: none of the
-        # requested columns exist in this part's blocks, but the part
-        # still has rows — derive the row count from any stored
-        # column's n_values metadata so the null rows are emitted
-        # (silently skipping the part would be row loss).
+        # SCHEMA EVOLUTION, a lone group from engine._decode_view's
+        # decode task: none of the projected columns exist in this
+        # part's blocks (it passes their metadata rows, payloads null),
+        # but the part still has rows — count them from one stored
+        # column's n_values so the null rows are emitted.
         first_col = cols_present[0]
         n = sum(nv for name, nv in zip(cols_present, n_values)
                 if name == first_col)
-    arrays, names = [], []
-    for field in schema:
-        if field.name in decoded:
-            arrays.append(decoded[field.name])
-        elif n or decoded:
-            # SCHEMA EVOLUTION: a column added to the table after this
-            # part was encoded doesn't exist in its blocks — decode it
-            # as nulls (Iceberg add-column read semantics).
-            arrays.append(pa.nulls(n, type=output_type(field.type)))
-        else:
-            continue
-        names.append(field.name)
+    # SCHEMA EVOLUTION: a column added to the table after this part was
+    # encoded doesn't exist in its blocks — decode it as nulls (Iceberg
+    # add-column read semantics).
+    arrays = [decoded[f.name] if f.name in decoded
+              else pa.nulls(n, type=output_type(f.type)) for f in schema]
     arrays.append(pa.array(np.full(n, pid, dtype=np.int32)))
-    names.append("part_id")
-    return pa.table(arrays, names=names)
+    return pa.table(arrays, names=schema.names + ["part_id"])

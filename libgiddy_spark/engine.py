@@ -701,6 +701,8 @@ def vacuum_blocks(
             # DIRECTORY) — expire them the same way
             shutil.rmtree(full)
             removed.append(rel)
+    # a full rewrite removes its staging copy after its txn; one that
+    # crashed first leaves it behind
     purge_src = os.path.join(out_dir, "_purge_src")
     if os.path.isdir(purge_src):
         shutil.rmtree(purge_src)
@@ -1082,6 +1084,7 @@ def _staged_full_rewrite(
             "ts": time.time(),
         })
     Manifest(out_dir).commit_staged([*promote, summary["snapshot_id"]], txn)
+    shutil.rmtree(src, ignore_errors=True)
     return summary, old_dirs
 
 
@@ -1566,34 +1569,6 @@ def _drop_tombstoned(out: pa.Table, tombs: list,
     return out if hit is None else out.filter(pa.array(~hit))
 
 
-def _with_evolution_nulls(
-    spark: SparkSession,
-    result: DataFrame,
-    view: ReadView,
-    schema: pa.Schema,
-    wanted_cols: set[str],
-    part_ids,
-    listed: bool,
-) -> DataFrame:
-    """Shared decode tail: union the schema-evolution null rows. When
-    they are a fully-pruned listing's (``listed`` False) only rows, the
-    deletes get the same loud checks, though null keys match no
-    tombstone: one tail for both paths, so they cannot drift."""
-    evo = view.evolution_nulls(wanted_cols, part_ids)
-    if evo and not listed:
-        _resolved_deletes(view, schema)
-    for pid, n in evo:
-        nulls = spark.range(n).select(
-            *[
-                F.lit(None).cast(_spark_type_of(f.type)).alias(f.name)
-                for f in schema
-            ],
-            F.lit(pid).cast("int").alias("part_id"),
-        )
-        result = result.unionByName(nulls)
-    return result
-
-
 def decode_blocks(
     spark: SparkSession,
     out_dir: str,
@@ -1655,8 +1630,15 @@ def decode_blocks(
     decoded frame. ``as_of`` also accepts a NAMED REF (branch/tag,
     :func:`create_ref`), resolved to its snapshot here.
 
-    The whole plan — listing, deletes and their sequence scoping,
-    evolution null rows — comes from ONE manifest read
+    SCHEMA EVOLUTION: a column added after a part was encoded decodes
+    as nulls for that part, in the decode task, which counts the part's
+    rows from its blocks' ``n_values``. So a read of only columns added
+    later returns exactly as many rows as the same read with the key
+    column added, for every pruning argument; a fully pruned read
+    returns no rows.
+
+    The whole plan — listing, deletes and their sequence scoping —
+    comes from ONE manifest read
     (:class:`~.manifest.ReadView`), so a commit landing mid-plan (a
     purge clearing the deletes of the dirs just listed) can never mix
     two manifest states into one read."""
@@ -1694,13 +1676,6 @@ def _decode_view(
     ddl = out_fields + ", part_id int"
     column_map = view.column_map(schema.names)
     wanted_cols = set(column_map)
-    if not files:
-        # a fully-pruned listing must still honor schema evolution and
-        # deletes — the same shared tail as the main path
-        return _with_evolution_nulls(
-            spark, spark.createDataFrame([], ddl), view, schema,
-            wanted_cols, part_ids, listed=False,
-        )
     # EQUALITY DELETES (merge-on-read) are applied inside the decode
     # tasks, so the plan gains no join: the driver resolves each
     # delete's file, key and sequence number, and every task reads the
@@ -1712,6 +1687,8 @@ def _decode_view(
          _tombstone_type(dfile, dkey, schema.field(res_key)))
         for dfile, dkey, res_key, dseq in _resolved_deletes(view, schema)
     ]
+    if not files:
+        return spark.createDataFrame([], ddl)
     part_seq = view.part_seq if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
     krange_s = (str(key_range_s[0]), str(key_range_s[1])) if key_range_s is not None else None
@@ -1738,10 +1715,20 @@ def _decode_view(
                 out = _drop_tombstoned(out, tomb_sets, part_seq)
             yield from out.to_batches()
 
+        def _split(buf: pa.Table):
+            pids = buf.column("part_id").to_numpy()
+            salts = buf.column("salt").to_numpy()
+            keys = (pids.astype(np.int64) * (1 << 20)
+                    + salts.astype(np.int64))
+            return np.concatenate(
+                [[0], np.flatnonzero(keys[1:] != keys[:-1]) + 1,
+                 [len(keys)]]
+            )
+
         def decode_file(path: str):
             # ONE read of the per-BLOCK metadata columns picks the
-            # blocks (projection, parts, zone overlap, Bloom); then each
-            # row group holding a kept block reads only its payload
+            # blocks (parts, zone overlap, Bloom, then projection); then
+            # each row group holding a kept block reads only its payload
             # column, once. Task memory stays one row group + one
             # (part, salt) group, whatever the file size. Files written
             # before the string-zone/bloom columns existed over-include:
@@ -1761,16 +1748,14 @@ def _decode_view(
                 columns=cols + [c for lo, hi, _ in zones for c in (lo, hi)]
                 + (["key_bloom"] if bloom else []), use_threads=False)
             pids = meta.column("part_id").to_numpy()
-            base = (np.isin(pids, wanted) if wanted is not None
-                    else np.ones(len(pids), bool))
+            passing = (np.isin(pids, wanted) if wanted is not None
+                       else np.ones(len(pids), bool))
             for lo, hi, (a, b) in zones:
                 # overlap with [a, b]; a null bound (unzoned block) is
                 # always kept: pruning may over-include, never lose rows
-                base &= np.asarray(pc.fill_null(pc.and_(
+                passing &= np.asarray(pc.fill_null(pc.and_(
                     pc.greater_equal(meta.column(hi), a),
                     pc.less_equal(meta.column(lo), b)), True))
-            keep = base & np.asarray(
-                pc.is_in(meta.column("column"), value_set=wanted_arr))
             if bloom:
                 # a Bloom (on the sort-key column's row, maybe in another
                 # row group) that proves the probe absent drops its whole
@@ -1782,32 +1767,41 @@ def _decode_view(
                 absent = {
                     trips[i] for i, kb in
                     enumerate(meta.column("key_bloom").to_pylist())
-                    if kb is not None and base[i]
+                    if kb is not None and passing[i]
                     and not bloom_mod.bloom_might_contain(
                         kb, probe_hash, probe_domain)}
-                keep &= np.array([t not in absent for t in trips], bool)
+                passing &= np.array([t not in absent for t in trips], bool)
+            if not passing.any():
+                return
+            keep = passing & np.asarray(
+                pc.is_in(meta.column("column"), value_set=wanted_arr))
+            # SCHEMA EVOLUTION: a (part_id, salt) group with passing
+            # blocks but no projected column was encoded before every
+            # projected column was added, yet still has rows. Its
+            # passing metadata rows go to decode_group with a null
+            # payload, which counts the rows from n_values and emits
+            # nulls (Iceberg add-column read semantics)
+            bounds = _split(meta)
+            lone = passing & np.repeat(
+                ~np.logical_or.reduceat(keep, bounds[:-1]), np.diff(bounds))
+            take = keep | lone
             rows = meta.select(cols)
-
-            def _split(buf: pa.Table):
-                pids = buf.column("part_id").to_numpy()
-                salts = buf.column("salt").to_numpy()
-                keys = (pids.astype(np.int64) * (1 << 20)
-                        + salts.astype(np.int64))
-                return np.concatenate(
-                    [[0], np.flatnonzero(keys[1:] != keys[:-1]) + 1,
-                     [len(keys)]]
-                )
+            ptype = pf.schema_arrow.field("payload").type
 
             pend = None  # trailing, possibly-incomplete group
             stop = 0
             for rg in range(pf.metadata.num_row_groups):
                 start, stop = stop, stop + pf.metadata.row_group(rg).num_rows
-                idx = np.flatnonzero(keep[start:stop])
+                idx = np.flatnonzero(take[start:stop])
                 if not len(idx):
                     continue
+                # a row group holding only lone blocks reads no payload
+                payload = (pf.read_row_group(
+                    rg, columns=["payload"], use_threads=False)[0]
+                    if keep[start:stop].any()
+                    else pa.nulls(stop - start, ptype))
                 t = rows.slice(start, stop - start).append_column(
-                    "payload", pf.read_row_group(
-                        rg, columns=["payload"], use_threads=False)[0])
+                    "payload", payload)
                 if len(idx) < t.num_rows:
                     t = t.take(idx)
                 buf = t if pend is None else pa.concat_tables([pend, t])
@@ -1834,10 +1828,7 @@ def _decode_view(
     # are many small block files
     pdf = _one_wave_df(spark, [(p,) for p in files], [1] * len(files),
                        "path string")
-    result = pdf.mapInArrow(decode_stream, schema=ddl)
-    return _with_evolution_nulls(
-        spark, result, view, schema, wanted_cols, part_ids, listed=True,
-    )
+    return pdf.mapInArrow(decode_stream, schema=ddl)
 
 
 _SPARK_TYPES = {

@@ -18,9 +18,9 @@ the manifest ONCE, into a :class:`ReadView`: the resolved ``as_of``,
 the chain and accepted set, the live ``{chunk_dir: {part_id: line}}``
 view (chunk lines, tail part lines and rewrites replayed), the visible
 equality deletes, each visible part's sequence number and the column
-renames. Decode's listing, delete scoping, evolution nulls and column
-names, vacuum's pins, purge and the files metadata table all take one
-view, so no plan mixes two manifest states.
+renames. Decode's listing, delete scoping and column names, vacuum's
+pins, purge and the files metadata table all take one view, so no plan
+mixes two manifest states.
 """
 
 from __future__ import annotations
@@ -278,11 +278,9 @@ class Manifest:
 
             klo, khi = _agg("key_lo", "key_hi")
             klo_s, khi_s = _agg("key_lo_s", "key_hi_s")
-            cols: set[str] = set()
             part_rows: dict[str, int] = {}
             for p in parts:
                 pc = p.get("columns") or {}
-                cols.update(pc)
                 n = next(
                     (int(c["n_values"]) for c in pc.values()
                      if "n_values" in c), 0,
@@ -298,10 +296,8 @@ class Manifest:
                     "key_hi": khi,
                     "key_lo_s": klo_s,
                     "key_hi_s": khi_s,
-                    # column union + per-part row counts: lets decode's
-                    # schema-evolution pass run off the index instead of
-                    # a full O(parts) manifest read
-                    "columns": sorted(cols),
+                    # per-part row counts: lets meta.file_rows run off
+                    # the index instead of a full O(parts) manifest read
                     "part_rows": part_rows,
                 }
             )
@@ -562,10 +558,10 @@ class ReadView:
     def read(cls, out_dir: str, as_of: str | None = None) -> ReadView:
         """The view over the chunk index plus the manifest tail it does
         not cover (O(chunks)), or over the full manifest when a chunk
-        line predates the ``columns`` field that evolution nulls need."""
+        line predates the ``part_rows`` field :func:`part_rows` reads."""
         m = Manifest(out_dir)
         entries = m.read_indexed()
-        if any(e.get("kind") == "chunk" and "columns" not in e
+        if any(e.get("kind") == "chunk" and "part_rows" not in e
                for e in entries):
             entries = m.read()
         return cls(out_dir, entries, as_of)
@@ -611,10 +607,9 @@ class ReadView:
     def parts(self) -> dict[str, dict[int, dict]]:
         """``{chunk_dir: {part_id: line}}`` this read sees. ``line`` is
         the chunk index line or manifest part line that committed the
-        part: it carries the snapshot id, the zone bounds (``key_lo`` …
-        ``key_hi_s``) and the columns — a chunk line's are aggregated
-        over its parts — and :func:`part_rows` reads the part's row
-        count from it.
+        part: it carries the snapshot id and the zone bounds (``key_lo``
+        … ``key_hi_s``) — a chunk line's are aggregated over its parts —
+        and :func:`part_rows` reads the part's row count from it.
 
         Chunk lines and done part lines of accepted snapshots come
         first (the first line naming a (dir, part) wins — a healed and a
@@ -707,31 +702,6 @@ class ReadView:
         ``names`` a read outputs (each also maps to itself)."""
         return {p: n for n in names
                 for p in (*self._stored_as.get(n, ()), n)}
-
-    def evolution_nulls(
-        self, wanted_cols: set[str], part_ids: list[int] | None = None,
-    ) -> list[tuple[int, int]]:
-        """(part_id, n_rows) for visible parts that have NONE of the
-        projected columns — an all-post-evolution projection over parts
-        encoded before the add-column. Their block files contain no
-        matching ``column`` rows, so the scan-side projection filter
-        would silently drop them; the manifest's per-column
-        ``n_values`` carries the row count so decode can emit the
-        all-null rows instead (Iceberg add-column read semantics, no
-        row loss). Parts a purge retired are gone from the view — their
-        rows live under the purge's own new parts."""
-        wanted_p = {int(p) for p in part_ids} if part_ids is not None else None
-        out: list[tuple[int, int]] = []
-        for parts in self.parts.values():
-            for pid, e in parts.items():
-                if wanted_p is not None and pid not in wanted_p:
-                    continue
-                if not e.get("columns") or wanted_cols.intersection(e["columns"]):
-                    continue  # normal decode path covers this part
-                n = part_rows(e, pid)
-                if n > 0:
-                    out.append((pid, n))
-        return out
 
     def files(
         self,

@@ -17,6 +17,7 @@ from libgiddy_spark.engine import (
     decode_blocks,
     delete_rows,
     encode_snapshot,
+    purge_deletes,
     read_changes,
     upsert_rows,
     vacuum_blocks,
@@ -191,3 +192,22 @@ def test_copy_on_write_checks_before_writing(spark, tmp_path, monkeypatch):
             delete_rows(out, "doc_id", GONE)
     assert Manifest(out).read() == before
     assert decode_blocks(spark, out, schema).count() == 500
+
+
+@pytest.mark.parametrize("kind", ["purge", "upsert"])
+def test_full_rewrite_removes_its_staging_copy(spark, tmp_path, monkeypatch,
+                                               kind):
+    """A purge and a forced copy-on-write upsert remove ``_purge_src``,
+    the plain-parquet copy of every live row their rewrite re-encodes,
+    once their txn commits; the table reads the same rows without it."""
+    src, out, schema, _pre = _encode_docs(spark, str(tmp_path))
+    if kind == "purge":
+        delete_rows(out, "doc_id", GONE)
+        purge_deletes(spark, out, schema, "doc_id")
+        expected = _expected(spark, "delete", src, schema)
+    else:
+        monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 0)
+        _op(spark, "upsert", src, out)
+        expected = _expected(spark, "upsert", src, schema)
+    assert not os.path.exists(os.path.join(out, "_purge_src"))
+    assert _sorted(decode_blocks(spark, out, schema), schema) == expected

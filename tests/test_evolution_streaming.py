@@ -5,11 +5,21 @@ from __future__ import annotations
 
 import os
 
+import shutil
+
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
-from libgiddy_spark.engine import decode_blocks, encode_snapshot, encode_files
+from libgiddy_spark.engine import (
+    compact_blocks,
+    decode_blocks,
+    encode_files,
+    encode_snapshot,
+)
+from libgiddy_spark.manifest import Manifest
 from libgiddy_spark.table_io import list_parquet_files
 
 SF = "/root/testdata/sf0.001"
@@ -46,6 +56,78 @@ def test_schema_evolution_null_fills_old_parts(spark, tmp_path):
     t_old = {r["doc_id"]: r["text"] for r in old.collect()}
     t_exp = {r["doc_id"]: r["text"] for r in a.select("doc_id", "text").collect()}
     assert t_old == t_exp
+
+
+@pytest.fixture(scope="module")
+def evolved(spark, tmp_path_factory):
+    """documents as four 100-row parts encoded as ``doc_id, text`` in
+    25-row blocks, then one part encoded with ``lang`` added, plus a
+    compacted copy. Returns the two table dirs, both snapshot ids and
+    the part ids by first doc_id."""
+    root = tmp_path_factory.mktemp("evolved")
+    src, out = str(root / "src"), str(root / "enc")
+    os.makedirs(src)
+    docs = pq.read_table(f"{SF}/documents.parquet")
+    ids = docs.column("doc_id")
+
+    def write(lo: int) -> None:
+        pq.write_table(
+            docs.filter(pc.and_(pc.greater_equal(ids, lo),
+                                pc.less(ids, lo + 100))),
+            os.path.join(src, f"docs-{lo:03d}.parquet"))
+
+    for lo in range(0, 400, 100):
+        write(lo)
+    snaps = [encode_files(spark, src, list_parquet_files(src), out,
+                          key_col="doc_id", columns=["doc_id", "text"],
+                          block_rows=25)["snapshot_id"]]
+    write(400)
+    snaps.append(encode_files(
+        spark, src, list_parquet_files(src), out, key_col="doc_id",
+        columns=["doc_id", "text", "lang"])["snapshot_id"])
+    pid_of = {e["key_lo"]: e["part_id"] for e in Manifest(out).read()
+              if e.get("kind") == "part"}
+    compacted = str(root / "compacted")
+    shutil.copytree(out, compacted)
+    assert compact_blocks(spark, compacted)["bins"]
+    return {"table": out, "compacted": compacted, "snaps": snaps,
+            "pid_of": pid_of}
+
+
+# case -> (table dir key, decode_blocks kwargs from the fixture)
+EVOLVED_READS = {
+    "head": ("table", lambda ev: {}),
+    "part_ids": ("table", lambda ev: {
+        "part_ids": [ev["pid_of"][100], ev["pid_of"][400]]}),
+    "key_range": ("table", lambda ev: {"key_range": (160, 240)}),
+    "key_range_out": ("table", lambda ev: {
+        "key_range": (10**6, 2 * 10**6)}),
+    "key_point": ("table", lambda ev: {"key_point": 15}),
+    "as_of_before_compact": ("compacted", lambda ev: {
+        "as_of": ev["snaps"][0]}),
+    "as_of_after_compact": ("compacted", lambda ev: {
+        "as_of": ev["snaps"][1]}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EVOLVED_READS))
+def test_added_column_read_counts_like_keyed_read(spark, evolved, case):
+    """A read of only a column added after most parts were encoded
+    returns exactly as many rows as the same read with the key column
+    added, under every pruning argument, and its decode tasks emit the
+    null rows themselves: no Union of Range frames, no Exchange."""
+    which, kwargs = EVOLVED_READS[case]
+    table, kwargs = evolved[which], kwargs(evolved)
+    full = pq.read_schema(f"{SF}/documents.parquet")
+    lang = decode_blocks(spark, table, pa.schema([full.field("lang")]),
+                         **kwargs)
+    keyed = decode_blocks(
+        spark, table, pa.schema([full.field("doc_id"), full.field("lang")]),
+        **kwargs)
+    assert lang.count() == keyed.count()
+    plan = lang._jdf.queryExecution().executedPlan().toString()
+    for node in ("Union", "Range", "Exchange"):
+        assert node not in plan, plan
 
 
 def test_streaming_windowed_stats_match_batch(spark, tmp_path):

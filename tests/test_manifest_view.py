@@ -9,8 +9,6 @@ At HEAD and at every snapshot id:
 
 - the chunk dirs listed by ``_committed_block_files`` and by
   ``meta.file_rows`` are the same, and so are the part ids per dir;
-- ``ReadView.evolution_nulls`` returns exactly the visible parts whose
-  column set misses the projection;
 - ``ReadView.deletes`` are the model's: a delete is visible iff its
   snapshot is accepted and no accepted clear names its file, and its
   seq is its snapshot's chain index;
@@ -41,14 +39,13 @@ from libgiddy_spark.manifest import Manifest, ReadView
 from libgiddy_spark.meta import file_rows
 
 COLS = ("a", "b", "c")
-PROJECTIONS = ({"a"}, {"b"}, {"c"}, {"a", "b"})
 KEY_PROBES = ((0, 5), (30, 45), (100, 160), (400, 10_000))
 
 
 class History:
     """Writes one manifest history op by op and remembers what the
-    checks need: header ids in write order, each part's columns and
-    committing snapshot, and the delete and clear entries."""
+    checks need: header ids in write order, each part's committing
+    snapshot, and the delete and clear entries."""
 
     def __init__(self, out: str):
         self.out = out
@@ -56,7 +53,6 @@ class History:
         self.snaps: list[str] = []
         self.staged_open: list[str] = []
         self.aborted: set[str] = set()
-        self.cols_of: dict[int, frozenset] = {}
         self.snap_of: dict[int, str] = {}
         self.deletes: list[tuple[str, str]] = []        # (file, snapshot)
         self.clears: list[tuple[str, list[str]]] = []   # (snapshot, files)
@@ -84,10 +80,8 @@ class History:
             if n:
                 e["columns"] = {c: {"codec": "raw", "n_values": n}
                                 for c in sorted(cols)}
-                self.cols_of[pid] = cols
             else:
                 e["empty"] = True
-                self.cols_of[pid] = frozenset()
             lo, hi = self.next_key, self.next_key + 9
             self.next_key = hi + 1
             e["key_lo"], e["key_hi"] = (lo, hi) if zoned else (None, None)
@@ -211,13 +205,11 @@ def read_views(h: History) -> dict:
         try:
             files = _committed_block_files(out, as_of=as_of)
         except ValueError:
-            for fn in (lambda: file_rows(out, as_of),
-                       lambda: ReadView.read(out, as_of).evolution_nulls(
-                           {"a"})):
-                try:
-                    fn()
-                except ValueError:
-                    continue
+            try:
+                file_rows(out, as_of)
+            except ValueError:
+                pass
+            else:
                 raise AssertionError(f"only the listing raised at {as_of}")
             views[as_of] = "raises"
             continue
@@ -232,13 +224,6 @@ def read_views(h: History) -> dict:
             "dirs": sorted({_dir_of(out, f) for f in files}),
             "by_pid": by_pid,
             "rows": sorted(r[:3] for r in rows),
-            "row_counts": sorted(r[:4] for r in rows),
-            "evo": {
-                tuple(sorted(w)): sorted(view.evolution_nulls(w))
-                for w in PROJECTIONS
-            },
-            "evo_even": sorted(view.evolution_nulls(
-                {"c"}, list(range(0, h.next_pid, 2)))),
             "key_range": [_committed_block_files(out, key_range=kr,
                                                  as_of=as_of)
                           for kr in KEY_PROBES],
@@ -297,16 +282,6 @@ def check_history(ops: list[tuple]) -> None:
             for pid, dirs in v["by_pid"].items():
                 assert dirs == sorted(
                     {r[1] for r in v["rows"] if r[2] == pid}), (as_of, pid)
-            # evolution nulls: visible parts with columns, none wanted
-            live = {r[2]: r[3] for r in v["row_counts"]}
-            for w, got in v["evo"].items():
-                want = sorted(
-                    (pid, n) for pid, n in live.items()
-                    if n > 0 and h.cols_of[pid]
-                    and not h.cols_of[pid] & set(w))
-                assert got == want, (as_of, w)
-            assert v["evo_even"] == [
-                (p, n) for p, n in v["evo"][("c",)] if p % 2 == 0], as_of
             for kr, files in zip(KEY_PROBES, v["key_range"]):
                 assert set(files) <= {
                     f for f in _committed_block_files(out, as_of=as_of)}, kr
@@ -321,8 +296,8 @@ def check_history(ops: list[tuple]) -> None:
                 continue
             # bounds and empty parts' row counts differ by granularity
             # (chunk aggregate vs part line); visibility may not
-            for key in ("dirs", "by_pid", "rows", "evo", "evo_even",
-                        "key_range", "deletes", "part_seq"):
+            for key in ("dirs", "by_pid", "rows", "key_range", "deletes",
+                        "part_seq"):
                 assert v[key] == f[key], (as_of, key)
 
 

@@ -4,6 +4,7 @@ state, however the manifest changes while the plan is built."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -80,12 +81,39 @@ def test_one_manifest_read_per_plan(spark, tmp_path, monkeypatch):
     assert spy(lambda: decode_blocks(spark, out, SCHEMA)) == (1, 1)
     assert spy(lambda: decode_blocks(spark, out, SCHEMA, as_of=first)) \
         == (1, 1)
-    # fully pruned: the evolution-null pass reuses the same read
+    # fully pruned: the delete checks reuse the same read
     assert spy(lambda: decode_blocks(
         spark, out, SCHEMA, key_range=(10**6, 2 * 10**6))) == (1, 1)
     assert spy(lambda: file_rows(out, as_of="v1"))[0] == 1
     assert spy(lambda: read_table(spark, out)) == (1, 1)
     assert spy(lambda: vacuum_blocks(out, retain_last=3))[0] == 1
+
+
+def test_index_without_part_rows_falls_back_to_full_read(
+        spark, tmp_path, monkeypatch):
+    """A decode plans from the chunk index alone: its chunk lines carry
+    ``part_rows`` and no ``columns``. An index from before chunk lines
+    carried ``part_rows`` makes the read fall back to the full
+    manifest, so ``meta.file_rows`` still reports true row counts."""
+    out, _first = _two_snapshots(spark, tmp_path)
+    full_reads = []
+    read = Manifest.read
+    monkeypatch.setattr(Manifest, "read",
+                        lambda self: full_reads.append(1) or read(self))
+    index = Manifest(out).index_path
+    with open(index) as f:
+        lines = [json.loads(x) for x in f]
+    chunks = [e for e in lines if e.get("kind") == "chunk"]
+    assert chunks and all("part_rows" in e and "columns" not in e
+                          for e in chunks)
+    decode_blocks(spark, out, SCHEMA)
+    assert not full_reads
+    for e in chunks:
+        del e["part_rows"]
+    with open(index, "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in lines)
+    assert sorted(r[3] for r in file_rows(out)) == [1000, 1000]
+    assert len(full_reads) == 1
 
 
 def test_one_manifest_read_per_changelog(spark, tmp_path, monkeypatch):
