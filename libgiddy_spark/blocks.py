@@ -578,7 +578,8 @@ def output_type(t: pa.DataType) -> pa.DataType:
 
 
 def decode_group(table: pa.Table, schema: pa.Schema,
-                 column_map: dict[str, str] | None = None) -> pa.Table:
+                 column_map: dict[str, str] | None = None,
+                 pruned: bool = False) -> pa.Table:
     """Decode one (part_id, salt) group of block rows back to source rows.
 
     Blocks are ordered by (column, block_seq); per-column decoded chunks
@@ -594,7 +595,11 @@ def decode_group(table: pa.Table, schema: pa.Schema,
     salt and column instead of yielding misaligned or fewer rows. A
     block that appears twice, or that the codecs cannot decode (a
     corrupt or truncated payload), raises a ``ValueError`` naming the
-    part, salt, column and ``block_seq``.
+    part, salt, column and ``block_seq``. Unless ``pruned`` (zone-map
+    or Bloom pruning dropped blocks on purpose), each projected
+    column's ``block_seq`` must run 0..k-1: a gap raises a
+    ``ValueError`` naming the missing block. A lost last block needs
+    per-group counts and is not caught here.
     """
     table = table.sort_by([("column", "ascending"), ("block_seq", "ascending")])
     cols_present = table.column("column").to_pylist()
@@ -605,10 +610,10 @@ def decode_group(table: pa.Table, schema: pa.Schema,
     by_col: dict[str, list[pa.Array]] = {}
     stored: dict[str, int] = {}
 
-    def block(i: int, name: str) -> str:
+    def block(i: int, name: str, seq: int | None = None) -> str:
         return (f"part {table.column('part_id')[i].as_py()} salt "
                 f"{table.column('salt')[i].as_py()} column {name!r} "
-                f"block_seq {seqs[i]}")
+                f"block_seq {seqs[i] if seq is None else seq}")
 
     for i, (name, payload) in enumerate(zip(cols_present, payloads)):
         if i and (name, seqs[i]) == (cols_present[i - 1], seqs[i - 1]):
@@ -617,6 +622,10 @@ def decode_group(table: pa.Table, schema: pa.Schema,
             name = column_map.get(name, name)
         if name not in wanted:  # projection: don't decode dropped columns
             continue
+        want = (seqs[i - 1] + 1
+                if i and cols_present[i - 1] == cols_present[i] else 0)
+        if not pruned and seqs[i] != want:
+            raise ValueError(f"{block(i, name, want)}: missing block")
         try:
             arr = decode_array(payload)
         except Exception as e:

@@ -12,8 +12,8 @@ Encode lifecycle::
 
 Decode is shuffle-free too: each task streams a run of block files,
 whole (part_id, salt) groups at a time, through the kernels (see
-decode_blocks). Encode and decode jobs each run one wave of at most
-``defaultParallelism`` tasks (_one_wave_df).
+decode_blocks). Encode, decode and compaction jobs each run one wave
+of at most ``defaultParallelism`` tasks (_one_wave: MapInArrow, Range).
 
 Everything driver-side touches only metadata (file registry, byte
 stats, manifest lines) — no row data is ever collected.
@@ -85,23 +85,28 @@ def _balanced_bounds(sizes: list[int], k: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def _one_wave_df(spark: SparkSession, rows: list[tuple], weights: list[int],
-                 ddl: str) -> DataFrame:
-    """``rows`` as a DataFrame of at most ``defaultParallelism``
-    partitions: contiguous runs of roughly equal total weight
-    (_balanced_bounds), each streamed by one task. A job over it is
-    one wave of tasks: every further wave cost about 0.27 s of task
-    launch (no-op ``mapInArrow`` jobs, ``local[2]`` on a 4-core host)
-    even with reused Python workers, more than a small table's encode
-    or decode. The runs are cut on
-    the driver and handed to ``parallelize`` one list per partition,
-    so the plan has no Exchange (``.repartition(n)`` would add one)."""
+def _one_wave(spark: SparkSession, rows: list[tuple], weights: list[int],
+              schema: pa.Schema, fn, ddl: str) -> DataFrame:
+    """``fn`` over ``rows`` in one wave of at most ``defaultParallelism``
+    tasks, each streaming one contiguous run of roughly equal total
+    weight (_balanced_bounds) as one ``schema``-typed record batch. Every
+    further wave cost about 0.27 s of task launch (no-op ``mapInArrow``
+    jobs, ``local[2]`` on a 4-core host), more than a small table's
+    encode or decode. The runs ride in the task closure and each
+    ``spark.range`` id picks one: the plan is ``MapInArrow`` over
+    ``Range``, no Exchange, one Python worker per task."""
     bounds = _balanced_bounds(weights, spark.sparkContext.defaultParallelism)
-    runs = [rows[lo:hi] for lo, hi in bounds]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(runs, len(runs)).flatMap(lambda r: r),
-        ddl,
-    )
+    runs = [pa.RecordBatch.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows[lo:hi]], schema=schema)
+        for lo, hi in bounds]
+
+    def task(ids):
+        for b in ids:
+            for i in b.column(0).to_pylist():
+                yield from fn(iter([runs[i]]))
+
+    return spark.range(len(runs), numPartitions=len(runs)).mapInArrow(
+        task, ddl)
 
 
 def encode_snapshot(
@@ -157,7 +162,7 @@ def encode_files(
     byte-balanced run of slices, plans the codecs of each part it meets
     (plan_one_file), reads every slice's row groups with pyarrow, sorts
     in Arrow, encodes, writes its own block file and returns only
-    metadata. Spark distributes just the tiny task list — the decode
+    metadata. The task list travels in the kernel's closure — the decode
     pattern mirrored onto encode, so at 100 TB the table is never
     rewritten through shuffle storage. A file's split granularity is
     its row-group count; a file with fewer row groups than its fan-out
@@ -369,26 +374,22 @@ def encode_files(
                 data_cols, sort_key=sort_key,
                 forced_codecs=forced_codecs, block_rows=block_rows,
             )
-            # logical slicing (salt groups) is independent of the
-            # physical task count: one wave of tasks, each streaming a
-            # contiguous, byte-balanced run of slices through one
-            # Python worker (per-task overhead — worker roundtrip,
-            # Arrow init, output file commit — would otherwise be paid
-            # per slice). Contiguous runs keep a part's slices together,
-            # so a part is planned by at most the tasks its run spans.
-            tdf = _one_wave_df(
-                spark, tasks, weights,
-                "part_id int, salt int, rg_lo int, rg_hi int, "
-                "row_lo long, row_hi long, path string",
-            )
-            # each TASK writes its own block parquet file with pyarrow
-            # and returns only per-(part, column) metadata rows: the
-            # encoded payloads never cross the Arrow->JVM boundary and
-            # no JVM parquet writer runs (guide §4.1 — pass only the
-            # bytes the other side needs).
-            meta_rows = [r.asDict() for r in tdf.mapInArrow(
-                make_task_writer(direct_fn, tmp), schema=TASK_META_DDL
-            ).collect()]
+            # one wave of tasks, each streaming a contiguous,
+            # byte-balanced run of (part, salt) slices: per-task
+            # overhead (worker start-up, Arrow init, output file commit)
+            # is paid per task, not per slice, and a part is planned by
+            # at most the tasks its run spans. Each TASK writes its own
+            # block parquet file with pyarrow and returns only
+            # per-(part, column) metadata rows: the encoded payloads
+            # never cross the Arrow->JVM boundary and no JVM parquet
+            # writer runs (guide §4.1 — pass only the bytes needed).
+            meta_rows = [r.asDict() for r in _one_wave(
+                spark, tasks, weights, pa.schema(
+                    [(c, pa.int32()) for c in ("part_id", "salt", "rg_lo",
+                                               "rg_hi")]
+                    + [(c, pa.int64()) for c in ("row_lo", "row_hi")]
+                    + [("path", pa.string())]),
+                make_task_writer(direct_fn, tmp), TASK_META_DDL).collect()]
         # Commit protocol: attempt-unique file names, the driver keeps
         # exactly the returned file set (stray failed-attempt files are
         # removed here), records it in a _FILES marker that decode
@@ -592,12 +593,11 @@ def compact_blocks(
                                        pa.int64())}
                 )
 
-    tdf = _one_wave_df(
-        spark, [(d, list(s)) for d, s in plan_rows],
-        [sum(sizes[d] for d in b) for b in bins],
-        "dest string, srcs array<string>",
-    )
-    tdf.mapInArrow(copy_bin, "dest string, n_src long").collect()
+    _one_wave(
+        spark, plan_rows, [sum(sizes[d] for d in b) for b in bins],
+        pa.schema([("dest", pa.string()), ("srcs", pa.list_(pa.string()))]),
+        copy_bin, "dest string, n_src long",
+    ).collect()
     results = []
     for new_dir, tmp, bin_dirs in bin_meta:
         final = os.path.join(blocks_root, new_dir)
@@ -1587,8 +1587,8 @@ def decode_blocks(
     encoded payloads that a groupBy/applyInArrow formulation would
     add: each task streams a contiguous run of block FILES, group by
     group, through the numpy decoder, one wave of tasks in all. The
-    file list reaches the tasks by ``parallelize`` (_one_wave_df), so
-    the plan has zero exchanges. File reads go through pyarrow, which
+    file list rides in the task closure (_one_wave): ``MapInArrow``
+    over ``Range``, no Exchange. File reads go through pyarrow, which
     handles local, HDFS and S3 URIs alike in production.
 
     Equality deletes are applied inside the same tasks: each task reads
@@ -1692,6 +1692,10 @@ def _decode_view(
     part_seq = view.part_seq if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
     krange_s = (str(key_range_s[0]), str(key_range_s[1])) if key_range_s is not None else None
+    # zone-map and Bloom pruning (a key_point sets a range) drop blocks
+    # by block_seq, so only an unpruned decode can require each
+    # column's blocks to be gapless
+    pruned = krange is not None or krange_s is not None
 
     def decode_stream(batches):
         import numpy as np
@@ -1708,7 +1712,7 @@ def _decode_view(
 
         def _emit(path: str, grp: pa.Table):
             try:
-                out = decode_group(grp, schema, column_map)
+                out = decode_group(grp, schema, column_map, pruned)
             except ValueError as e:
                 raise ValueError(f"block file {path!r}: {e}") from e
             if tomb_sets and out.num_rows:
@@ -1826,9 +1830,8 @@ def _decode_view(
     # one TASK streams a run of block files (the loop above), one wave
     # of tasks in all: per-task overhead must not dominate when there
     # are many small block files
-    pdf = _one_wave_df(spark, [(p,) for p in files], [1] * len(files),
-                       "path string")
-    return pdf.mapInArrow(decode_stream, schema=ddl)
+    return _one_wave(spark, [(p,) for p in files], [1] * len(files),
+                     pa.schema([("path", pa.string())]), decode_stream, ddl)
 
 
 _SPARK_TYPES = {

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -139,3 +140,23 @@ def test_block_file_without_n_values_raises_naming_file(spark, tmp_path):
     msg = str(ei.value)
     assert "ValueError" in msg and f"block file {path!r}" in msg, msg
     assert "n_values" in msg, msg
+
+
+def test_missing_middle_block_raises_naming_block(spark, tmp_path):
+    """A block file that lost one middle ``block_seq`` of every column
+    fails the decode, naming file, part, salt, column and the missing
+    block: each column still matches its own ``n_values`` sum, so only
+    the gap in ``block_seq`` shows the lost rows."""
+    out, schema = _encode(spark, tmp_path)
+    (path,) = _committed_block_files(out)
+    blocks = pq.read_table(path)
+    assert set(blocks.column("block_seq").to_pylist()) == {0, 1, 2}
+    pid = blocks.column("part_id")[0].as_py()
+    salt = blocks.column("salt")[0].as_py()
+    pq.write_table(blocks.filter(pc.not_equal(blocks["block_seq"], 1)), path)
+    with pytest.raises(Exception) as ei:
+        decode_blocks(spark, out, schema).collect()
+    msg = str(ei.value)
+    assert "ValueError" in msg and f"block file {path!r}" in msg, msg
+    assert (f"part {pid} salt {salt} column 'k' block_seq 1: "
+            "missing block") in msg, msg

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 from libgiddy_spark.engine import (
     _balanced_bounds,
     _committed_block_files,
-    _one_wave_df,
+    _one_wave,
     blocks_df,
     decode_blocks,
     encode_snapshot,
@@ -351,8 +352,8 @@ def test_encode_is_one_job_and_decode_one_wave(spark, tmp_path):
         spark, src, out, key_col="k"))
     assert len(tasks) == 1 and tasks[0] <= dp, tasks
     # the encode task list: one partition per task, no Exchange
-    tdf = _one_wave_df(spark, [(i,) for i in range(3 * dp)],
-                       [1] * (3 * dp), "i int")
+    tdf = _one_wave(spark, [(i,) for i in range(3 * dp)], [1] * (3 * dp),
+                    pa.schema([("i", pa.int32())]), lambda b: b, "i int")
     assert tdf.rdd.getNumPartitions() == dp
     assert "Exchange" not in tdf._jdf.queryExecution().executedPlan().toString()
     # one chunk per file: more block files than task slots

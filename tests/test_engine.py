@@ -146,10 +146,11 @@ def _first_schema(path):
 
 
 def test_decode_plan_is_shuffle_free(spark, tmp_path):
-    """Decode must not exchange ANYTHING: the file-path list is
-    cut driver-side into a pre-partitioned RDD (round 4), so
-    the physical plan has ZERO Exchange nodes — blocks flow
-    file->task->decoder directly."""
+    """Decode must not exchange ANYTHING: the file-path list is cut
+    driver-side into runs that ride in the task closure, one per
+    ``spark.range`` id, so the physical plan's only leaf is that Range
+    and it has ZERO Exchange nodes — blocks flow file->task->decoder
+    directly."""
     import pyarrow.parquet as pq
 
     from libgiddy_spark.engine import decode_blocks, encode_snapshot
@@ -158,9 +159,13 @@ def test_decode_plan_is_shuffle_free(spark, tmp_path):
     out = str(tmp_path / "enc")
     encode_snapshot(spark, src, out, key_col="doc_id")
     dec = decode_blocks(spark, out, pq.read_schema(src))
-    plan = dec._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 0
-    assert "[path" in plan  # the scanned relation carries only paths
+    executed = dec._jdf.queryExecution().executedPlan()
+    leaves = executed.collectLeaves()
+    assert [leaves.apply(i).nodeName()
+            for i in range(leaves.size())] == ["Range"]
+    plan = executed.toString()
+    for node in ("Exchange", "FileScan", "ExistingRDD"):
+        assert node not in plan, plan
     assert dec.count() == 500
 
 
