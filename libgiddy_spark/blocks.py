@@ -255,12 +255,11 @@ def plan_one_file(
     path: str,
     columns: list[str],
     forced_codecs: dict[str, str] | None = None,
-    sample_rows: int = PLAN_SAMPLE_ROWS,
 ) -> list[tuple[str, str, str, bytes | None]]:
     """Codec plan for one data file: (column, codec, params_json,
     serialized_fsst_table|None) per column, selected (and FSST
     trained) ONCE on a bounded sample, the first
-    min(sample_rows, row-group-0 rows) rows of the file. It depends
+    min(PLAN_SAMPLE_ROWS, row-group-0 rows) rows of the file. It depends
     only on the file, so every salt slice of a part gets the same
     codecs and symbol tables whichever task encodes it. The encode
     task plans each part it meets (make_direct_encoder); this reads
@@ -270,17 +269,18 @@ def plan_one_file(
     pf = pq.ParquetFile(path)
     if pf.metadata.num_row_groups == 0:
         return []
-    # stream just the first sample_rows out of row group 0 instead of
-    # materializing the whole (8-128 MB) group. A zero-row first group
+    # stream just the first PLAN_SAMPLE_ROWS out of row group 0 instead
+    # of materializing the whole (8-128 MB) group. A zero-row first group
     # yields no batches (None) -> no plan, same as an empty file.
     first = next(iter(pf.iter_batches(
-        batch_size=sample_rows, row_groups=[0],
+        batch_size=PLAN_SAMPLE_ROWS, row_groups=[0],
         columns=columns, use_threads=False,
     )), None)
     if first is None:
         return []
-    return _plan_head(pa.Table.from_batches([first]).slice(0, sample_rows),
-                      columns, forced_codecs)
+    return _plan_head(
+        pa.Table.from_batches([first]).slice(0, PLAN_SAMPLE_ROWS),
+        columns, forced_codecs)
 
 
 def _plan_head(
@@ -503,8 +503,11 @@ def merge_part_meta(rows, agg: dict | None = None) -> dict:
     return agg
 
 
-def make_task_writer(encode_fn, out_dir: str,
-                     row_group_bytes: int = 32 << 20):
+# payload bytes per block-file row group (make_task_writer)
+TASK_ROW_GROUP_BYTES = 32 << 20
+
+
+def make_task_writer(encode_fn, out_dir: str):
     """Wrap a block-producing mapInArrow kernel so each TASK writes its
     own block parquet file with pyarrow and yields only per-(part,
     column) METADATA rows (TASK_META_DDL) back to the JVM.
@@ -520,7 +523,7 @@ def make_task_writer(encode_fn, out_dir: str,
     commits exactly the returned file set (engine writes a _FILES
     marker and removes stray files before renaming the chunk dir), so
     a failed/retried attempt's leftovers are never read back. Row
-    groups are flushed every ~row_group_bytes of payload so the
+    groups are flushed every ~TASK_ROW_GROUP_BYTES of payload so the
     streaming decoder's peak stays one row group, inside the warm
     allocator arena."""
 
@@ -557,7 +560,7 @@ def make_task_writer(encode_fn, out_dir: str,
             merge_part_meta(_block_meta_rows(batch), agg)
             pend.append(batch)
             pend_bytes += batch.nbytes
-            if pend_bytes >= row_group_bytes:
+            if pend_bytes >= TASK_ROW_GROUP_BYTES:
                 flush_rg()
         flush_rg()
         if writer is None:

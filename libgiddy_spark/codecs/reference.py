@@ -17,7 +17,6 @@ from __future__ import annotations
 import numpy as np
 
 from .fsst import ESCAPE, SymbolTable
-from .strcol import StrCol
 
 HEADER_ALLOWANCE = 128
 
@@ -172,7 +171,3 @@ def naive_fsst_bytes(items: list[bytes], table: SymbolTable) -> int:
     stream = naive_fsst_encode(items, table)
     table_bytes = 1 + len(table.symbols) + sum(len(s) for s in table.symbols)
     return table_bytes + 8 * len(items) + len(stream)  # 8B length per string
-
-
-def strcol_items(col: StrCol) -> list[bytes]:
-    return col.to_pylist()

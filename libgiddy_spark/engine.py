@@ -43,6 +43,8 @@ from .manifest import (
     Manifest,
     ReadView,
     branch_replay as _branch_replay,
+    done_parts,
+    file_registry,
     list_refs,
     refs_of,
 )
@@ -56,10 +58,6 @@ from .table_io import abs_file_of, list_parquet_files, snapshot_id_of
 # row-range re-decode amplification costs the same bytes everywhere).
 _SLICE_FLOOR = 4 << 20
 _RG_AMP_CAP = 8
-
-
-def _source_files(path: str) -> list[dict]:
-    return [{"path": p, "bytes": s} for p, s in list_parquet_files(path)]
 
 
 def _balanced_bounds(sizes: list[int], k: int) -> list[tuple[int, int]]:
@@ -175,7 +173,29 @@ def encode_files(
         return {"snapshot_id": snapshot_id, "num_parts": 0,
                 "skipped_done": 0, "encoded_parts": 0, "secs": 0.0}
     num_parts = len(files)
+    import pyarrow.parquet as pq
+
+    from .schema_evo import ensure_schema_baseline
+
+    schema = pq.read_schema(abs_file_of(source_path, files[0][0]))
+    data_cols = list(columns or schema.names)
+    sort_key = sort_key or key_col
+    # zone maps, blooms and block ordering all derive from the sort
+    # key: fail loudly rather than encode unsorted, zone-less blocks —
+    # before anything is written or swept
+    if sort_key not in data_cols:
+        raise ValueError(
+            f"encode: sort key {sort_key!r} must be in the encoded "
+            f"columns {data_cols!r} (zone maps, blooms and block "
+            "ordering derive from it)"
+        )
+    # ONE manifest read plans the whole commit: attempt id, rollback
+    # guard, header, schema baseline, file registry and done parts
     manifest = Manifest(out_dir)
+    entries = manifest.read()
+    view = ReadView(out_dir, entries)
+    st = view.branch
+    known = st.headers()
     if wap_staged:
         # a staged ATTEMPT gets its own snapshot id (content id + -wapK):
         # the same source may be re-staged (or plainly re-encoded) after
@@ -183,55 +203,35 @@ def encode_files(
         # the content id would attach the retry's parts to the aborted
         # header, hiding them at HEAD forever. An open (staged,
         # unpublished, unaborted) attempt is resumed, Iceberg-style.
-        entries = manifest.read()
-        hdrs = {e["snapshot_id"]: e for e in entries
-                if e.get("kind") == "snapshot"}
-        closed = {e.get("snapshot_id") for e in entries
-                  if e.get("kind") == "publish"}
+        closed = known.difference(st.staged_parent)
         k = 0
-        while True:
-            cand = f"{snapshot_id}-wap{k}"
-            if cand not in hdrs or (hdrs[cand].get("staged")
-                                    and cand not in closed):
-                snapshot_id = cand
-                break
+        while f"{snapshot_id}-wap{k}" in closed:
             k += 1
-    else:
+        snapshot_id = f"{snapshot_id}-wap{k}"
+    elif snapshot_id in st.parent and snapshot_id not in st.visible():
         # re-encoding a source whose content snapshot was ROLLED BACK
         # would resume its done parts under the hidden header — data
         # invisible at HEAD forever. Roll forward instead (one line,
-        # no re-encode). Index+tail read: headers/rollbacks are indexed.
-        entries = manifest.read_indexed()
-        if any(e.get("kind") == "snapshot"
-               and e.get("snapshot_id") == snapshot_id for e in entries):
-            stv = _branch_replay(entries)
-            if (snapshot_id in stv.parent
-                    and snapshot_id not in set(stv.visible())):
-                raise ValueError(
-                    f"snapshot {snapshot_id!r} for this source exists "
-                    "but was undone by a rollback — use "
-                    f"rollback({out_dir!r}, {snapshot_id!r}) to roll "
-                    "forward to it instead of re-encoding")
+        # no re-encode).
+        raise ValueError(
+            f"snapshot {snapshot_id!r} for this source exists "
+            "but was undone by a rollback — use "
+            f"rollback({out_dir!r}, {snapshot_id!r}) to roll "
+            "forward to it instead of re-encoding")
     # record/extend the TABLE SCHEMA registry (schema_evo) BEFORE the
     # header, so this snapshot reads under the schema it was written
     # with; a grown source's new columns register as add-column
     # evolution. Skipped columns (projection encode) stay unregistered.
-    import pyarrow.parquet as pq
-
-    from .schema_evo import ensure_schema_baseline
-
-    schema = pq.read_schema(abs_file_of(source_path, files[0][0]))
-    ensure_schema_baseline(out_dir, schema if columns is None else pa.schema(
+    ensure_schema_baseline(view, schema if columns is None else pa.schema(
         [schema.field(c) for c in schema.names if c in set(columns)]))
-    manifest.write_snapshot_header(
-        snapshot_id, source_path, _source_files(source_path), num_parts,
-        staged=wap_staged,
-    )
+    if snapshot_id not in known:  # a resume keeps its header
+        manifest.write_snapshot_header(
+            snapshot_id, source_path, num_parts, staged=wap_staged)
     # part_id = STABLE file identity from the manifest's file registry
     # (first-seen order, monotonic). A snapshot that grew by N files
     # therefore re-encodes ONLY those files — incremental append for
     # free, exactly how Iceberg data files accrue across snapshots.
-    registry = manifest.file_registry()
+    registry = file_registry(entries)
     next_pid = max(registry.values(), default=-1) + 1
     newly_seen: list[tuple[str, int, str]] = []
     rel_of: dict[int, str] = {}
@@ -246,7 +246,7 @@ def encode_files(
         manifest.register_files(newly_seen)
     blocks_root = os.path.join(out_dir, "blocks")
     os.makedirs(blocks_root, exist_ok=True)
-    done = manifest.done_parts()
+    done = done_parts(entries, st)
     pending = sorted(p for p in rel_of if p not in done)
     # resume sweep: drop uncommitted temp dirs AND any renamed chunk dir
     # (its _PARTS marker lists its parts) holding a part this call
@@ -265,19 +265,8 @@ def encode_files(
                 parts_in_dir = [int(x) for x in f.read().split() if x]
             if redo.intersection(parts_in_dir):
                 shutil.rmtree(full, ignore_errors=True)
-    data_cols = list(columns or schema.names)
-    sort_key = sort_key or key_col
     min_slices = min_slices or spark.sparkContext.defaultParallelism
     encoded_parts = 0
-
-    # zone maps, blooms and block ordering all derive from the sort
-    # key: fail loudly rather than encode unsorted, zone-less blocks
-    if sort_key not in data_cols:
-        raise ValueError(
-            f"encode: sort key {sort_key!r} must be in the encoded "
-            f"columns {data_cols!r} (zone maps, blooms and block "
-            "ordering derive from it)"
-        )
 
     for lo in range(0, len(pending), chunk_parts):
         chunk = pending[lo : lo + chunk_parts]
@@ -417,32 +406,26 @@ def encode_files(
             }
             for p in chunk
         }
-        for (pid, _col), r in sorted(mdf.items()):
+        for (pid, col), r in sorted(mdf.items()):
             e = per_part[pid]
-            # part-level zone map in the manifest: lets a key-range
-            # decode prune whole PARTS/chunk dirs driver-side, before
-            # any file listing or footer read (the Iceberg-manifest
-            # data-skipping pattern). Set only when every block of the
-            # part is zoned; one unzoned block poisons the whole part
-            # (over-inclusion, never silent loss).
-            if r["n_unzoned"] > 0:
-                e["key_lo"] = e["key_hi"] = None
-                e["_zone_poisoned"] = True
-            elif r["key_lo"] is not None and not e.get("_zone_poisoned"):
-                e["key_lo"], e["key_hi"] = r["key_lo"], r["key_hi"]
-            # string part bounds: same poisoning rule, separate flag
-            if r["n_unzoned_s"] > 0:
-                e["key_lo_s"] = e["key_hi_s"] = None
-                e["_zone_poisoned_s"] = True
-            elif r["key_lo_s"] is not None and not e.get("_zone_poisoned_s"):
-                e["key_lo_s"], e["key_hi_s"] = r["key_lo_s"], r["key_hi_s"]
-            e["columns"][r["column"]] = {
+            if col == sort_key:
+                # part-level zone map in the manifest: lets a key-range
+                # decode prune whole PARTS/chunk dirs driver-side, before
+                # any file listing or footer read (the Iceberg-manifest
+                # data-skipping pattern). Every column's blocks carry the
+                # sort key's bounds, so its aggregate is the part's. Set
+                # only when every block of the part is zoned; one
+                # unzoned block poisons the whole part (over-inclusion,
+                # never silent loss), for the int and string pairs alike.
+                for lo, hi, unzoned in (("key_lo", "key_hi", "n_unzoned"),
+                                        ("key_lo_s", "key_hi_s",
+                                         "n_unzoned_s")):
+                    e[lo], e[hi] = ((None, None) if r[unzoned]
+                                    else (r[lo], r[hi]))
+            e["columns"][col] = {
                 k: r[k] for k in ("codec", "n_values", "raw_bytes",
                                   "enc_bytes", "n_blocks", "codec_params")
             }
-        for e in per_part.values():
-            e.pop("_zone_poisoned", None)
-            e.pop("_zone_poisoned_s", None)
         entries = [e for e in per_part.values() if e["columns"]]
         # empty parts inherit commit_status too: a hard-coded "done"
         # would leak a staged purge's empty part live before its txn
@@ -862,7 +845,7 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
 
     m = Manifest(out_dir)
     view = ReadView(out_dir, m.read())  # HEAD before the delete
-    if not any(e.get("kind") == "snapshot" for e in view.entries):
+    if not view.branch.headers():
         raise ValueError(f"no snapshots in {out_dir}: nothing to delete from")
     cow = len(keys) > SMALL_DELETE_MAX_KEYS
     spark = SparkSession.getActiveSession() if cow else None
@@ -883,7 +866,10 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     with open(target, "rb") as f:
         digest = hashlib.sha256(f.read()).hexdigest()[:12]
     snap_id = f"snap-{os.path.basename(rel).removesuffix('.parquet')}-{digest}"
-    m.write_snapshot_header(snap_id, out_dir, [], 0)
+    # the same keys retried after a crash before the delete entry
+    # already have their header
+    if snap_id not in view.branch.headers():
+        m.write_snapshot_header(snap_id, out_dir, 0)
     if cow:
         _staged_full_rewrite(spark, view, schema, key, delete={
             "kind": "delete", "snapshot_id": snap_id, "file": rel,
@@ -955,7 +941,7 @@ def upsert_rows(
     (column subsets would null-fill on decode)."""
     m = Manifest(out_dir)
     view = ReadView(out_dir, m.read())  # HEAD before the upsert
-    if not any(e.get("kind") == "snapshot" for e in view.entries):
+    if not view.branch.headers():
         raise ValueError(f"no snapshots in {out_dir}: encode first")
     if key_col not in df.columns:
         raise ValueError(f"upsert df lacks key column {key_col!r}")
@@ -1183,16 +1169,16 @@ def _wap_state(out_dir: str, snapshot_or_ref: str) -> tuple[str, str]:
     'unstaged' | 'staged' | 'published' | 'aborted'."""
     entries = Manifest(out_dir).read_indexed()
     sid = refs_of(entries).get(snapshot_or_ref, snapshot_or_ref)
-    hdr = next((e for e in entries if e.get("kind") == "snapshot"
-                and e.get("snapshot_id") == sid), None)
-    if hdr is None:
+    st = _branch_replay(entries)
+    if sid in st.staged_parent:
+        return sid, "staged"
+    if sid in st.aborted:
+        return sid, "aborted"
+    if sid not in st.parent:
         raise ValueError(f"unknown snapshot {snapshot_or_ref!r}")
-    if not hdr.get("staged"):
-        return sid, "unstaged"
-    for e in entries:
-        if e.get("kind") == "publish" and e.get("snapshot_id") == sid:
-            return sid, ("aborted" if e.get("abort") else "published")
-    return sid, "staged"
+    staged = any(e.get("kind") == "snapshot" and e.get("snapshot_id") == sid
+                 and e.get("staged") for e in entries)
+    return sid, "published" if staged else "unstaged"
 
 
 def publish_snapshot(out_dir: str, snapshot_or_ref: str) -> dict:

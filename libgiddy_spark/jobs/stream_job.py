@@ -34,7 +34,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from libgiddy_spark.jobs.encode_job import build_spark
-    from libgiddy_spark.manifest import Manifest
+    from libgiddy_spark.manifest import Manifest, done_parts
     from libgiddy_spark.streaming import encode_stream
 
     spark = build_spark("libgiddy-stream-encode")
@@ -49,7 +49,7 @@ def main() -> None:
         min_slices=args.min_slices,
     )
     q.awaitTermination()
-    done = len(Manifest(args.out).done_parts())
+    done = len(done_parts(Manifest(args.out).read()))
     json.dump({"done_parts": done, "out": args.out}, sys.stdout)
     print()
 

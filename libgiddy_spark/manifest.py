@@ -21,6 +21,14 @@ equality deletes, each visible part's sequence number and the column
 renames. Decode's listing, delete scoping and column names, vacuum's
 pins, purge and the files metadata table all take one view, so no plan
 mixes two manifest states.
+
+Write side: a commit plans from ONE manifest read too. An encode reads
+the full manifest once and derives its WAP attempt id, rollback guard,
+header existence, schema baseline (a :class:`ReadView` over the same
+entries), :func:`file_registry` and :func:`done_parts` from it; a
+delete plans from its HEAD view. A snapshot header holds its id,
+source path, part count and the staged flag, never the source
+listing: the ``kind: "file"`` registry lines record each file once.
 """
 
 from __future__ import annotations
@@ -118,39 +126,6 @@ class Manifest:
         entries, covered = self.read_index()
         return entries + self.read_tail(covered)
 
-    def done_parts(self) -> set[int]:
-        """Committed part ids. part_id is a STABLE file identity (see
-        file_registry), so done-ness carries across snapshot ids of the
-        same growing table — an appended snapshot re-encodes only its
-        new files. Parts whose only commit lives in an ABORTED WAP
-        snapshot are NOT done — their source files must be
-        re-encodable after the failed audit, or the rows would be lost
-        forever (skipped as done, yet invisible at HEAD)."""
-        entries = self.read()
-        aborted = {e.get("snapshot_id") for e in entries
-                   if e.get("kind") == "publish" and e.get("abort")}
-        return {
-            e["part_id"]
-            for e in entries
-            if e.get("status") == "done"
-            and e.get("snapshot_id") not in aborted
-        }
-
-    def file_registry(self) -> dict[str, int]:
-        """file identity ("relpath:bytes") -> stable part_id.
-
-        Files are registered in first-seen order with monotonically
-        increasing part ids; a file that changes size is a NEW identity
-        (re-encoded under a fresh part_id). The registry line is
-        appended BEFORE a file's first encode — the durable naming
-        commitment that keeps chunk dirs, _PARTS markers, and resume
-        consistent across snapshot appends."""
-        return {
-            e["file_id"]: int(e["part_id"])
-            for e in self.read()
-            if e.get("kind") == "file"
-        }
-
     def register_files(self, new: list[tuple[str, int, str]]) -> None:
         """Append registry lines: (file_id, part_id, relpath)."""
         self.append(
@@ -159,12 +134,6 @@ class Manifest:
                 for fid, pid, rel in new
             ]
         )
-
-    def header(self, snapshot_id: str) -> dict | None:
-        for e in self.read():
-            if e.get("kind") == "snapshot" and e.get("snapshot_id") == snapshot_id:
-                return e
-        return None
 
     def append(self, entries: list[dict]) -> None:
         _append_lines(self.path, entries)
@@ -187,29 +156,32 @@ class Manifest:
         self.append_indexed(entry, [entry])
 
     def write_snapshot_header(
-        self, snapshot_id: str, source_path: str, files: list[dict],
-        num_parts: int, staged: bool = False,
+        self, snapshot_id: str, source_path: str, num_parts: int,
+        staged: bool = False,
     ) -> None:
-        """``staged=True`` marks a WAP (write-audit-publish) snapshot:
+        """Append the header of a new snapshot: its id, ``source_path``,
+        ``num_parts`` (the source's file count, which
+        ``meta.snapshot_rows`` reports) and a timestamp. The source's
+        files are not listed here: each one's ``kind: "file"`` registry
+        line records it once. The caller writes a header once per
+        snapshot id, deciding from the manifest read it plans from
+        (a resumed encode keeps its original header).
+
+        ``staged=True`` marks a WAP (write-audit-publish) snapshot:
         its data commits off the main branch — invisible to HEAD reads
         until :meth:`append_publish` fast-forwards it in (Iceberg
-        staged-snapshot / cherry-pick pattern). Resuming a staged
-        encode keeps the original flag (header written once)."""
-        if self.header(snapshot_id) is not None:
-            return
+        staged-snapshot / cherry-pick pattern)."""
         hdr = {
             "kind": "snapshot",
             "snapshot_id": snapshot_id,
             "source_path": source_path,
             "num_parts": num_parts,
-            "files": files,
             "ts": time.time(),
         }
-        # slim copy in the chunk index (no files list): time travel's
-        # snapshot ORDER must be recoverable from the index alone, even
-        # for snapshots that committed zero chunks. The staged flag MUST
-        # ride along or index-path readers would see a staged snapshot
-        # as published.
+        # slim copy in the chunk index: time travel's snapshot ORDER
+        # must be recoverable from the index alone, even for snapshots
+        # that committed zero chunks. The staged flag MUST ride along or
+        # index-path readers would see a staged snapshot as published.
         slim = {"kind": "snapshot", "snapshot_id": snapshot_id}
         if staged:
             hdr["staged"] = slim["staged"] = True
@@ -322,6 +294,8 @@ class Manifest:
         ])
         for e in span:
             if e.get("kind") == "snapshot":
+                # headers written before the field was dropped carry
+                # the source listing: keep it out of the index
                 rescued.append({k: v for k, v in e.items()
                                 if k not in ("files", "ts")})
             elif e.get("kind") in self._INDEXED_KINDS:
@@ -414,17 +388,6 @@ class Manifest:
         without a full manifest read."""
         self._append_entry("ref", name=name, snapshot_id=snapshot_id)
 
-    def append_delete_clear(
-        self, snapshot_id: str, files: list[str]
-    ) -> None:
-        """Record that a purge rewrite MATERIALIZED these delete files:
-        reads at/after ``snapshot_id`` skip them (the rows are gone from
-        the data); time travel before it still applies them. Written to
-        manifest AND index (index-only readers must see clears, or a
-        vacuumed delete file would fail their reads)."""
-        self._append_entry("delete_clear", snapshot_id=snapshot_id,
-                           files=sorted(files))
-
 
 class BranchState:
     """Replayed manifest branch state (see :func:`branch_replay`).
@@ -458,6 +421,10 @@ class BranchState:
     def visible(self) -> list[str]:
         """Commits a HEAD read sees, in commit order."""
         return self.vis_at(self.current)
+
+    def headers(self) -> set[str]:
+        """Every snapshot id with a header: joined, staged or aborted."""
+        return {*self.parent, *self.staged_parent, *self.aborted}
 
 
 def branch_replay(entries: list[dict]) -> BranchState:
@@ -522,6 +489,36 @@ def refs_of(entries: list[dict]) -> dict[str, str]:
 
 def list_refs(out_dir: str) -> dict[str, str]:
     return refs_of(Manifest(out_dir).read_indexed())
+
+
+def file_registry(entries: list[dict]) -> dict[str, int]:
+    """File identity ("relpath:bytes") -> stable part_id, from the
+    ``kind: "file"`` lines of a full manifest read.
+
+    Files are registered in first-seen order with monotonically
+    increasing part ids; a file that changes size is a NEW identity
+    (re-encoded under a fresh part_id). The registry line is
+    appended BEFORE a file's first encode — the durable naming
+    commitment that keeps chunk dirs, _PARTS markers, and resume
+    consistent across snapshot appends."""
+    return {e["file_id"]: int(e["part_id"])
+            for e in entries if e.get("kind") == "file"}
+
+
+def done_parts(entries: list[dict],
+               branch: BranchState | None = None) -> set[int]:
+    """Committed part ids of a full manifest read (``branch`` is its
+    replay, when the caller has one). part_id is a STABLE file identity
+    (see :func:`file_registry`), so done-ness carries across snapshot
+    ids of the same growing table — an appended snapshot re-encodes
+    only its new files. Parts whose only commit lives in an ABORTED WAP
+    snapshot are NOT done — their source files must be re-encodable
+    after the failed audit, or the rows would be lost forever (skipped
+    as done, yet invisible at HEAD)."""
+    aborted = (branch_replay(entries) if branch is None else branch).aborted
+    return {e["part_id"] for e in entries
+            if e.get("status") == "done"
+            and e.get("snapshot_id") not in aborted}
 
 
 class ReadView:

@@ -99,16 +99,18 @@ def table_schema(
     return schema, phys, set(line.get("retired", ()))
 
 
-def ensure_schema_baseline(out_dir: str, src_schema: pa.Schema) -> None:
-    """Record/extend the table schema from an encode's source schema:
-    first encode writes the baseline; a grown source appends its NEW
-    columns (Iceberg add-column via ingestion). Source columns that
-    match a rename's historical name are the same logical column under
-    its old name (incremental re-encodes of pre-rename files) — not
-    new. Called BEFORE the snapshot header so the snapshot reads under
-    the schema it was written with."""
+def ensure_schema_baseline(view: ReadView, src_schema: pa.Schema) -> None:
+    """Record/extend the table schema from an encode's source schema,
+    against the HEAD ``view`` the encode plans from: first encode
+    writes the baseline; a grown source appends its NEW columns
+    (Iceberg add-column via ingestion). Source columns that match a
+    rename's historical name are the same logical column under its old
+    name (incremental re-encodes of pre-rename files) — not new.
+    Called BEFORE the snapshot header so the snapshot reads under the
+    schema it was written with."""
+    out_dir = view.out_dir
     try:
-        cur, phys, retired = table_schema(out_dir)
+        cur, phys, retired = table_schema(view)
     except ValueError:
         _append_schema_line(out_dir, _line(
             src_schema, {f: [f] for f in src_schema.names}, []))

@@ -116,11 +116,6 @@ def train_fsst(arr: pa.Array) -> fsst_mod.SymbolTable:
     return fsst_mod.train(strcol_of(dense).data[:FSST_TRIAL_BYTES])
 
 
-def _runs_fraction(neq: np.ndarray, n: int) -> float:
-    nruns = 1 + int(neq.sum())
-    return nruns / max(n, 1)
-
-
 def _select_numeric(s: pa.Array, dt: int, n_total: int) -> tuple[str, dict]:
     from .codecs import _int_values
 

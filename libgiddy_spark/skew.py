@@ -11,14 +11,11 @@ Partitions whose bytes exceed ``target_bytes`` get a salt fan-out
 factor; engine.encode_files cuts each such file into that many
 contiguous row-group (or row-range) slices, each its own encode task.
 At 1000-executor scale this is what keeps one 100x crawl-host
-partition from stalling a stage. ``partition_byte_stats`` (one
-Catalyst aggregate) computes the same estimate with a scan, for
-sources without parquet footers.
+partition from stalling a stage. Ingest stages CSV/JSONL sources to
+parquet first, so every encode source has footers.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, functions as F
 
 
 def footer_byte_stats(
@@ -26,10 +23,10 @@ def footer_byte_stats(
 ) -> dict[int, int]:
     """part_id -> estimated in-memory bytes, from parquet footers only.
 
-    Same estimate partition_byte_stats computes with a scan (fat-column
-    octet sum + 16 B per row per thin column), read from row-group
-    column-chunk metadata instead. Deterministic across runs (resume
-    requires the salt fan-out to be stable)."""
+    The estimate is the fat columns' uncompressed bytes plus 16 B per
+    row per thin column, read from row-group column-chunk metadata.
+    Deterministic across runs (resume requires the salt fan-out to be
+    stable)."""
     import pyarrow.parquet as pq
 
     from .table_io import abs_file_of
@@ -51,28 +48,14 @@ def footer_byte_stats(
     return out
 
 
-def partition_byte_stats(df: DataFrame, fat_columns: list[str]) -> dict[int, int]:
-    """part_id -> estimated in-memory bytes, via one aggregate
-    (fallback for non-parquet sources; footer_byte_stats is the
-    scan-free default)."""
-    size_expr = None
-    for c in df.columns:
-        if c in ("part_id", "salt"):
-            continue
-        term = (
-            F.coalesce(F.octet_length(F.col(c).cast("binary")), F.lit(0))
-            if c in fat_columns
-            else F.lit(16)
-        )
-        size_expr = term if size_expr is None else size_expr + term
-    rows = df.groupBy("part_id").agg(F.sum(size_expr).alias("bytes")).collect()
-    return {r["part_id"]: int(r["bytes"]) for r in rows}
+# largest salt fan-out of one partition
+MAX_SALT = 64
 
 
 def salt_factors(
-    byte_stats: dict[int, int], target_bytes: int = 128 << 20, max_salt: int = 64
+    byte_stats: dict[int, int], target_bytes: int = 128 << 20
 ) -> dict[int, int]:
     """Fan-out factor per partition (1 = unsalted)."""
     return {
-        p: max(1, min(max_salt, -(-b // target_bytes))) for p, b in byte_stats.items()
+        p: max(1, min(MAX_SALT, -(-b // target_bytes))) for p, b in byte_stats.items()
     }

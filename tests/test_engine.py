@@ -191,11 +191,40 @@ def test_incremental_snapshot_append(spark, tmp_path):
     assert rep["ok"], rep
 
 
+def test_rejected_sort_key_commits_nothing(spark, tmp_path):
+    """An encode refused for its sort key writes no manifest line (no
+    schema line, header or file registration) and sweeps nothing:
+    the table and its snapshot list are as before the call."""
+    import pyarrow as pa
+
+    from libgiddy_spark.meta import snapshot_rows
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+
+    def write(i: int) -> None:
+        pq.write_table(pa.table({"k": list(range(i * 10, i * 10 + 10))}),
+                       os.path.join(src, f"f{i}.parquet"))
+
+    write(0)
+    encode_snapshot(spark, src, out, key_col="k")
+    write(1)  # a new file: the refused call would register it
+    debris = os.path.join(out, "blocks", "_tmp_debris")
+    os.makedirs(debris)
+    manifest = Manifest(out).path
+    size, rows = os.path.getsize(manifest), snapshot_rows(out)
+    with pytest.raises(ValueError, match="sort key 'nope'"):
+        encode_snapshot(spark, src, out, key_col="k", sort_key="nope")
+    assert os.path.getsize(manifest) == size
+    assert snapshot_rows(out) == rows
+    assert os.path.isdir(debris)
+
+
 def test_streaming_encode_micro_batches(spark, tmp_path):
     """Structured-Streaming encode: files drain in micro-batches through
     the batch engine; a second availableNow pass after new files arrive
     encodes only the arrivals (manifest = exactly-once)."""
-    from libgiddy_spark.manifest import Manifest
+    from libgiddy_spark.manifest import done_parts
     from libgiddy_spark.streaming import encode_stream
 
     src = str(tmp_path / "stream_src")
@@ -206,7 +235,7 @@ def test_streaming_encode_micro_batches(spark, tmp_path):
     q = encode_stream(spark, src, out, key_col="doc_id",
                       checkpoint_dir=ckpt, max_files_per_trigger=2)
     q.awaitTermination(120)
-    assert len(Manifest(out).done_parts()) == 4
+    assert len(done_parts(Manifest(out).read())) == 4
     # late arrivals -> second drain picks up only the new files
     docs.filter(F.col("doc_id") >= 60).repartition(2).write.mode(
         "append"
@@ -214,7 +243,7 @@ def test_streaming_encode_micro_batches(spark, tmp_path):
     q2 = encode_stream(spark, src, out, key_col="doc_id",
                        checkpoint_dir=ckpt, max_files_per_trigger=2)
     q2.awaitTermination(120)
-    assert len(Manifest(out).done_parts()) == 6
+    assert len(done_parts(Manifest(out).read())) == 6
     dec = decode_blocks(spark, out, pq.read_schema(f"{SF}/documents.parquet"))
     rep = verify_roundtrip(spark.read.parquet(src), dec, "doc_id")
     assert rep["ok"], rep
@@ -239,13 +268,31 @@ def test_decode_projection_pushdown(spark, tmp_path):
     assert rep["ok"], rep
 
 
+def _scan_byte_stats(df, fat_columns: list[str]) -> dict[int, int]:
+    """part_id -> the salt-sizing estimate computed with a scan: octet
+    length of every fat-column value plus 16 B per thin column per
+    row."""
+    size_expr = None
+    for c in df.columns:
+        if c == "part_id":
+            continue
+        term = (
+            F.coalesce(F.octet_length(F.col(c).cast("binary")), F.lit(0))
+            if c in fat_columns
+            else F.lit(16)
+        )
+        size_expr = term if size_expr is None else size_expr + term
+    rows = df.groupBy("part_id").agg(F.sum(size_expr).alias("bytes")).collect()
+    return {r["part_id"]: int(r["bytes"]) for r in rows}
+
+
 def test_footer_stats_track_scan_stats(spark, tmp_path):
     """The footer-based salt-sizing estimate must track the Catalyst
     scan estimate (same formula; footers add page/level overhead to the
     fat-column bytes, so allow a modest tolerance)."""
     from functools import reduce
 
-    from libgiddy_spark.skew import footer_byte_stats, partition_byte_stats
+    from libgiddy_spark.skew import footer_byte_stats
     from libgiddy_spark.table_io import abs_file_of, list_parquet_files
     from libgiddy_spark.webtext import write_webtext
 
@@ -257,7 +304,7 @@ def test_footer_stats_track_scan_stats(spark, tmp_path):
     tagged = reduce(lambda a, b: a.unionByName(b), [
         spark.read.parquet(abs_file_of(src, rel))
         .withColumn("part_id", F.lit(pid)) for pid, rel in part_files])
-    scan = partition_byte_stats(tagged, ["html", "text"])
+    scan = _scan_byte_stats(tagged, ["html", "text"])
     assert set(foot) == set(scan)
     for pid in foot:
         assert 0.85 <= foot[pid] / scan[pid] <= 1.3, (pid, foot[pid], scan[pid])

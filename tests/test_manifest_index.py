@@ -16,7 +16,7 @@ from libgiddy_spark.manifest import Manifest
 def _build(tmp_path, n_chunks=100, parts_per_chunk=100):
     out = str(tmp_path / "enc")
     m = Manifest(out)
-    m.write_snapshot_header("s1", "src", [], n_chunks * parts_per_chunk)
+    m.write_snapshot_header("s1", "src", n_chunks * parts_per_chunk)
     for c in range(n_chunks):
         cdir = f"chunk-{c:04d}"
         d = os.path.join(out, "blocks", cdir)
@@ -92,7 +92,7 @@ def test_crash_tail_fallback_loses_nothing(tmp_path):
 def test_time_travel_snapshot_order_from_index(tmp_path):
     out, m = _build(tmp_path, n_chunks=2, parts_per_chunk=2)
     # second snapshot with its own chunk
-    m.write_snapshot_header("s2", "src", [], 1)
+    m.write_snapshot_header("s2", "src", 1)
     d = os.path.join(out, "blocks", "chunk-s2")
     os.makedirs(d)
     with open(os.path.join(d, "blk-0.parquet"), "wb") as f:
@@ -171,7 +171,7 @@ def test_crash_orphan_rewrite_and_delete_heal(tmp_path):
     with open(os.path.join(d, "blk-0.parquet"), "wb") as f:
         f.write(b"PAR1")
     # next normal commit heals
-    m.write_snapshot_header("s2", "src", [], 0)
+    m.write_snapshot_header("s2", "src", 0)
     files = E._committed_block_files(out)
     assert not any("chunk-0000" in f for f in files)
     assert os.path.join(d, "blk-0.parquet") in files

@@ -100,7 +100,7 @@ class History:
     def _new_snap(self) -> str:
         sid = f"s{len(self.snaps):02d}"
         self.snaps.append(sid)
-        self.m.write_snapshot_header(sid, "src", [], 0)
+        self.m.write_snapshot_header(sid, "src", 0)
         return sid
 
     def apply(self, op: tuple) -> None:
@@ -108,7 +108,7 @@ class History:
         if kind == "snap":
             sid = f"s{len(self.snaps):02d}"
             self.snaps.append(sid)
-            self.m.write_snapshot_header(sid, "src", [], 0, staged=op[1])
+            self.m.write_snapshot_header(sid, "src", 0, staged=op[1])
             if op[1]:
                 self.staged_open.append(sid)
         elif kind == "commit":

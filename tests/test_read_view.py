@@ -20,6 +20,7 @@ from libgiddy_spark.engine import (
     encode_snapshot,
     purge_deletes,
     read_changes,
+    upsert_rows,
     vacuum_blocks,
 )
 from libgiddy_spark.manifest import Manifest
@@ -30,6 +31,14 @@ SCHEMA = pa.schema([("k", pa.int64()), ("v", pa.string())])
 GONE = [5, 500, 1500]
 
 
+def _write_part(src: str, i: int) -> None:
+    """Source file ``part-{i}``: keys i*1000 .. i*1000+999."""
+    keys = list(range(i * 1000, (i + 1) * 1000))
+    pq.write_table(pa.table({"k": keys, "v": [f"row-{k}" for k in keys]},
+                            schema=SCHEMA),
+                   os.path.join(src, f"part-{i}.parquet"))
+
+
 def _two_snapshots(spark, tmp_path) -> tuple[str, str]:
     """Two appended snapshots of 1,000 rows each, then a delete of
     ``GONE``. Returns (out_dir, first snapshot id)."""
@@ -38,10 +47,7 @@ def _two_snapshots(spark, tmp_path) -> tuple[str, str]:
     out = str(tmp_path / "enc")
     first = None
     for i in range(2):
-        keys = list(range(i * 1000, (i + 1) * 1000))
-        pq.write_table(pa.table({"k": keys, "v": [f"row-{k}" for k in keys]},
-                                schema=SCHEMA),
-                       os.path.join(src, f"part-{i}.parquet"))
+        _write_part(src, i)
         sid = encode_snapshot(spark, src, out, key_col="k")["snapshot_id"]
         first = first or sid
     delete_rows(out, "k", GONE)
@@ -87,6 +93,33 @@ def test_one_manifest_read_per_plan(spark, tmp_path, monkeypatch):
     assert spy(lambda: file_rows(out, as_of="v1"))[0] == 1
     assert spy(lambda: read_table(spark, out)) == (1, 1)
     assert spy(lambda: vacuum_blocks(out, retain_last=3))[0] == 1
+
+
+def test_one_manifest_read_per_commit(spark, tmp_path, monkeypatch):
+    """An encode appending to a table and a delete each plan their
+    commit from one manifest read and one branch replay; an upsert
+    reads at most three times (its HEAD view, its encode, the staged
+    parts' promotion). Snapshot headers do not list the source, so a
+    header does not grow with the source's file count."""
+    out, _first = _two_snapshots(spark, tmp_path)
+    src = str(tmp_path / "src")
+    _write_part(src, 2)
+    spy = _Spy(monkeypatch)
+    assert spy(lambda: encode_snapshot(spark, src, out, key_col="k")) \
+        == (1, 1)
+    assert spy(lambda: delete_rows(out, "k", [7])) == (1, 1)
+    up = spark.createDataFrame([(8, "new"), (5000, "ins")],
+                               "k long, v string")
+    assert spy(lambda: upsert_rows(spark, out, "k", up))[0] <= 3
+    with open(Manifest(out).path) as f:
+        headers = [e for e in map(json.loads, f)
+                   if e.get("kind") == "snapshot"
+                   and e.get("source_path") == src]
+    assert [e["num_parts"] for e in headers] == [1, 2, 3]
+    assert not any("files" in e for e in headers)
+    sizes = {len(json.dumps({k: v for k, v in e.items() if k != "ts"}))
+             for e in headers}
+    assert len(sizes) == 1, sizes
 
 
 def test_index_without_part_rows_falls_back_to_full_read(

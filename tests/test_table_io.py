@@ -23,7 +23,7 @@ from libgiddy_spark.catalog import (
     IcebergSnapshotSource,
     RestCatalog,
 )
-from libgiddy_spark.manifest import Manifest
+from libgiddy_spark.manifest import Manifest, file_registry
 from libgiddy_spark.table_io import list_parquet_files, snapshot_id_of
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures",
@@ -154,7 +154,7 @@ def test_registry_part_ids_stable_across_snapshots(backend, tmp_path):
     _grow(backend, "b.parquet")
 
     def register(listing):
-        reg = man.file_registry()
+        reg = file_registry(man.read())
         nxt = max(reg.values(), default=-1) + 1
         new = []
         for rel, size in listing:
