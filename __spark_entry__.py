@@ -298,7 +298,7 @@ def q_text_key_lookup(spark, sf_dir):
         .select(F.lit("point").alias("mode"), "doc_id", "lang")
     )
     rng = (
-        decode_blocks(spark, out, schema, key_range_s=(probe, hi))
+        decode_blocks(spark, out, schema, key_range=(probe, hi))
         .filter(F.col("text").between(probe, hi))
         .select(F.lit("range").alias("mode"), "doc_id", "lang")
     )

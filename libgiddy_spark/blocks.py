@@ -103,96 +103,90 @@ def _normalize(arr: pa.ChunkedArray | pa.Array) -> pa.Array:
     return arr
 
 
+def _block_zones(table: pa.Table, zone_key: str | None,
+                 block_rows: int) -> list[tuple]:
+    """Per block of ``table``: ``(key_lo, key_hi, key_lo_s, key_hi_s,
+    key_bloom)`` of the zone key, computed once for every column's
+    block rows. Integer and timestamp keys are cast to int64 (a uint64
+    value past int64 max leaves the key unzoned: over-include is always
+    safe); string keys keep their values; any other type is unzoned.
+    The bounds are ``pc.min_max`` of the block's slice, so a nullable
+    key zones over its NON-NULL range (a range or point probe never
+    matches a NULL row) and an all-null block stays unzoned. String
+    bounds are truncated (MAX_ZONE_STR); the Bloom holds the block's
+    non-null key values."""
+    n = table.num_rows
+    unzoned = [(None,) * 5] * max(-(-n // block_rows), 1)
+    if zone_key not in table.column_names or not n:
+        return unzoned
+    zk = _normalize(table.column(zone_key))
+    is_str = pa.types.is_string(zk.type)
+    if pa.types.is_integer(zk.type) or pa.types.is_timestamp(zk.type):
+        try:
+            zk = zk.cast(pa.int64())
+        except (pa.ArrowInvalid, OverflowError):
+            return unzoned
+    elif not is_str:
+        return unzoned
+    zones = []
+    for start in range(0, n, block_rows):
+        z = zk.slice(start, block_rows)
+        mm = pc.min_max(z)
+        mn, mx = mm["min"].as_py(), mm["max"].as_py()
+        live = z.drop_null()
+        if mx is None:  # an all-null block stays unzoned
+            zones.append((None,) * 5)
+        elif is_str:
+            hi_s = _trunc_bound_hi(mx)
+            # keep bounds paired for the null-keep rule
+            lo_s = _trunc_bound_lo(mn) if hi_s is not None else None
+            zones.append((None, None, lo_s, hi_s, bloom_mod.build_bloom(
+                bloom_mod.hash_string_array(live), bloom_mod.DOMAIN_BYTES)))
+        else:
+            zones.append((mn, mx, None, None, bloom_mod.build_bloom(
+                bloom_mod.hash_int_array(live.to_numpy()),
+                bloom_mod.DOMAIN_INT)))
+    return zones
+
+
 def encode_group(
     table: pa.Table,
     part_id: int,
     salt: int,
     columns: list[str] | None = None,
     sort_key: str | None = None,
-    forced_codecs: dict[str, str] | None = None,
     block_rows: int = BLOCK_ROWS,
     selector_cache: dict | None = None,
     zone_key: str | None = None,
 ) -> pa.Table:
     """Encode one (part_id, salt) group of source rows into block rows.
 
-    ``selector_cache`` (keyed on column name; one part_id's) supplies
-    the codec choice AND the trained FSST symbol table per column, and
-    takes the choice made here for a column it lacks. The encode task
-    seeds it with the part's plan (plan_one_file), so every salt slice
-    of a part shares one table — a heavily-salted part would otherwise
-    re-train the same column's table once per slice (VERDICT r2
-    finding 3). FSST's escape path keeps any byte sequence encodable,
-    so a table trained on a sample is correct for all slices."""
+    ``selector_cache`` is the group's codec plan, ``{column: (codec,
+    stats, SymbolTable | None)}``: every column's codec AND trained
+    FSST symbol table come from it. The encode task passes the part's
+    plan (plan_one_file), so every salt slice of a part shares one
+    table — a heavily-salted part would otherwise re-train the same
+    column's table once per slice (VERDICT r2 finding 3). FSST's escape
+    path keeps any byte sequence encodable, so a table trained on a
+    sample is correct for all slices. Without a plan the group plans
+    from its own head rows (_plan_head)."""
+    cols = columns or [c for c in table.column_names if c not in ("part_id", "salt")]
+    plan = (selector_cache if selector_cache is not None
+            else _plan_head(table.slice(0, PLAN_SAMPLE_ROWS), cols))
     if sort_key is not None and sort_key in table.column_names:
         table = table.sort_by(sort_key)
-    cols = columns or [c for c in table.column_names if c not in ("part_id", "salt")]
     out: dict[str, list] = {name: [] for name in BLOCKS_SCHEMA.names}
     n = table.num_rows
-    # per-block zone map from the (sorted) sort key: lo/hi = the slice's
-    # first/last value; None when the key isn't an ordered integer type.
-    # String keys get string bounds (key_lo_s/key_hi_s) instead; both
-    # flavors also feed a per-block Bloom filter for point lookups.
-    zone_vals = None
-    zone_strs = None
-    zone_valid = None  # per-row validity; None == all rows valid
-    key_hashes = None
-    key_domain = bloom_mod.DOMAIN_INT
-    if zone_key is not None and zone_key in table.column_names and n:
-        zk = _normalize(table.column(zone_key))
-        if pa.types.is_timestamp(zk.type):
-            zk = zk.cast(pa.int64())
-        if pa.types.is_integer(zk.type):
-            # nullable keys still get zone maps over the NON-NULL range:
-            # range/point probes can never match a NULL row (SQL ternary
-            # logic), so pruning on non-null bounds loses nothing, while
-            # the old null_count==0 gate de-zoned a whole block for one
-            # null row. uint64 above int64.max degrades to unzoned
-            # (over-include is always safe) instead of failing encode.
-            try:
-                zi = zk.cast(pa.int64())
-            except (pa.ArrowInvalid, OverflowError):
-                zi = None
-            if zi is not None:
-                if zi.null_count:
-                    zone_valid = ~np.asarray(zi.is_null())
-                    zi = zi.fill_null(0)
-                zone_vals = zi.to_numpy(zero_copy_only=False)
-                key_hashes = bloom_mod.hash_int_array(zone_vals)
-        elif pa.types.is_string(zk.type):
-            zone_strs = zk  # keeps nulls: pc.min_max skips them
-            if zk.null_count:
-                zone_valid = ~np.asarray(zk.is_null())
-                zk = zk.fill_null("")
-            key_hashes = bloom_mod.hash_string_array(zk)
-            key_domain = bloom_mod.DOMAIN_BYTES
+    zones = _block_zones(table, zone_key, block_rows)
     for col_name in cols:
         arr = _normalize(table.column(col_name))
-        cached = selector_cache.get(col_name) if selector_cache is not None else None
-        if cached is not None:
-            codec, stats, fsst_table = cached
-        else:
-            forced = (forced_codecs or {}).get(col_name)
-            artifacts: dict = {}
-            if forced:
-                codec, stats = forced, {"forced": True}
-            else:
-                codec, stats, artifacts = select_codec(arr, col_name)
-            fsst_table: SymbolTable | None = artifacts.get("fsst_table")
-            if codec == "fsst" and fsst_table is None:
-                fsst_table = train_fsst(arr)
-            if selector_cache is not None:
-                # the manifest aggregates codec_params with first():
-                # mark that any slice's recorded stats were sampled on
-                # ONE salt slice, so n/min/max aren't read as whole-part
-                stats = {**stats, "stats_scope": "first-salt-slice-sample"}
-                selector_cache[col_name] = (codec, stats, fsst_table)
+        codec, stats, fsst_table = plan[col_name]
         params = json.dumps({"stats": stats}, separators=(",", ":"))
+        # an empty group still writes one (empty) block per column
         for seq, start in enumerate(range(0, max(n, 1), block_rows)):
-            chunk = arr.slice(start, block_rows)
-            if len(chunk) == 0 and n > 0:
-                break
-            payload, meta = encode_array(chunk, codec, fsst_table=fsst_table)
+            payload, meta = encode_array(arr.slice(start, block_rows), codec,
+                                         fsst_table=fsst_table)
+            key_lo, key_hi, key_lo_s, key_hi_s, bloom = zones[seq]
             out["part_id"].append(part_id)
             out["salt"].append(salt)
             out["block_seq"].append(seq)
@@ -204,51 +198,39 @@ def encode_group(
             out["enc_bytes"].append(meta["enc_bytes"])
             out["payload"].append(payload)
             out["sha256"].append(hashlib.sha256(payload).hexdigest())
-            end = min(start + block_rows, n)
-            vslice = zone_valid[start:end] if zone_valid is not None else None
-            if zone_vals is not None and len(chunk):
-                # true min/max of the slice (not first/last): correct even
-                # if a caller ever passes zone_key over unsorted data.
-                # Nulls are masked out: bounds cover the non-null range
-                # (an all-null slice stays unzoned -> always decoded).
-                zslice = zone_vals[start:end]
-                if vslice is not None:
-                    zslice = zslice[vslice]
-                if len(zslice):
-                    out["key_lo"].append(int(zslice.min()))
-                    out["key_hi"].append(int(zslice.max()))
-                else:
-                    out["key_lo"].append(None)
-                    out["key_hi"].append(None)
-            else:
-                out["key_lo"].append(None)
-                out["key_hi"].append(None)
-            lo_s = hi_s = None
-            if zone_strs is not None and len(chunk):
-                mm = pc.min_max(zone_strs.slice(start, end - start))
-                mn, mx = mm["min"].as_py(), mm["max"].as_py()
-                if mx is not None:  # None == all-null slice: stay unzoned
-                    lo_s = _trunc_bound_lo(mn)
-                    hi_s = _trunc_bound_hi(mx)
-                if hi_s is None:
-                    lo_s = None  # keep bounds paired for the null-keep rule
-            out["key_lo_s"].append(lo_s)
-            out["key_hi_s"].append(hi_s)
-            if key_hashes is not None and col_name == zone_key and len(chunk):
-                hs = key_hashes[start:end]
-                if vslice is not None:
-                    hs = hs[vslice]  # bloom holds only real key values
-                bloom = bloom_mod.build_bloom(hs, key_domain) if len(hs) else None
-            else:
-                bloom = None
-            out["key_bloom"].append(bloom)
-            if n == 0:
-                break
+            out["key_lo"].append(key_lo)
+            out["key_hi"].append(key_hi)
+            out["key_lo_s"].append(key_lo_s)
+            out["key_hi_s"].append(key_hi_s)
+            # the Bloom rides only on the zone key's own block rows
+            out["key_bloom"].append(bloom if col_name == zone_key else None)
     return pa.table(out, schema=BLOCKS_SCHEMA)
 
 
 # head rows of a file that its codec plan samples (plan_one_file)
 PLAN_SAMPLE_ROWS = 16384
+
+
+def _head_group(pf) -> int | None:
+    """Index of the file's first non-empty row group, whose first
+    PLAN_SAMPLE_ROWS rows the codec plan samples; None if it has none."""
+    md = pf.metadata
+    return next((g for g in range(md.num_row_groups)
+                 if md.row_group(g).num_rows), None)
+
+
+def _file_head(pf, columns: list[str]) -> pa.Table | None:
+    """The file's plan sample (see _head_group), read on its own:
+    streams just those rows instead of materializing the whole (8-128
+    MB) row group; None when every row group is empty."""
+    g = _head_group(pf)
+    if g is None:
+        return None
+    first = next(iter(pf.iter_batches(
+        batch_size=PLAN_SAMPLE_ROWS, row_groups=[g],
+        columns=columns, use_threads=False,
+    )))
+    return pa.Table.from_batches([first]).slice(0, PLAN_SAMPLE_ROWS)
 
 
 def plan_one_file(
@@ -258,38 +240,30 @@ def plan_one_file(
 ) -> list[tuple[str, str, str, bytes | None]]:
     """Codec plan for one data file: (column, codec, params_json,
     serialized_fsst_table|None) per column, selected (and FSST
-    trained) ONCE on a bounded sample, the first
-    min(PLAN_SAMPLE_ROWS, row-group-0 rows) rows of the file. It depends
+    trained) ONCE on a bounded sample, the first min(PLAN_SAMPLE_ROWS,
+    row-group rows) rows of its first non-empty row group. It depends
     only on the file, so every salt slice of a part gets the same
-    codecs and symbol tables whichever task encodes it. The encode
-    task plans each part it meets (make_direct_encoder); this reads
-    the head rows itself, for tasks whose slice does not hold them."""
+    codecs and symbol tables whichever task encodes it. A file without
+    rows has no plan (``[]``). The encode task plans each part it meets
+    (make_direct_encoder) from the same sample."""
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(path)
-    if pf.metadata.num_row_groups == 0:
+    head = _file_head(pq.ParquetFile(path), columns)
+    if head is None:
         return []
-    # stream just the first PLAN_SAMPLE_ROWS out of row group 0 instead
-    # of materializing the whole (8-128 MB) group. A zero-row first group
-    # yields no batches (None) -> no plan, same as an empty file.
-    first = next(iter(pf.iter_batches(
-        batch_size=PLAN_SAMPLE_ROWS, row_groups=[0],
-        columns=columns, use_threads=False,
-    )), None)
-    if first is None:
-        return []
-    return _plan_head(
-        pa.Table.from_batches([first]).slice(0, PLAN_SAMPLE_ROWS),
-        columns, forced_codecs)
+    return [(c, codec, json.dumps(stats), ft.serialize() if ft else None)
+            for c, (codec, stats, ft)
+            in _plan_head(head, columns, forced_codecs).items()]
 
 
 def _plan_head(
     tbl: pa.Table,
     columns: list[str],
-    forced_codecs: dict[str, str] | None,
-) -> list[tuple[str, str, str, bytes | None]]:
-    """plan_one_file's plan from a file's head rows already in hand."""
-    out: list[tuple[str, str, str, bytes | None]] = []
+    forced_codecs: dict[str, str] | None = None,
+) -> dict[str, tuple[str, dict, SymbolTable | None]]:
+    """The codec plan ``{column: (codec, stats, SymbolTable | None)}``
+    of a file's (or group's) head rows already in hand."""
+    out: dict[str, tuple[str, dict, SymbolTable | None]] = {}
     for col_name in columns:
         arr = _normalize(tbl.column(col_name))
         forced = (forced_codecs or {}).get(col_name)
@@ -300,11 +274,8 @@ def _plan_head(
         ft = artifacts.get("fsst_table")
         if codec == "fsst" and ft is None:
             ft = train_fsst(arr)
-        out.append((
-            col_name, codec,
-            json.dumps({**stats, "stats_scope": "part-head-sample"}),
-            ft.serialize() if ft else None,
-        ))
+        out[col_name] = (codec, {**stats, "stats_scope": "part-head-sample"},
+                         ft)
     return out
 
 
@@ -325,18 +296,19 @@ def make_direct_encoder(
     do not reach raises ValueError naming the task.
 
     The task plans each part it encodes once (memoized for the task)
-    and seeds every slice's selector cache with that plan, so no slice
-    re-selects or re-trains. The plan samples the file's first
-    min(PLAN_SAMPLE_ROWS, row-group-0 rows) rows. When the slice the
-    task has just read starts at row 0 of row group 0, those rows come
-    from that slice; otherwise :func:`plan_one_file` reopens the file
-    to read them. Tasks that split a part's slices plan it each, in
-    parallel, to the same result."""
+    and encodes every slice of it with that plan, so no slice
+    re-selects or re-trains. The plan samples plan_one_file's rows,
+    the first min(PLAN_SAMPLE_ROWS, row-group rows) rows of the file's
+    first non-empty row group. When the slice the task has just read
+    starts at the file's first row, those rows come from that slice;
+    otherwise the task reads them from the file again (_file_head).
+    Tasks that split a part's slices plan it each, in parallel, to the
+    same result; a part without rows plans from its empty slice."""
 
     def encode_tasks(batches):
         import pyarrow.parquet as pq
 
-        plans: dict[int, dict | None] = {}  # part_id -> selector cache
+        plans: dict[int, dict] = {}  # part_id -> codec plan
         for batch in batches:
             for row in batch.to_pylist():
                 rgs = list(range(row["rg_lo"], row["rg_hi"]))
@@ -389,30 +361,26 @@ def make_direct_encoder(
                     )
                 pid = int(row["part_id"])
                 if pid not in plans:
-                    # a slice read from row 0 of row group 0 holds the
-                    # rows plan_one_file would read: plan from them
-                    need = min(PLAN_SAMPLE_ROWS,
-                               pf.metadata.row_group(0).num_rows)
-                    if rgs[0] == 0 and head is not None and (
-                            0 < need <= head.num_rows):
-                        plan = _plan_head(head.slice(0, need), columns,
-                                          forced_codecs)
+                    # a slice read from the file's first row holds the
+                    # rows plan_one_file samples: plan from them (row
+                    # groups before the head group are empty)
+                    g = _head_group(pf)
+                    if g is None:  # no rows: plan the empty slice
+                        sample = tbl
                     else:
-                        plan = plan_one_file(row["path"], columns,
-                                             forced_codecs=forced_codecs)
-                    plans[pid] = {
-                        col: (codec, json.loads(params),
-                              SymbolTable.deserialize(ft)
-                              if ft is not None else None)
-                        for col, codec, params, ft in plan
-                    } or None
+                        need = min(PLAN_SAMPLE_ROWS,
+                                   pf.metadata.row_group(g).num_rows)
+                        sample = (head.slice(0, need) if rgs[0] <= g
+                                  and head is not None
+                                  and need <= head.num_rows
+                                  else _file_head(pf, columns))
+                    plans[pid] = _plan_head(sample, columns, forced_codecs)
                 out = encode_group(
                     tbl,
                     pid,
                     int(row["salt"]),
                     columns=columns,
                     sort_key=sort_key,  # Arrow sort inside the task
-                    forced_codecs=forced_codecs,
                     block_rows=block_rows,
                     selector_cache=plans[pid],
                     zone_key=sort_key,

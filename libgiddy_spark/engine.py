@@ -47,6 +47,7 @@ from .manifest import (
     file_registry,
     list_refs,
     refs_of,
+    zone_columns,
 )
 from .skew import footer_byte_stats, salt_factors
 from .table_io import abs_file_of, list_parquet_files, snapshot_id_of
@@ -144,9 +145,12 @@ def encode_files(
     the same call is a resume, an incremental snapshot append, or a
     streaming micro-batch step, depending only on what's in ``files``.
 
-    Returns a summary dict. ``min_slices`` guarantees a minimum salt
-    fan-out per chunk so even a single giant file parallelizes across
-    the cluster (skew.py sizes the fan-out).
+    Returns a summary dict; under ``commit_status="staged"`` its
+    ``staged`` list holds the part lines written, for
+    :meth:`~.manifest.Manifest.commit_staged` to promote.
+    ``min_slices`` guarantees a minimum salt fan-out per chunk so even
+    a single giant file parallelizes across the cluster (skew.py sizes
+    the fan-out).
 
     One out_dir = one (table, column subset): done-ness is per FILE,
     so resuming the same out_dir with a different ``columns`` selection
@@ -171,7 +175,8 @@ def encode_files(
     snapshot_id = snapshot_id_of(source_path)
     if not files:
         return {"snapshot_id": snapshot_id, "num_parts": 0,
-                "skipped_done": 0, "encoded_parts": 0, "secs": 0.0}
+                "skipped_done": 0, "encoded_parts": 0, "secs": 0.0,
+                "staged": []}
     num_parts = len(files)
     import pyarrow.parquet as pq
 
@@ -267,6 +272,7 @@ def encode_files(
                 shutil.rmtree(full, ignore_errors=True)
     min_slices = min_slices or spark.sparkContext.defaultParallelism
     encoded_parts = 0
+    staged: list[dict] = []
 
     for lo in range(0, len(pending), chunk_parts):
         chunk = pending[lo : lo + chunk_parts]
@@ -436,6 +442,8 @@ def encode_files(
         ]
         manifest.mark_done(snapshot_id, entries + empty,
                            status=commit_status)
+        if commit_status == "staged":
+            staged += entries + empty
         encoded_parts += len(chunk)
     return {
         "snapshot_id": snapshot_id,
@@ -443,6 +451,7 @@ def encode_files(
         "skipped_done": len(done & set(rel_of)),
         "encoded_parts": encoded_parts,
         "secs": round(time.time() - t_start, 3),
+        "staged": staged,
     }
 
 
@@ -684,12 +693,12 @@ def vacuum_blocks(
             # DIRECTORY) — expire them the same way
             shutil.rmtree(full)
             removed.append(rel)
-    # a full rewrite removes its staging copy after its txn; one that
-    # crashed first leaves it behind
-    purge_src = os.path.join(out_dir, "_purge_src")
-    if os.path.isdir(purge_src):
-        shutil.rmtree(purge_src)
-        removed.append("_purge_src")
+    # a full rewrite and an upsert remove their staging copy after
+    # their txn; one that crashed first leaves it behind
+    for name in ("_purge_src", "_upsert_src"):
+        if os.path.isdir(os.path.join(out_dir, name)):
+            shutil.rmtree(os.path.join(out_dir, name))
+            removed.append(name)
     # Orphaned STAGED entries (a purge that crashed between its staged
     # encode and its txn, then was retried under a new snapshot id):
     # sweep any leftover staged chunk dirs and mark the snapshot ids
@@ -809,14 +818,12 @@ def remove_orphan_files(out_dir: str, grace_s: float = 3600.0) -> dict:
 def _committed_block_files(
     out_dir: str,
     part_ids: list[int] | None = None,
-    key_range: tuple[int, int] | None = None,
-    key_range_s: tuple[str, str] | None = None,
+    key_range: tuple | None = None,
     as_of: str | None = None,
 ) -> list[str]:
     """Block parquet files of the chunks committed at ``as_of`` (None =
     HEAD): :meth:`ReadView.files` over a fresh manifest read."""
-    return ReadView.read(out_dir, as_of).files(part_ids, key_range,
-                                               key_range_s)
+    return ReadView.read(out_dir, as_of).files(part_ids, key_range)
 
 
 def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
@@ -972,9 +979,9 @@ def upsert_rows(
              "ts": time.time()}
     if cow:
         _staged_full_rewrite(spark, view, schema, key, delete=entry,
-                             promote=(summary["snapshot_id"],))
+                             promote=tuple(summary["staged"]))
     else:
-        m.commit_staged([summary["snapshot_id"]], [entry])
+        m.commit_staged(summary["staged"], [entry])
     shutil.rmtree(src, ignore_errors=True)
     return {"snapshot_id": summary["snapshot_id"],
             "upserted_keys": int(n_keys),
@@ -990,7 +997,7 @@ def _staged_full_rewrite(
     target_part_bytes: int = 128 << 20,
     chunk_parts: int = 64,
     delete: dict | None = None,
-    promote: tuple[str, ...] = (),
+    promote: tuple[dict, ...] = (),
 ) -> tuple[dict, list[str]]:
     """Shared full-table rewrite: decode the LIVE rows (tombstones
     applied by decode), optionally range-cluster them on ``key_col``
@@ -1002,7 +1009,7 @@ def _staged_full_rewrite(
     ``delete`` = a delete entry to commit COPY-ON-WRITE: a left anti-join
     on ``key_col`` drops its keys (unscoped: every part of ``view``
     predates it), and the txn commits and clears it. ``promote`` =
-    further staged snapshots (an upsert's rows) the txn promotes.
+    further staged part lines (an upsert's rows) the txn promotes.
 
     STAGED encode: part lines commit with status=staged — invisible
     to listing/resume, dirs expired by vacuum if we crash here — then
@@ -1069,7 +1076,7 @@ def _staged_full_rewrite(
             "files": sorted(cleared),
             "ts": time.time(),
         })
-    Manifest(out_dir).commit_staged([*promote, summary["snapshot_id"]], txn)
+    Manifest(out_dir).commit_staged([*promote, *summary["staged"]], txn)
     shutil.rmtree(src, ignore_errors=True)
     return summary, old_dirs
 
@@ -1560,8 +1567,7 @@ def decode_blocks(
     out_dir: str,
     schema: pa.Schema,
     part_ids: list[int] | None = None,
-    key_range: tuple[int, int] | None = None,
-    key_range_s: tuple[str, str] | None = None,
+    key_range: tuple | None = None,
     key_point=None,
     as_of: str | None = None,
 ) -> DataFrame:
@@ -1594,22 +1600,22 @@ def decode_blocks(
     metadata columns, then reads the payload column of each parquet
     row group holding a kept block, once; other row groups read none.
 
-    ``key_range=(lo, hi)`` (inclusive, sort-key values as int64) prunes
-    via the per-block ZONE MAPS (key_lo/key_hi columns): overlapping
-    blocks only. Blocks WITHOUT zone maps (non-integral sort key, or a
-    group whose key column contains nulls) always decode — pruning only
-    ever over-includes, never silently drops rows. Block-granular —
-    callers apply the exact row predicate on the decoded frame. The
-    range prunes at TWO levels: manifest part zone maps (driver-side,
-    before any listing) and per-block zone maps (inside each task).
-
-    ``key_range_s=(lo, hi)`` is the same pruning for STRING sort keys
-    via the ``key_lo_s/key_hi_s`` bounds (truncation-unsafe bounds were
-    stored as null = never pruned). ``key_point`` = a single probe
-    value (int or str): sets the matching range to ``(v, v)`` AND
-    additionally tests each candidate block's Bloom filter (bloom.py)
-    in that same metadata read, so in-range blocks that provably don't
-    contain the probe skip their payload read and decode entirely.
+    ``key_range=(lo, hi)`` (inclusive sort-key bounds) prunes via the
+    ZONE MAPS: overlapping blocks only. String bounds compare with the
+    ``key_lo_s/key_hi_s`` zone columns (a truncation-unsafe bound was
+    stored as null = never pruned); any other bounds are cast with
+    ``int`` and compare with ``key_lo/key_hi`` (integer keys, and
+    timestamp keys as µs) — :func:`~.manifest.zone_columns`. Bounds of
+    two kinds raise a ``ValueError``. Blocks WITHOUT zone maps (a key
+    type without them, an all-null block) always decode — pruning only
+    ever over-includes, never silently drops rows. The range prunes at
+    TWO levels: manifest part zone maps (driver-side, before any
+    listing) and per-block zone maps (inside each task). When the two
+    bounds are equal, each in-range block's Bloom filter (bloom.py) is
+    tested in the same metadata read too, so a block that provably
+    lacks the value skips its payload read and decode entirely.
+    ``key_point=v`` is the spelling of ``key_range=(v, v)``; passing
+    both raises a ``ValueError``.
     ``as_of`` = snapshot id for time travel (see
     :func:`_committed_block_files`). All pruning is block-granular and
     over-inclusive only — callers apply the exact row predicate on the
@@ -1629,7 +1635,7 @@ def decode_blocks(
     purge clearing the deletes of the dirs just listed) can never mix
     two manifest states into one read."""
     return _decode_view(spark, ReadView.read(out_dir, as_of), schema,
-                        part_ids, key_range, key_range_s, key_point)
+                        part_ids, key_range, key_point)
 
 
 def _decode_view(
@@ -1637,25 +1643,26 @@ def _decode_view(
     view: ReadView,
     schema: pa.Schema,
     part_ids: list[int] | None = None,
-    key_range: tuple[int, int] | None = None,
-    key_range_s: tuple[str, str] | None = None,
+    key_range: tuple | None = None,
     key_point=None,
 ) -> DataFrame:
     """:func:`decode_blocks` of the manifest state ``view`` holds."""
-    probe_hash = probe_domain = None
-    if key_point is not None:
-        from . import bloom as bloom_mod
+    from . import bloom as bloom_mod
 
-        if isinstance(key_point, str):
-            if key_range_s is None:
-                key_range_s = (key_point, key_point)
-        else:
-            if key_range is None:
-                key_range = (int(key_point), int(key_point))
-        probe_hash = bloom_mod.hash_value(key_point)
-        probe_domain = bloom_mod.domain_of(key_point)
-    krange = (int(key_range[0]), int(key_range[1])) if key_range is not None else None
-    files = view.files(part_ids, krange, key_range_s)
+    if key_point is not None:
+        if key_range is not None:
+            raise ValueError("pass key_point=v or key_range=(lo, hi), "
+                             "not both")
+        key_range = (key_point, key_point)
+    # zone-map and Bloom pruning drop blocks by block_seq, so only an
+    # unpruned decode can require each column's blocks to be gapless
+    pruned = key_range is not None
+    lo_col, hi_col, lo, hi = (zone_columns(key_range) if pruned
+                              else (None, None, None, None))
+    # a point range also tests each in-range block's Bloom filter
+    probe = ((bloom_mod.hash_value(lo), bloom_mod.domain_of(lo))
+             if pruned and lo == hi else None)
+    files = view.files(part_ids, key_range)
     out_fields = ", ".join(
         f"`{f.name}` {_spark_type_of(f.type)}" for f in schema
     )
@@ -1677,11 +1684,6 @@ def _decode_view(
         return spark.createDataFrame([], ddl)
     part_seq = view.part_seq if tombs else {}
     wanted = sorted(int(p) for p in part_ids) if part_ids is not None else None
-    krange_s = (str(key_range_s[0]), str(key_range_s[1])) if key_range_s is not None else None
-    # zone-map and Bloom pruning (a key_point sets a range) drop blocks
-    # by block_seq, so only an unpruned decode can require each
-    # column's blocks to be gapless
-    pruned = krange is not None or krange_s is not None
 
     def decode_stream(batches):
         import numpy as np
@@ -1729,23 +1731,20 @@ def _decode_view(
             lost = [c for c in cols + ["payload"] if c not in file_cols]
             if lost:
                 raise ValueError(f"block file {path!r}: no column {lost}")
-            zones = [(lo, hi, rng) for lo, hi, rng in (
-                ("key_lo", "key_hi", krange),
-                ("key_lo_s", "key_hi_s", krange_s),
-            ) if rng is not None and lo in file_cols]
-            bloom = probe_hash is not None and "key_bloom" in file_cols
+            zoned = pruned and lo_col in file_cols
+            bloom = probe is not None and "key_bloom" in file_cols
             meta = pf.read(
-                columns=cols + [c for lo, hi, _ in zones for c in (lo, hi)]
+                columns=cols + ([lo_col, hi_col] if zoned else [])
                 + (["key_bloom"] if bloom else []), use_threads=False)
             pids = meta.column("part_id").to_numpy()
             passing = (np.isin(pids, wanted) if wanted is not None
                        else np.ones(len(pids), bool))
-            for lo, hi, (a, b) in zones:
-                # overlap with [a, b]; a null bound (unzoned block) is
+            if zoned:
+                # overlap with [lo, hi]; a null bound (unzoned block) is
                 # always kept: pruning may over-include, never lose rows
                 passing &= np.asarray(pc.fill_null(pc.and_(
-                    pc.greater_equal(meta.column(hi), a),
-                    pc.less_equal(meta.column(lo), b)), True))
+                    pc.greater_equal(meta.column(hi_col), lo),
+                    pc.less_equal(meta.column(lo_col), hi)), True))
             if bloom:
                 # a Bloom (on the sort-key column's row, maybe in another
                 # row group) that proves the probe absent drops its whole
@@ -1758,8 +1757,7 @@ def _decode_view(
                     trips[i] for i, kb in
                     enumerate(meta.column("key_bloom").to_pylist())
                     if kb is not None and passing[i]
-                    and not bloom_mod.bloom_might_contain(
-                        kb, probe_hash, probe_domain)}
+                    and not bloom_mod.bloom_might_contain(kb, *probe)}
                 passing &= np.array([t not in absent for t in trips], bool)
             if not passing.any():
                 return

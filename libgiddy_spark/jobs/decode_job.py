@@ -35,12 +35,16 @@ def main() -> None:
     ap.add_argument("--verify", action="store_true")
     ap.add_argument("--key-range", default=None, metavar="LO,HI",
                     help="zone-map pruned decode: only blocks whose "
-                         "sort-key range overlaps [LO,HI] (integral keys)")
+                         "sort-key range overlaps [LO,HI]; the bounds take "
+                         "the key column's type (integer, timestamp as "
+                         "µs, or string); exact range applied after "
+                         "decode")
     ap.add_argument("--key-point", default=None, metavar="VALUE",
                     help="point-lookup pruned decode: zone maps + "
                          "per-block Bloom filters skip blocks that "
-                         "provably lack VALUE (int if it parses, else "
-                         "string); exact equality applied after decode")
+                         "provably lack VALUE (typed like --key-range); "
+                         "the same as --key-range VALUE,VALUE; exact "
+                         "equality applied after decode")
     ap.add_argument("--as-of", default=None, metavar="SNAPSHOT_ID",
                     help="time travel: decode only parts committed up "
                          "to this manifest snapshot id")
@@ -165,22 +169,19 @@ def main() -> None:
             return int(raw), F.lit(int(raw))
         return raw, F.lit(raw)
 
-    krange = krange_s = krange_lits = None
+    # ONE pruning range: the point's (v, v) when --key-point is given
+    # (it lies inside any --key-range it is combined with or matches
+    # nothing), else the typed --key-range bounds
+    krange = krange_lits = kpoint_lit = None
     if args.key_range:
-        lo_raw, hi_raw = args.key_range.split(",")
-        lo_p, lo_lit = _typed(lo_raw)
-        hi_p, hi_lit = _typed(hi_raw)
-        krange_lits = (lo_lit, hi_lit)
-        if is_ts or is_int:
-            krange = (lo_p, hi_p)
-        else:  # string sort key -> string zone maps (key_lo_s/key_hi_s)
-            krange_s = (lo_p, hi_p)
-    kpoint = kpoint_lit = None
+        (lo_p, lo_lit), (hi_p, hi_lit) = map(
+            _typed, args.key_range.split(","))
+        krange, krange_lits = (lo_p, hi_p), (lo_lit, hi_lit)
     if args.key_point is not None:
         kpoint, kpoint_lit = _typed(args.key_point)
+        krange = (kpoint, kpoint)
     dec = _decode_view(spark, view or ReadView.read(args.encoded, args.as_of),
-                       schema, key_range=krange, key_range_s=krange_s,
-                       key_point=kpoint)
+                       schema, key_range=krange)
 
     def _exact(df):
         # pruning is block-granular: apply the exact predicate so --out

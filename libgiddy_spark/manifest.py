@@ -343,17 +343,13 @@ class Manifest:
             [{"kind": "txn", "entries": idx_entries}],
         )
 
-    def commit_staged(self, snapshot_ids: list[str],
+    def commit_staged(self, staged: list[dict],
                       extra: list[dict]) -> None:
-        """Second half of a staged commit: promote the staged part lines
-        of every snapshot in ``snapshot_ids`` to done and commit them
-        with ``extra`` entries in one :meth:`commit_txn`."""
-        promoted = [
-            {**e, "status": "done"} for e in self.read()
-            if e.get("kind") == "part" and e.get("status") == "staged"
-            and e.get("snapshot_id") in snapshot_ids
-        ]
-        self.commit_txn(promoted + extra)
+        """Second half of a staged commit: promote the ``staged`` part
+        lines (the ``staged`` list :func:`engine.encode_files` returns)
+        to done and commit them with ``extra`` entries in one
+        :meth:`commit_txn`."""
+        self.commit_txn([{**e, "status": "done"} for e in staged] + extra)
 
     def append_rewrite(
         self, snapshot_id: str, new_chunk: str | None, replaces: list[str]
@@ -703,35 +699,32 @@ class ReadView:
     def files(
         self,
         part_ids: list[int] | None = None,
-        key_range: tuple[int, int] | None = None,
-        key_range_s: tuple[str, str] | None = None,
+        key_range: tuple | None = None,
     ) -> list[str]:
         """Block parquet files of the visible chunk dirs. A part-id
-        filter drops whole chunk dirs before listing; a key_range (int
-        sort keys) or key_range_s (string sort keys) drops parts whose
-        MANIFEST-level zone map doesn't overlap — the Iceberg-manifest
-        data-skipping layer above the per-block zone maps (parts without
-        a recorded zone map are always kept). Off the chunk index, key
-        pruning is chunk-granular (a key gap inside a kept chunk
-        over-includes), but the per-block zone maps inside each file
-        still prune those reads — over-inclusive only, never loss.
-        Hidden paths (``_``/``.`` prefixes: Spark ``_temporary`` task
-        dirs, ``_PARTS`` markers) are excluded as defense-in-depth even
-        inside committed dirs."""
+        filter drops whole chunk dirs before listing; a ``key_range``
+        ``(lo, hi)`` drops parts whose MANIFEST-level zone map (the pair
+        :func:`zone_columns` picks for the bounds) doesn't overlap — the
+        Iceberg-manifest data-skipping layer above the per-block zone
+        maps (parts without a recorded zone map are always kept). Off
+        the chunk index, key pruning is chunk-granular (a key gap inside
+        a kept chunk over-includes), but the per-block zone maps inside
+        each file still prune those reads — over-inclusive only, never
+        loss. Hidden paths (``_``/``.`` prefixes: Spark ``_temporary``
+        task dirs, ``_PARTS`` markers) are excluded as defense-in-depth
+        even inside committed dirs."""
         blocks_root = os.path.join(self.out_dir, "blocks")
         wanted = {int(p) for p in part_ids} if part_ids is not None else None
+
+        lo_col, hi_col, lo, hi = (zone_columns(key_range) if key_range
+                                  is not None else (None, None, None, None))
 
         def _kept(pid: int, e: dict) -> bool:
             if wanted is not None and pid not in wanted:
                 return False
-            if key_range is not None and e.get("key_lo") is not None:
-                if e["key_hi"] < key_range[0] or e["key_lo"] > key_range[1]:
-                    return False  # wholly out of range
-            if key_range_s is not None and e.get("key_lo_s") is not None:
-                if (e["key_hi_s"] < key_range_s[0]
-                        or e["key_lo_s"] > key_range_s[1]):
-                    return False  # wholly out of string range
-            return True
+            # a part without a recorded zone map is always kept
+            return (e.get(lo_col) is None
+                    or not (e[hi_col] < lo or e[lo_col] > hi))
 
         files: list[str] = []
         for d, parts in sorted(self.parts.items()):
@@ -772,6 +765,22 @@ class ReadView:
                     if f.endswith(".parquet") and not f.startswith(("_", ".")):
                         files.append(os.path.join(root, f))
         return sorted(files)
+
+
+def zone_columns(key_range: tuple) -> tuple[str, str, object, object]:
+    """``(lo_col, hi_col, lo, hi)``: the zone-bound pair a key range
+    ``(lo, hi)`` compares with, and its bounds cast for it. String
+    bounds compare with ``key_lo_s/key_hi_s``; any other bounds are
+    cast with ``int`` and compare with ``key_lo/key_hi`` (integer and
+    timestamp keys, timestamps as µs). Bounds of two kinds raise a
+    ``ValueError``."""
+    lo, hi = key_range
+    if isinstance(lo, str) != isinstance(hi, str):
+        raise ValueError(f"key_range bounds {key_range!r} mix a string "
+                         "with a non-string")
+    if isinstance(lo, str):
+        return "key_lo_s", "key_hi_s", lo, hi
+    return "key_lo", "key_hi", int(lo), int(hi)
 
 
 def part_rows(line: dict, part_id: int) -> int:

@@ -203,8 +203,7 @@ def read_table(
     out_dir: str,
     columns: list[str] | None = None,
     as_of: str | None = None,
-    key_range: tuple[int, int] | None = None,
-    key_range_s: tuple[str, str] | None = None,
+    key_range: tuple | None = None,
     key_point=None,
     part_ids: list[int] | None = None,
 ) -> DataFrame:
@@ -226,5 +225,5 @@ def read_table(
                              f"{list(schema.names)}")
         schema = pa.schema([schema.field(c) for c in columns])
     out = _decode_view(spark, view, schema, part_ids, key_range,
-                       key_range_s, key_point)
+                       key_point)
     return out.drop("part_id")

@@ -1,6 +1,6 @@
 """Bloom-filter point-lookup skipping, string zone maps, and snapshot
 time travel (blocks.py key_lo_s/key_hi_s/key_bloom, bloom.py,
-engine.decode_blocks key_point/key_range_s/as_of)."""
+engine.decode_blocks key_point/key_range/as_of)."""
 
 from __future__ import annotations
 
@@ -127,13 +127,13 @@ def test_point_lookup_int_key(spark, tmp_path):
 
 
 def test_string_range_pruned_decode(spark, tmp_path):
-    """key_range_s decodes only overlapping blocks; exact BETWEEN over
-    it equals the source filter."""
+    """A string key_range decodes only overlapping blocks; exact BETWEEN
+    over it equals the source filter."""
     src, out, schema = _encode_docs(spark, tmp_path, "sr")
     src_df = spark.read.parquet(src)
     texts = sorted(r[0] for r in src_df.select("text").collect())
     lo, hi = texts[0], texts[24]
-    dec = decode_blocks(spark, out, schema, key_range_s=(lo, hi))
+    dec = decode_blocks(spark, out, schema, key_range=(lo, hi))
     assert 0 < dec.count() < len(texts)
     got = (dec.filter((F.col("text") >= lo) & (F.col("text") <= hi))
            .select("doc_id"))
@@ -154,7 +154,7 @@ def test_manifest_string_bounds_prune_whole_parts(spark, tmp_path):
     parts = [e for e in Manifest(out).read() if e.get("kind") == "part"]
     assert any(e.get("key_lo_s") for e in parts)
     assert decode_blocks(spark, out, schema,
-                         key_range_s=("\0", "\0\0")).count() == 0
+                         key_range=("\0", "\0\0")).count() == 0
 
 
 def test_unkeyed_encode_never_prunes(spark, tmp_path):
@@ -167,7 +167,7 @@ def test_unkeyed_encode_never_prunes(spark, tmp_path):
     schema = pq.read_schema(src)
     total = spark.read.parquet(src).count()
     assert decode_blocks(spark, out, schema,
-                         key_range_s=("zzz", "zzzz")).count() == total
+                         key_range=("zzz", "zzzz")).count() == total
     # int-keyed blocks DO carry an int bloom keyed on doc_id, so a
     # string probe must not consult it (different domain): full decode
     assert decode_blocks(spark, out, schema,
@@ -199,7 +199,7 @@ def test_point_lookup_multi_part_block_files(spark, tmp_path):
 
 def test_pruned_decode_over_includes_on_pre_bloom_files(spark, tmp_path):
     """Block files written before the bloom/string-zone columns existed
-    must OVER-INCLUDE on key_point / key_range_s decodes, not crash."""
+    must OVER-INCLUDE on key_point / string key_range decodes, not crash."""
     src = f"{SF}/documents.parquet"
     out = str(tmp_path / "old")
     encode_snapshot(spark, src, out, key_col="doc_id", sort_key="text")
@@ -221,7 +221,7 @@ def test_pruned_decode_over_includes_on_pre_bloom_files(spark, tmp_path):
     dec = decode_blocks(spark, out, schema, key_point=probe)
     assert dec.count() == total  # no pruning structures -> full decode
     assert dec.filter(F.col("text") == probe).count() >= 1
-    rng = decode_blocks(spark, out, schema, key_range_s=(probe, probe))
+    rng = decode_blocks(spark, out, schema, key_range=(probe, probe))
     assert rng.count() == total
 
 
@@ -341,7 +341,7 @@ def test_nullable_string_key_still_zones(spark, tmp_path):
     schema = tbl.schema
     assert decode_blocks(spark, out, schema).count() == 1500
     assert (
-        decode_blocks(spark, out, schema, key_range_s=("zzz", "zzzz")).count() == 0
+        decode_blocks(spark, out, schema, key_range=("zzz", "zzzz")).count() == 0
     )
     pt = decode_blocks(spark, out, schema, key_point="url-000777")
     assert 0 < pt.count() < 1500
@@ -363,3 +363,38 @@ def test_uint64_key_above_int64_degrades_to_unzoned(spark, tmp_path):
     out = encode_group(big, part_id=0, salt=0, zone_key="k", sort_key="k")
     assert out.num_rows > 0  # encode itself survived
     assert all(v is None for v in out.column("key_lo").to_pylist())
+
+
+@pytest.mark.parametrize("kind", ["int", "timestamp", "string"])
+def test_point_range_is_key_point(spark, tmp_path, kind):
+    """key_range=(v, v) and key_point=v decode the same blocks (zone
+    maps AND Bloom filters) for int, timestamp and string keys; bounds
+    of two kinds, or both arguments at once, raise a ValueError."""
+    n = 3000
+    keys = {"int": pa.array(range(0, 2 * n, 2), pa.int64()),
+            "timestamp": pa.array(range(0, 2 * n, 2), pa.int64()).cast(
+                pa.timestamp("us")),
+            "string": pa.array([f"url-{i:06d}" for i in range(0, 2 * n, 2)])}
+    tbl = pa.table({"k": keys[kind],
+                    "v": pa.array([f"row-{i}" for i in range(n)])})
+    src, out = str(tmp_path / "src"), str(tmp_path / "enc")
+    os.makedirs(src)
+    pq.write_table(tbl, os.path.join(src, "part-0.parquet"))
+    encode_snapshot(spark, src, out, key_col="k", block_rows=100)
+    hit, gap = (("url-001000", "url-001001") if kind == "string"
+                else (1000, 1001))
+
+    def rows(**kw):
+        df = decode_blocks(spark, out, tbl.schema, **kw)
+        return sorted(r["v"] for r in df.collect())
+
+    got = rows(key_point=hit)
+    assert len(got) == 100 and "row-500" in got
+    assert rows(key_range=(hit, hit)) == got
+    # in the zone of a block, absent from its Bloom: nothing decodes
+    assert rows(key_point=gap) == rows(key_range=(gap, gap)) == []
+    with pytest.raises(ValueError, match="not both"):
+        decode_blocks(spark, out, tbl.schema, key_point=hit,
+                      key_range=(hit, hit))
+    with pytest.raises(ValueError, match="mix"):
+        decode_blocks(spark, out, tbl.schema, key_range=(1000, "url-1"))

@@ -292,7 +292,7 @@ def test_part_slices_share_file_plan_across_tasks(spark, tmp_path, n,
     different Spark tasks: every slice still encodes with the codecs
     and FSST symbol table of plan_one_file(path), whether its task
     planned from the head rows of its own slice (a slice starting at
-    row 0 of row group 0) or read them with plan_one_file."""
+    row 0 of row group 0) or read them from the file again."""
     import pyarrow as pa
 
     from libgiddy_spark import blocks as B
@@ -317,8 +317,8 @@ def test_part_slices_share_file_plan_across_tasks(spark, tmp_path, n,
     # in one process: a slice from row 0 of row group 0 plans from the
     # rows it read; any other slice reads the file head again
     calls = []
-    real = B.plan_one_file
-    monkeypatch.setattr(B, "plan_one_file",
+    real = B._file_head
+    monkeypatch.setattr(B, "_file_head",
                         lambda *a, **k: calls.append(a) or real(*a, **k))
     single = pq.ParquetFile(src).metadata.num_row_groups == 1
     for rg_lo, row_lo, n_calls in ((0, 0, 0), (1, n // 2, 1)):
@@ -367,3 +367,33 @@ def test_encode_is_one_job_and_decode_one_wave(spark, tmp_path):
     rows, tasks = _in_group(spark, "lgs-decode-one-wave", dec.collect)
     assert len(rows) == 3000
     assert len(tasks) == 1 and tasks[0] <= dp, tasks
+
+
+def test_empty_first_row_group_plans_part_once(spark, tmp_path):
+    """A file whose first row group is empty is planned from its first
+    non-empty row group: every salt slice encodes with that one plan
+    (plan_one_file's codecs, params and FSST table)."""
+    from libgiddy_spark import blocks as B
+
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    src = os.path.join(src_dir, "part-0.parquet")
+    _text_file(src, 6000, 3000)
+    t = pq.read_table(src)
+    with pq.ParquetWriter(src + ".tmp", t.schema) as w:
+        for lo, n in ((0, 0), (0, 3000), (3000, 3000)):
+            w.write_table(t.slice(lo, n))
+    os.replace(src + ".tmp", src)
+    md = pq.ParquetFile(src).metadata
+    assert [md.row_group(g).num_rows for g in range(3)] == [0, 3000, 3000]
+    plan = {c: (codec, params, ft)
+            for c, codec, params, ft in B.plan_one_file(src, ["k", "text"])}
+    assert plan["text"][0] == "fsst"
+    out = str(tmp_path / "enc")
+    encode_snapshot(spark, src_dir, out, key_col="k",
+                    target_salt_bytes=32 * 1024)
+    salts = set()
+    for f in _committed_block_files(out):
+        salts |= _assert_blocks_match_plan(
+            pq.read_table(f, filters=[("block_seq", "=", 0)]), plan)
+    assert len(salts) >= 2

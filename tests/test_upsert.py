@@ -122,3 +122,18 @@ def test_upsert_then_purge_and_vacuum_clears_dir_tombstone(
     # the dir-shaped upsert tombstone is expired like file tombstones
     assert any(r.startswith("deletes/") for r in vac["removed"])
     assert decode_blocks(spark, out, schema).count() == n
+
+
+def test_vacuum_sweeps_crashed_staging_copies(tmp_path):
+    """An upsert or a full rewrite that crashed before its txn leaves
+    its staging copy of the source rows (``_upsert_src``,
+    ``_purge_src``); vacuum removes both."""
+    out = tmp_path / "t"
+    (out / "blocks").mkdir(parents=True)
+    for name in ("_upsert_src", "_purge_src"):
+        (out / name).mkdir()
+        pq.write_table(pa.table({"k": [1, 2]}), str(out / name / "p.parquet"))
+    assert sorted(vacuum_blocks(str(out))["removed"]) == [
+        "_purge_src", "_upsert_src"]
+    assert not (out / "_upsert_src").exists()
+    assert not (out / "_purge_src").exists()
