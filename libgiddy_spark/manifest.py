@@ -722,7 +722,7 @@ class ReadView:
         def _kept(pid: int, e: dict) -> bool:
             if wanted is not None and pid not in wanted:
                 return False
-            # a part without a recorded zone map is always kept
+            # no key range (lo_col None), or no recorded zone map: kept
             return (e.get(lo_col) is None
                     or not (e[hi_col] < lo or e[lo_col] > hi))
 
