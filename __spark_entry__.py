@@ -225,7 +225,7 @@ def q_roundtrip_pruned_range(spark, sf_dir):
     # manifest-level part pruning and block-level row-group pruning
     # both still fire) in a single encode pass; identical rows,
     # identical oracle.
-    rewrite_sorted(spark, out, schema, key_col="l_orderkey",
+    rewrite_sorted(spark, out, key_col="l_orderkey",
                    target_part_bytes=1 << 20)
     dec = decode_blocks(spark, out, schema, key_range=(1000, 3000))
     return dec.filter(

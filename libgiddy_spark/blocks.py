@@ -60,12 +60,34 @@ BLOCKS_SCHEMA = pa.schema(
     ]
 )
 
-BLOCKS_DDL = (
-    "part_id int, salt int, block_seq int, column string, codec string, "
-    "codec_params string, n_values long, raw_bytes long, enc_bytes long, "
-    "payload binary, sha256 string, key_lo long, key_hi long, "
-    "key_lo_s string, key_hi_s string, key_bloom binary"
-)
+_SPARK_TYPES = {
+    pa.int8(): "byte",
+    pa.int16(): "short",
+    pa.int32(): "int",
+    pa.int64(): "long",
+    pa.float32(): "float",
+    pa.float64(): "double",
+    pa.string(): "string",
+    pa.large_string(): "string",
+    pa.binary(): "binary",
+    pa.large_binary(): "binary",
+}
+
+
+def ddl_of(schema: pa.Schema) -> str:
+    """Spark DDL string of an Arrow schema (timestamps of any unit or
+    zone map to ``timestamp``); any other type raises a ``TypeError``."""
+    def spark_type(t: pa.DataType) -> str:
+        if pa.types.is_timestamp(t):
+            return "timestamp"
+        if t not in _SPARK_TYPES:
+            raise TypeError(f"unsupported type {t}")
+        return _SPARK_TYPES[t]
+
+    return ", ".join(f"`{f.name}` {spark_type(f.type)}" for f in schema)
+
+
+BLOCKS_DDL = ddl_of(BLOCKS_SCHEMA)
 
 # string zone bounds longer than this are truncated (Iceberg's truncate
 # transform): the LOWER bound keeps the plain prefix (prefix <= value,
@@ -393,13 +415,6 @@ def make_direct_encoder(
 # one row per (written file, part, column): the encode task's own
 # aggregate of its blocks' metadata (merge_part_meta), returned through
 # the encode job so the driver never re-reads a written footer
-TASK_META_DDL = (
-    "file string, part_id int, column string, codec string, "
-    "codec_params string, n_values long, raw_bytes long, enc_bytes long, "
-    "n_blocks long, key_lo long, key_hi long, key_lo_s string, "
-    "key_hi_s string, n_unzoned long, n_unzoned_s long"
-)
-
 _TASK_META_SCHEMA = pa.schema(
     [
         ("file", pa.string()),
@@ -419,6 +434,7 @@ _TASK_META_SCHEMA = pa.schema(
         ("n_unzoned_s", pa.int64()),
     ]
 )
+TASK_META_DDL = ddl_of(_TASK_META_SCHEMA)
 
 
 # the block-row fields a block's metadata row carries (never the payload)

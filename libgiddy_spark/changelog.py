@@ -32,7 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from libgiddy_spark.engine import read_changes
-from libgiddy_spark.manifest import Manifest, branch_replay
+from libgiddy_spark.manifest import ReadView
 
 _OFFSET = "offset.json"
 
@@ -67,17 +67,16 @@ class ChangelogConsumer:
         table columns + ``_change_type`` + ``_commit_seq``; the token
         goes to :meth:`commit` after the window is materialized."""
         st = self._state()
-        # HEAD = last VISIBLE main-branch commit, never a raw header:
+        # HEAD = the current main-branch commit, never a raw header:
         # a WAP-staged header would fail read_changes validation, and
         # a snapshot published AFTER later commits (cherry-pick) joins
         # the branch at its publish position — raw header order would
         # park the consumer at an older commit and silently never
         # deliver the published rows
-        vis = branch_replay(Manifest(self.out_dir).read_indexed()).visible()
-        if not vis:
+        head = ReadView.read(self.out_dir).branch.current
+        if head is None:
             raise ValueError(
                 f"no published snapshots in {self.out_dir}")
-        head = vis[-1]
         if head == st["consumed_snapshot"]:
             return None
         df = read_changes(spark, self.out_dir, self.schema,

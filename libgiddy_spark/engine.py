@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from .blocks import (
     BLOCKS_DDL,
     TASK_META_DDL,
+    ddl_of,
     decode_group,
     make_direct_encoder,
     make_task_writer,
@@ -42,11 +43,9 @@ from .blocks import (
 from .manifest import (
     Manifest,
     ReadView,
-    branch_replay as _branch_replay,
     done_parts,
     file_registry,
     list_refs,
-    refs_of,
     zone_columns,
 )
 from .skew import footer_byte_stats, salt_factors
@@ -200,7 +199,6 @@ def encode_files(
     entries = manifest.read()
     view = ReadView(out_dir, entries)
     st = view.branch
-    known = st.headers()
     if wap_staged:
         # a staged ATTEMPT gets its own snapshot id (content id + -wapK):
         # the same source may be re-staged (or plainly re-encoded) after
@@ -208,7 +206,7 @@ def encode_files(
         # the content id would attach the retry's parts to the aborted
         # header, hiding them at HEAD forever. An open (staged,
         # unpublished, unaborted) attempt is resumed, Iceberg-style.
-        closed = known.difference(st.staged_parent)
+        closed = st.header.keys() - st.staged_parent.keys()
         k = 0
         while f"{snapshot_id}-wap{k}" in closed:
             k += 1
@@ -229,7 +227,7 @@ def encode_files(
     # evolution. Skipped columns (projection encode) stay unregistered.
     ensure_schema_baseline(view, schema if columns is None else pa.schema(
         [schema.field(c) for c in schema.names if c in set(columns)]))
-    if snapshot_id not in known:  # a resume keeps its header
+    if snapshot_id not in st.header:  # a resume keeps its header
         manifest.write_snapshot_header(
             snapshot_id, source_path, num_parts, staged=wap_staged)
     # part_id = STABLE file identity from the manifest's file registry
@@ -493,13 +491,11 @@ def compact_blocks(
     layout as the encode sink."""
     blocks_root = os.path.join(out_dir, "blocks")
     m = Manifest(out_dir)
-    entries = m.read()
-    view = ReadView(out_dir, entries)
-    # HEAD = last VISIBLE main-branch snapshot: the rewrite entry must
+    view = ReadView.read(out_dir)
+    # HEAD = the current main-branch snapshot: the rewrite entry must
     # commit under a snapshot id HEAD readers accept — never an
     # unpublished WAP-staged header, nor a rolled-back commit
-    hvis = view.branch.visible()
-    head_snapshot = hvis[-1] if hvis else None
+    head_snapshot = view.branch.current
     if head_snapshot is None:
         return {"bins": 0, "files_before": 0, "files_after": 0}
     live = view.files()
@@ -527,7 +523,7 @@ def compact_blocks(
     if not bins:
         return {"bins": 0, "files_before": len(live),
                 "files_after": len(live)}
-    seq = sum(1 for e in entries if e.get("kind") == "rewrite")
+    seq = sum(1 for e in view.entries if e.get("kind") == "rewrite")
     plan_rows: list[tuple[str, list[str]]] = []
     bin_meta: list[tuple[str, str, list[str]]] = []  # (new_dir, tmp, dirs)
     for i, bin_dirs in enumerate(bins):
@@ -640,8 +636,6 @@ def vacuum_blocks(
     # window (or drop the ref) to expire them on the next vacuum.
     bstate = head.branch
     chain = bstate.chain
-    ts_of = {e["snapshot_id"]: e.get("ts", 0.0)
-             for e in entries if e.get("kind") == "snapshot"}
     # retention window counts MAIN-BRANCH snapshots (publish order);
     # unpublished WAP-staged snapshots are pinned unconditionally —
     # they are awaiting audit, not aging out. Aborted ones are swept.
@@ -653,7 +647,7 @@ def vacuum_blocks(
         retained.add(bstate.current)
     if older_than is not None:
         retained |= {sid for sid in chain
-                     if ts_of.get(sid, 0.0) >= older_than}
+                     if bstate.header[sid].get("ts", 0.0) >= older_than}
     retained |= set(head.refs.values())
     retained |= set(bstate.staged_parent)  # open WAP snapshots
     pinned_dirs: set[str] = set()
@@ -851,8 +845,8 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     import pyarrow.parquet as pq
 
     m = Manifest(out_dir)
-    view = ReadView(out_dir, m.read())  # HEAD before the delete
-    if not view.branch.headers():
+    view = ReadView.read(out_dir)  # HEAD before the delete
+    if not view.branch.header:
         raise ValueError(f"no snapshots in {out_dir}: nothing to delete from")
     cow = len(keys) > SMALL_DELETE_MAX_KEYS
     spark = SparkSession.getActiveSession() if cow else None
@@ -866,7 +860,7 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     tmp = target + ".tmp"
     pq.write_table(pa.table({key_col: pa.array(keys)}), tmp)
     if cow:
-        schema, key = _cow_key(view, tmp, key_col)
+        key = _cow_key(view, tmp, key_col)
     os.rename(tmp, target)
     # a delete is its OWN snapshot (Iceberg: every delete commit makes a
     # new snapshot): time travel to any earlier snapshot must not see it
@@ -875,10 +869,10 @@ def delete_rows(out_dir: str, key_col: str, keys: list) -> dict:
     snap_id = f"snap-{os.path.basename(rel).removesuffix('.parquet')}-{digest}"
     # the same keys retried after a crash before the delete entry
     # already have their header
-    if snap_id not in view.branch.headers():
+    if snap_id not in view.branch.header:
         m.write_snapshot_header(snap_id, out_dir, 0)
     if cow:
-        _staged_full_rewrite(spark, view, schema, key, delete={
+        _staged_full_rewrite(spark, view, key, delete={
             "kind": "delete", "snapshot_id": snap_id, "file": rel,
             "key_col": key_col, "n": len(keys), "ts": time.time()})
     else:
@@ -912,17 +906,16 @@ def _next_delete_file(out_dir: str, entries: list[dict]) -> str:
     return rel
 
 
-def _cow_key(view: ReadView, dfile: str,
-             key_col: str) -> tuple[pa.Schema, str]:
-    """(HEAD table schema, logical key column) for a copy-on-write
-    delete of ``dfile``'s ``key_col`` values, after the key-type check
-    a decode would make (:func:`_tombstone_type`)."""
+def _cow_key(view: ReadView, dfile: str, key_col: str) -> str:
+    """Logical key column of a copy-on-write delete of ``dfile``'s
+    ``key_col`` values, after the key-type check a decode would make
+    (:func:`_tombstone_type`)."""
     from .schema_evo import table_schema
 
     schema = table_schema(view)[0]
     key = view.column_map(schema.names).get(key_col, key_col)
     _tombstone_type(dfile, key_col, schema.field(key))
-    return schema, key
+    return key
 
 
 def upsert_rows(
@@ -947,8 +940,8 @@ def upsert_rows(
     rows minus those keys. ``df`` must carry the full table schema
     (column subsets would null-fill on decode)."""
     m = Manifest(out_dir)
-    view = ReadView(out_dir, m.read())  # HEAD before the upsert
-    if not view.branch.headers():
+    view = ReadView.read(out_dir)  # HEAD before the upsert
+    if not view.branch.header:
         raise ValueError(f"no snapshots in {out_dir}: encode first")
     if key_col not in df.columns:
         raise ValueError(f"upsert df lacks key column {key_col!r}")
@@ -968,7 +961,7 @@ def upsert_rows(
     n_keys = spark.read.parquet(tmp).count()
     cow = n_keys > SMALL_DELETE_MAX_KEYS
     if cow:
-        schema, key = _cow_key(view, tmp, key_col)
+        key = _cow_key(view, tmp, key_col)
     summary = encode_files(
         spark, src, list_parquet_files(src), out_dir, key_col,
         commit_status="staged",
@@ -978,7 +971,7 @@ def upsert_rows(
              "file": rel, "key_col": key_col, "n": int(n_keys),
              "ts": time.time()}
     if cow:
-        _staged_full_rewrite(spark, view, schema, key, delete=entry,
+        _staged_full_rewrite(spark, view, key, delete=entry,
                              promote=tuple(summary["staged"]))
     else:
         m.commit_staged(summary["staged"], [entry])
@@ -991,7 +984,6 @@ def upsert_rows(
 def _staged_full_rewrite(
     spark: SparkSession,
     view: ReadView,
-    schema: pa.Schema,
     key_col: str,
     cluster: bool = False,
     target_part_bytes: int = 128 << 20,
@@ -1020,17 +1012,13 @@ def _staged_full_rewrite(
     Returns (encode summary, retired dirs)."""
     from .schema_evo import table_schema
 
-    # the rewrite replaces every column: one left out would come back null
-    missing = [c for c in table_schema(view)[0].names if c not in schema.names]
-    if missing:
-        raise ValueError(f"a full rewrite needs the whole table schema "
-                         f"(schema_evo.table_schema); {missing} missing")
     out_dir = view.out_dir
     blocks_root = os.path.join(out_dir, "blocks")
     live = view.files()
     old_dirs = sorted(
         {os.path.relpath(f, blocks_root).split(os.sep)[0] for f in live})
-    dec = _decode_view(spark, view, schema).drop("part_id")
+    # the rewrite replaces every column: it decodes the whole table schema
+    dec = _decode_view(spark, view, table_schema(view)[0]).drop("part_id")
     cleared = [os.path.relpath(f, out_dir) for f, _k, _n, _s in view.deletes]
     txn = []
     if delete is not None:
@@ -1081,22 +1069,20 @@ def _staged_full_rewrite(
     return summary, old_dirs
 
 
-def purge_deletes(
-    spark: SparkSession, out_dir: str, schema: pa.Schema, key_col: str,
-) -> dict:
+def purge_deletes(spark: SparkSession, out_dir: str, key_col: str) -> dict:
     """MATERIALIZE equality deletes (the GDPR-purge / Iceberg
     rewrite-with-delete-compaction step): decode the live table minus
     tombstones, re-encode it as a fresh snapshot, RETIRE every previous
     chunk dir via a rewrite entry, and mark the delete files cleared.
     Afterwards decode tasks mask nothing; time travel before the purge
     still sees the original rows + applies the original deletes (until
-    :func:`vacuum_blocks` removes the retired dirs). ``schema`` must be
-    the FULL table schema — a purge rewrites every column, so one
-    missing from it raises a ``ValueError``."""
+    :func:`vacuum_blocks` removes the retired dirs). The rewrite covers
+    every column of the table's recorded schema
+    (:func:`schema_evo.table_schema`)."""
     view = ReadView.read(out_dir)
     if not view.deletes:
         return {"purged_files": 0, "rewritten": False}
-    summary, old_dirs = _staged_full_rewrite(spark, view, schema, key_col)
+    summary, old_dirs = _staged_full_rewrite(spark, view, key_col)
     return {
         "purged_files": len(view.deletes),
         "rewritten": True,
@@ -1107,7 +1093,7 @@ def purge_deletes(
 
 
 def rewrite_sorted(
-    spark: SparkSession, out_dir: str, schema: pa.Schema, key_col: str,
+    spark: SparkSession, out_dir: str, key_col: str,
     target_part_bytes: int = 128 << 20,
     chunk_parts: int = 64,
 ) -> dict:
@@ -1122,11 +1108,11 @@ def rewrite_sorted(
     Arrow sort); any pending equality deletes are materialized on the way
     (the rewrite decodes live rows, so keeping the tombstone files
     would double-apply history). Old dirs stay for time travel until
-    :func:`vacuum_blocks`. ``schema`` must be the full table schema,
-    as for :func:`purge_deletes`."""
+    :func:`vacuum_blocks`. Like :func:`purge_deletes`, it rewrites
+    every column of the table's recorded schema."""
     view = ReadView.read(out_dir)
     summary, old_dirs = _staged_full_rewrite(
-        spark, view, schema, key_col, cluster=True,
+        spark, view, key_col, cluster=True,
         target_part_bytes=target_part_bytes, chunk_parts=chunk_parts)
     return {
         "sorted_by": key_col,
@@ -1143,22 +1129,19 @@ def create_ref(out_dir: str, name: str,
     HEAD snapshot). Refs resolve anywhere ``as_of`` is accepted
     (decode, changelog, CLI) and PIN their snapshot's files against
     vacuum — the Iceberg branch-retention behaviour."""
-    entries = Manifest(out_dir).read_indexed()
-    snaps = [e["snapshot_id"] for e in entries
-             if e.get("kind") == "snapshot"]
-    if not snaps:
+    st = ReadView.read(out_dir).branch
+    if not st.header:
         raise ValueError(f"no snapshots in {out_dir}")
     if snapshot_id is None:
-        # HEAD = the last VISIBLE main-branch snapshot: an unpublished
-        # WAP header or a rolled-back commit must never become the
+        # HEAD = the current main-branch snapshot: an unpublished WAP
+        # header or a rolled-back commit must never become the
         # implicit ref target
-        vis = _branch_replay(entries).visible()
-        if not vis:
+        if st.current is None:
             raise ValueError(f"no published snapshots in {out_dir}")
-        snapshot_id = vis[-1]
-    elif snapshot_id not in snaps:
+        snapshot_id = st.current
+    elif snapshot_id not in st.header:
         raise ValueError(f"unknown snapshot {snapshot_id!r}")
-    if name in snaps:
+    if name in st.header:
         raise ValueError(
             f"ref name {name!r} collides with a snapshot id")
     Manifest(out_dir).append_ref(name, snapshot_id)
@@ -1174,18 +1157,15 @@ def drop_ref(out_dir: str, name: str) -> None:
 def _wap_state(out_dir: str, snapshot_or_ref: str) -> tuple[str, str]:
     """Resolve to a snapshot id and classify its WAP state:
     'unstaged' | 'staged' | 'published' | 'aborted'."""
-    entries = Manifest(out_dir).read_indexed()
-    sid = refs_of(entries).get(snapshot_or_ref, snapshot_or_ref)
-    st = _branch_replay(entries)
-    if sid in st.staged_parent:
-        return sid, "staged"
-    if sid in st.aborted:
-        return sid, "aborted"
-    if sid not in st.parent:
+    view = ReadView.read(out_dir)
+    sid = view.refs.get(snapshot_or_ref, snapshot_or_ref)
+    st = view.branch
+    state = st.state(sid)
+    if state in ("staged", "aborted"):
+        return sid, state
+    if state is None:
         raise ValueError(f"unknown snapshot {snapshot_or_ref!r}")
-    staged = any(e.get("kind") == "snapshot" and e.get("snapshot_id") == sid
-                 and e.get("staged") for e in entries)
-    return sid, "published" if staged else "unstaged"
+    return sid, "published" if st.header[sid].get("staged") else "unstaged"
 
 
 def publish_snapshot(out_dir: str, snapshot_or_ref: str) -> dict:
@@ -1240,19 +1220,20 @@ def rollback(out_dir: str, snapshot_or_ref: str) -> dict:
     checkpoint was itself undone gets a loud off-lineage error (the
     changelog cannot express un-inserts) and must reset to a snapshot
     at or before the rollback target."""
-    entries = Manifest(out_dir).read_indexed()
-    sid = refs_of(entries).get(snapshot_or_ref, snapshot_or_ref)
-    st = _branch_replay(entries)
-    if sid in st.staged_parent:
+    view = ReadView.read(out_dir)
+    sid = view.refs.get(snapshot_or_ref, snapshot_or_ref)
+    st = view.branch
+    state = st.state(sid)
+    if state == "staged":
         raise ValueError(
             f"snapshot {sid!r} is WAP-staged and unpublished — publish "
             "or abort it; rollback targets main-branch commits only")
-    if sid in st.aborted:
+    if state == "aborted":
         raise ValueError(f"snapshot {sid!r} was aborted; its data "
                          "never joined the table")
-    if sid not in st.parent:
+    if state is None:
         raise ValueError(f"unknown snapshot {snapshot_or_ref!r}")
-    if st.current == sid:
+    if state == "current":
         return {"current_snapshot": sid, "changed": False}
     before = st.visible()
     after = st.vis_at(sid)
@@ -1302,7 +1283,7 @@ def read_changes(
     also accept NAMED REFS (:func:`create_ref`)."""
     # every window snapshot and delete parent decodes from this ONE
     # manifest read, so a commit landing mid-plan cannot mix states
-    view = ReadView(out_dir, Manifest(out_dir).read())
+    view = ReadView.read(out_dir)
     entries = view.entries
     since_snapshot = view.refs.get(since_snapshot, since_snapshot)
     to_snapshot = view.refs.get(to_snapshot, to_snapshot)
@@ -1312,10 +1293,9 @@ def read_changes(
     if not snaps:
         raise ValueError(f"no snapshots in {out_dir}")
     if to_snapshot is None:
-        vis = bstate.visible()
-        if not vis:
+        if bstate.current is None:
             raise ValueError(f"no visible snapshots in {out_dir}")
-        to_snapshot = vis[-1]
+        to_snapshot = bstate.current
     if to_snapshot not in snaps:
         raise ValueError(f"unknown to_snapshot {to_snapshot!r}")
     # the window walks to_snapshot's LINEAGE (its parent path), not the
@@ -1345,18 +1325,8 @@ def read_changes(
         if e.get("kind") == "rewrite" and e.get("new_chunk") is None
     }
     tcols = [f.name for f in schema]
-    ddl = ", ".join(
-        [f"`{f.name}` {_spark_type_of(f.type)}" for f in schema]
-        + ["`_change_type` string", "`_commit_seq` int"]
-    )
-    parts_by_snap: dict[str, set[int]] = {}
-    for e in entries:
-        if (e.get("kind") == "part" and e.get("status") == "done"
-                and e.get("snapshot_id") in seq_of
-                and e.get("snapshot_id") not in purge_snaps
-                and not e.get("empty")):
-            parts_by_snap.setdefault(
-                e["snapshot_id"], set()).add(int(e["part_id"]))
+    ddl = ddl_of(schema) + ", `_change_type` string, `_commit_seq` int"
+    parts_by_snap = view.inserted(seq_of.keys() - purge_snaps)
     pieces: list[DataFrame] = []
     for s in window:
         pids = parts_by_snap.get(s)
@@ -1663,10 +1633,7 @@ def _decode_view(
     probe = ((bloom_mod.hash_value(lo), bloom_mod.domain_of(lo))
              if pruned and lo == hi else None)
     files = view.files(part_ids, key_range)
-    out_fields = ", ".join(
-        f"`{f.name}` {_spark_type_of(f.type)}" for f in schema
-    )
-    ddl = out_fields + ", part_id int"
+    ddl = ddl_of(schema) + ", part_id int"
     column_map = view.column_map(schema.names)
     wanted_cols = set(column_map)
     # EQUALITY DELETES (merge-on-read) are applied inside the decode
@@ -1816,29 +1783,6 @@ def _decode_view(
     # are many small block files
     return _one_wave(spark, [(p,) for p in files], [1] * len(files),
                      pa.schema([("path", pa.string())]), decode_stream, ddl)
-
-
-_SPARK_TYPES = {
-    pa.int8(): "byte",
-    pa.int16(): "short",
-    pa.int32(): "int",
-    pa.int64(): "long",
-    pa.float32(): "float",
-    pa.float64(): "double",
-    pa.string(): "string",
-    pa.large_string(): "string",
-    pa.binary(): "binary",
-    pa.large_binary(): "binary",
-    pa.timestamp("us"): "timestamp",
-}
-
-
-def _spark_type_of(t: pa.DataType) -> str:
-    if t in _SPARK_TYPES:
-        return _SPARK_TYPES[t]
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    raise TypeError(f"unsupported type {t}")
 
 
 def roundtrip_df(

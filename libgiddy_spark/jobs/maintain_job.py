@@ -177,14 +177,11 @@ def main() -> None:
     if args.purge:
         from libgiddy_spark.engine import purge_deletes
         from libgiddy_spark.jobs.encode_job import build_spark
-        from libgiddy_spark.schema_evo import table_schema
 
         if not args.key_col:
             ap.error("--purge requires --key-col")
         spark = build_spark("libgiddy-spark-maintain")
-        out["purge"] = purge_deletes(
-            spark, args.encoded, table_schema(args.encoded)[0],
-            key_col=args.key_col)
+        out["purge"] = purge_deletes(spark, args.encoded, args.key_col)
     if args.upsert_source:
         from libgiddy_spark.engine import upsert_rows
         from libgiddy_spark.jobs.encode_job import build_spark
@@ -198,14 +195,12 @@ def main() -> None:
     if args.rewrite_sorted:
         from libgiddy_spark.engine import rewrite_sorted
         from libgiddy_spark.jobs.encode_job import build_spark
-        from libgiddy_spark.schema_evo import table_schema
 
         if not args.key_col:
             ap.error("--rewrite-sorted requires --key-col")
         spark = build_spark("libgiddy-spark-maintain")
-        out["rewrite_sorted"] = rewrite_sorted(
-            spark, args.encoded, table_schema(args.encoded)[0],
-            key_col=args.key_col)
+        out["rewrite_sorted"] = rewrite_sorted(spark, args.encoded,
+                                               args.key_col)
     if args.compact:
         from libgiddy_spark.engine import compact_blocks
         from libgiddy_spark.jobs.encode_job import build_spark

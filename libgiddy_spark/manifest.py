@@ -12,23 +12,26 @@ without re-encoding (left-anti semantics); a chunk that died mid-write
 leaves only an uncommitted temp dir, which resume removes.
 
 Read side: :meth:`Manifest.read_indexed` returns the index entries plus
-the manifest tail the index does not cover; :func:`branch_replay` turns
-snapshot/publish/rollback entries into branch state. A read plan reads
-the manifest ONCE, into a :class:`ReadView`: the resolved ``as_of``,
-the chain and accepted set, the live ``{chunk_dir: {part_id: line}}``
+the manifest tail the index does not cover; :func:`branch_replay` is
+the one reader of snapshot/publish/rollback entries (chain, headers,
+made-current history, each id's state). A read plan reads the
+manifest ONCE, into a :class:`ReadView`: the resolved ``as_of``, the
+chain and accepted set, the live ``{chunk_dir: {part_id: line}}``
 view (chunk lines, tail part lines and rewrites replayed), the visible
 equality deletes, each visible part's sequence number and the column
 renames. Decode's listing, delete scoping and column names, vacuum's
-pins, purge and the files metadata table all take one view, so no plan
-mixes two manifest states.
+pins, purge, the changelog's inserted parts and the files metadata
+table all take one view, so no plan mixes two manifest states.
 
 Write side: a commit plans from ONE manifest read too. An encode reads
 the full manifest once and derives its WAP attempt id, rollback guard,
 header existence, schema baseline (a :class:`ReadView` over the same
-entries), :func:`file_registry` and :func:`done_parts` from it; a
-delete plans from its HEAD view. A snapshot header holds its id,
-source path, part count and the staged flag, never the source
-listing: the ``kind: "file"`` registry lines record each file once.
+entries), :func:`file_registry` and :func:`done_parts` from it; an
+operation that needs only table state (delete, upsert, compaction,
+refs, WAP, rollback, changelog) plans from one :meth:`ReadView.read`.
+A snapshot header holds its id, source path, part count and the
+staged flag, never the source listing: the ``kind: "file"`` registry
+lines record each file once.
 """
 
 from __future__ import annotations
@@ -386,15 +389,20 @@ class Manifest:
 
 
 class BranchState:
-    """Replayed manifest branch state (see :func:`branch_replay`).
+    """Replayed manifest branch state (see :func:`branch_replay`): the
+    one reading of what the snapshot, publish and rollback lines mean.
 
     Visibility is stored as PARENT POINTERS: when a snapshot joins the
     branch, its parent is whatever snapshot was current then, so the
     visible set at any snapshot is its parent path — O(1) per commit
-    regardless of how many rollbacks the manifest holds."""
+    regardless of how many rollbacks the manifest holds. ``header``
+    maps each snapshot id to its first header line, in manifest order;
+    ``history`` holds one ``(entry ts, snapshot id)`` pair for each
+    time a snapshot became current (a commit join, a publish or a
+    rollback); :meth:`state` classifies a snapshot id."""
 
     __slots__ = ("chain", "parent", "current", "staged_parent",
-                 "aborted", "has_rollback")
+                 "aborted", "has_rollback", "header", "history", "_vis")
 
     def __init__(self) -> None:
         self.chain: list[str] = []        # full commit order (seq nums)
@@ -403,6 +411,9 @@ class BranchState:
         self.staged_parent: dict[str, str | None] = {}  # unpublished WAP
         self.aborted: set[str] = set()
         self.has_rollback = False
+        self.header: dict[str, dict] = {}
+        self.history: list[tuple[float, str]] = []
+        self._vis: set[str] | None = None  # visible(), on first state()
 
     def vis_at(self, sid: str | None) -> list[str]:
         """Visible snapshot list right after ``sid`` joined (commit
@@ -418,9 +429,22 @@ class BranchState:
         """Commits a HEAD read sees, in commit order."""
         return self.vis_at(self.current)
 
-    def headers(self) -> set[str]:
-        """Every snapshot id with a header: joined, staged or aborted."""
-        return {*self.parent, *self.staged_parent, *self.aborted}
+    def state(self, sid: str | None) -> str | None:
+        """``"staged"`` (unpublished WAP), ``"aborted"``, ``"current"``
+        (HEAD), ``"ancestor"`` (visible at HEAD), ``"orphaned"``
+        (joined, but a rollback hid it), or None for an id with no
+        header."""
+        if sid in self.staged_parent:
+            return "staged"
+        if sid in self.aborted:
+            return "aborted"
+        if sid not in self.parent:
+            return None
+        if sid == self.current:
+            return "current"
+        if self._vis is None:
+            self._vis = set(self.visible())
+        return "ancestor" if sid in self._vis else "orphaned"
 
 
 def branch_replay(entries: list[dict]) -> BranchState:
@@ -434,24 +458,24 @@ def branch_replay(entries: list[dict]) -> BranchState:
     rolled-back snapshot (Iceberg ``set_current_snapshot``) are the
     same operation; later commits chain onto S."""
     st = BranchState()
-    seen: set[str] = set()
 
-    def _join(sid: str) -> None:
+    def _join(sid: str, e: dict) -> None:
         st.chain.append(sid)
         st.parent[sid] = st.current
         st.current = sid
+        st.history.append((e.get("ts", 0.0), sid))
 
     for e in entries:
         k = e.get("kind")
         if k == "snapshot":
             sid = e["snapshot_id"]
-            if sid in seen:
+            if sid in st.header:
                 continue
-            seen.add(sid)
+            st.header[sid] = e
             if e.get("staged"):
                 st.staged_parent[sid] = st.current
             else:
-                _join(sid)
+                _join(sid, e)
         elif k == "publish":
             sid = e.get("snapshot_id")
             if sid not in st.staged_parent or sid in st.aborted:
@@ -459,13 +483,14 @@ def branch_replay(entries: list[dict]) -> BranchState:
             if e.get("abort"):
                 st.aborted.add(sid)
             else:
-                _join(sid)
+                _join(sid, e)
             st.staged_parent.pop(sid)
         elif k == "rollback":
             to = e.get("to")
             if to in st.parent:
                 st.current = to
                 st.has_rollback = True
+                st.history.append((e.get("ts", 0.0), to))
             # else: writer-validated; a reader skips a bad entry
     return st
 
@@ -579,13 +604,14 @@ class ReadView:
         if as_of is None:
             dirty = st.staged_parent or st.aborted or st.has_rollback
             return set(st.visible()) if dirty else None
-        if as_of in st.staged_parent:  # audit read
+        state = st.state(as_of)
+        if state == "staged":  # audit read
             return set(st.vis_at(st.staged_parent[as_of])) | {as_of}
-        if as_of in st.aborted:
+        if state == "aborted":
             raise ValueError(
                 f"snapshot {as_of!r} was a WAP-staged snapshot that was "
                 "aborted — its data never joined the table")
-        if as_of not in st.parent:
+        if state is None:
             raise ValueError(f"unknown snapshot id for time travel: {as_of!r}")
         return set(st.vis_at(as_of))
 
@@ -633,6 +659,23 @@ class ReadView:
             if moved and rw.get("new_chunk"):
                 view.setdefault(rw["new_chunk"], {}).update(moved)
         return view
+
+    def inserted(self, snaps) -> dict[str, set[int]]:
+        """Snapshot id -> the non-empty part ids its chunk lines and
+        done part lines commit, for each id in ``snaps`` that commits
+        any: one pass over the entries, whatever this view's
+        ``as_of``."""
+        out: dict[str, set[int]] = {}
+        for e in self.entries:
+            kind = e.get("kind")
+            if e.get("snapshot_id") not in snaps or not (
+                    kind == "chunk"
+                    or kind == "part" and e.get("status") == "done"):
+                continue
+            for p in e["parts"] if kind == "chunk" else (e["part_id"],):
+                if part_rows(e, int(p)) != 0:
+                    out.setdefault(e["snapshot_id"], set()).add(int(p))
+        return out
 
     @cached_property
     def deletes(self) -> list[tuple[str, str, int, int]]:
@@ -785,9 +828,12 @@ def zone_columns(key_range: tuple) -> tuple[str, str, object, object]:
 
 def part_rows(line: dict, part_id: int) -> int:
     """Row count of ``part_id`` from the :attr:`ReadView.parts` line
-    that committed it, or -1 when the line does not record it."""
+    that committed it (0 for a part line marked ``empty``), or -1 when
+    the line does not record it."""
     if line.get("kind") == "chunk":
         return int((line.get("part_rows") or {}).get(str(part_id), -1))
+    if line.get("empty"):
+        return 0
     for c in (line.get("columns") or {}).values():
         if isinstance(c, dict) and c.get("n_values") is not None:
             return int(c["n_values"])

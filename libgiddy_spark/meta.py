@@ -4,9 +4,11 @@ lakehouse user expects for debugging, auditing and operational
 tooling.
 
 snapshots/history read the FULL manifest (the slim index headers drop
-timestamps and part counts); files flattens the live parts of a
-:class:`manifest.ReadView` over the O(chunks) summary index, the same
-view decode lists its block files from. Metadata-scale driver
+timestamps and part counts) and take every answer from
+:func:`manifest.branch_replay`: ``header`` and ``state`` give the
+snapshots rows, ``history`` the history rows. files flattens the live
+parts of a :class:`manifest.ReadView` over the O(chunks) summary index,
+the same view decode lists its block files from. Metadata-scale driver
 parsing either way, exactly like Iceberg's own metadata tables walk
 manifest lists, never the data files — and every table returns an
 ordinary DataFrame so it composes with any query.
@@ -37,34 +39,13 @@ FILES_DDL = ("snapshot_id string, chunk_dir string, part_id int, "
 def snapshot_rows(out_dir: str) -> list[tuple]:
     """Driver-side rows for :func:`snapshots_df` (no Spark needed —
     the CLI prints these directly)."""
-    entries = Manifest(out_dir).read()
-    st = branch_replay(entries)
-    visible = set(st.visible())
-    rows = []
-    seen: set[str] = set()
-    for e in entries:
-        if e.get("kind") != "snapshot" or e["snapshot_id"] in seen:
-            continue
-        sid = e["snapshot_id"]
-        seen.add(sid)
-        if sid == st.current:
-            state = "current"
-        elif sid in visible:
-            state = "ancestor"
-        elif sid in st.aborted:
-            state = "aborted"
-        elif sid in st.staged_parent:
-            state = "staged"
-        else:
-            state = "orphaned"
-        rows.append((
-            int(e.get("ts", 0.0) * 1_000_000),
-            sid,
-            st.parent.get(sid, st.staged_parent.get(sid)),
-            state,
-            int(e.get("num_parts", 0)),
-        ))
-    return rows
+    st = branch_replay(Manifest(out_dir).read())
+    return [
+        (int(e.get("ts", 0.0) * 1_000_000), sid,
+         st.parent.get(sid, st.staged_parent.get(sid)), st.state(sid),
+         int(e.get("num_parts", 0)))
+        for sid, e in st.header.items()
+    ]
 
 
 def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -78,37 +59,10 @@ def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def history_rows(out_dir: str) -> list[tuple]:
-    entries = Manifest(out_dir).read()
-    st = branch_replay(entries)
-    visible = set(st.visible())
-    rows = []
-    cur: str | None = None
-    joined: set[str] = set()
-    for e in entries:
-        k = e.get("kind")
-        if k == "snapshot" and not e.get("staged"):
-            sid = e["snapshot_id"]
-            if sid in joined:
-                continue
-            joined.add(sid)
-            cur = sid
-        elif k == "publish" and not e.get("abort") \
-                and e.get("snapshot_id") in st.parent \
-                and e.get("snapshot_id") not in joined:
-            sid = e["snapshot_id"]
-            joined.add(sid)
-            cur = sid
-        elif k == "rollback" and e.get("to") in joined:
-            sid = e["to"]
-            cur = sid
-        else:
-            continue
-        rows.append((
-            int(e.get("ts", 0.0) * 1_000_000),
-            cur,
-            cur in visible,
-        ))
-    return rows
+    st = branch_replay(Manifest(out_dir).read())
+    return [(int(ts * 1_000_000), sid,
+             st.state(sid) in ("current", "ancestor"))
+            for ts, sid in st.history]
 
 
 def history_df(spark: SparkSession, out_dir: str) -> DataFrame:

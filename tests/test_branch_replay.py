@@ -1,14 +1,14 @@
-"""Model-based check of engine._branch_replay: the parent-pointer
-visibility state must match a naive reference model (full visible-list
-copies) over arbitrary snapshot/stage/publish/abort/rollback
-sequences."""
+"""Model-based check of manifest.branch_replay: the parent-pointer
+visibility state, the made-current history and each id's state must
+match a naive reference model (full visible-list copies) over
+arbitrary snapshot/stage/publish/abort/rollback sequences."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from libgiddy_spark.engine import _branch_replay
+from libgiddy_spark.manifest import branch_replay
 
 
 class _NaiveModel:
@@ -22,6 +22,7 @@ class _NaiveModel:
         self.aborted = set()
         self.seen = set()
         self.has_rollback = False
+        self.history = []      # sid each time one became current
 
     def apply(self, e):
         k = e["kind"]
@@ -48,11 +49,24 @@ class _NaiveModel:
             if to in self.vis_at:
                 self.visible = list(self.vis_at[to])
                 self.has_rollback = True
+                self.history.append(to)
 
     def _join(self, sid):
         self.chain.append(sid)
         self.visible.append(sid)
         self.vis_at[sid] = list(self.visible)
+        self.history.append(sid)
+
+    def state(self, sid):
+        if sid in self.staged:
+            return "staged"
+        if sid in self.aborted:
+            return "aborted"
+        if sid not in self.vis_at:
+            return None
+        if self.visible and sid == self.visible[-1]:
+            return "current"
+        return "ancestor" if sid in self.visible else "orphaned"
 
 
 def _ops_strategy():
@@ -73,7 +87,7 @@ def test_branch_replay_matches_naive_model(ops):
     model = _NaiveModel()
     for e in ops:
         model.apply(e)
-    st_ = _branch_replay(ops)
+    st_ = branch_replay(ops)
     assert st_.chain == model.chain
     assert st_.visible() == model.visible
     assert st_.aborted == model.aborted
@@ -83,3 +97,6 @@ def test_branch_replay_matches_naive_model(ops):
         assert st_.vis_at(sid) == vis, sid
     for sid, vis in model.staged.items():
         assert st_.vis_at(st_.staged_parent[sid]) == vis, sid
+    assert [sid for _ts, sid in st_.history] == model.history
+    for sid in (f"s{i}" for i in range(12)):
+        assert st_.state(sid) == model.state(sid), sid

@@ -93,7 +93,7 @@ def test_changes_invisible_to_compaction_and_purge(spark, tmp_path):
     res = compact_blocks(out_dir=out, spark=spark, min_dirs=2)
     assert res["rewrites"], res  # compaction actually happened
     assert _key(read_changes(spark, out, schema, s1)) == before
-    purge_deletes(spark, out, schema, key_col="doc_id")
+    purge_deletes(spark, out, key_col="doc_id")
     s_after = _snaps(out)
     # the purge snapshot commits NO logical change
     ch = read_changes(spark, out, schema, s3, s_after[-1])

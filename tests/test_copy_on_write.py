@@ -203,7 +203,7 @@ def test_full_rewrite_removes_its_staging_copy(spark, tmp_path, monkeypatch,
     src, out, schema, _pre = _encode_docs(spark, str(tmp_path))
     if kind == "purge":
         delete_rows(out, "doc_id", GONE)
-        purge_deletes(spark, out, schema, "doc_id")
+        purge_deletes(spark, out, "doc_id")
         expected = _expected(spark, "delete", src, schema)
     else:
         monkeypatch.setattr(engine, "SMALL_DELETE_MAX_KEYS", 0)

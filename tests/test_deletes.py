@@ -95,7 +95,7 @@ def test_purge_materializes_and_vacuum_expires(spark, tmp_path):
                 if e.get("kind") == "snapshot"][-1]
     gone = list(range(0, 500, 7))
     delete_rows(out, "doc_id", gone)
-    res = purge_deletes(spark, out, schema, key_col="doc_id")
+    res = purge_deletes(spark, out, key_col="doc_id")
     assert res["rewritten"] and res["purged_files"] == 1
     # post-purge read: no anti-join needed, same surviving rows,
     # projection excluding the key now works again
@@ -125,7 +125,7 @@ def test_time_travel_to_vacuumed_delete_raises_clearly(spark, tmp_path):
     not a raw Spark path-not-found."""
     src, out, schema = _encode_docs(spark, tmp_path)
     d = delete_rows(out, "doc_id", [1, 2, 3])
-    purge_deletes(spark, out, schema, key_col="doc_id")
+    purge_deletes(spark, out, key_col="doc_id")
     vacuum_blocks(out)
     with pytest.raises(ValueError, match="vacuumed/expired"):
         decode_blocks(spark, out, schema, as_of=d["snapshot_id"]).count()
@@ -225,14 +225,14 @@ def test_purge_crash_before_txn_is_invisible(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(Manifest, "commit_txn", dying_txn)
     with pytest.raises(RuntimeError):
-        purge_deletes(spark, out, schema, key_col="doc_id")
+        purge_deletes(spark, out, key_col="doc_id")
     monkeypatch.setattr(Manifest, "commit_txn", orig)
     # pre-purge state intact: no duplicates, deletes still merge-on-read
     dec = decode_blocks(spark, out, schema)
     assert dec.count() == 497
     assert dec.filter(F.col("doc_id").isin(gone)).count() == 0
     # re-run completes and the table stays exact
-    res = purge_deletes(spark, out, schema, key_col="doc_id")
+    res = purge_deletes(spark, out, key_col="doc_id")
     assert res["rewritten"]
     dec2 = decode_blocks(spark, out, schema)
     assert dec2.count() == 497

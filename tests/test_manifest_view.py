@@ -34,8 +34,8 @@ import tempfile
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from libgiddy_spark.engine import _branch_replay, _committed_block_files
-from libgiddy_spark.manifest import Manifest, ReadView
+from libgiddy_spark.engine import _committed_block_files
+from libgiddy_spark.manifest import Manifest, ReadView, branch_replay
 from libgiddy_spark.meta import file_rows
 
 COLS = ("a", "b", "c")
@@ -90,7 +90,7 @@ class History:
         return out
 
     def _head(self) -> tuple[str | None, list[str]]:
-        vis = _branch_replay(self.m.read()).visible()
+        vis = branch_replay(self.m.read()).visible()
         if not vis:
             return None, []
         dirs = {os.path.relpath(f, os.path.join(self.out, "blocks"))
@@ -163,7 +163,7 @@ class History:
             if abort:
                 self.aborted.add(sid)
         elif kind == "rollback":
-            chain = _branch_replay(self.m.read()).chain
+            chain = branch_replay(self.m.read()).chain
             if chain:
                 self.m.append_rollback(chain[op[1] % len(chain)])
 
@@ -171,7 +171,7 @@ class History:
         """Snapshots a read at ``as_of`` sees: HEAD's visible list, an
         unpublished staged snapshot's stage point plus itself, or the
         snapshot's own visible list."""
-        bs = _branch_replay(self.m.read())
+        bs = branch_replay(self.m.read())
         if as_of is None:
             return set(bs.visible())
         if as_of in bs.staged_parent:
@@ -223,7 +223,7 @@ def read_views(h: History) -> dict:
         views[as_of] = {
             "dirs": sorted({_dir_of(out, f) for f in files}),
             "by_pid": by_pid,
-            "rows": sorted(r[:3] for r in rows),
+            "rows": sorted(r[:4] for r in rows),
             "key_range": [_committed_block_files(out, key_range=kr,
                                                  as_of=as_of)
                           for kr in KEY_PROBES],
@@ -236,7 +236,7 @@ def read_views(h: History) -> dict:
 
 def check_model(h: History, views: dict) -> None:
     """Deletes and part seqs against the model."""
-    chain = _branch_replay(h.m.read()).chain
+    chain = branch_replay(h.m.read()).chain
     seq_of = {s: i for i, s in enumerate(chain)}
     for as_of, v in views.items():
         if v == "raises":
@@ -294,8 +294,8 @@ def check_history(ops: list[tuple]) -> None:
             if v == "raises" or f == "raises":
                 assert v == f, as_of
                 continue
-            # bounds and empty parts' row counts differ by granularity
-            # (chunk aggregate vs part line); visibility may not
+            # bounds differ by granularity (chunk aggregate vs part
+            # line); visibility and row counts may not
             for key in ("dirs", "by_pid", "rows", "key_range", "deletes",
                         "part_seq"):
                 assert v[key] == f[key], (as_of, key)

@@ -144,7 +144,7 @@ def test_files_follows_rewrite_lineage(spark, tmp_path_factory):
     import pyarrow.parquet as pq
 
     schema = pq.read_schema(f"{SF}/documents.parquet")
-    purge_deletes(spark, out, schema, key_col="doc_id")
+    purge_deletes(spark, out, key_col="doc_id")
     total = sum(r["row_count"] for r in files_df(spark, out).collect())
     assert total == decode_blocks(spark, out, schema).count() == 198
     compact_blocks(spark, out, min_dirs=1, target_file_bytes=1 << 30)

@@ -111,7 +111,7 @@ def test_one_manifest_read_per_commit(spark, tmp_path, monkeypatch):
     up = spark.createDataFrame([(8, "new"), (5000, "ins")],
                                "k long, v string")
     assert spy(lambda: upsert_rows(spark, out, "k", up))[0] <= 2
-    assert spy(lambda: purge_deletes(spark, out, SCHEMA, "k"))[0] <= 2
+    assert spy(lambda: purge_deletes(spark, out, "k"))[0] <= 2
     with open(Manifest(out).path) as f:
         headers = [e for e in map(json.loads, f)
                    if e.get("kind") == "snapshot"
@@ -171,7 +171,7 @@ def test_read_does_not_mix_manifest_states(spark, tmp_path, monkeypatch):
     out, _first = _two_snapshots(spark, tmp_path)
     purged = str(tmp_path / "purged")
     shutil.copytree(out, purged)
-    purge_deletes(spark, purged, SCHEMA, "k")
+    purge_deletes(spark, purged, "k")
     old_dirs = set(os.listdir(os.path.join(out, "blocks")))
 
     def _commit_purge() -> None:

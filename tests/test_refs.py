@@ -101,7 +101,7 @@ def test_ref_pins_delete_files_against_vacuum(spark, tmp_path):
     delete_rows(out, "doc_id", [1, 2, 3])
     s_del = _snaps(out)[-1]
     create_ref(out, "pre-purge", s_del)
-    purge_deletes(spark, out, schema, key_col="doc_id")
+    purge_deletes(spark, out, key_col="doc_id")
     vacuum_blocks(out)
     # the ref needs the delete file AND the retired dirs: both pinned
     dec = decode_blocks(spark, out, schema, as_of="pre-purge")

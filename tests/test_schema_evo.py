@@ -182,7 +182,7 @@ def test_no_evolution_nulls_for_compacted_then_purged_parts(spark, table):
     encode_snapshot(spark, src, out, key_col="doc_id")
     assert compact_blocks(spark, out)["bins"] == 1
     delete_rows(out, "doc_id", [1])
-    purge_deletes(spark, out, table_schema(out)[0], "doc_id")
+    purge_deletes(spark, out, "doc_id")
     df = read_table(spark, out, columns=["extra_col"])
     assert df.count() == 399
     assert df.filter(F.col("extra_col").isNotNull()).count() == 100
@@ -213,26 +213,13 @@ def test_full_rewrite_keeps_renamed_values(spark, table, rewrite):
     out, _src = table
     evolve_schema(out, rename={"text": "body"})
     delete_rows(out, "doc_id", [1, 2, 3])
-    getattr(engine, rewrite)(spark, out, table_schema(out)[0], "doc_id")
+    getattr(engine, rewrite)(spark, out, "doc_id")
     got = {r["doc_id"]: r["body"] for r in
            read_table(spark, out, columns=["doc_id", "body"]).collect()}
     want = _src_text(spark)
     for k in (1, 2, 3):
         del want[k]
     assert got == want
-
-
-@pytest.mark.parametrize("rewrite", ["purge_deletes", "rewrite_sorted"])
-def test_full_rewrite_rejects_partial_schema(spark, table, rewrite):
-    from libgiddy_spark import engine
-
-    out, _src = table
-    delete_rows(out, "doc_id", [1])
-    partial = pa.schema([table_schema(out)[0].field(c)
-                         for c in ("doc_id", "lang")])
-    with pytest.raises(ValueError, match="text.*source.*n_chars"):
-        getattr(engine, rewrite)(spark, out, partial, "doc_id")
-    assert read_table(spark, out).count() == 299  # nothing rewritten
 
 
 def test_changelog_carries_renamed_values(spark, table):
@@ -274,7 +261,7 @@ def test_time_travel_after_rename_then_drop(spark, table):
     out, src = table
     evolve_schema(out, rename={"text": "body"})
     delete_rows(out, "doc_id", [1, 2])
-    purge_deletes(spark, out, table_schema(out)[0], "doc_id")
+    purge_deletes(spark, out, "doc_id")
     _append_docs(spark, src, 300, 400)
     snap = encode_snapshot(spark, src, out, key_col="doc_id")["snapshot_id"]
     evolve_schema(out, rename={"body": "content"})

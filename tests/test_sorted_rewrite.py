@@ -47,7 +47,7 @@ def test_sorted_rewrite_tightens_zone_maps(spark, tmp_path):
     assert before == len(_committed_block_files(out))
     # small target + one part per chunk dir so the tiny test table
     # still splits into many independently-prunable chunks
-    res = rewrite_sorted(spark, out, schema, key_col="doc_id",
+    res = rewrite_sorted(spark, out, key_col="doc_id",
                          target_part_bytes=16 << 10, chunk_parts=1)
     assert res["sorted_by"] == "doc_id"
     after_all = len(_committed_block_files(out))
@@ -67,7 +67,7 @@ def test_sorted_rewrite_materializes_deletes(spark, tmp_path):
     src, out = _interleaved_table(spark, tmp_path)
     schema = pq.read_schema(f"{SF}/documents.parquet")
     delete_rows(out, "doc_id", [1, 2, 3])
-    res = rewrite_sorted(spark, out, schema, key_col="doc_id")
+    res = rewrite_sorted(spark, out, key_col="doc_id")
     assert res["materialized_deletes"] == 1  # one delete file
     assert ReadView.read(out).deletes == []
     dec = decode_blocks(spark, out, schema)
@@ -80,7 +80,7 @@ def test_sorted_rewrite_time_travel_then_vacuum(spark, tmp_path):
     schema = pq.read_schema(f"{SF}/documents.parquet")
     snap_pre = [e["snapshot_id"] for e in Manifest(out).read()
                 if e.get("kind") == "snapshot"][-1]
-    rewrite_sorted(spark, out, schema, key_col="doc_id")
+    rewrite_sorted(spark, out, key_col="doc_id")
     # pre-rewrite snapshot still readable until vacuum
     assert decode_blocks(spark, out, schema, as_of=snap_pre).count() == 500
     vacuum_blocks(out)

@@ -116,7 +116,7 @@ def test_upsert_then_purge_and_vacuum_clears_dir_tombstone(
     src, out, schema = _encode(spark, tmp_path)
     upsert_rows(spark, out, "doc_id", _upsert_df(spark, src))
     n = decode_blocks(spark, out, schema).count()
-    purge_deletes(spark, out, schema, key_col="doc_id")
+    purge_deletes(spark, out, key_col="doc_id")
     assert decode_blocks(spark, out, schema).count() == n
     vac = vacuum_blocks(out)
     # the dir-shaped upsert tombstone is expired like file tombstones
